@@ -699,12 +699,17 @@ object Jbig2 {
         }
       }
     }
-    // export flags: alternating run lengths over input ++ new
+    // export flags: alternating run lengths over input ++ new. A run may
+    // legally be 0, so a stream that keeps decoding 0 never advances; no
+    // valid stream needs more than 2 * all.length + 2 runs.
     val all = inputSyms ++ newSyms.result()
     val exported = Vector.newBuilder[SymBitmap]
     var exIndex = 0
     var curFlag = false
+    var runs = 0
     while (exIndex < all.length) {
+      runs += 1
+      if (runs > 2 * all.length + 2) return Left("jbig2: too many export runs")
       val run = decodeInt(dec, iaex).getOrElse(return Left("jbig2: OOB export run"))
       if (run < 0 || exIndex + run > all.length) return Left("jbig2: bad export run")
       if (curFlag) (exIndex until exIndex + run).foreach(i => exported += all(i))
@@ -842,12 +847,18 @@ object Jbig2 {
         }
       }
     }
-    // export runs via Table B.1
+    // export runs via Table B.1. An exhausted reader yields zero bits, which
+    // B.1 decodes as a run of 0 forever: fail instead, and bound the runs
+    // as the arithmetic path does.
     val all = inputSyms ++ newSyms.result()
     val exported = Vector.newBuilder[SymBitmap]
     var exIndex = 0
     var curFlag = false
+    var runs = 0
     while (exIndex < all.length) {
+      runs += 1
+      if (runs > 2 * all.length + 2) return Left("jbig2: too many export runs")
+      if (r.exhausted) return Left("jbig2: truncated export runs")
       val run = TableB1.decode(r) match {
         case Right(Some(v)) => v
         case Right(None) => return Left("jbig2: OOB export run")

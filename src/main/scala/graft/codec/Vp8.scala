@@ -30,7 +30,7 @@ package graft.codec
   *
   * Output is the decoded 4:2:0 YUV (the representation libwebp pins);
   * [[WebpVp8l]] converts to RGB for the Image consumers with the
-  * documented integer BT.601 full-range conversion.
+  * documented integer BT.601 limited-range conversion.
   */
 object Vp8 {
 

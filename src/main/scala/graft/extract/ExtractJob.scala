@@ -7,18 +7,27 @@ import graft.io.TableIO
 import graft.model.{ManifestRow, Page}
 
 /** The extraction pipeline (north_rule): scan → resume-skip (left-anti on
-  * the processed-partition manifest) → salted repartition for skewed hosts →
-  * typed extraction map → results + per-partition lineage + manifest append.
+  * the processed-partition manifest) → typed extraction map on the scan
+  * splits → one part-aligned, salted rebalance exchange → results write →
+  * per-partition lineage + manifest append.
   *
   * Scale design notes (100 TB / 10^12 rows):
   *  - `part_id = pmod(xxhash64(url), P)` is a STABLE unit of work derived
   *    from data, not from task placement, so resume is valid across cluster
   *    sizes and reruns.
-  *  - The salt widens the shuffle key to P*S buckets so one hot host
-  *    (Zipf skew) cannot pin a straggler task; AQE coalescing re-merges
-  *    small outputs.
-  *  - Extraction is a narrow map after one shuffle; no driver collect
-  *    anywhere; lineage is a partial+final hash aggregate.
+  *  - Extraction runs before any shuffle, so raw payloads never cross the
+  *    wire: the one exchange carries markdown, not html.
+  *  - That exchange is a REBALANCE keyed on `(part_id, salt_k)` with
+  *    `salt_k = pmod(xxhash64(url, warc_ts), S)`, starting from P*S
+  *    buckets. Every `(part_id, salt_k)` key lands in one write task, so a
+  *    part is written as at most S files, and the salt spreads a hot part
+  *    (Zipf host skew) over S tasks. Under AQE the rebalance coalesces
+  *    small buckets and splits skewed ones; with AQE off it is a plain
+  *    P*S hash exchange.
+  *  - The written results are read back once, by the lineage aggregate
+  *    (partial+final hash). The driver collects only ≤ P-row sets: the
+  *    done/todo part ids and the lineage rows, which it writes and sums
+  *    into the run summary.
   *  - Results are written partitioned by part_id (dynamic partition
   *    overwrite), so a rerun of an unfinished partition is idempotent.
   */
@@ -39,6 +48,32 @@ object ExtractJob {
       val extractUdf = udf((url: String, payload: Array[Byte]) => Extractor.extract(url, payload))
       pages.withColumn("extracted", extractUdf(col("url"), col("html")))
     }
+  }
+
+  /** The results rows of `todo` (pages with `part_id`), extracted on the
+    * scan splits and then exchanged on `(part_id, salt_k)` from
+    * `partitions * salt` initial buckets, ready for the partitioned write.
+    * Spark drops the REBALANCE hint when AQE is off, so that case asks for
+    * the same hash exchange as a plain repartition. */
+  private[graft] def resultsDf(todo: DataFrame, runTs: Timestamp, partitions: Int, salt: Int): DataFrame = {
+    val keyed = extractedDf(todo.withColumn("salt_k", pmod(xxhash64(col("url"), col("warc_ts")), lit(salt))))
+      .select(
+        col("url"), col("warc_ts"), col("lang"),
+        col("extracted.status").as("status"),
+        col("extracted.content_type").as("content_type"),
+        col("extracted.markdown").as("markdown"),
+        col("extracted.spans").as("spans"),
+        col("extracted.pages").as("pages"),
+        col("extracted.error").as("error"),
+        lit(runTs).as("run_ts"),
+        col("part_id"), col("salt_k"))
+    val buckets = partitions * salt
+    val keys = Seq(col("part_id"), col("salt_k"))
+    val exchanged =
+      if (todo.sparkSession.conf.get("spark.sql.adaptive.enabled").toBoolean)
+        keyed.hint("rebalance", buckets +: keys: _*)
+      else keyed.repartition(buckets, keys: _*)
+    exchanged.drop("salt_k")
   }
 
   final case class RunSummary(total: Long, ok: Long, err: Long, skippedParts: Long)
@@ -73,22 +108,9 @@ object ExtractJob {
     val todoParts: Set[Int] =
       todo.select($"part_id").distinct().as[Int].collect().toSet
 
-    // salted repartition: key spreads each part over `salt` buckets so a
-    // skewed host's documents land in several tasks
-    val salted = todo.repartition(partitions * salt,
-      pmod(xxhash64($"url", $"warc_ts"), lit(partitions * salt)))
-
-    val results = extractedDf(salted).select(
-      $"url", $"warc_ts", $"lang",
-      $"extracted.status".as("status"),
-      $"extracted.content_type".as("content_type"),
-      $"extracted.markdown".as("markdown"),
-      $"extracted.spans".as("spans"),
-      $"extracted.pages".as("pages"),
-      $"extracted.error".as("error"),
-      lit(runTs).as("run_ts"),
-      $"part_id")
-
+    // extract on the scan splits; the only exchange is the part-aligned
+    // rebalance in front of the write
+    val results = resultsDf(todo, runTs, partitions, salt)
     io.overwritePartitions(results, ResultsTable, "part_id")
 
     // Everything below reads the WRITTEN table back instead of re-evaluating
@@ -105,7 +127,8 @@ object ExtractJob {
 
     // lineage: commutative per-partition checksum — order-independent, so
     // identical at any parallelism (the determinism property the golden
-    // byte-identity contract needs)
+    // byte-identity contract needs). Its ≤ P rows are collected once and
+    // feed both the lineage write and the run summary.
     val lineage = writtenThisRun.groupBy($"part_id").agg(
       count(lit(1)).as("row_count"),
       count(when($"status" === "ok", 1)).as("ok_count"),
@@ -113,8 +136,10 @@ object ExtractJob {
       // bit_xor: commutative + overflow-free under ANSI mode — the checksum
       // is identical at any parallelism / row order
       expr("bit_xor(xxhash64(url, markdown))").as("checksum"))
+    val lineageRows = lineage.collect()
     io.overwritePartitions(
-      lineage.withColumn("part_lbl", $"part_id"), LineageTable, "part_lbl")
+      spark.createDataFrame(java.util.Arrays.asList(lineageRows: _*), lineage.schema)
+        .withColumn("part_lbl", $"part_id"), LineageTable, "part_lbl")
 
     // manifest: mark this invocation's partitions done (append-only); built
     // from the already-collected part-id set — no extra pass over the input
@@ -124,14 +149,10 @@ object ExtractJob {
       io.appendTable(doneParts.toDF(), ManifestTable)
     }
 
-    // summary from the thin (status) column of the written files — no
-    // second pass over html payloads
-    val byStatus = writtenThisRun.groupBy($"status").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
     RunSummary(
-      total = byStatus.values.sum,
-      ok = byStatus.getOrElse("ok", 0L),
-      err = byStatus.getOrElse("error", 0L),
+      total = lineageRows.map(_.getAs[Long]("row_count")).sum,
+      ok = lineageRows.map(_.getAs[Long]("ok_count")).sum,
+      err = lineageRows.map(_.getAs[Long]("err_count")).sum,
       skippedParts = skipped)
   }
 }

@@ -104,6 +104,40 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(chk1 == chk2)
   }
 
+  test("results layout: at most S files per part; rows, summary and lineage match the kernel outside Spark") {
+    import spark.implicits._
+    val n = 240
+    val pages = Synth.pagesDs(spark, n, seed = 11L, parallelism = 4)
+    val wh = SparkTestBase.tempDir("wh-layout")
+    val io = new ParquetTableIO(wh)
+    val s = ExtractJob.run(spark, pages.toDF(), io, runTs, partitions = 8, salt = 2)
+
+    val partDirs = new java.io.File(s"$wh/results").listFiles().filter(_.getName.startsWith("part_id="))
+    assert(partDirs.length == 8)
+    partDirs.foreach { d =>
+      val files = d.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files >= 1 && files <= 2, s"${d.getName} holds $files parquet files")
+    }
+
+    // reference: the kernel called directly on each generated page
+    val ref = pages.collect().map(p => p.url -> Extractor.extract(p.url, p.html)).toMap
+    assert(ref.size == n)
+    val got = io.readTable(spark, "results")
+      .select($"url", $"status", $"content_type", $"markdown", $"error")
+      .as[(String, String, String, String, String)].collect()
+    assert(got.length == n)
+    got.foreach { case (url, status, ct, md, err) =>
+      val e = ref(url)
+      assert((status, ct, md, err) == ((e.status, e.content_type, e.markdown, e.error)), url)
+    }
+    assert(s == ExtractJob.RunSummary(n, ref.values.count(_.status == "ok"),
+      ref.values.count(_.status == "error"), 0))
+    val refChecksum = ref.toSeq.map { case (url, e) => (url, e.markdown) }.toDF("url", "markdown")
+      .agg(expr("bit_xor(xxhash64(url, markdown))")).as[Long].first()
+    val linChecksum = io.readTable(spark, "lineage").agg(expr("bit_xor(checksum)")).as[Long].first()
+    assert(linChecksum == refChecksum)
+  }
+
   test("content-class hint beats an equally-sized link farm without article tags") {
     import graft.extract.HtmlExtractor
     // no <main>/<article>: selection must fall back to scoring; the link

@@ -249,6 +249,29 @@ class Jbig2Spec extends AnyFunSuite {
     succeed
   }
 
+  test("SDHUFF dictionary cut before its export runs fails closed within 5 s") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // page info (30 bytes) + dictionary segment; the dictionary's data
+    // length field sits at 37..40 and its data starts at 41
+    val syms = Vector((3, 3, Array.fill[Byte](9)(1)), (2, 2, Array.fill[Byte](4)(1)))
+    val good = Jbig2.encodeSymbolPageHuff(30, 12, syms, Seq((0, 1, 1), (1, 6, 2)), uncompressed = true)
+    val dictLen = ((good(37) & 0xff) << 24) | ((good(38) & 0xff) << 16) | ((good(39) & 0xff) << 8) | (good(40) & 0xff)
+    // the last 2 data bytes are the two 5-bit Table B.1 export runs
+    val body = java.util.Arrays.copyOfRange(good, 41, 41 + dictLen - 2)
+    def dictOnly(data: Array[Byte]): Array[Byte] = {
+      val n = data.length
+      good.take(37) ++ Array((n >>> 24).toByte, (n >>> 16).toByte, (n >>> 8).toByte, n.toByte) ++ data
+    }
+    // reader exhausted at the first run; one zero byte (runs of 0 until
+    // exhausted); many zero bytes (runs of 0 until the run bound)
+    for (tail <- Seq(0, 1, 64)) {
+      val hostile = dictOnly(body ++ new Array[Byte](tail))
+      val r = Await.result(Future(Jbig2.decode(hostile))(ExecutionContext.global), 5.seconds)
+      assert(r.left.exists(_.contains("export runs")), s"tail=$tail: $r")
+    }
+  }
+
   test("typed errors: unsupported features and truncation, never throws") {
     val good = Jbig2.encode(textLike(20, 10, 5L), 20, 10)
     // truncations

@@ -61,6 +61,47 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges <= 1, s"extraction map must stay narrow after the one repartition:\n$plan")
   }
 
+  test("extraction job results: extract on scan splits, one (part_id, salt) exchange, no html on the wire") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, REPARTITION_BY_NUM, ShuffleExchangeExec}
+    def extracts(e: Expression) = e.exists(_.isInstanceOf[graft.plans.ExtractExpression])
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      // AQE on: a rebalance it may coalesce or split; AQE off: a plain hash exchange
+      for ((aqe, origin) <- Seq("true" -> REBALANCE_PARTITIONS_BY_COL, "false" -> REPARTITION_BY_NUM)) {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        val todo = graft.synth.Synth.pagesDs(spark, 50L, seed = 42L).toDF()
+          .withColumn("part_id", pmod(xxhash64(col("url")), lit(8)).cast("int"))
+        val df = graft.extract.ExtractJob.resultsDf(todo, java.sql.Timestamp.valueOf("2023-09-05 00:00:00"),
+          partitions = 8, salt = 2)
+        val plan = df.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.inputPlan // the plan before AQE re-optimizes it
+          case p => p
+        }
+        val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+        assert(exchanges.length == 1, s"aqe=$aqe\n$plan")
+        val ex = exchanges.head
+        assert(ex.shuffleOrigin == origin, s"aqe=$aqe\n$plan")
+        ex.outputPartitioning match {
+          case HashPartitioning(keys, n) =>
+            assert(n == 8 * 2, s"aqe=$aqe\n$plan")
+            assert(keys.flatMap(_.references.map(_.name)) == Seq("part_id", "salt_k"), s"aqe=$aqe\n$plan")
+          case other => fail(s"aqe=$aqe: not a hash exchange: $other\n$plan")
+        }
+        assert(!ex.output.map(_.name).contains("html"), s"aqe=$aqe: exchange ships ${ex.output.map(_.name)}")
+        // the kernel runs below the exchange, on the scan splits, with no exchange under it
+        val extractNodes = plan.collect { case p: SparkPlan if p.expressions.exists(extracts) => p }
+        assert(extractNodes.nonEmpty && extractNodes.forall(p => ex.child.find(_ eq p).isDefined), s"aqe=$aqe\n$plan")
+        extractNodes.foreach { p =>
+          assert(p.collect { case e: ShuffleExchangeExec => e }.isEmpty, s"aqe=$aqe: exchange below graft_extract\n$plan")
+        }
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
   test("exact-dedup counts distinct over the digest, never raw text, below the Expand") {
     val df = SparkEntry.queries("q10_exact_dedup")(spark, sf)
     val plan = physicalPlan(df)
