@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The operator inventory (SURVEY.md §2) as driver-checkable queries.
@@ -40,10 +40,6 @@ object Queries {
     ("e", "r"), ("t", "h"), ("th", "e"), ("a", "n"), ("an", "d"),
     ("i", "n"), ("o", "n"), ("e", "s"))
 
-  /** Whole-token perturbation for the eval-metric queries: every
-    * whitespace-delimited 'value' token becomes 'worth'. See the q21
-    * comment for why this is two regex passes and an explicit boundary
-    * class, and why it makes the closed-form WER oracle exact. */
   /** Shared q82/q85 oracle fragment: per-subspace Lloyd chains (2
     * subspaces of dims 1-32/33-64, 4 seeds, 2 rounds) over `base`'s
     * micro-unit vectors — `s{N}_v/c0/d1/a1/u1/c1/d2/a2` CTEs. */
@@ -74,10 +70,147 @@ object Queries {
        |$rounds""".stripMargin
   }.mkString(",\n")
 
-  private def perturbValueTokens(text: org.apache.spark.sql.Column) = {
+  /** Whole-token perturbation for the eval-metric queries: every
+    * whitespace-delimited 'value' token becomes 'worth'. See the q21
+    * comment for why this is two regex passes and an explicit boundary
+    * class, and why it makes the closed-form WER oracle exact. */
+  private def perturbValueTokens(text: Column) = {
     val pat = "(^|[ \\t\\n\\r])value([ \\t\\n\\r]|$)"
     regexp_replace(regexp_replace(text, pat, "$1worth$2"), pat, "$1worth$2")
   }
+
+  // ------------------------------------------------------------------
+  // Fixture kit: the capture rows, fixture directories, test images and
+  // pages the queries build, and the DuckDB fragments their oracles
+  // share. New queries use these instead of hand-rolling copies.
+  // ------------------------------------------------------------------
+
+  /** `url` and `warc_ts` of a documents-shaped row's synthetic capture. */
+  private def captureKey: Seq[Column] = Seq(
+    concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
+    (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"))
+
+  /** The WARC capture row over documents-shaped `d`: [[captureKey]] plus
+    * `http_status`, `content_type` and `body`. */
+  private def warcCapture(d: DataFrame, body: Column = encode(col("text"), "UTF-8"),
+      status: Int = 200, contentType: String = "text/html; charset=utf-8"): DataFrame =
+    d.select(captureKey ++ Seq(lit(status).as("http_status"),
+      lit(contentType).as("content_type"), body.as("body")): _*)
+
+  /** Per-tier fixture directory under the JVM temp dir (`prefix` + sf dir name). */
+  private def fixtureDir(prefix: String, dir: String): String =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      prefix + new java.io.File(dir).getName).toString
+
+  /** The CDX sidecars a `Warc.write(..., cdxIndex = true)` left in `out`. */
+  private def cdxIndex(s: SparkSession, out: String): DataFrame =
+    s.read.schema(
+        "key STRING, url STRING, ts_ms LONG, file STRING, offset LONG, " +
+          "length LONG, digest STRING, record_type STRING")
+      .json(out + "/part-*.cdx")
+
+  private def readWarc(s: SparkSession, out: String): DataFrame =
+    s.read.format("graft.sources.WarcSource").load(out)
+
+  /** `n_bytes` and `body_hash` (polyhash of the UTF-8 text) of a read-back `body`. */
+  private def bodyDigest(s: SparkSession): Seq[Column] = Seq(
+    length(col("body")).cast("long").as("n_bytes"),
+    graft.ops.Dedup.polyHashFn(s)(decode(col("body"), "UTF-8")).as("body_hash"))
+
+  /** The boilerplate test page: nav, a `#main` article (title and two
+    * paragraphs, `mid` between them) and a footer, numbered by `id`. */
+  private def boilerplatePage(id: Column, mid: Column = lit("")): Column = concat(
+    lit("<html><head><title>Doc "), id,
+    lit("</title></head><body><nav><a href=\"/a\">Home</a><a href=\"/b\">About</a></nav>"),
+    lit("<div id=\"main\"><h1>Title "), id,
+    lit("</h1><p>Hello world "), id,
+    lit(" with enough words to be content here today.</p>"), mid,
+    lit("<p>Second paragraph "), id,
+    lit(" also has plenty of real sentence text to keep.</p></div>"),
+    lit("<footer>copyright footer</footer></body></html>"))
+
+  /** A closed-form test raster: `w*h` pixels of `c` interleaved samples,
+    * sample `k` of pixel (x, y) = `f(x, y, k)` truncated to a byte. */
+  private def raster(w: Int, h: Int, c: Int = 1)(f: (Int, Int, Int) => Long): Array[Byte] = {
+    val px = new Array[Byte](w * h * c)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        var k = 0
+        while (k < c) { px((y * w + x) * c + k) = f(x, y, k).toByte; k += 1 }
+        x += 1
+      }
+      y += 1
+    }
+    px
+  }
+
+  /** The 16-entry RGB palette of the GIF queries: (17i, 255 - 17i, 51i mod 256). */
+  private def gifPalette: Array[Byte] =
+    raster(16, 1, 3)((i, _, k) => Seq(i * 17, 255 - i * 17, (i * 51) % 256)(k))
+
+  /** (sum, min, max) of the unsigned samples of channel `k` of `c`
+    * interleaved ones (all samples by default); (0, 255, 0) when empty. */
+  private def pixelStats(px: Array[Byte], c: Int = 1, k: Int = 0): (Long, Long, Long) = {
+    var sum = 0L; var mn = 255L; var mx = 0L
+    var i = k
+    while (i < px.length) {
+      val u = (px(i) & 0xff).toLong
+      sum += u; if (u < mn) mn = u; if (u > mx) mx = u
+      i += c
+    }
+    (sum, mn, mx)
+  }
+
+  /** (count, index sum) of the set pixels of a decoded bilevel raster. */
+  private def inkStats(px: Array[Byte]): (Long, Long) = {
+    var nb = 0L; var ck = 0L
+    var i = 0
+    while (i < px.length) {
+      if (px(i) != 0) { nb += 1; ck += i }
+      i += 1
+    }
+    (nb, ck)
+  }
+
+  /** DuckDB replay of `Dedup.polyHash`: the base-131 fold of `x`'s chars mod 2^31-1. */
+  private def polyHashSql(x: String): String =
+    s"list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split($x, '')]), " +
+      "(acc, c) -> (acc * 131 + c) % 2147483647)"
+
+  /** DuckDB: `SELECT outer, sim FROM (SELECT inner, dot, nq, nc FROM from)`,
+    * `sim` being the cosine of list columns `qv` and `cv` (0.0 on a zero
+    * norm). The default `from` scores `cand`'s (query_id, nn_id) pairs. */
+  private def cosineSql(outer: String = "query_id, nn_id", inner: String = "query_id, nn_id",
+      from: String = "cand JOIN (SELECT vec_id, embedding AS qv FROM embeddings) q " +
+        "ON q.vec_id = cand.query_id JOIN (SELECT vec_id, embedding AS cv FROM embeddings) c " +
+        "ON c.vec_id = cand.nn_id"): String = {
+    def dot(a: String, b: String) = s"list_reduce(list_prepend(0.0::DOUBLE, " +
+      s"[$a[i]::DOUBLE * $b[i]::DOUBLE FOR i IN range(1, len($a) + 1)]), (a, b) -> a + b)"
+    s"SELECT $outer, CASE WHEN nq = 0 OR nc = 0 THEN 0.0 ELSE dot / (sqrt(nq) * sqrt(nc)) END AS sim " +
+      s"FROM ( SELECT $inner, ${dot("qv", "cv")} AS dot, ${dot("qv", "qv")} AS nq, " +
+      s"${dot("cv", "cv")} AS nc FROM $from)"
+  }
+
+  /** DuckDB: the word `n`-shingles of list column `w` (the whole text when
+    * it has at most `n` words), joined by `array_to_string` or, with
+    * `concatGram`, by `||`. */
+  private def wordShinglesSql(n: Int, concatGram: Boolean = false): String = {
+    val gram =
+      if (concatGram) (0 until n).map(k => if (k == 0) "w[i]" else s"w[i+$k]").mkString(" || ' ' || ")
+      else s"array_to_string(w[i : i + ${n - 1}], ' ')"
+    s"CASE WHEN len(w) = 0 THEN [] WHEN len(w) <= $n THEN [array_to_string(w, ' ')] " +
+      s"ELSE [$gram FOR i IN range(1, len(w) - ${n - 2})] END"
+  }
+
+  /** DuckDB replay of the 32-function MinHash signature over hash list
+    * `hb`: per function the min of Dedup's affine family. */
+  private val minHashSigSql =
+    "[CASE WHEN len(hb) = 0 THEN 2147483647::BIGINT " +
+      "ELSE list_min([((((h+1) * 1103515245 + 12345) % 2147483647) * x " +
+      "+ (((h+1) * 1234567891 + 987654321) % 2147483647)) % 2147483647 " +
+      "FOR x IN hb]) END FOR h IN range(0, 32)]"
 
   // ------------------------------------------------------------------
   // SQL-oracled queries (SURVEY §2.2 P3/P6, §2.4 A1-A3/A7, §2.5, §2.6 O1,
@@ -413,30 +546,12 @@ object Queries {
     "q247_webp" -> ((s, dir) => {
       val st = udf { id: Long =>
         val w = 8 + (id % 7).toInt; val h = 6 + (id % 5).toInt
-        val pix = new Array[Byte](w * h * 3)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val i = (y * w + x) * 3
-            pix(i) = ((id * 5 + x * 7 + y * 11) % 256).toByte
-            pix(i + 1) = ((id * 3 + x + 2 * y) % 256).toByte
-            pix(i + 2) = ((id + x * 13 + y * 3) % 256).toByte
-            x += 1
-          }
-          y += 1
-        }
+        val pix = raster(w, h, 3)((x, y, k) =>
+          Seq(id * 5 + x * 7 + y * 11, id * 3 + x + 2 * y, id + x * 13 + y * 3)(k) % 256)
         val bytes = graft.codec.WebpVp8l.encode(pix, w, h, 3)
         graft.ops.Multimodal.decodeImage(bytes) match {
           case Right(im) if im.nComponents == 3 =>
-            var sr = 0L; var sg = 0L; var sb = 0L
-            var i = 0
-            while (i < im.pixels.length) {
-              sr += im.pixels(i) & 0xff
-              sg += im.pixels(i + 1) & 0xff
-              sb += im.pixels(i + 2) & 0xff
-              i += 3
-            }
+            val Seq(sr, sg, sb) = (0 until 3).map(pixelStats(im.pixels, 3, _)._1)
             (im.width.toLong, im.height.toLong, sr, sg, sb)
           case _ => (0L, 0L, -1L, -1L, -1L)
         }
@@ -596,46 +711,16 @@ object Queries {
         val d = 1 << (id % 3).toInt // 1, 2, 4
         val maxV = (1 << d) - 1
         val w = 9 + (id % 6).toInt; val h = 5 + (id % 4).toInt
-        val vals = new Array[Byte](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) { vals(y * w + x) = (((id + 3 * x + 5 * y) % (maxV + 1)).toInt).toByte; x += 1 }
-          y += 1
-        }
+        val vals = raster(w, h)((x, y, _) => (id + 3 * x + 5 * y) % (maxV + 1))
         val gray = graft.codec.Png.decode(graft.codec.Png.encodeGrayLowBit(vals, w, h, d))
           .fold(e => throw new IllegalStateException(e), identity)
-        var gSum = 0L; var gMin = 255L; var gMax = 0L
-        gray.pixels.foreach { pb =>
-          val u = (pb & 0xff).toLong
-          gSum += u; if (u < gMin) gMin = u; if (u > gMax) gMax = u
-        }
+        val (gSum, gMin, gMax) = pixelStats(gray.pixels)
         // palette leg at depth 4: 16 closed-form RGB entries
-        val pal = new Array[Byte](16 * 3)
-        var i = 0
-        while (i < 16) {
-          pal(3 * i) = ((i * 13) % 256).toByte
-          pal(3 * i + 1) = (255 - i * 9).toByte
-          pal(3 * i + 2) = ((i * 29) % 256).toByte
-          i += 1
-        }
-        val idx = new Array[Byte](w * h)
-        y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) { idx(y * w + x) = (((id + 7 * x + 3 * y) % 16).toInt).toByte; x += 1 }
-          y += 1
-        }
+        val pal = raster(16, 1, 3)((i, _, k) => Seq((i * 13) % 256, 255 - i * 9, (i * 29) % 256)(k))
+        val idx = raster(w, h)((x, y, _) => (id + 7 * x + 3 * y) % 16)
         val ind = graft.codec.Png.decode(graft.codec.Png.encodeIndexed(idx, w, h, 4, pal))
           .fold(e => throw new IllegalStateException(e), identity)
-        var rSum = 0L; var gSum2 = 0L; var bSum = 0L
-        i = 0
-        while (i < w * h) {
-          rSum += ind.pixels(3 * i) & 0xff
-          gSum2 += ind.pixels(3 * i + 1) & 0xff
-          bSum += ind.pixels(3 * i + 2) & 0xff
-          i += 1
-        }
+        val Seq(rSum, gSum2, bSum) = (0 until 3).map(pixelStats(ind.pixels, 3, _)._1)
         (d.toLong, w.toLong, h.toLong, gSum, gMin, gMax, rSum, gSum2, bSum)
       }
       docs(s, dir).select(col("doc_id"), st(col("doc_id")).as("d"))
@@ -651,55 +736,17 @@ object Queries {
     "q259_bmp_rle" -> ((s, dir) => {
       val st = udf { id: Long =>
         val w8 = 9 + (id % 7).toInt; val h8 = 4 + (id % 5).toInt
-        val pal8 = new Array[Byte](256 * 3)
-        var e = 0
-        while (e < 256) {
-          pal8(3 * e) = ((e * 7) % 256).toByte
-          pal8(3 * e + 1) = ((e * 11) % 256).toByte
-          pal8(3 * e + 2) = ((e * 13) % 256).toByte
-          e += 1
-        }
-        val idx8 = new Array[Byte](w8 * h8)
-        var y = 0
-        while (y < h8) {
-          var x = 0
-          while (x < w8) { idx8(y * w8 + x) = (((x / 3 + y + id) % 40).toInt).toByte; x += 1 }
-          y += 1
-        }
+        val pal8 = raster(256, 1, 3)((e, _, k) => (e * Seq(7, 11, 13)(k)) % 256)
+        val idx8 = raster(w8, h8)((x, y, _) => (x / 3 + y + id) % 40)
         val im8 = graft.codec.Bmp.decode(graft.codec.Bmp.encodeRle8(idx8, w8, h8, pal8))
           .fold(er => throw new IllegalStateException(er), identity)
-        var r8 = 0L; var g8 = 0L; var b8 = 0L
-        var i = 0
-        while (i < w8 * h8) {
-          r8 += im8.pixels(3 * i) & 0xff; g8 += im8.pixels(3 * i + 1) & 0xff
-          b8 += im8.pixels(3 * i + 2) & 0xff
-          i += 1
-        }
+        val Seq(r8, g8, b8) = (0 until 3).map(pixelStats(im8.pixels, 3, _)._1)
         val w4 = 7 + (id % 5).toInt; val h4 = 3 + (id % 4).toInt
-        val pal4 = new Array[Byte](16 * 3)
-        e = 0
-        while (e < 16) {
-          pal4(3 * e) = (e * 17).toByte
-          pal4(3 * e + 1) = (255 - e * 17).toByte
-          pal4(3 * e + 2) = ((e * 37) % 256).toByte
-          e += 1
-        }
-        val idx4 = new Array[Byte](w4 * h4)
-        y = 0
-        while (y < h4) {
-          var x = 0
-          while (x < w4) { idx4(y * w4 + x) = (((x + 2 * y + id) % 16).toInt).toByte; x += 1 }
-          y += 1
-        }
+        val pal4 = raster(16, 1, 3)((e, _, k) => Seq(e * 17, 255 - e * 17, (e * 37) % 256)(k))
+        val idx4 = raster(w4, h4)((x, y, _) => (x + 2 * y + id) % 16)
         val im4 = graft.codec.Bmp.decode(graft.codec.Bmp.encodeRle4(idx4, w4, h4, pal4))
           .fold(er => throw new IllegalStateException(er), identity)
-        var r4 = 0L; var g4 = 0L; var b4 = 0L
-        i = 0
-        while (i < w4 * h4) {
-          r4 += im4.pixels(3 * i) & 0xff; g4 += im4.pixels(3 * i + 1) & 0xff
-          b4 += im4.pixels(3 * i + 2) & 0xff
-          i += 1
-        }
+        val Seq(r4, g4, b4) = (0 until 3).map(pixelStats(im4.pixels, 3, _)._1)
         // 16-bit 565 BI_BITFIELDS leg (round 5): hand-built rows,
         // channels scale v*255/max round-half-up
         val w16 = 6 + (id % 4).toInt; val h16 = 3 + (id % 3).toInt
@@ -727,13 +774,7 @@ object Queries {
         }
         val im16 = graft.codec.Bmp.decode(bb.array())
           .fold(er => throw new IllegalStateException(er), identity)
-        var r16 = 0L; var g16 = 0L; var b16 = 0L
-        i = 0
-        while (i < w16 * h16) {
-          r16 += im16.pixels(3 * i) & 0xff; g16 += im16.pixels(3 * i + 1) & 0xff
-          b16 += im16.pixels(3 * i + 2) & 0xff
-          i += 1
-        }
+        val Seq(r16, g16, b16) = (0 until 3).map(pixelStats(im16.pixels, 3, _)._1)
         (r8, g8, b8, r4, g4, b4, r16, g16, b16)
       }
       docs(s, dir).select(col("doc_id"), st(col("doc_id")).as("d"))
@@ -752,42 +793,21 @@ object Queries {
     "q260_jpeg_cmyk" -> ((s, dir) => {
       val st = udf { id: Long =>
         val w = 16; val h = 8 // two flat 8x8 blocks per plane
-        def planeOf(f: Int => Int): Array[Byte] = {
-          val p = new Array[Byte](w * h)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) { p(y * w + x) = f(x / 8).toByte; x += 1 }
-            y += 1
-          }
-          p
-        }
+        def planeOf(f: Int => Int): Array[Byte] = raster(w, h)((x, _, _) => f(x / 8))
         def v(ci: Int, bx: Int) = ((id * 7 + ci * 31 + bx * 13) % 256).toInt
         val cmyk = graft.codec.JpegEncoder.encodeCmyk444(
           planeOf(v(0, _)), planeOf(v(1, _)), planeOf(v(2, _)), planeOf(v(3, _)),
           w, h, transform = 0, graft.codec.JpegEncoder.exactQuant)
         val im = graft.codec.Jpeg.decode(cmyk)
           .fold(e => throw new IllegalStateException(e), identity)
-        var cr = 0L; var cg = 0L; var cb2 = 0L
-        var i = 0
-        while (i < w * h) {
-          cr += im.pixels(3 * i) & 0xff; cg += im.pixels(3 * i + 1) & 0xff
-          cb2 += im.pixels(3 * i + 2) & 0xff
-          i += 1
-        }
+        val Seq(cr, cg, cb2) = (0 until 3).map(pixelStats(im.pixels, 3, _)._1)
         def u(ci: Int, bx: Int) = ((id * (5 + 2 * ci) + bx * (17 + 6 * ci)) % 256).toInt
         val ycck = graft.codec.JpegEncoder.encodeCmyk444(
           planeOf(u(0, _)), planeOf(u(1, _)), planeOf(u(2, _)), planeOf(u(3, _)),
           w, h, transform = 2, graft.codec.JpegEncoder.exactQuant)
         val im2 = graft.codec.Jpeg.decode(ycck)
           .fold(e => throw new IllegalStateException(e), identity)
-        var yr = 0L; var yg = 0L; var yb = 0L
-        i = 0
-        while (i < w * h) {
-          yr += im2.pixels(3 * i) & 0xff; yg += im2.pixels(3 * i + 1) & 0xff
-          yb += im2.pixels(3 * i + 2) & 0xff
-          i += 1
-        }
+        val Seq(yr, yg, yb) = (0 until 3).map(pixelStats(im2.pixels, 3, _)._1)
         val nf = graft.codec.Jpeg.dimensions(cmyk).toOption.map(_._3).getOrElse(-1)
         (nf.toLong, cr, cg, cb2, yr, yg, yb)
       }
@@ -812,11 +832,7 @@ object Queries {
           w, h, yAcQi = (id % 128).toInt, filterLevel = (id % 64).toInt))
         graft.ops.Multimodal.decodeImage(webp) match {
           case Right(im) =>
-            var sum = 0L; var mn = 255L; var mx = 0L
-            im.pixels.foreach { pb =>
-              val u = (pb & 0xff).toLong
-              sum += u; if (u < mn) mn = u; if (u > mx) mx = u
-            }
+            val (sum, mn, mx) = pixelStats(im.pixels)
             (im.nComponents.toLong, im.width.toLong, im.height.toLong, sum, mn, mx)
           case Left(e) => (-1L, -1L, -1L, -1L, -1L, -1L)
         }
@@ -861,9 +877,7 @@ object Queries {
           Seq((small, 6, 4, 32), (big, w, h, 32)))
         graft.ops.Multimodal.decodeImage(ico) match {
           case Right(im) =>
-            var sum = 0L
-            im.pixels.foreach(pb => sum += pb & 0xff)
-            (im.width.toLong, im.height.toLong, sum,
+            (im.width.toLong, im.height.toLong, pixelStats(im.pixels)._1,
               graft.ops.Multimodal.mediaInfo(ico).format)
           case Left(e) => (-1L, -1L, -1L, s"error:$e")
         }
@@ -1080,42 +1094,17 @@ object Queries {
     "q252_webp_anim" -> ((s, dir) => {
       val st = udf { id: Long =>
         val cw = 10; val ch = 6
-        def rgb(w: Int, h: Int)(f: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val (r, g, b) = f(x, y)
-              val i = (y * w + x) * 3
-              px(i) = (r % 256).toByte; px(i + 1) = (g % 256).toByte
-              px(i + 2) = (b % 256).toByte
-              x += 1
-            }
-            y += 1
-          }
-          px
-        }
-        val f0 = rgb(cw, ch)((x, y) =>
-          (((id * 3 + x + 2 * y) % 256).toInt, ((id * 5 + x) % 256).toInt,
-            ((id * 7 + y) % 256).toInt))
-        val fp = rgb(4, 2)((x, y) =>
-          (((id * 11 + x + y) % 256).toInt, ((id * 13 + x) % 256).toInt,
-            ((id * 17 + y) % 256).toInt))
-        val fq = rgb(2, 2)((x, y) =>
-          (((id * 19 + x) % 256).toInt, ((id * 23 + y) % 256).toInt,
-            ((id * 29) % 256).toInt))
+        val f0 = raster(cw, ch, 3)((x, y, k) =>
+          Seq(id * 3 + x + 2 * y, id * 5 + x, id * 7 + y)(k) % 256)
+        val fp = raster(4, 2, 3)((x, y, k) => Seq(id * 11 + x + y, id * 13 + x, id * 17 + y)(k) % 256)
+        val fq = raster(2, 2, 3)((x, y, k) => Seq(id * 19 + x, id * 23 + y, id * 29)(k) % 256)
         val bytes = graft.codec.WebpVp8l.encodeAnimated(cw, ch, (id % 4).toInt, Seq(
           (0, 0, cw, ch, f0, 3, 30, true, false),
           (2, 2, 4, 2, fp, 3, 40, true, true),
           (6, 2, 2, 2, fq, 3, 50, true, false)))
         graft.codec.WebpVp8l.decodeFrames(bytes) match {
           case Right(anim) =>
-            def total(k: Int): Long = {
-              var sum = 0L
-              anim.frames(k).pixels.foreach(p => sum += (p & 0xff))
-              sum
-            }
+            def total(k: Int): Long = pixelStats(anim.frames(k).pixels)._1
             (anim.nFrames.toLong, anim.loop.toLong,
               anim.durationsMs.map(_.toLong).sum, total(0), total(1), total(2))
           case Left(_) => (-1L, -1L, -1L, -1L, -1L, -1L)
@@ -1152,12 +1141,7 @@ object Queries {
       val dec = udf { b: Array[Byte] =>
         graft.codec.Jbig2.decode(b) match {
           case Right(im) =>
-            var nb = 0L; var ck = 0L
-            var i = 0
-            while (i < im.pixels.length) {
-              if (im.pixels(i) != 0) { nb += 1; ck += i }
-              i += 1
-            }
+            val (nb, ck) = inkStats(im.pixels)
             (im.width.toLong, im.height.toLong, nb, ck)
           case Left(_) => (-1L, -1L, -1L, -1L)
         }
@@ -1200,12 +1184,7 @@ object Queries {
       val dec = udf { b: Array[Byte] =>
         graft.codec.Jbig2.decode(b) match {
           case Right(im) =>
-            var nb = 0L; var ck = 0L
-            var i = 0
-            while (i < im.pixels.length) {
-              if (im.pixels(i) != 0) { nb += 1; ck += i }
-              i += 1
-            }
+            val (nb, ck) = inkStats(im.pixels)
             (im.width.toLong, im.height.toLong, nb, ck)
           case Left(_) => (-1L, -1L, -1L, -1L)
         }
@@ -1235,16 +1214,7 @@ object Queries {
       import graft.pdf.PdfWriter
       val mk = udf { id: Long =>
         val w = 24 + (id % 3).toInt * 8; val h = 6 + (id % 4).toInt
-        val pix = new Array[Byte](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            if ((x + 3 * y + id) % 7 < 3) pix(y * w + x) = 1
-            x += 1
-          }
-          y += 1
-        }
+        val pix = raster(w, h)((x, y, _) => if ((x + 3 * y + id) % 7 < 3) 1 else 0)
         val stream = graft.codec.Jbig2.encode(pix, w, h,
           template = ((id / 2) % 4).toInt,
           tpgdon = id % 3 == 0,
@@ -1256,12 +1226,7 @@ object Queries {
       val dec = udf { b: Array[Byte] =>
         graft.codec.Jbig2.decode(b) match {
           case Right(im) =>
-            var nb = 0L; var ck = 0L
-            var i = 0
-            while (i < im.pixels.length) {
-              if (im.pixels(i) != 0) { nb += 1; ck += i }
-              i += 1
-            }
+            val (nb, ck) = inkStats(im.pixels)
             (im.width.toLong, im.height.toLong, nb, ck)
           case Left(_) => (-1L, -1L, -1L, -1L)
         }
@@ -1354,15 +1319,7 @@ object Queries {
     // (markdown lengths come from the q181/q184 pinned bytes).
     "q20_extract" -> ((s, dir) => {
       import graft.pdf.PdfWriter
-      val html = concat(
-        lit("<html><head><title>Doc "), col("doc_id"),
-        lit("</title></head><body><nav><a href=\"/a\">Home</a><a href=\"/b\">About</a></nav>"),
-        lit("<div id=\"main\"><h1>Title "), col("doc_id"),
-        lit("</h1><p>Hello world "), col("doc_id"),
-        lit(" with enough words to be content here today.</p><p>Second paragraph "),
-        col("doc_id"),
-        lit(" also has plenty of real sentence text to keep.</p></div>"),
-        lit("<footer>copyright footer</footer></body></html>"))
+      val html = boilerplatePage(col("doc_id"))
       val mkPdf = udf((id: Long) => PdfWriter.write(Vector(
         PdfWriter.PageSpec(Vector(Vector(s"Pdf doc $id line one", s"and line two of $id"))),
         PdfWriter.PageSpec(Vector(Vector(s"Second page of $id")), compress = true))))
@@ -1471,15 +1428,7 @@ object Queries {
     // production the branches read the MATERIALIZED extraction table;
     // see round-3 note). detail() places its own broadcast hints.
     "q31_eval_pipeline" -> ((s, dir) => {
-      val html = concat(
-        lit("<html><head><title>Doc "), col("doc_id"),
-        lit("</title></head><body><nav><a href=\"/a\">Home</a><a href=\"/b\">About</a></nav>"),
-        lit("<div id=\"main\"><h1>Title "), col("doc_id"),
-        lit("</h1><p>Hello world "), col("doc_id"),
-        lit(" with enough words to be content here today.</p><p>Second paragraph "),
-        col("doc_id"),
-        lit(" also has plenty of real sentence text to keep.</p></div>"),
-        lit("<footer>copyright footer</footer></body></html>"))
+      val html = boilerplatePage(col("doc_id"))
       val pages = docs(s, dir).filter(col("doc_id") < 50).select(
         concat(lit("http://x.example/p"), col("doc_id")).as("url"),
         encode(html, "UTF-8").as("html"),
@@ -1546,15 +1495,7 @@ object Queries {
         .when(m === 1, concat(
           lit("<p>Col A: value "), col("doc_id"), lit("</p>")))
         .otherwise(lit(""))
-      val html = concat(
-        lit("<html><head><title>Doc "), col("doc_id"),
-        lit("</title></head><body><nav><a href=\"/a\">Home</a><a href=\"/b\">About</a></nav>"),
-        lit("<div id=\"main\"><h1>Title "), col("doc_id"),
-        lit("</h1><p>Hello world "), col("doc_id"),
-        lit(" with enough words to be content here today.</p>"), mid,
-        lit("<p>Second paragraph "), col("doc_id"),
-        lit(" also has plenty of real sentence text to keep.</p></div>"),
-        lit("<footer>copyright footer</footer></body></html>"))
+      val html = boilerplatePage(col("doc_id"), mid)
       val pages = docs(s, dir).filter(col("doc_id") < 90).select(
         concat(lit("http://x.example/f"), col("doc_id")).as("url"),
         encode(html, "UTF-8").as("html"))
@@ -2967,22 +2908,12 @@ object Queries {
     // in the writer, the parser, the HTTP envelope, or the ISO-8601 date
     // round-trip breaks the hash compare.
     "q145_warc_roundtrip" -> ((s, dir) => {
-      val base = docs(s, dir).select(
-        concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-        (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-        lit(200).as("http_status"),
-        lit("text/html; charset=utf-8").as("content_type"),
-        encode(col("text"), "UTF-8").as("body"))
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_warc_" + new java.io.File(dir).getName).toString
-      graft.sources.Warc.write(base, out)
-      val hash = graft.ops.Dedup.polyHashFn(s)
-      s.read.format("graft.sources.WarcSource").load(out)
-        .select(col("url"),
+      val out = fixtureDir("graft_warc_", dir)
+      graft.sources.Warc.write(warcCapture(docs(s, dir)), out)
+      readWarc(s, out)
+        .select(Seq(col("url"),
           col("http_status").cast("long").as("http_status"),
-          unix_seconds(col("warc_ts")).as("ts_sec"),
-          length(col("body")).cast("long").as("n_bytes"),
-          hash(decode(col("body"), "UTF-8")).as("body_hash"))
+          unix_seconds(col("warc_ts")).as("ts_sec")) ++ bodyDigest(s): _*)
     }),
 
     // Relative per-key quality gate, ORACLED: keep the best 25% of each
@@ -3076,20 +3007,10 @@ object Queries {
     // (extracted-text) layout — envelope-free records written by the
     // distributed sink, read back, projection recomputed from documents.
     "q154_wet_roundtrip" -> ((s, dir) => {
-      val base = docs(s, dir).select(
-        concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-        (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-        lit(0).as("http_status"),
-        lit("text/plain").as("content_type"),
-        encode(col("text"), "UTF-8").as("body"))
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_wet_" + new java.io.File(dir).getName).toString
-      graft.sources.Warc.writeConversion(base, out)
-      val hash = graft.ops.Dedup.polyHashFn(s)
-      s.read.format("graft.sources.WarcSource").load(out)
-        .select(col("url"), col("record_type"),
-          length(col("body")).cast("long").as("n_bytes"),
-          hash(decode(col("body"), "UTF-8")).as("body_hash"))
+      val out = fixtureDir("graft_wet_", dir)
+      graft.sources.Warc.writeConversion(
+        warcCapture(docs(s, dir), status = 0, contentType = "text/plain"), out)
+      readWarc(s, out).select(Seq(col("url"), col("record_type")) ++ bodyDigest(s): _*)
     }),
 
     // HTML head-metadata harvest, ORACLED: pages constructed from the
@@ -3511,15 +3432,7 @@ object Queries {
     // oracle every round (the goldens pin it in the test suite; this
     // pins it in CORRECTNESS).
     "q181_extract_pin" -> ((s, dir) => {
-      val html = concat(
-        lit("<html><head><title>Doc "), col("doc_id"),
-        lit("</title></head><body><nav><a href=\"/a\">Home</a><a href=\"/b\">About</a></nav>"),
-        lit("<div id=\"main\"><h1>Title "), col("doc_id"),
-        lit("</h1><p>Hello world "), col("doc_id"),
-        lit(" with enough words to be content here today.</p><p>Second paragraph "),
-        col("doc_id"),
-        lit(" also has plenty of real sentence text to keep.</p></div>"),
-        lit("<footer>copyright footer</footer></body></html>"))
+      val html = boilerplatePage(col("doc_id"))
       val pages = docs(s, dir).select(
         concat(lit("http://x.example/p"), col("doc_id")).as("url"),
         encode(html, "UTF-8").as("html"))
@@ -3806,31 +3719,12 @@ object Queries {
       val st = udf { id: Long =>
         val bw = 2 + (id % 3).toInt; val bh = 2 + (id % 2).toInt
         val w = bw * 8; val h = bh * 8
-        val pix = new Array[Byte](w * h)
-        var by = 0
-        while (by < bh) {
-          var bx = 0
-          while (bx < bw) {
-            val v = ((id * 31 + bx * 7 + by * 13) % 256).toByte
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 8) { pix((by * 8 + y) * w + bx * 8 + x) = v; x += 1 }
-              y += 1
-            }
-            bx += 1
-          }
-          by += 1
-        }
+        val pix = raster(w, h)((x, y, _) => (id * 31 + (x / 8) * 7 + (y / 8) * 13) % 256)
         val bytes = graft.codec.JpegEncoder.encodeGray(pix, w, h,
           graft.codec.JpegEncoder.exactQuant, dri = if (id % 5 == 0) 2 else 0)
         graft.codec.Jpeg.decode(bytes) match {
           case Right(im) =>
-            var sum = 0L; var mn = 255L; var mx = 0L
-            im.pixels.foreach { p =>
-              val u = (p & 0xff).toLong
-              sum += u; if (u < mn) mn = u; if (u > mx) mx = u
-            }
+            val (sum, mn, mx) = pixelStats(im.pixels)
             (im.width.toLong, im.height.toLong, sum, mn, mx)
           case Left(_) => (0L, 0L, -1L, -1L, -1L)
         }
@@ -3875,22 +3769,7 @@ object Queries {
       val mk = udf { id: Long =>
         val bw = 2 + (id % 3).toInt; val bh = 2 + (id % 2).toInt
         val w = bw * 8; val h = bh * 8
-        val pix = new Array[Byte](w * h)
-        var by = 0
-        while (by < bh) {
-          var bx = 0
-          while (bx < bw) {
-            val v = ((id * 31 + bx * 7 + by * 13) % 256).toByte
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 8) { pix((by * 8 + y) * w + bx * 8 + x) = v; x += 1 }
-              y += 1
-            }
-            bx += 1
-          }
-          by += 1
-        }
+        val pix = raster(w, h)((x, y, _) => (id * 31 + (x / 8) * 7 + (y / 8) * 13) % 256)
         val jpeg = graft.codec.JpegEncoder.encodeGray(pix, w, h,
           graft.codec.JpegEncoder.exactQuant)
         PdfWriter.write(Vector(PdfWriter.PageSpec(Vector(Vector(s"scan $id")),
@@ -3900,7 +3779,7 @@ object Queries {
       val dec = udf { b: Array[Byte] =>
         graft.codec.Jpeg.decode(b) match {
           case Right(im) =>
-            var sum = 0L; im.pixels.foreach(p => sum += (p & 0xff))
+            val sum = pixelStats(im.pixels)._1
             (im.width.toLong, im.height.toLong, sum)
           case Left(_) => (-1L, -1L, -1L)
         }
@@ -3930,26 +3809,12 @@ object Queries {
     "q195_ccitt" -> ((s, dir) => {
       val st = udf { id: Long =>
         val w = 24 + (id % 3).toInt * 8; val h = 3 + (id % 4).toInt
-        val pix = new Array[Byte](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            if ((x + 3 * y + id) % 7 < 3) pix(y * w + x) = 1
-            x += 1
-          }
-          y += 1
-        }
+        val pix = raster(w, h)((x, y, _) => if ((x + 3 * y + id) % 7 < 3) 1 else 0)
         val align = id % 2 == 0
         val enc = graft.codec.CcittG4.encode(pix, w, h, align)
         graft.codec.CcittG4.decode(enc, w, h, align) match {
           case Right(d) =>
-            var nb = 0L; var ck = 0L
-            var i = 0
-            while (i < d.length) {
-              if (d(i) == 1) { nb += 1; ck += i }
-              i += 1
-            }
+            val (nb, ck) = inkStats(d)
             (w.toLong, h.toLong, nb, ck, enc.length.toLong)
           case Left(_) => (-1L, -1L, -1L, -1L, -1L)
         }
@@ -3968,16 +3833,7 @@ object Queries {
       import graft.pdf.PdfWriter
       val mk = udf { id: Long =>
         val w = 24 + (id % 3).toInt * 8; val h = 3 + (id % 4).toInt
-        val pix = new Array[Byte](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            if ((x + 3 * y + id) % 7 < 3) pix(y * w + x) = 1
-            x += 1
-          }
-          y += 1
-        }
+        val pix = raster(w, h)((x, y, _) => if ((x + 3 * y + id) % 7 < 3) 1 else 0)
         val g4 = graft.codec.CcittG4.encode(pix, w, h)
         PdfWriter.write(Vector(PdfWriter.PageSpec(Vector(Vector(s"fax $id")),
           images = Vector(PdfWriter.ImageSpec(w, h, PdfWriter.CcittCodec, g4,
@@ -3986,12 +3842,7 @@ object Queries {
       val dec = udf { (b: Array[Byte], w: Int, h: Int) =>
         graft.codec.CcittG4.decode(b, w, h) match {
           case Right(d) =>
-            var nb = 0L; var ck = 0L
-            var i = 0
-            while (i < d.length) {
-              if (d(i) == 1) { nb += 1; ck += i }
-              i += 1
-            }
+            val (nb, ck) = inkStats(d)
             (nb, ck)
           case Left(_) => (-1L, -1L)
         }
@@ -4021,22 +3872,7 @@ object Queries {
       val hashUdf = udf { id: Long =>
         val p = (id % 40).toInt
         val w = 72; val h = 64
-        val pix = new Array[Byte](w * h)
-        var by = 0
-        while (by < 8) {
-          var bx = 0
-          while (bx < 9) {
-            val v = ((p * 17 + bx * 5 + by * 11) % 256).toByte
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 8) { pix((by * 8 + y) * w + bx * 8 + x) = v; x += 1 }
-              y += 1
-            }
-            bx += 1
-          }
-          by += 1
-        }
+        val pix = raster(w, h)((x, y, _) => (p * 17 + (x / 8) * 5 + (y / 8) * 11) % 256)
         val bytes = graft.codec.JpegEncoder.encodeGray(pix, w, h,
           graft.codec.JpegEncoder.exactQuant)
         graft.codec.Jpeg.decode(bytes) match {
@@ -4083,31 +3919,12 @@ object Queries {
       val st = udf { id: Long =>
         val bw = 2 + (id % 4).toInt; val bh = 2 + (id % 3).toInt
         val w = bw * 8; val h = bh * 8
-        val pix = new Array[Byte](w * h)
-        var by = 0
-        while (by < bh) {
-          var bx = 0
-          while (bx < bw) {
-            val v = ((id * 37 + bx * 3 + by * 19) % 256).toByte
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 8) { pix((by * 8 + y) * w + bx * 8 + x) = v; x += 1 }
-              y += 1
-            }
-            bx += 1
-          }
-          by += 1
-        }
+        val pix = raster(w, h)((x, y, _) => (id * 37 + (x / 8) * 3 + (y / 8) * 19) % 256)
         val bytes = graft.codec.JpegEncoder.encodeGrayProgressive(pix, w, h,
           graft.codec.JpegEncoder.exactQuant)
         graft.codec.Jpeg.decode(bytes) match {
           case Right(im) =>
-            var sum = 0L; var mn = 255L; var mx = 0L
-            im.pixels.foreach { p =>
-              val u = (p & 0xff).toLong
-              sum += u; if (u < mn) mn = u; if (u > mx) mx = u
-            }
+            val (sum, mn, mx) = pixelStats(im.pixels)
             (im.width.toLong, im.height.toLong, sum, mn, mx)
           case Left(_) => (0L, 0L, -1L, -1L, -1L)
         }
@@ -4125,21 +3942,11 @@ object Queries {
     "q200_png" -> ((s, dir) => {
       val st = udf { id: Long =>
         val w = 9 + (id % 8).toInt; val h = 5 + (id % 6).toInt
-        val pix = new Array[Byte](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) { pix(y * w + x) = ((id * 3 + x + 2 * y) % 256).toByte; x += 1 }
-          y += 1
-        }
+        val pix = raster(w, h)((x, y, _) => (id * 3 + x + 2 * y) % 256)
         val bytes = graft.codec.Png.encode(pix, w, h, 1)
         graft.codec.Png.decode(bytes) match {
           case Right(im) =>
-            var sum = 0L; var mn = 255L; var mx = 0L
-            im.pixels.foreach { p =>
-              val u = (p & 0xff).toLong
-              sum += u; if (u < mn) mn = u; if (u > mx) mx = u
-            }
+            val (sum, mn, mx) = pixelStats(im.pixels)
             (im.width.toLong, im.height.toLong, sum, mn, mx)
           case Left(_) => (0L, 0L, -1L, -1L, -1L)
         }
@@ -4155,21 +3962,8 @@ object Queries {
     "q201_gif" -> ((s, dir) => {
       val st = udf { id: Long =>
         val w = 10 + (id % 6).toInt; val h = 4 + (id % 5).toInt
-        val idx = new Array[Byte](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) { idx(y * w + x) = ((id + x * 3 + y * 7) % 16).toByte; x += 1 }
-          y += 1
-        }
-        val pal = new Array[Byte](16 * 3)
-        var i = 0
-        while (i < 16) {
-          pal(3 * i) = (i * 17).toByte
-          pal(3 * i + 1) = (255 - i * 17).toByte
-          pal(3 * i + 2) = ((i * 51) % 256).toByte
-          i += 1
-        }
+        val idx = raster(w, h)((x, y, _) => (id + x * 3 + y * 7) % 16)
+        val pal = gifPalette
         val bytes = graft.codec.Gif.encode(idx, w, h, pal)
         graft.codec.Gif.decode(bytes) match {
           case Right(im) =>
@@ -4199,50 +3993,16 @@ object Queries {
       val st = udf { id: Long =>
         val payload = (id % 3) match {
           case 0 =>
-            val pix = new Array[Byte](16 * 16)
-            var by = 0
-            while (by < 2) {
-              var bx = 0
-              while (bx < 2) {
-                val v = ((id * 31 + bx + by * 2) % 256).toByte
-                var y = 0
-                while (y < 8) {
-                  var x = 0
-                  while (x < 8) { pix((by * 8 + y) * 16 + bx * 8 + x) = v; x += 1 }
-                  y += 1
-                }
-                bx += 1
-              }
-              by += 1
-            }
+            val pix = raster(16, 16)((x, y, _) => (id * 31 + (x / 8) + (y / 8) * 2) % 256)
             graft.codec.JpegEncoder.encodeGray(pix, 16, 16, graft.codec.JpegEncoder.exactQuant)
           case 1 =>
             val w = 11 + (id % 4).toInt; val h = 6
-            val pix = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) { pix(y * w + x) = ((id * 5 + x + y * 3) % 256).toByte; x += 1 }
-              y += 1
-            }
+            val pix = raster(w, h)((x, y, _) => (id * 5 + x + y * 3) % 256)
             graft.codec.Png.encode(pix, w, h, 1)
           case _ =>
             val w = 9; val h = 5 + (id % 3).toInt
-            val idx = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) { idx(y * w + x) = ((id + x + 2 * y) % 16).toByte; x += 1 }
-              y += 1
-            }
-            val pal = new Array[Byte](16 * 3)
-            var i = 0
-            while (i < 16) {
-              pal(3 * i) = (i * 17).toByte
-              pal(3 * i + 1) = (255 - i * 17).toByte
-              pal(3 * i + 2) = ((i * 51) % 256).toByte
-              i += 1
-            }
+            val idx = raster(w, h)((x, y, _) => (id + x + 2 * y) % 16)
+            val pal = gifPalette
             graft.codec.Gif.encode(idx, w, h, pal)
         }
         val fmt =
@@ -4252,8 +4012,7 @@ object Queries {
           else "unknown"
         graft.ops.Multimodal.decodeImage(payload) match {
           case Right(im) =>
-            var sum = 0L
-            im.pixels.foreach(p => sum += (p & 0xff))
+            val sum = pixelStats(im.pixels)._1
             (fmt, im.nComponents.toLong, im.width.toLong, im.height.toLong, sum)
           case Left(_) => (fmt, -1L, -1L, -1L, -1L)
         }
@@ -4272,18 +4031,7 @@ object Queries {
     "q203_exif" -> ((s, dir) => {
       val st = udf { id: Long =>
         val w = 16; val h = 8
-        val pix = new Array[Byte](w * h)
-        var bx = 0
-        while (bx < 2) {
-          val v = ((id * 31 + bx * 7) % 256).toByte
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < 8) { pix(y * w + bx * 8 + x) = v; x += 1 }
-            y += 1
-          }
-          bx += 1
-        }
+        val pix = raster(w, h)((x, _, _) => (id * 31 + (x / 8) * 7) % 256)
         val o = 1 + (id % 8).toInt
         val bytes = graft.codec.JpegEncoder.withExifOrientation(
           graft.codec.JpegEncoder.encodeGray(pix, w, h, graft.codec.JpegEncoder.exactQuant), o)
@@ -4291,8 +4039,7 @@ object Queries {
         graft.codec.Jpeg.decode(bytes) match {
           case Right(im) =>
             val d = graft.codec.Jpeg.applyOrientation(im, read)
-            var sum = 0L
-            d.pixels.foreach(p => sum += (p & 0xff))
+            val sum = pixelStats(d.pixels)._1
             (read.toLong, d.width.toLong, d.height.toLong, sum, (d.pixels(0) & 0xff).toLong)
           case Left(_) => (read.toLong, -1L, -1L, -1L, -1L)
         }
@@ -4311,34 +4058,15 @@ object Queries {
     "q204_thumbnail" -> ((s, dir) => {
       val st = udf { id: Long =>
         val w = 72; val h = 64
-        val pix = new Array[Byte](w * h)
-        var by = 0
-        while (by < 8) {
-          var bx = 0
-          while (bx < 9) {
-            val v = ((id * 23 + bx * 5 + by * 9) % 256).toByte
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 8) { pix((by * 8 + y) * w + bx * 8 + x) = v; x += 1 }
-              y += 1
-            }
-            bx += 1
-          }
-          by += 1
-        }
+        val pix = raster(w, h)((x, y, _) => (id * 23 + (x / 8) * 5 + (y / 8) * 9) % 256)
         val bytes = graft.codec.JpegEncoder.encodeGray(pix, w, h,
           graft.codec.JpegEncoder.exactQuant)
         graft.codec.Jpeg.decode(bytes) match {
           case Right(im) =>
             val t98 = graft.ops.Multimodal.boxResize(im, 9, 8)
             val t32 = graft.ops.Multimodal.boxResize(im, 3, 2)
-            var s98 = 0L; t98.pixels.foreach(p => s98 += (p & 0xff))
-            var s32 = 0L; var mn = 255L; var mx = 0L
-            t32.pixels.foreach { p =>
-              val u = (p & 0xff).toLong
-              s32 += u; if (u < mn) mn = u; if (u > mx) mx = u
-            }
+            val s98 = pixelStats(t98.pixels)._1
+            val (s32, mn, mx) = pixelStats(t32.pixels)
             (s98, s32, mn, mx)
           case Left(_) => (-1L, -1L, -1L, -1L)
         }
@@ -4361,49 +4089,22 @@ object Queries {
         val (kind, payload) = (id % 3) match {
           case 0 =>
             val w = 12 + (id % 5).toInt; val h = 7 + (id % 4).toInt
-            val pix = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) { pix(y * w + x) = ((id * 7 + x + 5 * y) % 256).toByte; x += 1 }
-              y += 1
-            }
+            val pix = raster(w, h)((x, y, _) => (id * 7 + x + 5 * y) % 256)
             ("gray", graft.codec.Tiff.encodeCompressed(pix, w, h, 1, compression = 5,
               rowsPerStrip = 3, predictor = true))
           case 1 =>
             val w = 6 + (id % 3).toInt; val h = 5
-            val pix = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val base = (y * w + x) * 3
-                pix(base) = ((id + x * 3 + y) % 256).toByte
-                pix(base + 1) = ((id * 2 + x + y * 5) % 256).toByte
-                pix(base + 2) = ((id * 4 + x * 7 + y * 2) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
+            val pix = raster(w, h, 3)((x, y, k) =>
+              Seq(id + x * 3 + y, id * 2 + x + y * 5, id * 4 + x * 7 + y * 2)(k) % 256)
             ("rgb", graft.codec.Tiff.encodeCompressed(pix, w, h, 3, compression = 32773))
           case _ =>
             val w = 24 + (id % 3).toInt * 8; val h = 9 + (id % 4).toInt
-            val pix = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                pix(y * w + x) = (if ((x + 3 * y + id) % 7 < 3) 1 else 0).toByte
-                x += 1
-              }
-              y += 1
-            }
+            val pix = raster(w, h)((x, y, _) => if ((x + 3 * y + id) % 7 < 3) 1 else 0)
             ("g4", graft.codec.Tiff.encodeG4(pix, w, h, rowsPerStrip = 4))
         }
         graft.ops.Multimodal.decodeImage(payload) match {
           case Right(im) =>
-            var sum = 0L
-            im.pixels.foreach(p => sum += (p & 0xff))
+            val sum = pixelStats(im.pixels)._1
             (kind, im.nComponents.toLong, im.width.toLong, im.height.toLong, sum)
           case Left(_) => (kind, -1L, -1L, -1L, -1L)
         }
@@ -4421,24 +4122,12 @@ object Queries {
     "q206_bmp" -> ((s, dir) => {
       val st = udf { id: Long =>
         val w = 5 + (id % 4).toInt; val h = 3 + (id % 3).toInt
-        val pix = new Array[Byte](w * h * 3)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val base = (y * w + x) * 3
-            pix(base) = ((id * 3 + x + y) % 256).toByte
-            pix(base + 1) = ((id * 5 + x * 2) % 256).toByte
-            pix(base + 2) = ((id * 7 + y * 3) % 256).toByte
-            x += 1
-          }
-          y += 1
-        }
+        val pix = raster(w, h, 3)((x, y, k) =>
+          Seq(id * 3 + x + y, id * 5 + x * 2, id * 7 + y * 3)(k) % 256)
         val payload = graft.codec.Bmp.encode(pix, w, h)
         graft.ops.Multimodal.decodeImage(payload) match {
           case Right(im) =>
-            var sum = 0L
-            im.pixels.foreach(p => sum += (p & 0xff))
+            val sum = pixelStats(im.pixels)._1
             (im.nComponents.toLong, im.width.toLong, im.height.toLong, sum,
               (im.pixels(0) & 0xff).toLong)
           case Left(_) => (-1L, -1L, -1L, -1L, -1L)
@@ -4472,9 +4161,7 @@ object Queries {
                 sampled.foreach { case (f, bytes) =>
                   graft.codec.Jpeg.decode(bytes) match {
                     case Right(im) =>
-                      var sfr = 0L
-                      im.pixels.foreach(p => sfr += (p & 0xff))
-                      pixSum += sfr
+                      pixSum += pixelStats(im.pixels)._1
                       if (f == 0) firstPx = im.pixels(0) & 0xff
                     case Left(_) => pixSum = Long.MinValue // poison
                   }
@@ -4523,14 +4210,7 @@ object Queries {
     "q209_gif_anim" -> ((s, dir) => {
       val st = udf { id: Long =>
         val sw = 12; val sh = 8
-        val pal = new Array[Byte](16 * 3)
-        var i = 0
-        while (i < 16) {
-          pal(3 * i) = (i * 17).toByte
-          pal(3 * i + 1) = (255 - i * 17).toByte
-          pal(3 * i + 2) = ((i * 51) % 256).toByte
-          i += 1
-        }
+        val pal = gifPalette
         val base = graft.codec.Gif.FrameSpec(
           Array.tabulate[Byte](sw * sh)(k => ((id + k % sw + k / sw) % 8).toByte),
           0, 0, sw, sh, delayCs = 4 + (id % 3).toInt, disposal = 1)
@@ -4544,11 +4224,7 @@ object Queries {
           Seq(base, patch, patch2))
         graft.codec.Gif.decodeFrames(bytes) match {
           case Right(anim) =>
-            def chanSum(k: Int): Long = {
-              var sum = 0L
-              anim.frames(k).pixels.foreach(p => sum += (p & 0xff))
-              sum
-            }
+            def chanSum(k: Int): Long = pixelStats(anim.frames(k).pixels)._1
             (anim.nFrames.toLong, anim.loop.toLong, anim.durationCs,
               chanSum(0), chanSum(1), chanSum(2))
           case Left(_) => (-1L, -1L, -1L, -1L, -1L, -1L)
@@ -4582,30 +4258,11 @@ object Queries {
       val st = udf { id: Long =>
         val bw = 2 + (id % 3).toInt; val bh = 2 + (id % 4).toInt
         val w = bw * 8; val h = bh * 8
-        val pix = new Array[Byte](w * h)
-        var by = 0
-        while (by < bh) {
-          var bx = 0
-          while (bx < bw) {
-            val v = ((id * 19 + bx * 7 + by * 3) % 256).toByte
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 8) { pix((by * 8 + y) * w + bx * 8 + x) = v; x += 1 }
-              y += 1
-            }
-            bx += 1
-          }
-          by += 1
-        }
+        val pix = raster(w, h)((x, y, _) => (id * 19 + (x / 8) * 7 + (y / 8) * 3) % 256)
         val bytes = graft.codec.Tiff.encodeJpeg(pix, w, h, rowsPerStrip = 16)
         graft.ops.Multimodal.decodeImage(bytes) match {
           case Right(im) =>
-            var sum = 0L; var mn = 255L; var mx = 0L
-            im.pixels.foreach { p =>
-              val u = (p & 0xff).toLong
-              sum += u; if (u < mn) mn = u; if (u > mx) mx = u
-            }
+            val (sum, mn, mx) = pixelStats(im.pixels)
             (im.width.toLong, im.height.toLong, sum, mn, mx)
           case Left(_) => (0L, 0L, -1L, -1L, -1L)
         }
@@ -4741,8 +4398,7 @@ object Queries {
             val after = graft.codec.Jpeg.exifOrientation(clean).getOrElse(-1)
             graft.codec.Jpeg.decode(clean) match {
               case Right(im) =>
-                var sum = 0L
-                im.pixels.foreach(p => sum += (p & 0xff))
+                val sum = pixelStats(im.pixels)._1
                 (before.toLong, after.toLong, sum, (tagged.length - clean.length).toLong)
               case Left(_) => (before.toLong, -2L, -1L, -1L)
             }
@@ -4763,37 +4419,19 @@ object Queries {
         val (kind, payload) = (id % 2) match {
           case 0 =>
             val w = 40 + (id % 3).toInt * 9; val h = 20 + (id % 5).toInt * 7
-            val pix = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) { pix(y * w + x) = ((id * 11 + x * 3 + y * 5) % 256).toByte; x += 1 }
-              y += 1
-            }
+            val pix = raster(w, h)((x, y, _) => (id * 11 + x * 3 + y * 5) % 256)
             ("gray", graft.codec.Tiff.encodeTiled(pix, w, h, 1, 32, 16,
               compression = 8, predictor = true))
           case _ =>
             val w = 33 + (id % 4).toInt; val h = 18
-            val pix = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val base = (y * w + x) * 3
-                pix(base) = ((id * 2 + x + y * 7) % 256).toByte
-                pix(base + 1) = ((id * 3 + x * 5 + y) % 256).toByte
-                pix(base + 2) = ((id * 5 + x * 2 + y * 3) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
+            val pix = raster(w, h, 3)((x, y, k) =>
+              Seq(id * 2 + x + y * 7, id * 3 + x * 5 + y, id * 5 + x * 2 + y * 3)(k) % 256)
             ("rgb", graft.codec.Tiff.encodeTiled(pix, w, h, 3, 16, 16,
               compression = 5))
         }
         graft.ops.Multimodal.decodeImage(payload) match {
           case Right(im) =>
-            var sum = 0L
-            im.pixels.foreach(p => sum += (p & 0xff))
+            val sum = pixelStats(im.pixels)._1
             (kind, im.nComponents.toLong, im.width.toLong, im.height.toLong, sum,
               (im.pixels(im.pixels.length - 1) & 0xff).toLong)
           case Left(_) => (kind, -1L, -1L, -1L, -1L, -1L)
@@ -4851,21 +4489,12 @@ object Queries {
     // from the documents table, so any framing or inflate drift breaks
     // the hash.
     "q220_http_codings" -> ((s, dir) => {
-      val base = docs(s, dir).select(
-        concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-        (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-        lit(200).as("http_status"),
-        lit("text/html; charset=utf-8").as("content_type"),
-        encode(col("text"), "UTF-8").as("body"))
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_coded_" + new java.io.File(dir).getName).toString
-      graft.sources.Warc.write(base, out, contentEncoding = "gzip", chunked = true)
-      val hash = graft.ops.Dedup.polyHashFn(s)
-      s.read.format("graft.sources.WarcSource").load(out)
-        .select(col("url"),
-          col("http_status").cast("long").as("http_status"),
-          length(col("body")).cast("long").as("n_bytes"),
-          hash(decode(col("body"), "UTF-8")).as("body_hash"))
+      val out = fixtureDir("graft_coded_", dir)
+      graft.sources.Warc.write(warcCapture(docs(s, dir)), out,
+        contentEncoding = "gzip", chunked = true)
+      readWarc(s, out)
+        .select(Seq(col("url"), col("http_status").cast("long").as("http_status")) ++
+          bodyDigest(s): _*)
     }),
 
     // SURT KEYS, ORACLED: the sort-friendly canonical URL key web
@@ -4889,28 +4518,15 @@ object Queries {
     // restates every projected field from the documents table. Random
     // access into 100 TB of .warc.gz is exactly what this layout buys.
     "q221_cdx_fetch" -> ((s, dir) => {
-      val base = docs(s, dir).select(
-        concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-        (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-        lit(200).as("http_status"),
-        lit("text/html; charset=utf-8").as("content_type"),
-        encode(col("text"), "UTF-8").as("body"))
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_cdx_" + new java.io.File(dir).getName).toString
-      graft.sources.Warc.write(base, out, cdxIndex = true)
-      val idx = s.read.schema(
-          "key STRING, url STRING, ts_ms LONG, file STRING, offset LONG, " +
-            "length LONG, digest STRING, record_type STRING")
-        .json(out + "/part-*.cdx")
+      val out = fixtureDir("graft_cdx_", dir)
+      graft.sources.Warc.write(warcCapture(docs(s, dir)), out, cdxIndex = true)
+      val idx = cdxIndex(s, out)
       val fetched = graft.sources.Warc.fetchByIndex(idx, out)
-      val hash = graft.ops.Dedup.polyHashFn(s)
       val digestOf = udf((b: Array[Byte]) => graft.sources.Warc.payloadDigest(b))
       idx.select(col("key"), col("url"))
         .join(fetched, Seq("url"))
-        .select(col("url"), col("key"),
-          length(col("body")).cast("long").as("n_bytes"),
-          hash(decode(col("body"), "UTF-8")).as("body_hash"),
-          (col("digest") === digestOf(col("body"))).as("digest_ok"))
+        .select(Seq(col("url"), col("key")) ++ bodyDigest(s) :+
+          (col("digest") === digestOf(col("body"))).as("digest_ok"): _*)
     }),
 
     // REVISIT RECORDS, ORACLED: planted duplicate payloads (each group of
@@ -4923,26 +4539,15 @@ object Queries {
       val d = docs(s, dir)
       val reps = d.select((col("doc_id") - pmod(col("doc_id"), lit(5))).as("rep_id"),
         col("doc_id"), col("source"))
-      val base = reps.join(
-          d.select(col("doc_id").as("rep_id"), col("text")), Seq("rep_id"))
-        .select(
-          concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-          (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-          lit(200).as("http_status"),
-          lit("text/html; charset=utf-8").as("content_type"),
-          // group id appended so payload digests collide exactly within a
-          // group (the synth corpus plants cross-group exact duplicates)
-          encode(concat(col("text"), lit(" #"), col("rep_id")), "UTF-8").as("body"))
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_rev_" + new java.io.File(dir).getName).toString
+      // group id appended so payload digests collide exactly within a
+      // group (the synth corpus plants cross-group exact duplicates)
+      val base = warcCapture(
+        reps.join(d.select(col("doc_id").as("rep_id"), col("text")), Seq("rep_id")),
+        encode(concat(col("text"), lit(" #"), col("rep_id")), "UTF-8"))
+      val out = fixtureDir("graft_rev_", dir)
       graft.sources.Warc.write(base, out, dedupRevisits = true)
-      val hash = graft.ops.Dedup.polyHashFn(s)
-      graft.sources.Warc.resolveRevisits(
-          s.read.format("graft.sources.WarcSource").load(out))
-        .select(col("url"), col("was_revisit"),
-          length(col("body")).cast("long").as("n_bytes"),
-          hash(decode(col("body"), "UTF-8")).as("body_hash"),
-          col("refers_to"))
+      graft.sources.Warc.resolveRevisits(readWarc(s, out))
+        .select(Seq(col("url"), col("was_revisit")) ++ bodyDigest(s) :+ col("refers_to"): _*)
     }),
 
     // WAT EXPORT, ORACLED: the third Common Crawl artifact — per-page
@@ -4961,18 +4566,14 @@ object Queries {
           concat(lit("<a href=\"http://out.example/b"), col("doc_id"), lit("\">z</a>")))
           .otherwise(lit("")),
         lit("</body></html>"))
-      val pages = docs(s, dir).select(
-        concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-        (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-        html.as("html"))
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_wat_" + new java.io.File(dir).getName).toString
+      val pages = docs(s, dir).select(captureKey :+ html.as("html"): _*)
+      val out = fixtureDir("graft_wat_", dir)
       graft.sources.Warc.writeMetadata(
         graft.extract.MetaHarvest.watFrame(pages, "url", "warc_ts", "html"), out)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         graft.extract.MetaHarvest.WatSchema)
       val links = "w.Envelope.`Payload-Metadata`.`HTML-Metadata`.Links"
-      s.read.format("graft.sources.WarcSource").load(out)
+      readWarc(s, out)
         .filter(col("record_type") === "metadata")
         .select(from_json(decode(col("body"), "UTF-8"), schema).as("w"))
         .select(
@@ -5190,45 +4791,27 @@ object Queries {
     "q233_crawl_loop" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val grp = col("doc_id") - pmod(col("doc_id"), lit(5))
-      val html = concat(
-        lit("<html><head><title>Doc "), grp,
-        lit("</title></head><body><nav><a href=\"/a\">Home</a><a href=\"/b\">About</a></nav>"),
-        lit("<div id=\"main\"><h1>Title "), grp,
-        lit("</h1><p>Hello world "), grp,
-        lit(" with enough words to be content here today.</p><p>Second paragraph "),
-        grp, lit(" also has plenty of real sentence text to keep.</p></div>"),
-        lit("<footer>copyright footer</footer></body></html>"))
-      val base = docs(s, dir).select(
-        concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-        (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-        lit(200).as("http_status"),
-        lit("text/html; charset=utf-8").as("content_type"),
-        encode(html, "UTF-8").as("body"))
-      val sfName = new java.io.File(dir).getName
-      val raw = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_loop_" + sfName).toString
-      val wet = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_loopwet_" + sfName).toString
+      val base = warcCapture(docs(s, dir), encode(boilerplatePage(grp), "UTF-8"))
+      val raw = fixtureDir("graft_loop_", dir)
+      val wet = fixtureDir("graft_loopwet_", dir)
       graft.sources.Warc.write(base, raw, dedupRevisits = true, cdxIndex = true)
-      val resolved = graft.sources.Warc.resolveRevisits(
-        s.read.format("graft.sources.WarcSource").load(raw))
+      val resolved = graft.sources.Warc.resolveRevisits(readWarc(s, raw))
       val extracted = graft.extract.ExtractJob.extractedDf(
           resolved.select(col("url"), col("warc_ts"), col("body").as("html")))
         .filter(col("extracted.status") === "ok")
         .select(col("url"), col("warc_ts"), col("extracted.markdown").as("md"))
-      val kept = extracted
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy(col("md")).orderBy(col("url"))))
-        .withColumn("n_docs", count(lit(1)).over(Window.partitionBy(col("md"))))
+      // both windows key on the markdown's 64-bit hash, so their one
+      // exchange partitions on 8 bytes instead of whole bodies
+      val byMd = Window.partitionBy(col("md_key"))
+      val kept = extracted.withColumn("md_key", xxhash64(col("md")))
+        .withColumn("__rn", row_number().over(byMd.orderBy(col("url"))))
+        .withColumn("n_docs", count(lit(1)).over(byMd))
         .filter(col("__rn") === 1)
       graft.sources.Warc.writeConversion(
         kept.select(col("url"), col("warc_ts"), lit(0).as("http_status"),
           lit("text/plain").as("content_type"), encode(col("md"), "UTF-8").as("body")),
         wet)
-      val hash = graft.ops.Dedup.polyHashFn(s)
-      s.read.format("graft.sources.WarcSource").load(wet)
-        .select(col("url"), length(col("body")).cast("long").as("n_bytes"),
-          hash(decode(col("body"), "UTF-8")).as("body_hash"))
+      readWarc(s, wet).select(col("url") +: bodyDigest(s): _*)
         .join(kept.select(col("url"), col("n_docs").cast("long").as("n_docs")), Seq("url"))
     }),
 
@@ -5284,15 +4867,7 @@ object Queries {
     // string lengths alone (heading, then two paragraphs separated by
     // blank lines).
     "q236_spans" -> ((s, dir) => {
-      val html = concat(
-        lit("<html><head><title>Doc "), col("doc_id"),
-        lit("</title></head><body><nav><a href=\"/a\">Home</a><a href=\"/b\">About</a></nav>"),
-        lit("<div id=\"main\"><h1>Title "), col("doc_id"),
-        lit("</h1><p>Hello world "), col("doc_id"),
-        lit(" with enough words to be content here today.</p><p>Second paragraph "),
-        col("doc_id"),
-        lit(" also has plenty of real sentence text to keep.</p></div>"),
-        lit("<footer>copyright footer</footer></body></html>"))
+      val html = boilerplatePage(col("doc_id"))
       val pages = docs(s, dir).select(
         concat(lit("http://x.example/p"), col("doc_id")).as("url"),
         encode(html, "UTF-8").as("html"))
@@ -5333,21 +4908,11 @@ object Queries {
     // reader surfaces the flag so a pipeline can gate on it; lengths,
     // flags, and prefix hashes all restated from the table.
     "q238_truncation" -> ((s, dir) => {
-      val base = docs(s, dir).select(
-        concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-        (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-        lit(200).as("http_status"),
-        lit("text/html; charset=utf-8").as("content_type"),
-        encode(col("text"), "UTF-8").as("body"))
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_trunc_" + new java.io.File(dir).getName).toString
-      graft.sources.Warc.write(base, out, truncateAt = 200)
-      val hash = graft.ops.Dedup.polyHashFn(s)
-      s.read.format("graft.sources.WarcSource").load(out)
-        .select(col("url"),
-          length(col("body")).cast("long").as("n_bytes"),
-          (col("truncated") =!= "").as("is_truncated"),
-          hash(decode(col("body"), "UTF-8")).as("body_hash"))
+      val out = fixtureDir("graft_trunc_", dir)
+      graft.sources.Warc.write(warcCapture(docs(s, dir)), out, truncateAt = 200)
+      val Seq(nBytes, bodyHash) = bodyDigest(s)
+      readWarc(s, out)
+        .select(col("url"), nBytes, (col("truncated") =!= "").as("is_truncated"), bodyHash)
     }),
 
     // CC-INDEX-STYLE HOST ROLLUP, ORACLED: the CDX sidecar consumed AS A
@@ -5358,22 +4923,12 @@ object Queries {
       val d = docs(s, dir)
       val reps = d.select((col("doc_id") - pmod(col("doc_id"), lit(5))).as("rep_id"),
         col("doc_id"), col("source"))
-      val base = reps.join(
-          d.select(col("doc_id").as("rep_id"), col("text")), Seq("rep_id"))
-        .select(
-          concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-          (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-          lit(200).as("http_status"),
-          lit("text/html; charset=utf-8").as("content_type"),
-          encode(concat(col("text"), lit(" #"), col("rep_id")), "UTF-8").as("body"))
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_hostidx_" + new java.io.File(dir).getName).toString
+      val base = warcCapture(
+        reps.join(d.select(col("doc_id").as("rep_id"), col("text")), Seq("rep_id")),
+        encode(concat(col("text"), lit(" #"), col("rep_id")), "UTF-8"))
+      val out = fixtureDir("graft_hostidx_", dir)
       graft.sources.Warc.write(base, out, dedupRevisits = true, cdxIndex = true)
-      val idx = s.read.schema(
-          "key STRING, url STRING, ts_ms LONG, file STRING, offset LONG, " +
-            "length LONG, digest STRING, record_type STRING")
-        .json(out + "/part-*.cdx")
-      idx.select(regexp_extract(col("url"), "://([^/]+)", 1).as("host"),
+      cdxIndex(s, out).select(regexp_extract(col("url"), "://([^/]+)", 1).as("host"),
           col("record_type"), col("digest"), col("ts_ms"))
         .groupBy(col("host"))
         .agg(count(lit(1)).as("n_records"),
@@ -5421,18 +4976,9 @@ object Queries {
     "q241_frontier_novel" -> ((s, dir) => {
       val d = docs(s, dir)
       // captured corpus: the documents table itself, CDX-indexed
-      val base = d.select(
-        concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-        (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-        lit(200).as("http_status"), lit("text/html").as("content_type"),
-        encode(col("text"), "UTF-8").as("body"))
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_fnov_" + new java.io.File(dir).getName).toString
-      graft.sources.Warc.write(base, out, cdxIndex = true)
-      val captured = s.read.schema(
-          "key STRING, url STRING, ts_ms LONG, file STRING, offset LONG, " +
-            "length LONG, digest STRING, record_type STRING")
-        .json(out + "/part-*.cdx").select(col("key"))
+      val out = fixtureDir("graft_fnov_", dir)
+      graft.sources.Warc.write(warcCapture(d, contentType = "text/html"), out, cdxIndex = true)
+      val captured = cdxIndex(s, out).select(col("key"))
       // discovery: each page links one captured sibling (mod-4=0) or an
       // external page, plus a relative link to an uncaptured local path
       val pageUrl = concat(lit("http://"), col("source"), lit(".example/doc/"),
@@ -5460,18 +5006,9 @@ object Queries {
     // novel SURT keys survive the probe against the corpus's CDX keys.
     "q242_sitemap_frontier" -> ((s, dir) => {
       val d = docs(s, dir)
-      val base = d.select(
-        concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
-        (col("doc_id") + lit(1577836800L)).cast("timestamp").as("warc_ts"),
-        lit(200).as("http_status"), lit("text/html").as("content_type"),
-        encode(col("text"), "UTF-8").as("body"))
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_smf_" + new java.io.File(dir).getName).toString
-      graft.sources.Warc.write(base, out, cdxIndex = true)
-      val captured = s.read.schema(
-          "key STRING, url STRING, ts_ms LONG, file STRING, offset LONG, " +
-            "length LONG, digest STRING, record_type STRING")
-        .json(out + "/part-*.cdx").select(col("key"))
+      val out = fixtureDir("graft_smf_", dir)
+      graft.sources.Warc.write(warcCapture(d, contentType = "text/html"), out, cdxIndex = true)
+      val captured = cdxIndex(s, out).select(col("key"))
       val hostBase = concat(lit("http://"), col("source"), lit(".example/doc/"))
       val xml = concat(
         lit("<?xml version=\"1.0\"?><urlset><url><loc>"), hostBase, col("doc_id"),
@@ -5687,28 +5224,24 @@ object Queries {
     * it per document, q166 buckets the per-document averages per source.
     * (A def like [[hllRegisterCtes]]: interpolated from the oracles map.) */
   private def lmNllCtes: String =
-    """d AS (SELECT doc_id,
+    raw"""d AS (SELECT doc_id,
       |    list_filter(regexp_split_to_array(trim(text), '[ \t\n\r]+'), x -> x <> '') AS w
       |  FROM documents),
       |ref AS (SELECT w FROM d WHERE doc_id % 13 = 0),
       |corp AS (SELECT doc_id, w FROM d WHERE doc_id % 13 <> 0),
       |c1 AS (SELECT h1, count(*)::BIGINT AS c1 FROM (
-      |    SELECT list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(tok, '')]),
-      |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h1
+      |    SELECT ${polyHashSql("tok")} AS h1
       |    FROM (SELECT unnest(w) AS tok FROM ref)) GROUP BY h1),
       |v AS (SELECT count(*)::BIGINT AS v FROM c1),
       |c12 AS (SELECT h12, count(*)::BIGINT AS c12 FROM (
-      |    SELECT list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(bg, '')]),
-      |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h12
+      |    SELECT ${polyHashSql("bg")} AS h12
       |    FROM (SELECT unnest([w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]) AS bg
       |          FROM ref)) GROUP BY h12),
       |cb AS (SELECT doc_id, unnest([w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]) AS bg
       |  FROM corp),
       |ch AS (SELECT doc_id,
-      |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(split_part(bg, ' ', 1), '')]),
-      |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h1,
-      |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(bg, '')]),
-      |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h12
+      |    ${polyHashSql("split_part(bg, ' ', 1)")} AS h1,
+      |    ${polyHashSql("bg")} AS h12
       |  FROM cb),
       |lp AS (SELECT doc_id,
       |    CAST(floor(-ln((coalesce(c12, 0) + 0.1::DOUBLE) /
@@ -5898,7 +5431,7 @@ object Queries {
     // signature, band keys, bucket join and exact-jaccard verify are all
     // plain BIGINT arithmetic in ANSI SQL (see ops/Dedup.scala)
     "q27_minhash_lsh" ->
-      """WITH corpus AS (
+      raw"""WITH corpus AS (
         |  SELECT CAST(doc_id AS BIGINT) AS id, text FROM documents WHERE doc_id < 150
         |  UNION ALL
         |  SELECT CAST(doc_id AS BIGINT) + 10000 AS id,
@@ -5911,25 +5444,17 @@ object Queries {
         |),
         |sh AS (
         |  SELECT id, list_distinct(
-        |    CASE WHEN len(w) = 0 THEN []
-        |         WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-        |         ELSE [w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]
-        |    END) AS shingles
+        |    ${wordShinglesSql(3, concatGram = true)}) AS shingles
         |  FROM words
         |),
         |ph AS (
         |  SELECT id, shingles,
-        |    [list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |       (acc, c) -> (acc * 131 + c) % 2147483647) FOR sg IN shingles] AS hb
+        |    [${polyHashSql("sg")} FOR sg IN shingles] AS hb
         |  FROM sh
         |),
         |sigs AS (
         |  SELECT id, shingles,
-        |    [CASE WHEN len(hb) = 0 THEN 2147483647::BIGINT
-        |          ELSE list_min([((((h+1) * 1103515245 + 12345) % 2147483647) * x
-        |                          + (((h+1) * 1234567891 + 987654321) % 2147483647)) % 2147483647
-        |                         FOR x IN hb]) END
-        |     FOR h IN range(0, 32)] AS sig
+        |    $minHashSigSql AS sig
         |  FROM ph
         |),
         |keyed AS (
@@ -5968,7 +5493,7 @@ object Queries {
     // q28: independent replay of the SimHash pipeline — same portable
     // Carter-Wegman family (see ops/Dedup.scala simhash64)
     "q28_simhash" ->
-      """WITH corpus AS (
+      raw"""WITH corpus AS (
         |  SELECT CAST(doc_id AS BIGINT) AS id, text FROM documents WHERE doc_id < 150
         |  UNION ALL
         |  SELECT CAST(doc_id AS BIGINT) + 10000 AS id,
@@ -5980,8 +5505,7 @@ object Queries {
         |  FROM corpus
         |),
         |th AS (
-        |  SELECT id, [list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(t, '')]),
-        |     (acc, c) -> (acc * 131 + c) % 2147483647) FOR t IN w] AS hx
+        |  SELECT id, [${polyHashSql("t")} FOR t IN w] AS hx
         |  FROM toks
         |),
         |sigs AS (
@@ -6014,10 +5538,9 @@ object Queries {
 
     // q22: portable lineage hash (see the query's comment)
     "q22_lineage" ->
-      """SELECT part_id, count(*) AS row_count, bit_xor(dh) AS checksum FROM (
+      raw"""SELECT part_id, count(*) AS row_count, bit_xor(dh) AS checksum FROM (
         |  SELECT CAST(((doc_id * 1103515245 + 12345) % 2147483647) % 8 AS INT) AS part_id,
-        |    (list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(text, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) * 1103515245 + doc_id) % 2147483647 AS dh
+        |    (${polyHashSql("text")} * 1103515245 + doc_id) % 2147483647 AS dh
         |  FROM documents)
         |GROUP BY part_id""".stripMargin,
 
@@ -6026,7 +5549,7 @@ object Queries {
     // into the constants: 1302 = 42*31), dot products as sequential
     // double folds (bit-equal), then the q24 cosine re-rank shape
     "q29_ann_lsh" ->
-      """WITH sigt AS (
+      raw"""WITH sigt AS (
         |  SELECT vec_id, embedding,
         |    CAST(list_sum([CASE WHEN
         |      list_reduce(list_prepend(0.0::DOUBLE,
@@ -6052,16 +5575,7 @@ object Queries {
         |  SELECT DISTINCT query_id, nn_id FROM qb JOIN cb ON qb.band = cb.band AND qb.bk = cb.bk
         |),
         |scored AS (
-        |  SELECT query_id, nn_id,
-        |    CASE WHEN nq = 0 OR nc = 0 THEN 0.0 ELSE dot / (sqrt(nq) * sqrt(nc)) END AS sim
-        |  FROM (
-        |    SELECT query_id, nn_id,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [qv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS dot,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [qv[i]::DOUBLE * qv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS nq,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [cv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(cv) + 1)]), (a, b) -> a + b) AS nc
-        |    FROM cand
-        |    JOIN (SELECT vec_id, embedding AS qv FROM embeddings) q ON q.vec_id = cand.query_id
-        |    JOIN (SELECT vec_id, embedding AS cv FROM embeddings) c ON c.vec_id = cand.nn_id)
+        |  ${cosineSql()}
         |)
         |SELECT query_id, rank, nn_id, round(sim, 6) AS sim FROM (
         |  SELECT query_id, nn_id, sim,
@@ -6132,7 +5646,7 @@ object Queries {
     // sides use the sequential-double-fold cosine, so cell choice is
     // bit-equal), then the q24 cosine re-rank shape over in-cell rows
     "q35_ann_ivf" ->
-      """WITH centr AS (
+      raw"""WITH centr AS (
         |  SELECT vec_id AS cid, embedding AS cv FROM embeddings
         |  WHERE embedding IS NOT NULL
         |  ORDER BY (CAST(vec_id AS BIGINT) * 1103515245 + 12345) % 2147483647, vec_id
@@ -6161,16 +5675,7 @@ object Queries {
         |  SELECT p.query_id, a.nn_id FROM probes p JOIN assigned a ON p.cell = a.cell
         |),
         |scored AS (
-        |  SELECT query_id, nn_id,
-        |    CASE WHEN nq = 0 OR nc = 0 THEN 0.0 ELSE dot / (sqrt(nq) * sqrt(nc)) END AS sim
-        |  FROM (
-        |    SELECT query_id, nn_id,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [qv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS dot,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [qv[i]::DOUBLE * qv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS nq,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [cv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(cv) + 1)]), (a, b) -> a + b) AS nc
-        |    FROM cand
-        |    JOIN (SELECT vec_id, embedding AS qv FROM embeddings) q ON q.vec_id = cand.query_id
-        |    JOIN (SELECT vec_id, embedding AS cv FROM embeddings) c ON c.vec_id = cand.nn_id)
+        |  ${cosineSql()}
         |)
         |SELECT query_id, rank, nn_id, round(sim, 6) AS sim FROM (
         |  SELECT query_id, nn_id, sim,
@@ -6233,19 +5738,10 @@ object Queries {
         |FROM g a, g b WHERE a.doc_id < b.doc_id""".stripMargin,
 
     "q24_cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
+      raw"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
         |scored AS (
-        |  SELECT query_id, c.vec_id AS nn_id,
-        |    CASE WHEN nq = 0 OR nc = 0 THEN 0.0 ELSE dot / (sqrt(nq) * sqrt(nc)) END AS sim
-        |  FROM (
-        |    SELECT query_id, c.vec_id,
-        |      list_reduce(list_prepend(0.0::DOUBLE,
-        |        [qv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS dot,
-        |      list_reduce(list_prepend(0.0::DOUBLE,
-        |        [qv[i]::DOUBLE * qv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS nq,
-        |      list_reduce(list_prepend(0.0::DOUBLE,
-        |        [cv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(cv) + 1)]), (a, b) -> a + b) AS nc
-        |    FROM q, (SELECT vec_id, embedding AS cv FROM embeddings) c) c)
+        |  ${cosineSql(outer = "query_id, c.vec_id AS nn_id", inner = "query_id, c.vec_id",
+               from = "q, (SELECT vec_id, embedding AS cv FROM embeddings) c")} c)
         |SELECT query_id, rank, nn_id, round(sim, 6) AS sim FROM (
         |  SELECT query_id, nn_id, sim,
         |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, nn_id ASC) AS rank
@@ -6425,7 +5921,7 @@ object Queries {
     // q49: same 5-gram shingling + base-131 polynomial hash + benchmark
     // membership, replayed independently (the q27 shingle/hash SQL family)
     "q49_decontam" ->
-      """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 17 <> 0),
+      raw"""WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 17 <> 0),
         |bench AS (SELECT text FROM documents WHERE doc_id % 17 = 0),
         |cw AS (SELECT doc_id,
         |    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS w
@@ -6434,22 +5930,14 @@ object Queries {
         |    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS w
         |  FROM bench),
         |csh AS (SELECT doc_id, list_distinct(
-        |    CASE WHEN len(w) = 0 THEN []
-        |         WHEN len(w) <= 5 THEN [array_to_string(w, ' ')]
-        |         ELSE [array_to_string(w[i : i + 4], ' ') FOR i IN range(1, len(w) - 3)]
-        |    END) AS sh FROM cw),
+        |    ${wordShinglesSql(5)}) AS sh FROM cw),
         |bsh AS (SELECT list_distinct(
-        |    CASE WHEN len(w) = 0 THEN []
-        |         WHEN len(w) <= 5 THEN [array_to_string(w, ' ')]
-        |         ELSE [array_to_string(w[i : i + 4], ' ') FOR i IN range(1, len(w) - 3)]
-        |    END) AS sh FROM bw),
+        |    ${wordShinglesSql(5)}) AS sh FROM bw),
         |bh AS (SELECT DISTINCT
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS ngh
+        |    ${polyHashSql("sg")} AS ngh
         |  FROM (SELECT unnest(sh) AS sg FROM bsh)),
         |ch AS (SELECT doc_id,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS ngh
+        |    ${polyHashSql("sg")} AS ngh
         |  FROM (SELECT doc_id, unnest(sh) AS sg FROM csh)),
         |hits AS (SELECT doc_id, count(*)::BIGINT AS n_hits FROM ch JOIN bh USING (ngh)
         |  GROUP BY doc_id)
@@ -6484,13 +5972,12 @@ object Queries {
 
     // q51: hash → distinct → rank ≤ k → (k-1)·p/h_k, all in signed-64 SQL
     "q51_kmv" ->
-      """WITH toks AS (
+      raw"""WITH toks AS (
         |  SELECT source, unnest(list_filter(
         |    regexp_split_to_array(trim(text), '[ \t\n\r]+'), x -> x <> '')) AS tok
         |  FROM documents),
         |h AS (SELECT source,
-        |    (list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(tok, '')]),
-        |       (acc, c) -> (acc * 131 + c) % 2147483647)
+        |    (${polyHashSql("tok")}
         |     * 1103515245 + 12345) % 2147483647 AS kh
         |  FROM toks),
         |d AS (SELECT DISTINCT source, kh FROM h),
@@ -6551,17 +6038,13 @@ object Queries {
     // q54: shingle → hash → per-gram doc count → per-doc roll-up, the
     // q49 SQL shingle/hash family turned corpus-internal
     "q54_dup_passages" ->
-      """WITH cw AS (SELECT doc_id,
+      raw"""WITH cw AS (SELECT doc_id,
         |    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS w
         |  FROM documents WHERE doc_id < 300),
         |sh AS (SELECT doc_id, list_distinct(
-        |    CASE WHEN len(w) = 0 THEN []
-        |         WHEN len(w) <= 5 THEN [array_to_string(w, ' ')]
-        |         ELSE [array_to_string(w[i : i + 4], ' ') FOR i IN range(1, len(w) - 3)]
-        |    END) AS sh FROM cw),
+        |    ${wordShinglesSql(5)}) AS sh FROM cw),
         |ng AS (SELECT doc_id,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS ngh
+        |    ${polyHashSql("sg")} AS ngh
         |  FROM (SELECT doc_id, unnest(sh) AS sg FROM sh)),
         |cnt AS (SELECT ngh, count(*)::BIGINT AS ndocs FROM ng GROUP BY ngh)
         |SELECT doc_id, count(*)::BIGINT AS n_ngrams,
@@ -6572,14 +6055,13 @@ object Queries {
     // q55: line explode → polyHash → global first-occurrence window →
     // ordered reassembly; the rewritten text is byte-compared
     "q55_paragraph_dedup" ->
-      """WITH d AS (SELECT doc_id,
+      raw"""WITH d AS (SELECT doc_id,
         |    string_split(replace(text, ' the ', chr(10)), chr(10)) AS ls
         |  FROM documents WHERE doc_id < 120),
         |l AS (SELECT doc_id, unnest(range(1, len(ls) + 1)) AS pos, ls FROM d),
         |ne AS (SELECT doc_id, pos, ls[pos] AS line FROM l WHERE ls[pos] <> ''),
         |h AS (SELECT doc_id, pos, line,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(line, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS ph
+        |    ${polyHashSql("line")} AS ph
         |  FROM ne),
         |k AS (SELECT doc_id, pos, line,
         |    row_number() OVER (PARTITION BY ph ORDER BY doc_id, pos) AS rn FROM h)
@@ -6743,7 +6225,7 @@ object Queries {
     // positions within a shingle each match independently, mirroring
     // the per-j membership test in the Scala kernel)
     "q64_bloom_decontam" ->
-      """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 17 <> 0),
+      raw"""WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 17 <> 0),
         |bench AS (SELECT text FROM documents WHERE doc_id % 17 = 0),
         |cw AS (SELECT doc_id,
         |    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS w
@@ -6752,28 +6234,20 @@ object Queries {
         |    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS w
         |  FROM bench),
         |csh AS (SELECT doc_id, list_distinct(
-        |    CASE WHEN len(w) = 0 THEN []
-        |         WHEN len(w) <= 5 THEN [array_to_string(w, ' ')]
-        |         ELSE [array_to_string(w[i : i + 4], ' ') FOR i IN range(1, len(w) - 3)]
-        |    END) AS sh FROM cw),
+        |    ${wordShinglesSql(5)}) AS sh FROM cw),
         |bsh AS (SELECT list_distinct(
-        |    CASE WHEN len(w) = 0 THEN []
-        |         WHEN len(w) <= 5 THEN [array_to_string(w, ' ')]
-        |         ELSE [array_to_string(w[i : i + 4], ' ') FOR i IN range(1, len(w) - 3)]
-        |    END) AS sh FROM bw),
+        |    ${wordShinglesSql(5)}) AS sh FROM bw),
         |hj AS (SELECT j,
         |    ((j + 1) * 1103515245 + 12345) % 2147483647 AS a,
         |    ((j + 1) * 1234567891 + 987654321) % 2147483647 AS b
         |  FROM range(3) t(j)),
         |bh AS (SELECT DISTINCT
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS ngh
+        |    ${polyHashSql("sg")} AS ngh
         |  FROM (SELECT unnest(sh) AS sg FROM bsh)),
         |bloom AS (SELECT DISTINCT ((a * ngh + b) % 2147483647) % 8192 AS pos
         |  FROM bh CROSS JOIN hj),
         |ch AS (SELECT doc_id, sg,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS ngh
+        |    ${polyHashSql("sg")} AS ngh
         |  FROM (SELECT doc_id, unnest(sh) AS sg FROM csh)),
         |cpos AS (SELECT doc_id, sg, ((a * ngh + b) % 2147483647) % 8192 AS pos
         |  FROM ch CROSS JOIN hj),
@@ -6856,11 +6330,10 @@ object Queries {
     // q69: rebuild the sketch cells as (row, pos) sums and probe the min —
     // the same Carter-Wegman constants as the Bloom/MinHash replays
     "q69_countmin" ->
-      """WITH toks AS (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS term
+      raw"""WITH toks AS (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS term
         |  FROM documents),
         |th AS (SELECT term, count(*)::BIGINT AS exact,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(term, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h
+        |    ${polyHashSql("term")} AS h
         |  FROM toks GROUP BY term),
         |hj AS (SELECT j,
         |    ((j + 1) * 1103515245 + 12345) % 2147483647 AS a,
@@ -6903,17 +6376,13 @@ object Queries {
     // q71: the q64 shingle/hash family, min-id first occurrence per hash,
     // per-doc roll-up with the `// 10^6` ratio
     "q71_novelty" ->
-      """WITH cw AS (SELECT doc_id,
+      raw"""WITH cw AS (SELECT doc_id,
         |    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS w
         |  FROM documents WHERE doc_id < 300),
         |sh AS (SELECT doc_id, list_distinct(
-        |    CASE WHEN len(w) = 0 THEN []
-        |         WHEN len(w) <= 5 THEN [array_to_string(w, ' ')]
-        |         ELSE [array_to_string(w[i : i + 4], ' ') FOR i IN range(1, len(w) - 3)]
-        |    END) AS sh FROM cw),
+        |    ${wordShinglesSql(5)}) AS sh FROM cw),
         |ng AS (SELECT DISTINCT doc_id,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS ngh
+        |    ${polyHashSql("sg")} AS ngh
         |  FROM (SELECT doc_id, unnest(sh) AS sg FROM sh)),
         |f AS (SELECT ngh, min(doc_id) AS fid FROM ng GROUP BY ngh),
         |nov AS (SELECT fid AS doc_id, count(*)::BIGINT AS n_novel FROM f GROUP BY fid),
@@ -6926,9 +6395,8 @@ object Queries {
     // q72: distinct (source, token-hash) sets self-joined on the hash,
     // sizes joined back, the same `// 10^6` ratio
     "q72_source_overlap" ->
-      """WITH st AS (SELECT DISTINCT source,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(term, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS th
+      raw"""WITH st AS (SELECT DISTINCT source,
+        |    ${polyHashSql("term")} AS th
         |  FROM (SELECT source,
         |      unnest(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')) AS term
         |    FROM documents)),
@@ -6945,17 +6413,13 @@ object Queries {
     // q73: 3-gram variant of the q64/q71 shingle CTE, intersection via
     // hash equi-join per adjacent pair, all three `// 10^6` ratios
     "q73_containment" ->
-      """WITH cw AS (SELECT doc_id,
+      raw"""WITH cw AS (SELECT doc_id,
         |    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS w
         |  FROM documents WHERE doc_id < 300),
         |sh AS (SELECT doc_id, list_distinct(
-        |    CASE WHEN len(w) = 0 THEN []
-        |         WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-        |         ELSE [array_to_string(w[i : i + 2], ' ') FOR i IN range(1, len(w) - 1)]
-        |    END) AS sh FROM cw),
+        |    ${wordShinglesSql(3)}) AS sh FROM cw),
         |ng AS (SELECT DISTINCT doc_id,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS ngh
+        |    ${polyHashSql("sg")} AS ngh
         |  FROM (SELECT doc_id, unnest(sh) AS sg FROM sh)),
         |sz AS (SELECT doc_id, count(*)::BIGINT AS n FROM ng GROUP BY doc_id),
         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -6992,14 +6456,12 @@ object Queries {
     // q75: per-position substr-fold hashes, packed-key sliding min over
     // full windows, distinct — the identical integer tie rule
     "q75_winnow" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 120),
+      raw"""WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 120),
         |p AS (SELECT doc_id, text,
         |    unnest(range(1, greatest(length(text) - 4 + 1, 0) + 1)) AS pos
         |  FROM d),
         |h AS (SELECT doc_id, pos,
-        |    list_reduce(list_prepend(0::BIGINT,
-        |        [ascii(c)::BIGINT FOR c IN split(substr(text, pos, 4), '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) * 1048576 + pos AS key
+        |    ${polyHashSql("substr(text, pos, 4)")} * 1048576 + pos AS key
         |  FROM p),
         |m AS (SELECT doc_id, pos,
         |    min(key) OVER (PARTITION BY doc_id ORDER BY pos
@@ -7020,14 +6482,12 @@ object Queries {
 
     // q77: the q75 fingerprint CTE, distinct (id, hash), df cap, self-join
     "q77_winnow_pairs" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 120),
+      raw"""WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 120),
         |p AS (SELECT doc_id, text,
         |    unnest(range(1, greatest(length(text) - 4 + 1, 0) + 1)) AS pos
         |  FROM d),
         |h AS (SELECT doc_id, pos,
-        |    list_reduce(list_prepend(0::BIGINT,
-        |        [ascii(c)::BIGINT FOR c IN split(substr(text, pos, 4), '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) * 1048576 + pos AS key
+        |    ${polyHashSql("substr(text, pos, 4)")} * 1048576 + pos AS key
         |  FROM p),
         |m AS (SELECT doc_id, pos,
         |    min(key) OVER (PARTITION BY doc_id ORDER BY pos
@@ -7172,12 +6632,11 @@ object Queries {
     // q84: per-slice micro-unit token rates, full-outer vocab join, the
     // same per-term floored integer statistic
     "q84_rate_divergence" ->
-      """WITH tok AS (SELECT doc_id, source,
+      raw"""WITH tok AS (SELECT doc_id, source,
         |    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')) AS term
         |  FROM documents),
         |h AS (SELECT doc_id, source,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(term, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS th
+        |    ${polyHashSql("term")} AS th
         |  FROM tok),
         |o AS (SELECT source, th, count(*)::BIGINT AS c FROM h WHERE doc_id % 3 <> 0 GROUP BY 1, 2),
         |n AS (SELECT source, th, count(*)::BIGINT AS c FROM h WHERE doc_id % 5 <> 0 GROUP BY 1, 2),
@@ -7225,19 +6684,11 @@ object Queries {
       def chain(p: String, src: String) =
         s"""${p}words AS (SELECT id, list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '') AS w FROM $src),
            |${p}sh AS (SELECT id, list_distinct(
-           |    CASE WHEN len(w) = 0 THEN []
-           |         WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-           |         ELSE [w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]
-           |    END) AS shingles FROM ${p}words),
+           |    ${wordShinglesSql(3, concatGram = true)}) AS shingles FROM ${p}words),
            |${p}ph AS (SELECT id, shingles,
-           |    [list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-           |       (acc, c) -> (acc * 131 + c) % 2147483647) FOR sg IN shingles] AS hb FROM ${p}sh),
+           |    [${polyHashSql("sg")} FOR sg IN shingles] AS hb FROM ${p}sh),
            |${p}sigs AS (SELECT id, shingles,
-           |    [CASE WHEN len(hb) = 0 THEN 2147483647::BIGINT
-           |          ELSE list_min([((((h+1) * 1103515245 + 12345) % 2147483647) * x
-           |                          + (((h+1) * 1234567891 + 987654321) % 2147483647)) % 2147483647
-           |                         FOR x IN hb]) END
-           |     FOR h IN range(0, 32)] AS sig FROM ${p}ph),
+           |    $minHashSigSql AS sig FROM ${p}ph),
            |${p}keyed AS (SELECT id, shingles,
            |    [list_reduce(list_prepend((b+1)::BIGINT, [sig[4*b + j] FOR j IN range(1, 5)]),
            |       (acc, s) -> (acc * 131071 + s) % 2147483647) FOR b IN range(0, 8)] AS keys FROM ${p}sigs),
@@ -7686,12 +7137,11 @@ object Queries {
     // q104: the polyHash fold, bucket, sign, and signed sum all
     // recomputed from the characters up
     "q104_hash_embed" ->
-      """WITH w AS (SELECT doc_id,
+      raw"""WITH w AS (SELECT doc_id,
         |    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')) AS w
         |  FROM documents WHERE doc_id < 100),
         |h AS (SELECT doc_id,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(w, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h
+        |    ${polyHashSql("w")} AS h
         |  FROM w)
         |SELECT doc_id, h % 32 AS dim,
         |  CAST(sum(CASE WHEN (h // 32) % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT) AS value
@@ -7837,7 +7287,7 @@ object Queries {
     // then exhaustive pairs with position-match counting and exact
     // set Jaccard
     "q114_minhash_fidelity" ->
-      """WITH corpus AS (
+      raw"""WITH corpus AS (
         |  SELECT CAST(doc_id AS BIGINT) AS id, text FROM documents WHERE doc_id < 30
         |  UNION ALL
         |  SELECT CAST(doc_id AS BIGINT) + 10000 AS id,
@@ -7850,25 +7300,17 @@ object Queries {
         |),
         |sh AS (
         |  SELECT id, list_distinct(
-        |    CASE WHEN len(w) = 0 THEN []
-        |         WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-        |         ELSE [w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]
-        |    END) AS shingles
+        |    ${wordShinglesSql(3, concatGram = true)}) AS shingles
         |  FROM words
         |),
         |ph AS (
         |  SELECT id, shingles,
-        |    [list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |       (acc, c) -> (acc * 131 + c) % 2147483647) FOR sg IN shingles] AS hb
+        |    [${polyHashSql("sg")} FOR sg IN shingles] AS hb
         |  FROM sh
         |),
         |sigs AS (
         |  SELECT id, shingles,
-        |    [CASE WHEN len(hb) = 0 THEN 2147483647::BIGINT
-        |          ELSE list_min([((((h+1) * 1103515245 + 12345) % 2147483647) * x
-        |                          + (((h+1) * 1234567891 + 987654321) % 2147483647)) % 2147483647
-        |                         FOR x IN hb]) END
-        |     FOR h IN range(0, 32)] AS sig
+        |    $minHashSigSql AS sig
         |  FROM ph
         |),
         |p AS (
@@ -7904,7 +7346,7 @@ object Queries {
     // q117: q57's BM25 replay and q24's cosine replay feed the same
     // integer-reciprocal fusion and total (score desc, id) order
     "q117_rrf_hybrid" ->
-      """WITH d AS (SELECT doc_id,
+      raw"""WITH d AS (SELECT doc_id,
         |    list_filter(regexp_split_to_array(trim(text), '[ \t\n\r]+'), x -> x <> '') AS w
         |  FROM documents),
         |b AS (SELECT doc_id, len(w)::BIGINT AS dl, w FROM d),
@@ -7926,16 +7368,8 @@ object Queries {
         |  WHERE rank <= 50),
         |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
         |semscored AS (
-        |  SELECT nn_id, CASE WHEN nq = 0 OR nc = 0 THEN 0.0 ELSE dot / (sqrt(nq) * sqrt(nc)) END AS sim
-        |  FROM (
-        |    SELECT c.vec_id AS nn_id,
-        |      list_reduce(list_prepend(0.0::DOUBLE,
-        |        [qv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS dot,
-        |      list_reduce(list_prepend(0.0::DOUBLE,
-        |        [qv[i]::DOUBLE * qv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS nq,
-        |      list_reduce(list_prepend(0.0::DOUBLE,
-        |        [cv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(cv) + 1)]), (a, b) -> a + b) AS nc
-        |    FROM q, (SELECT vec_id, embedding AS cv FROM embeddings) c)),
+        |  ${cosineSql(outer = "nn_id", inner = "c.vec_id AS nn_id",
+               from = "q, (SELECT vec_id, embedding AS cv FROM embeddings) c")}),
         |sem AS (SELECT nn_id AS id, rank FROM (SELECT nn_id,
         |    row_number() OVER (ORDER BY sim DESC, nn_id ASC) AS rank FROM semscored)
         |  WHERE rank <= 50),
@@ -8005,13 +7439,12 @@ object Queries {
     // q161: each page's tag-name sequence rebuilt arithmetically, then
     // the q22 base-131 polynomial over its characters
     "q161_template_shape" ->
-      """WITH p AS (SELECT doc_id,
+      raw"""WITH p AS (SELECT doc_id,
         |    'html,head,title,body' || repeat(',p', CAST(doc_id % 4 + 1 AS INT))
         |      || CASE WHEN doc_id % 2 = 0 THEN ',div,span' ELSE '' END AS shape
         |  FROM documents),
         |h AS (SELECT doc_id,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(shape, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS shape_hash
+        |    ${polyHashSql("shape")} AS shape_hash
         |  FROM p)
         |SELECT shape_hash, count(*)::BIGINT AS n_pages, min(doc_id) AS exemplar_id
         |FROM h GROUP BY 1""".stripMargin,
@@ -8109,11 +7542,10 @@ object Queries {
 
     // q154: q145's projection with the conversion record type
     "q154_wet_roundtrip" ->
-      """SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
+      raw"""SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
         |  'conversion' AS record_type,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(text, '')]),
-        |    (acc, c) -> (acc * 131 + c) % 2147483647) AS body_hash
+        |  ${polyHashSql("text")} AS body_hash
         |FROM documents""".stripMargin,
 
     // q153: the same day agg + trailing-rows window + integer deviation
@@ -8251,12 +7683,11 @@ object Queries {
     // documents table — url construction, fixed status, epoch+id
     // timestamp, UTF-8 byte length, q22's codepoint polynomial
     "q145_warc_roundtrip" ->
-      """SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
+      raw"""SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
         |  CAST(200 AS BIGINT) AS http_status,
         |  CAST(1577836800 + doc_id AS BIGINT) AS ts_sec,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(text, '')]),
-        |    (acc, c) -> (acc * 131 + c) % 2147483647) AS body_hash
+        |  ${polyHashSql("text")} AS body_hash
         |FROM documents""".stripMargin,
 
     // q144: the same hash pipeline replayed — gram polyHash (q137's
@@ -8272,8 +7703,7 @@ object Queries {
         |g AS (SELECT doc_id, i AS pos, array_to_string(ws[i:i+7], ' ') AS gs
         |      FROM w, unnest(range(1, len(ws) - 6)) AS t(i) WHERE len(ws) >= 8),
         |h AS (SELECT doc_id, pos, gs,
-        |        list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(gs, '')]),
-        |          (acc, c) -> (acc * 131 + c) % 2147483647) AS gh FROM g),
+        |        ${polyHashSql("gs")} AS gh FROM g),
         |r AS (SELECT doc_id, pos, gs, gh,
         |        row_number() OVER (PARTITION BY gh ORDER BY doc_id, pos) AS rn,
         |        first_value(gs) OVER (PARTITION BY gh ORDER BY doc_id, pos) AS fgs
@@ -8407,13 +7837,11 @@ object Queries {
     // q138: polyHash-mod-4096 buckets, smoothed micro probabilities,
     // integer ratio and per-doc mean — every step floor-div on BIGINTs
     "q138_dsir" ->
-      """WITH t AS (SELECT doc_id, source,
+      raw"""WITH t AS (SELECT doc_id, source,
         |    unnest(regexp_split_to_array(trim(text), '\s+')) AS w
         |  FROM documents),
         |tk AS (SELECT doc_id, source,
-        |    list_reduce(list_prepend(0::BIGINT,
-        |        [ascii(c)::BIGINT FOR c IN split(w, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) % 4096 AS b
+        |    ${polyHashSql("w")} % 4096 AS b
         |  FROM t WHERE w <> ''),
         |st AS (SELECT b,
         |    CAST(sum(CASE WHEN source = 'src7' THEN 1 ELSE 0 END) AS BIGINT) AS ct,
@@ -8432,7 +7860,7 @@ object Queries {
     // q137: same boundary slices, string-equality join, and the q22
     // codepoint polynomial on the matched boundary
     "q137_stitch" ->
-      """WITH p AS (SELECT doc_id,
+      raw"""WITH p AS (SELECT doc_id,
         |    CASE WHEN doc_id % 9 = 0
         |      THEN text || ' chronicle ' || doc_id || ' segment ' || doc_id
         |        || ' continues here'
@@ -8447,9 +7875,7 @@ object Queries {
         |    array_to_string(ws[len(ws)-5:len(ws)], ' ') AS tail
         |  FROM w WHERE len(ws) >= 12)
         |SELECT t.doc_id AS src_id, h.doc_id AS dst_id,
-        |  list_reduce(list_prepend(0::BIGINT,
-        |      [ascii(c)::BIGINT FOR c IN split(t.tail, '')]),
-        |    (acc, c) -> (acc * 131 + c) % 2147483647) AS boundary_hash
+        |  ${polyHashSql("t.tail")} AS boundary_hash
         |FROM b t JOIN b h ON t.tail = h.head AND t.doc_id <> h.doc_id""".stripMargin,
 
     // q136: q130's planted tails inverted — unnest hosts, two-level agg
@@ -8623,26 +8049,18 @@ object Queries {
     // q125: q27's shingle/hash replay for k=5 on both sides; coverage =
     // distinct benchmark hashes found among distinct corpus hashes
     "q125_benchmark_coverage" ->
-      """WITH bm0 AS (SELECT text FROM documents WHERE doc_id % 17 = 0
+      raw"""WITH bm0 AS (SELECT text FROM documents WHERE doc_id % 17 = 0
         |  UNION ALL SELECT 'entirely unseen benchmark sentence with outside vocabulary tokens'),
         |bw AS (SELECT list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS w
         |  FROM bm0),
-        |bsh AS (SELECT unnest(CASE WHEN len(w) = 0 THEN []
-        |    WHEN len(w) <= 5 THEN [array_to_string(w, ' ')]
-        |    ELSE [w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]
-        |      FOR i IN range(1, len(w) - 3)] END) AS sg FROM bw),
+        |bsh AS (SELECT unnest(${wordShinglesSql(5, concatGram = true)}) AS sg FROM bw),
         |bh AS (SELECT DISTINCT
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h FROM bsh),
+        |    ${polyHashSql("sg")} AS h FROM bsh),
         |cw AS (SELECT list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS w
         |  FROM documents),
-        |csh AS (SELECT unnest(CASE WHEN len(w) = 0 THEN []
-        |    WHEN len(w) <= 5 THEN [array_to_string(w, ' ')]
-        |    ELSE [w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]
-        |      FOR i IN range(1, len(w) - 3)] END) AS sg FROM cw),
+        |csh AS (SELECT unnest(${wordShinglesSql(5, concatGram = true)}) AS sg FROM cw),
         |ch AS (SELECT DISTINCT
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h FROM csh),
+        |    ${polyHashSql("sg")} AS h FROM csh),
         |n AS (SELECT count(*)::BIGINT AS n_eval_grams FROM bh),
         |cov AS (SELECT count(*)::BIGINT AS n_covered FROM bh JOIN ch USING (h))
         |SELECT n_eval_grams, n_covered,
@@ -8896,12 +8314,11 @@ object Queries {
     // every featured doc by the m<=0 convention) — training replayed
     // bit-for-bit, the q59/q61 discipline applied to a model
     "q170_perceptron" ->
-      """WITH wds AS (SELECT doc_id,
+      raw"""WITH wds AS (SELECT doc_id,
         |    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')) AS w
         |  FROM documents),
         |hh AS (SELECT doc_id,
-        |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(w, '')]),
-        |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h
+        |    ${polyHashSql("w")} AS h
         |  FROM wds),
         |fx AS (SELECT doc_id AS id, h % 8 AS dim,
         |    CAST(sum(CASE WHEN (h // 8) % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT) AS value
@@ -8984,7 +8401,7 @@ object Queries {
     // q173: the q35 IVF replay and the q24 brute-force replay run side
     // by side (CTEs renamed bf*), then the top-10 sets intersect
     "q173_ann_recall" ->
-      """WITH centr AS (
+      raw"""WITH centr AS (
         |  SELECT vec_id AS cid, embedding AS cv FROM embeddings
         |  WHERE embedding IS NOT NULL
         |  ORDER BY (CAST(vec_id AS BIGINT) * 1103515245 + 12345) % 2147483647, vec_id
@@ -9013,30 +8430,15 @@ object Queries {
         |  SELECT p.query_id, a.nn_id FROM probes p JOIN assigned a ON p.cell = a.cell
         |),
         |scored AS (
-        |  SELECT query_id, nn_id,
-        |    CASE WHEN nq = 0 OR nc = 0 THEN 0.0 ELSE dot / (sqrt(nq) * sqrt(nc)) END AS sim
-        |  FROM (
-        |    SELECT query_id, nn_id,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [qv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS dot,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [qv[i]::DOUBLE * qv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS nq,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [cv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(cv) + 1)]), (a, b) -> a + b) AS nc
-        |    FROM cand
-        |    JOIN (SELECT vec_id, embedding AS qv FROM embeddings) q ON q.vec_id = cand.query_id
-        |    JOIN (SELECT vec_id, embedding AS cv FROM embeddings) c ON c.vec_id = cand.nn_id)
+        |  ${cosineSql()}
         |),
         |ivfk AS (SELECT query_id, nn_id FROM (
         |    SELECT query_id, nn_id, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, nn_id ASC) AS rank
         |    FROM scored) WHERE rank <= 10),
         |bfscored AS (
-        |  SELECT query_id, nn_id,
-        |    CASE WHEN nq = 0 OR nc = 0 THEN 0.0 ELSE dot / (sqrt(nq) * sqrt(nc)) END AS sim
-        |  FROM (
-        |    SELECT q.query_id, c.vec_id AS nn_id,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [qv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS dot,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [qv[i]::DOUBLE * qv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS nq,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [cv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(cv) + 1)]), (a, b) -> a + b) AS nc
-        |    FROM (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5) q,
-        |         (SELECT vec_id, embedding AS cv FROM embeddings) c)
+        |  ${cosineSql(inner = "q.query_id, c.vec_id AS nn_id",
+               from = "(SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5) q, " +
+                 "(SELECT vec_id, embedding AS cv FROM embeddings) c")}
         |),
         |bfk AS (SELECT query_id, nn_id FROM (
         |    SELECT query_id, nn_id, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, nn_id ASC) AS rank
@@ -9178,7 +8580,7 @@ object Queries {
     // like the op), then the self-drop, the rounded-sim re-rank, and
     // the positive/hard-negative split
     "q182_hard_negatives" ->
-      """WITH centr AS (
+      raw"""WITH centr AS (
         |  SELECT vec_id AS cid, embedding AS cv FROM embeddings
         |  WHERE embedding IS NOT NULL
         |  ORDER BY (CAST(vec_id AS BIGINT) * 1103515245 + 12345) % 2147483647, vec_id
@@ -9207,16 +8609,7 @@ object Queries {
         |  SELECT p.query_id, a.nn_id FROM probes p JOIN assigned a ON p.cell = a.cell
         |),
         |scored AS (
-        |  SELECT query_id, nn_id,
-        |    CASE WHEN nq = 0 OR nc = 0 THEN 0.0 ELSE dot / (sqrt(nq) * sqrt(nc)) END AS sim
-        |  FROM (
-        |    SELECT query_id, nn_id,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [qv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS dot,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [qv[i]::DOUBLE * qv[i]::DOUBLE FOR i IN range(1, len(qv) + 1)]), (a, b) -> a + b) AS nq,
-        |      list_reduce(list_prepend(0.0::DOUBLE, [cv[i]::DOUBLE * cv[i]::DOUBLE FOR i IN range(1, len(cv) + 1)]), (a, b) -> a + b) AS nc
-        |    FROM cand
-        |    JOIN (SELECT vec_id, embedding AS qv FROM embeddings) q ON q.vec_id = cand.query_id
-        |    JOIN (SELECT vec_id, embedding AS cv FROM embeddings) c ON c.vec_id = cand.nn_id)
+        |  ${cosineSql()}
         |),
         |ivfk AS (SELECT query_id, nn_id, round(sim, 6) AS sim FROM (
         |    SELECT query_id, nn_id, sim, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, nn_id ASC) AS rank
@@ -10375,7 +9768,7 @@ object Queries {
     // star-reduction cap (maxBucket = 8) FIRING — the cap predicate
     // (n <= 8 OR a.id = mn) is the exact SQL twin of the Scala prune.
     "q248_hot_bucket_cap" ->
-      """WITH corpus AS (
+      raw"""WITH corpus AS (
         |  SELECT CAST(doc_id AS BIGINT) AS id, text FROM documents WHERE doc_id < 20
         |  UNION ALL
         |  SELECT CAST(doc_id AS BIGINT) + 1000 AS id,
@@ -10388,25 +9781,17 @@ object Queries {
         |),
         |sh AS (
         |  SELECT id, list_distinct(
-        |    CASE WHEN len(w) = 0 THEN []
-        |         WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-        |         ELSE [w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w) - 1)]
-        |    END) AS shingles
+        |    ${wordShinglesSql(3, concatGram = true)}) AS shingles
         |  FROM words
         |),
         |ph AS (
         |  SELECT id, shingles,
-        |    [list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(sg, '')]),
-        |       (acc, c) -> (acc * 131 + c) % 2147483647) FOR sg IN shingles] AS hb
+        |    [${polyHashSql("sg")} FOR sg IN shingles] AS hb
         |  FROM sh
         |),
         |sigs AS (
         |  SELECT id, shingles,
-        |    [CASE WHEN len(hb) = 0 THEN 2147483647::BIGINT
-        |          ELSE list_min([((((h+1) * 1103515245 + 12345) % 2147483647) * x
-        |                          + (((h+1) * 1234567891 + 987654321) % 2147483647)) % 2147483647
-        |                         FOR x IN hb]) END
-        |     FOR h IN range(0, 32)] AS sig
+        |    $minHashSigSql AS sig
         |  FROM ph
         |),
         |keyed AS (
@@ -10473,11 +9858,9 @@ object Queries {
     // q243: the merged crawl state — 304s keep the stored body with a
     // bumped time, 200s take the fresh body, untouched rows keep both.
     "q243_revalidate_merge" ->
-      """SELECT doc_id,
+      raw"""SELECT doc_id,
         |  'http://' || source || '.example/doc/' || doc_id AS url,
-        |  list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(
-        |      CASE WHEN doc_id % 3 = 2 THEN 'fresh body ' || doc_id ELSE text END, '')]),
-        |    (acc, c) -> (acc * 131 + c) % 2147483647) AS body_hash,
+        |  ${polyHashSql(" CASE WHEN doc_id % 3 = 2 THEN 'fresh body ' || doc_id ELSE text END")} AS body_hash,
         |  CAST(CASE WHEN doc_id % 3 = 0 THEN 100000 ELSE 200000 END AS BIGINT) AS fetched_at,
         |  CAST(CASE WHEN doc_id % 3 = 0 THEN 0 WHEN doc_id % 3 = 1 THEN 304
         |       ELSE 200 END AS BIGINT) AS last_status
@@ -10509,12 +9892,10 @@ object Queries {
     // q238: the corpus is pure ASCII (pinned by the fixtures), so byte
     // truncation equals character truncation and left() restates it.
     "q238_truncation" ->
-      """SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
+      raw"""SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
         |  CAST(least(octet_length(encode(text)), 200) AS BIGINT) AS n_bytes,
         |  octet_length(encode(text)) > 200 AS is_truncated,
-        |  list_reduce(list_prepend(0::BIGINT,
-        |      [ascii(c)::BIGINT FOR c IN split(left(text, 200), '')]),
-        |    (acc, c) -> (acc * 131 + c) % 2147483647) AS body_hash
+        |  ${polyHashSql("left(text, 200)")} AS body_hash
         |FROM documents""".stripMargin,
 
     // q239: the index rollup from the documents table alone — the
@@ -10593,7 +9974,7 @@ object Queries {
     // the GROUP id), the WET byte length, and the fold count all stated
     // from the documents table alone.
     "q233_crawl_loop" ->
-      """WITH b AS (SELECT doc_id, doc_id - doc_id % 5 AS grp,
+      raw"""WITH b AS (SELECT doc_id, doc_id - doc_id % 5 AS grp,
         |    'http://' || source || '.example/doc/' || doc_id AS url FROM documents),
         |k AS (SELECT grp, min(url) AS url, count(*) AS n_docs FROM b GROUP BY grp),
         |m AS (SELECT url, n_docs,
@@ -10604,8 +9985,7 @@ object Queries {
         |      || ' also has plenty of real sentence text to keep.' AS md
         |  FROM k)
         |SELECT url, CAST(octet_length(encode(md)) AS BIGINT) AS n_bytes,
-        |  list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(md, '')]),
-        |    (acc, c) -> (acc * 131 + c) % 2147483647) AS body_hash,
+        |  ${polyHashSql("md")} AS body_hash,
         |  CAST(n_docs AS BIGINT) AS n_docs
         |FROM m""".stripMargin,
 
@@ -10635,7 +10015,7 @@ object Queries {
     // SAME pattern — plus the uppercase 'Known' tail that must keep its
     // hyphen (only its newline survives into the hash).
     "q229_dehyphen" ->
-      """WITH t AS (SELECT doc_id,
+      raw"""WITH t AS (SELECT doc_id,
         |    replace(text, ' the ', '-' || chr(10) || 'the ')
         |      || chr(10) || 'well-' || chr(10) || 'Known end' AS raw
         |  FROM documents),
@@ -10643,8 +10023,7 @@ object Queries {
         |    regexp_replace(raw, '([a-z])-\n([a-z])', '\1\2', 'g') AS deh FROM t)
         |SELECT doc_id, CAST(length(raw) AS BIGINT) AS n_before,
         |  CAST(length(deh) AS BIGINT) AS n_after,
-        |  list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(deh, '')]),
-        |    (acc, c) -> (acc * 131 + c) % 2147483647) AS h
+        |  ${polyHashSql("deh")} AS h
         |FROM d""".stripMargin,
 
     // q230: expected NFKC outputs stated as ASCII literals — the JDK's
@@ -10735,11 +10114,10 @@ object Queries {
     // from the table — keys, byte lengths, payload hashes, and the
     // digest check all stated independently of the sidecar.
     "q221_cdx_fetch" ->
-      """SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
+      raw"""SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
         |  'example,' || source || ')/doc/' || doc_id AS key,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(text, '')]),
-        |    (acc, c) -> (acc * 131 + c) % 2147483647) AS body_hash,
+        |  ${polyHashSql("text")} AS body_hash,
         |  true AS digest_ok
         |FROM documents""".stripMargin,
 
@@ -10747,7 +10125,7 @@ object Queries {
     // representative's text (+' #grp' uniquifier), the lexicographic
     // min url per group as the original, refers_to empty on originals.
     "q222_revisit" ->
-      """WITH b AS (
+      raw"""WITH b AS (
         |  SELECT d.doc_id,
         |    'http://' || d.source || '.example/doc/' || d.doc_id AS url,
         |    g.text || ' #' || (d.doc_id - d.doc_id % 5) AS t,
@@ -10757,8 +10135,7 @@ object Queries {
         |m AS (SELECT *, min(url) OVER (PARTITION BY grp) AS orig FROM b)
         |SELECT url, (url <> orig) AS was_revisit,
         |  CAST(octet_length(encode(t)) AS BIGINT) AS n_bytes,
-        |  list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(t, '')]),
-        |    (acc, c) -> (acc * 131 + c) % 2147483647) AS body_hash,
+        |  ${polyHashSql("t")} AS body_hash,
         |  CASE WHEN url <> orig THEN orig ELSE '' END AS refers_to
         |FROM m""".stripMargin,
 
@@ -10766,11 +10143,10 @@ object Queries {
     // restates the projection from the documents table, so equality
     // proves the reader reversed both wire codings byte-exactly.
     "q220_http_codings" ->
-      """SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
+      raw"""SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
         |  CAST(200 AS BIGINT) AS http_status,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(text, '')]),
-        |    (acc, c) -> (acc * 131 + c) % 2147483647) AS body_hash
+        |  ${polyHashSql("text")} AS body_hash
         |FROM documents""".stripMargin,
 
     // q219: the decrypted markdown is the same closed form as q184's —
@@ -10840,12 +10216,11 @@ object Queries {
     * (bucket, rank) rows. (A def, not a val: the oracles map interpolates
     * it and object vals initialize in declaration order.) */
   private def hllRegisterCtes: String =
-    """b AS (SELECT regexp_split_to_array(trim(text), '\s+') AS ws FROM documents),
+    raw"""b AS (SELECT regexp_split_to_array(trim(text), '\s+') AS ws FROM documents),
       |w AS (SELECT unnest([ws[i] || ' ' || ws[i + 1] FOR i IN range(1, len(ws))]) AS w
       |  FROM b),
       |h0 AS (SELECT
-      |    list_reduce(list_prepend(0::BIGINT, [ascii(c)::BIGINT FOR c IN split(w, '')]),
-      |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h0
+      |    ${polyHashSql("w")} AS h0
       |  FROM w),
       |h AS (SELECT (h0 * 1103515245 + 12345) % 2147483647 AS h FROM h0),
       |r AS (SELECT h % 64 AS bucket,

@@ -333,7 +333,10 @@ object Multimodal {
     val head = new String(p, 0, n, java.nio.charset.StandardCharsets.ISO_8859_1)
     val lower = head.toLowerCase(java.util.Locale.ROOT)
     val svgAt = lower.indexOf("<svg")
-    if (svgAt >= 0 && (lower.startsWith("<svg") || lower.contains("<?xml") ||
+    // an HTML page that opens with an inline <svg> logo is still a page
+    val htmlAt = Seq(lower.indexOf("<!doctype html"), lower.indexOf("<html")).filter(_ >= 0)
+      .minOption.getOrElse(n)
+    if (svgAt >= 0 && svgAt < htmlAt && (lower.startsWith("<svg") || lower.contains("<?xml") ||
       lower.contains("<!doctype svg") || svgAt < 256)) {
       // parse the <svg ...> tag attributes for dims
       val tagEnd = lower.indexOf('>', svgAt)

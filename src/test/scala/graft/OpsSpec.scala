@@ -2334,6 +2334,25 @@ class OpsSpec extends AnyFunSuite {
     assert(Multimodal.mediaInfo(("<svg " + "\u0000ab").getBytes("ISO-8859-1")).format == "unknown")
   }
 
+  test("mediaInfo: an HTML page opening with an inline SVG logo is a document, not an image") {
+    import graft.ops.Multimodal
+    val logo = """<svg width="24" height="24" viewBox="0 0 24 24"><path d="M0 0h24v24H0z"/></svg>"""
+    for (page <- Seq(
+        s"<!DOCTYPE html><html><head><title>t</title></head><body>$logo<p>text</p></body></html>",
+        s"<html><body><header>$logo</header><main>text</main></body></html>")) {
+      assert(page.indexOf("<svg") < 256, page)
+      val mi = Multimodal.mediaInfo(page.getBytes("UTF-8"))
+      assert(mi.kind == "document" && mi.format == "html" && mi.decodable, s"$mi for $page")
+    }
+    // standalone SVG, with or without the XML declaration, stays an image
+    // even when it embeds HTML after its own <svg> tag
+    for (svg <- Seq(logo, """<?xml version="1.0"?>""" + logo,
+        """<svg width="5" height="6"><foreignObject><html><body/></html></foreignObject></svg>""")) {
+      val mi = Multimodal.mediaInfo(svg.getBytes("UTF-8"))
+      assert(mi.kind == "image" && mi.format == "svg" && mi.width > 0, s"$mi for $svg")
+    }
+  }
+
   test("majorityStats: majority, deterministic ties, exact mixed fraction") {
     import graft.ops.Curation
     val df = Seq(

@@ -574,6 +574,18 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
+  test("crawl loop dedup: the markdown windows shuffle on its hash, never on md") {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = SparkEntry.queries("q233_crawl_loop")(spark, sf)
+        .queryExecution.executedPlan.toString
+      val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toSeq
+      assert(exchanges.exists(_.contains("hashpartitioning(md_key#")), plan)
+      exchanges.foreach(l => assert(!l.contains("md#"), l))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
   test("source overlap: term strings never shuffle; sizes broadcast back") {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
