@@ -228,7 +228,7 @@ object Bench {
       val total = results.map(_._2).filter(_ >= 0).sum
       val sc = scaling.getOrElse("null")
       val line =
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","scaling":$sc}"""
+        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","nproc":$cores,"scaling":$sc}"""
       // File-based fallback: round 1's stdout line was eaten by sbt's
       // "[info] " log prefix. The stdout contract stays primary
       // (build.sbt forces StdoutOutput), but a BENCH.json in cwd survives

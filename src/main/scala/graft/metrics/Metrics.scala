@@ -2,37 +2,87 @@ package graft.metrics
 
 import graft.textnorm.{PyStr, TextNorm}
 
+import scala.collection.mutable
+
 /** Exact ports of the reference's 8 evaluation metrics
   * (/root/reference/mvp/evaluation/eval.py:145-267), including every
   * zero-guard branch and the multiset (NOT set) overlap semantics.
   */
 object Metrics {
 
-  /** Levenshtein edit distance over code points (editdistance.eval on str). */
-  def editDistance(ref: String, hyp: String): Int =
-    editDistanceSeq(ref.codePoints().toArray, hyp.codePoints().toArray)
-
-  /** Generic two-row DP edit distance. */
-  def editDistanceSeq[T](ref: Array[T], hyp: Array[T]): Int = {
-    val n = ref.length
-    val m = hyp.length
-    if (n == 0) return m
-    if (m == 0) return n
-    var prev = Array.tabulate(m + 1)(identity)
-    var cur = new Array[Int](m + 1)
-    var i = 1
-    while (i <= n) {
-      cur(0) = i
-      var j = 1
-      while (j <= m) {
-        val cost = if (ref(i - 1) == hyp(j - 1)) 0 else 1
-        cur(j) = math.min(math.min(cur(j - 1) + 1, prev(j) + 1), prev(j - 1) + cost)
-        j += 1
-      }
-      val t = prev; prev = cur; cur = t
+  /** Unit-cost Levenshtein distance between two Int symbol sequences:
+    * Myers' bit-vector algorithm (J. ACM 1999) in Hyyrö's block form (2003),
+    * O(ceil(m/64)·n) word operations with m = the shorter side's length.
+    *
+    * The shorter side is the pattern. Each 64-symbol block keeps one VP/VN
+    * word pair (the vertical +1/-1 deltas of its DP column slice), and the
+    * horizontal +1/-1 deltas leaving a block's last row carry into the next
+    * block. The pattern-match words (Peq) of symbols in [0, 256) sit in a
+    * dense 256 × blocks table; every other symbol is looked up in a small
+    * open-addressed map per block, which holds at most 64 keys, so Peq
+    * memory is O(m) words for any alphabet.
+    */
+  def editDistanceSeq(a: Array[Int], b: Array[Int]): Int = {
+    val (p, t) = if (a.length <= b.length) (a, b) else (b, a)
+    val m = p.length
+    if (m == 0) return t.length
+    val blocks = (m + 63) >>> 6
+    val dense = new Array[Long](256 * blocks)
+    // per-block map: 128 slots for at most 64 keys; key 0 marks an empty
+    // slot (0 is a dense symbol, so it never enters the map)
+    val keys = new Array[Int](blocks << 7)
+    val words = new Array[Long](blocks << 7)
+    def slot(blk: Int, c: Int): Int = {
+      var s = (c * 0x9E3779B9) >>> 25
+      while (keys((blk << 7) + s) != 0 && keys((blk << 7) + s) != c) s = (s + 1) & 127
+      (blk << 7) + s
+    }
+    var i = 0
+    while (i < m) {
+      val c = p(i)
+      val bit = 1L << (i & 63)
+      if (c >= 0 && c < 256) dense(c * blocks + (i >>> 6)) |= bit
+      else { val s = slot(i >>> 6, c); keys(s) = c; words(s) |= bit }
       i += 1
     }
-    prev(m)
+    val vp = Array.fill(blocks)(-1L)
+    val vn = new Array[Long](blocks)
+    val last = 1L << ((m - 1) & 63)
+    var dist = m
+    var j = 0
+    while (j < t.length) {
+      val c = t(j)
+      val isDense = c >= 0 && c < 256
+      var hpCarry = 1L // the top DP row grows by one per text symbol
+      var hnCarry = 0L
+      var blk = 0
+      while (blk < blocks) {
+        val eq = if (isDense) dense(c * blocks + blk) else words(slot(blk, c))
+        val pv = vp(blk)
+        val nv = vn(blk)
+        val x = eq | hnCarry
+        val d0 = (((x & pv) + pv) ^ pv) | x | nv
+        var hp = nv | ~(d0 | pv)
+        var hn = d0 & pv
+        val hpIn = hpCarry
+        val hnIn = hnCarry
+        if (blk == blocks - 1) {
+          hpCarry = if ((hp & last) != 0) 1L else 0L
+          hnCarry = if ((hn & last) != 0) 1L else 0L
+        } else {
+          hpCarry = hp >>> 63
+          hnCarry = hn >>> 63
+        }
+        hp = (hp << 1) | hpIn
+        hn = (hn << 1) | hnIn
+        vp(blk) = hn | ~(d0 | hp)
+        vn(blk) = hp & d0
+        blk += 1
+      }
+      dist += (hpCarry - hnCarry).toInt
+      j += 1
+    }
+    dist
   }
 
   /** CER (eval.py:145-150): both sides Python-stripped; empty ref -> 0.0 if
@@ -53,7 +103,12 @@ object Metrics {
     val rw = PyStr.split(ref)
     val hw = PyStr.split(hyp)
     if (rw.isEmpty) { if (hw.isEmpty) 0.0 else 1.0 }
-    else editDistanceSeq[String](rw, hw).toDouble / rw.length
+    else {
+      // intern both sides' words into dense ids for the Int kernel
+      val ids = mutable.HashMap.empty[String, Int]
+      def intern(ws: Array[String]): Array[Int] = ws.map(w => ids.getOrElseUpdate(w, ids.size))
+      editDistanceSeq(intern(rw), intern(hw)).toDouble / rw.length
+    }
   }
 
   /** Multiset intersection size: sum over keys of min(count_a, count_b). */

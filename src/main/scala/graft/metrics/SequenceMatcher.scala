@@ -37,15 +37,28 @@ final class SequenceMatcher(a: String, b: String) {
 
   private val emptyInts = Array.empty[Int]
 
+  // CPython's per-row j2len/newj2len dicts as two reusable arrays indexed by
+  // j + 1 (so j - 1 = -1 reads slot 0), each with the list of slots it set;
+  // a row's slots are zeroed once the next row has read them
+  private var j2len = new Array[Int](lb + 1)
+  private var newj2len = new Array[Int](lb + 1)
+  private var touched = new Array[Int](lb)
+  private var newTouched = new Array[Int](lb)
+
+  private def clearJ2len(n: Int): Unit = {
+    var t = 0
+    while (t < n) { j2len(touched(t)) = 0; t += 1 }
+  }
+
   /** (besti, bestj, bestsize) — CPython find_longest_match with empty bjunk. */
   def findLongestMatch(alo: Int, ahi: Int, blo: Int, bhi: Int): (Int, Int, Int) = {
     var besti = alo
     var bestj = blo
     var bestsize = 0
-    var j2len = mutable.HashMap.empty[Int, Int]
+    var nTouched = 0
     var i = alo
     while (i < ahi) {
-      val newj2len = mutable.HashMap.empty[Int, Int]
+      var nNew = 0
       val idxs = b2j.getOrElse(a.charAt(i), emptyInts)
       var p = 0
       var break = false
@@ -54,15 +67,21 @@ final class SequenceMatcher(a: String, b: String) {
         if (j < blo) p += 1
         else if (j >= bhi) break = true
         else {
-          val k = j2len.getOrElse(j - 1, 0) + 1
-          newj2len(j) = k
+          val k = j2len(j) + 1
+          newj2len(j + 1) = k
+          newTouched(nNew) = j + 1
+          nNew += 1
           if (k > bestsize) { besti = i - k + 1; bestj = j - k + 1; bestsize = k }
           p += 1
         }
       }
-      j2len = newj2len
+      clearJ2len(nTouched)
+      val l = j2len; j2len = newj2len; newj2len = l
+      val tl = touched; touched = newTouched; newTouched = tl
+      nTouched = nNew
       i += 1
     }
+    clearJ2len(nTouched)
     // edge extension (bjunk is empty so the non-junk loops are the only ones
     // that can fire; the junk loops are no-ops and omitted)
     while (besti > alo && bestj > blo && a.charAt(besti - 1) == b.charAt(bestj - 1)) {

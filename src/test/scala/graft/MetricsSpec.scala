@@ -25,6 +25,117 @@ class MetricsSpec extends AnyFunSuite {
     assert(~=(Metrics.wer("a b c d", "a b c"), 1.0 / 4))
   }
 
+  /** The two-row DP the kernel replaced, kept as its differential oracle. */
+  private def dpDistance[T](ref: Array[T], hyp: Array[T]): Int = {
+    val n = ref.length
+    val m = hyp.length
+    if (n == 0) return m
+    if (m == 0) return n
+    var prev = Array.tabulate(m + 1)(identity)
+    var cur = new Array[Int](m + 1)
+    var i = 1
+    while (i <= n) {
+      cur(0) = i
+      var j = 1
+      while (j <= m) {
+        val cost = if (ref(i - 1) == hyp(j - 1)) 0 else 1
+        cur(j) = math.min(math.min(cur(j - 1) + 1, prev(j) + 1), prev(j - 1) + cost)
+        j += 1
+      }
+      val t = prev; prev = cur; cur = t
+      i += 1
+    }
+    prev(m)
+  }
+
+  private def codePoints(s: String): Array[Int] = s.codePoints().toArray
+
+  test("editDistanceSeq matches the DP oracle: block edges, tiny and large alphabets") {
+    val rnd = new scala.util.Random(20240611L)
+    val edges = Seq(0, 1, 2, 63, 64, 65, 127, 128, 129, 191, 192, 193, 300)
+    // alphabets of 1-3 symbols force long carry chains; large ones mix the
+    // dense table with the per-block map (negative and huge ids included)
+    val alphabets: Seq[Int => Int] = Seq(
+      _ => 7, k => k % 2, k => 97 + k % 3, k => k % 200, k => 250 + k % 12,
+      k => k * 7919 + 256, k => Int.MinValue + k, k => Int.MaxValue - k % 500,
+      k => if (k % 3 == 0) k % 256 else 0x1F600 + k % 300)
+    def draw(n: Int, sym: Int => Int, span: Int): Array[Int] =
+      Array.fill(n)(sym(rnd.nextInt(span)))
+    for (la <- edges; lb <- edges; (sym, ai) <- alphabets.zipWithIndex) {
+      val span = if (ai < 3) 3 else 100000
+      val a = draw(la, sym, span)
+      val b = if (rnd.nextBoolean()) draw(lb, sym, span)
+              else Array.tabulate(lb)(j => if (j < la && rnd.nextInt(5) > 0) a(j) else sym(rnd.nextInt(span)))
+      val want = dpDistance(a, b)
+      assert(Metrics.editDistanceSeq(a, b) == want, s"la=$la lb=$lb alphabet=$ai")
+      assert(Metrics.editDistanceSeq(b, a) == want, s"swapped la=$la lb=$lb alphabet=$ai")
+    }
+    for (_ <- 0 until 3000) {
+      val sym = alphabets(rnd.nextInt(alphabets.length))
+      val span = 1 + rnd.nextInt(if (rnd.nextBoolean()) 3 else 5000)
+      val a = draw(rnd.nextInt(301), sym, span)
+      val b = draw(rnd.nextInt(301), sym, span)
+      assert(Metrics.editDistanceSeq(a, b) == dpDistance(a, b), s"${a.toSeq} vs ${b.toSeq}")
+    }
+  }
+
+  test("cer counts code points: astral symbols are one symbol, not two UTF-16 units") {
+    // UTF-16 units would give 2/5 (ref 5 units, deleting 𝔹 costs 2)
+    assert(~=(Metrics.cer("𝔸𝔹ℂ", "𝔸ℂ"), 1.0 / 3))
+    assert(~=(Metrics.cer("😀😃", "😃😀"), 1.0))
+    val rnd = new scala.util.Random(7L)
+    val pool = Array(0x41, 0x62, 0xE9, 0x3B1, 0x1D538, 0x1D539, 0x1F600, 0x1F603, 0x20000)
+    def str(n: Int): String = {
+      val sb = new java.lang.StringBuilder
+      (0 until n).foreach(_ => sb.appendCodePoint(pool(rnd.nextInt(pool.length))))
+      sb.toString
+    }
+    for (_ <- 0 until 500) {
+      val r = str(1 + rnd.nextInt(150)); val h = str(rnd.nextInt(150))
+      val want = dpDistance(codePoints(r), codePoints(h)).toDouble / codePoints(r).length
+      assert(~=(Metrics.cer(r, h), want), s"$r vs $h")
+    }
+  }
+
+  test("wer: words that differ only by case or punctuation are different words") {
+    import graft.textnorm.PyStr
+    assert(~=(Metrics.wer("The cat, sat.", "the cat sat"), 1.0))
+    assert(~=(Metrics.wer("a b. c", "a b c"), 1.0 / 3))
+    val rnd = new scala.util.Random(11L)
+    val vocab = Array("word", "Word", "WORD", "word,", "word.", "(word)", "other", "Other", "x", "𝔸")
+    def text(n: Int): String = Array.fill(n)(vocab(rnd.nextInt(vocab.length))).mkString(" ")
+    for (_ <- 0 until 400) {
+      // lengths straddle the 64- and 128-word block edges
+      val r = text(1 + rnd.nextInt(140)); val h = text(rnd.nextInt(140))
+      val rw = PyStr.split(r)
+      val want = dpDistance(rw, PyStr.split(h)).toDouble / rw.length
+      assert(~=(Metrics.wer(r, h), want), s"$r vs $h")
+    }
+  }
+
+  test("cer and wer on two 100k-code-point strings finish within 5 s") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // ref: 87,500 distinct astral code points, a space at every i % 8 == 3;
+    // hyp: the same with every non-space code point of its first half
+    // replaced by 'x', which ref lacks, so every 'x' costs one substitution
+    val n = 100000
+    def build(f: Int => Int): String = {
+      val sb = new java.lang.StringBuilder
+      (0 until n).foreach(i => sb.appendCodePoint(f(i)))
+      sb.toString
+    }
+    def refAt(i: Int): Int = if (i % 8 == 3) ' ' else 0x20000 + ((i * 40503) & 0x1FFFF)
+    val ref = build(refAt)
+    val hyp = build(i => if (i < n / 2 && i % 8 != 3) 'x' else refAt(i))
+    assert(codePoints(ref).distinct.length == 87501) // and the space
+    val (c, w) = Await.result(
+      Future((Metrics.cer(ref, hyp), Metrics.wer(ref, hyp)))(ExecutionContext.global), 5.seconds)
+    assert(~=(c, 43750.0 / n))
+    // 12,501 ref words; the 6,251 hyp words holding an 'x' are substitutions
+    assert(~=(w, 6251.0 / 12501))
+  }
+
   test("word_accuracy: multiset not set (eval.py:159-166)") {
     assert(~=(Metrics.wordAccuracy("a a b", "a b b"), 2.0 / 3))
     assert(~=(Metrics.wordAccuracy("", "x"), 0.0))
