@@ -9,7 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  "scaling":{"docs":N,"cores_low":..,"cores_high":..,
   *             "wall_low_sec":..,"wall_high_sec":..,
   *             "thr_low_docs_per_sec":..,"thr_high_docs_per_sec":..,
-  *             "efficiency":..}}
+  *             "efficiency":..,"round_walls":[[lo,hi],..],
+  *             "round_steal":[[lo,hi],..],"contended_rounds":N,..}}
+  *
+  * `round_steal` is each round's CPU steal share per child JVM; a round
+  * is contended when either child saw more than 5% steal.
   *
   * Two phases:
   *  1. every SparkEntry query on SPARK_GRAFT_SF_DIR at local[32], each
@@ -135,6 +139,19 @@ object Bench {
     "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
     "sun.security.action", "sun.util.calendar"
   ).flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
+
+  /** The aggregate `cpu ` line, the first of /proc/stat ("" where there is none). */
+  private def cpuStat(): String = scala.util.Try(
+    java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/stat")).get(0)).getOrElse("")
+
+  /** Share of CPU time the hypervisor gave to others between two `cpu `
+    * lines of /proc/stat: Δsteal over Δ(user … steal), the first eight
+    * counters. 0 when either line has no steal field or no time passed. */
+  private[graft] def stealShare(before: String, after: String): Double = {
+    val Seq(a, b) = Seq(before, after).map(_.trim.split("\\s+").drop(1).take(8).map(_.toLong))
+    val d = b.sum - a.sum
+    if (a.length < 8 || b.length < 8 || d <= 0) 0.0 else (b(7) - a(7)).toDouble / d
+  }
 
   /** Spawn a fresh JVM for one scaling level; fall back to in-process
     * measurement if spawning fails (e.g. exotic launcher classpath).
@@ -339,6 +356,7 @@ object Bench {
     var round = 0
     var lastRoundCost = 0.0
     val roundWalls = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
+    val roundSteal = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
     def scalingJson(): String = {
       val thrLow = scaleDocs / wallLow
       val thrHigh = scaleDocs / wallHigh
@@ -362,22 +380,30 @@ object Bench {
         else healthy.map { case (l, h) => (l / h) / (nHigh.toDouble / nLow) }.max
       }
       val rw = roundWalls.map { case (l, h) => f"[$l%.2f,$h%.2f]" }.mkString("[", ",", "]")
+      // a round is contended when either child saw more than 5% steal
+      // (the perfbench rule); it is flagged, and its walls still count
+      val rs = roundSteal.map { case (l, h) => f"[$l%.4f,$h%.4f]" }.mkString("[", ",", "]")
+      val contended = roundSteal.count { case (l, h) => l > 0.05 || h > 0.05 }
       f"""{"docs":$scaleDocs,"cores_low":$nLow,"cores_high":$nHigh,""" +
         f""""wall_low_sec":$wallLow%.2f,"wall_high_sec":$wallHigh%.2f,""" +
         f""""thr_low_docs_per_sec":$thrLow%.1f,"thr_high_docs_per_sec":$thrHigh%.1f,""" +
         f""""efficiency":$eff%.3f,"efficiency_min_pairing":$effMin%.3f,""" +
-        f""""round_walls":$rw,"isolated":$isolated,"rounds":$round,"passes":$passes}"""
+        f""""round_walls":$rw,"round_steal":$rs,"contended_rounds":$contended,""" +
+        f""""isolated":$isolated,"rounds":$round,"passes":$passes}"""
     }
     while (round < maxRounds &&
            (round == 0 || elapsed + lastRoundCost * 1.15 < budget)) {
       val rt0 = elapsed
       passes = math.min(passes, passesNow) // never re-raise mid-run: keep rounds comparable
+      val stat0 = cpuStat()
       val (lo, loIso) = measureIsolated(nLow, corpusDir, passes)
+      val stat1 = cpuStat()
       val (hi, hiIso) = measureIsolated(nHigh, corpusDir, passes)
       wallLow = math.min(wallLow, lo)
       wallHigh = math.min(wallHigh, hi)
       isolated &&= loIso && hiIso
       roundWalls += ((lo, hi))
+      roundSteal += ((stealShare(stat0, stat1), stealShare(stat1, cpuStat())))
       round += 1
       lastRoundCost = elapsed - rt0
       emit(results, Some(scalingJson()))

@@ -24,7 +24,8 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  /** For each key in queries, equivalent SQL runnable by DuckDB on the
+    * same parquet tables. Every query has one: a query is declared with
+    * its oracle. */
   def oracleSql: Map[String, String] = Queries.oracles
 }

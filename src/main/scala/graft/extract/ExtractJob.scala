@@ -7,8 +7,8 @@ import graft.io.TableIO
 import graft.model.{ManifestRow, Page}
 
 /** The extraction pipeline (north_rule): scan → resume-skip (left-anti on
-  * the processed-partition manifest) → typed extraction map on the scan
-  * splits → one part-aligned, salted rebalance exchange → results write →
+  * the processed-partition manifest) → the `graft_extract` Catalyst
+  * expression on the scan splits → one part-aligned, salted rebalance exchange → results write →
   * per-partition lineage + manifest append.
   *
   * Scale design notes (100 TB / 10^12 rows):

@@ -16,7 +16,8 @@ final case class Span(start: Long, end: Long, kind: String)
 
 /** Extraction output for one document — errors are data, never exceptions
   * (mirrors /root/reference/mvp/evaluation/ground_truth_prediciton.py:66-82).
-  * status ∈ {ok, error}; content_type ∈ {html, pdf, unknown}. */
+  * status ∈ {ok, error}; content_type ∈ {html, pdf, image, media, unknown}
+  * (`image`/`media` are the binary payloads `Extractor.sniffMedia` labels). */
 final case class Extracted(
     status: String,
     content_type: String,

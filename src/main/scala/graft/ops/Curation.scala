@@ -962,6 +962,21 @@ object Curation {
       .select(col("key"), col("status"), col("old_digest"), col("new_digest"))
   }
 
+  /** `df` with the floor bucket `__b` = ⌊`valueCol` / `width`⌋ of its long
+    * `valueCol` (pmod keeps negative values in their bucket), and the long
+    * `aggs` per bucket collected to the driver as (bucket, values): the
+    * bounded collect of the prefix-sum ops, ≤65536 buckets enforced. */
+  private def bucketTotals(df: DataFrame, valueCol: String, width: Long)(
+      aggs: Column*): (DataFrame, Array[(Long, IndexedSeq[Long])]) = {
+    val v = col(valueCol)
+    val b = df.withColumn("__b", ((v - pmod(v, lit(width))) / width).cast("long"))
+    val totals = b.groupBy(col("__b")).agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => (r.getLong(0), aggs.indices.map(i => r.getLong(i + 1))))
+    require(totals.length <= 65536,
+      s"bucketWidth=$width yields ${totals.length} buckets; widen it (bounded-collect contract)")
+    (b, totals)
+  }
+
   /** EXACT GLOBAL quantiles of an integral column WITHOUT a global sort —
     * the corpus-wide percentile (p50/p99 length, quality cutoffs) done the
     * way a 100-TB job must: phase 1 counts rows per fixed-width value
@@ -980,14 +995,10 @@ object Curation {
     require(qs.nonEmpty && qs.forall(q => q >= 0 && q <= 1) && bucketWidth > 0)
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(col(valueCol).cast("long").as("value"),
-        col(tiebreakCol).cast("long").as("tb"))
-      .withColumn("__b",
-        ((col("value") - pmod(col("value"), lit(bucketWidth))) / bucketWidth).cast("long"))
-    val counts = base.groupBy(col("__b")).agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    require(counts.length <= 65536,
-      s"bucketWidth=$bucketWidth yields ${counts.length} buckets; widen it (bounded-collect contract)")
+    val (base, totals) = bucketTotals(
+      df.select(col(valueCol).cast("long").as("value"), col(tiebreakCol).cast("long").as("tb")),
+      "value", bucketWidth)(count(lit(1)).as("c"))
+    val counts = totals.map { case (b, t) => (b, t(0)) }.sortBy(_._1)
     val n = counts.map(_._2).sum
     require(n > 0, "globalQuantiles over an empty frame")
     val targets = qs.map { q =>
@@ -1040,20 +1051,15 @@ object Curation {
     require(budget >= 0 && bucketWidth > 0)
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(
+    val (base, totals) = bucketTotals(
+      df.select(
         col(idCol).cast("long").as("id"),
         col(tokensCol).cast("long").as("n_tokens"),
-        col(qualityCol).cast("long").as("quality"))
-      // floor division via pmod so negative qualities bucket correctly
-      .withColumn("__b",
-        ((col("quality") - pmod(col("quality"), lit(bucketWidth))) / bucketWidth).cast("long"))
-    val totals = base.groupBy(col("__b")).agg(sum(col("n_tokens")).as("__bt"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    require(totals.length <= 65536,
-      s"bucketWidth=$bucketWidth yields ${totals.length} buckets; widen it (bounded-collect contract)")
+        col(qualityCol).cast("long").as("quality")),
+      "quality", bucketWidth)(sum(col("n_tokens")).as("__bt"))
     // exclusive prefix sums in descending bucket (= descending quality) order
     var acc = 0L
-    val offsets = totals.sortBy(-_._1).map { case (b, t) => val o = acc; acc += t; (b, o) }
+    val offsets = totals.sortBy(-_._1).map { case (b, t) => val o = acc; acc += t(0); (b, o) }
     val offDf = broadcast(offsets.toSeq.toDF("__b", "__off"))
     val wIn = Window.partitionBy(col("__b"))
       .orderBy(col("quality").desc, col("id").asc)
@@ -1542,25 +1548,19 @@ object Curation {
     require(bucketWidth > 0)
     val spark = df.sparkSession
     import spark.implicits._
-    val perScore = df.select(
-        col(scoreCol).cast("long").as("score"),
-        col(labelCol).cast("boolean").as("__pos"))
-      .groupBy(col("score"))
-      .agg(count(lit(1)).as("__n"),
-        sum(when(col("__pos"), 1L).otherwise(0L)).as("__np"))
-      .withColumn("__b",
-        ((col("score") - pmod(col("score"), lit(bucketWidth))) / bucketWidth).cast("long"))
-    val totals = perScore.groupBy(col("__b"))
-      .agg(sum(col("__n")).as("__bn"), sum(col("__np")).as("__bp"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    require(totals.length <= 65536,
-      s"bucketWidth=$bucketWidth yields ${totals.length} buckets; widen it (bounded-collect contract)")
-    val nTotal = totals.map(_._2).sum
-    val posTotal = totals.map(_._3).sum
-    var accN = 0L
-    var accP = 0L
-    val offsets = totals.sortBy(-_._1).map { case (b, n, p) =>
-      val o = (b, accN, accP); accN += n; accP += p; o
+    val (perScore, totals) = bucketTotals(
+      df.select(
+          col(scoreCol).cast("long").as("score"),
+          col(labelCol).cast("boolean").as("__pos"))
+        .groupBy(col("score"))
+        .agg(count(lit(1)).as("__n"),
+          sum(when(col("__pos"), 1L).otherwise(0L)).as("__np")),
+      "score", bucketWidth)(sum(col("__n")).as("__bn"), sum(col("__np")).as("__bp"))
+    // running totals: exclusive offsets per bucket, grand totals after the loop
+    var nTotal = 0L
+    var posTotal = 0L
+    val offsets = totals.sortBy(-_._1).map { case (b, t) =>
+      val o = (b, nTotal, posTotal); nTotal += t(0); posTotal += t(1); o
     }
     val offDf = broadcast(offsets.toSeq.toDF("__b", "__offn", "__offp"))
     val wIn = Window.partitionBy(col("__b")).orderBy(col("score").desc)

@@ -43,7 +43,7 @@ object PolyHashKernel {
   * the brief's preference order (codegen'd Expression > Scala UDF) for
   * the hash that anchors the MinHash/stitch/DSIR pipelines. Null in,
   * null out (standard unary scalar semantics). Registered via
-  * [[graft.GraftExtensions]]; [[graft.ops.Dedup.polyHashColumn]] falls
+  * [[graft.GraftExtensions]]; [[graft.ops.Dedup.polyHashFn]] falls
   * back to the equivalent Scala UDF on sessions without the extension. */
 case class PolyHashExpression(child: Expression) extends UnaryExpression {
 
