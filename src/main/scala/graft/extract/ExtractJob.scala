@@ -1,15 +1,18 @@
 package graft.extract
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.io.TableIO
-import graft.model.{ManifestRow, Page}
+import graft.model.{LineageRow, ManifestRow}
 
-/** The extraction pipeline (north_rule): scan → resume-skip (left-anti on
-  * the processed-partition manifest) → the `graft_extract` Catalyst
-  * expression on the scan splits → one part-aligned, salted rebalance exchange → results write →
-  * per-partition lineage + manifest append.
+/** The extraction pipeline (north_rule): scan → resume-skip (parts the
+  * manifest records done) → the `graft_extract` Catalyst expression on the
+  * scan splits → one part-aligned, salted rebalance exchange → results
+  * write, which tallies the per-partition lineage → lineage write +
+  * manifest append.
   *
   * Scale design notes (100 TB / 10^12 rows):
   *  - `part_id = pmod(xxhash64(url), P)` is a STABLE unit of work derived
@@ -24,10 +27,12 @@ import graft.model.{ManifestRow, Page}
   *    (Zipf host skew) over S tasks. Under AQE the rebalance coalesces
   *    small buckets and splits skewed ones; with AQE off it is a plain
   *    P*S hash exchange.
-  *  - The written results are read back once, by the lineage aggregate
-  *    (partial+final hash). The driver collects only ≤ P-row sets: the
-  *    done/todo part ids and the lineage rows, which it writes and sums
-  *    into the run summary.
+  *  - The input is scanned once and the results are never read back: the
+  *    write itself tallies the per-part lineage (an observed aggregate in
+  *    its result stage, above the exchange). The driver receives only
+  *    ≤ P-row sets: the done part ids and the lineage rows, which it
+  *    writes, turns into the manifest's done rows and sums into the run
+  *    summary.
   *  - Results are written partitioned by part_id (dynamic partition
   *    overwrite), so a rerun of an unfinished partition is idempotent.
   */
@@ -78,6 +83,25 @@ object ExtractJob {
 
   final case class RunSummary(total: Long, ok: Long, err: Long, skippedParts: Long)
 
+  /** The lineage of the rows a write task passes, as a sparse part id →
+    * lineage map: a task holds only the parts it writes, so the driver
+    * merges at most P entries. `checksum` is the XOR of the rows'
+    * `xxhash64(url, markdown)`: commutative and overflow-free, so identical
+    * at any parallelism and row order. */
+  private object LineageTally
+      extends Aggregator[(Int, Boolean, Boolean, Long), Map[Int, LineageRow], Seq[LineageRow]] {
+    private def add(m: Map[Int, LineageRow], r: LineageRow) =
+      m.updated(r.part_id, m.get(r.part_id).fold(r)(t => LineageRow(r.part_id, t.row_count + r.row_count,
+        t.ok_count + r.ok_count, t.err_count + r.err_count, t.checksum ^ r.checksum)))
+    def zero: Map[Int, LineageRow] = Map.empty
+    def reduce(b: Map[Int, LineageRow], in: (Int, Boolean, Boolean, Long)): Map[Int, LineageRow] =
+      add(b, LineageRow(in._1, 1, if (in._2) 1 else 0, if (in._3) 1 else 0, in._4))
+    def merge(a: Map[Int, LineageRow], b: Map[Int, LineageRow]): Map[Int, LineageRow] = b.values.foldLeft(a)(add)
+    def finish(b: Map[Int, LineageRow]): Seq[LineageRow] = b.values.toSeq.sortBy(_.part_id)
+    def bufferEncoder: Encoder[Map[Int, LineageRow]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Seq[LineageRow]] = ExpressionEncoder()
+  }
+
   /** Full run. `partitions` = P (work units), `salt` = S (hot-host spread). */
   def run(
       spark: SparkSession,
@@ -91,68 +115,38 @@ object ExtractJob {
     val withPart = pages.withColumn("part_id",
       pmod(xxhash64(col("url")), lit(partitions)).cast("int"))
 
-    // resume: skip partitions already recorded 'done' in the manifest.
-    // done/todo part-id sets are tiny (≤ `partitions` ints) — collecting
-    // them costs nothing and identifies exactly which hive partitions this
-    // invocation owns, independent of run_ts (reruns reuse the same ts).
+    // resume: skip partitions already recorded 'done' in the manifest
+    // (a ≤ P-int set, collected once)
     val doneSet: Set[Int] =
       if (io.tableExists(spark, ManifestTable))
         io.readTable(spark, ManifestTable)
           .filter($"status" === "done").select("part_id").distinct()
           .as[Int].collect().toSet
       else Set.empty
-    val skipped = doneSet.size.toLong
     val todo =
       if (doneSet.isEmpty) withPart
       else withPart.filter(!$"part_id".isin(doneSet.toSeq: _*))
-    val todoParts: Set[Int] =
-      todo.select($"part_id").distinct().as[Int].collect().toSet
 
-    // extract on the scan splits; the only exchange is the part-aligned
-    // rebalance in front of the write
-    val results = resultsDf(todo, runTs, partitions, salt)
-    io.overwritePartitions(results, ResultsTable, "part_id")
-
-    // Everything below reads the WRITTEN table back instead of re-evaluating
-    // `results`: the extraction UDF is the whole cost of the job, and a
-    // DataFrame reference would silently re-run it per action. Restricting
-    // to this invocation's part_ids prunes the read to the hive partitions
-    // just written, so a resumed rerun never rescans finished partitions.
-    val writtenThisRun =
-      if (todoParts.isEmpty)
-        io.readTable(spark, ResultsTable).filter(lit(false))
-      else
-        io.readTable(spark, ResultsTable)
-          .filter($"part_id".isin(todoParts.toSeq: _*))
-
-    // lineage: commutative per-partition checksum — order-independent, so
-    // identical at any parallelism (the determinism property the golden
-    // byte-identity contract needs). Its ≤ P rows are collected once and
-    // feed both the lineage write and the run summary.
-    val lineage = writtenThisRun.groupBy($"part_id").agg(
-      count(lit(1)).as("row_count"),
-      count(when($"status" === "ok", 1)).as("ok_count"),
-      count(when($"status" === "error", 1)).as("err_count"),
-      // bit_xor: commutative + overflow-free under ANSI mode — the checksum
-      // is identical at any parallelism / row order
-      expr("bit_xor(xxhash64(url, markdown))").as("checksum"))
-    val lineageRows = lineage.collect()
+    // The lineage is tallied by the write itself, above the part-aligned
+    // exchange, so in the write's result stage: Spark applies a result
+    // task's metrics once even when the task is retried (below the
+    // exchange, a map-stage retry would count its rows twice).
+    val tally = Observation()
     io.overwritePartitions(
-      spark.createDataFrame(java.util.Arrays.asList(lineageRows: _*), lineage.schema)
-        .withColumn("part_lbl", $"part_id"), LineageTable, "part_lbl")
+      resultsDf(todo, runTs, partitions, salt).observe(tally, udaf(LineageTally).apply(
+        $"part_id", $"status" <=> "ok", $"status" <=> "error", xxhash64($"url", $"markdown")).as("lineage")),
+      ResultsTable, "part_id")
+    val lineage = tally.get("lineage").asInstanceOf[Seq[Row]]
+      .map(r => LineageRow(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    io.overwritePartitions(lineage.toDS().withColumn("part_lbl", $"part_id"), LineageTable, "part_lbl")
 
-    // manifest: mark this invocation's partitions done (append-only); built
-    // from the already-collected part-id set — no extra pass over the input
-    if (todoParts.nonEmpty) {
-      val doneParts = todoParts.toSeq.sorted
-        .map(p => ManifestRow(p, runTs, "done")).toDS()
-      io.appendTable(doneParts.toDF(), ManifestTable)
-    }
+    // manifest: mark this invocation's partitions done (append-only). The
+    // extractor is total, so every todo row has a results row and the
+    // lineage part ids are exactly the todo parts that have input.
+    if (lineage.nonEmpty)
+      io.appendTable(lineage.map(l => ManifestRow(l.part_id, runTs, "done")).toDS().toDF(), ManifestTable)
 
-    RunSummary(
-      total = lineageRows.map(_.getAs[Long]("row_count")).sum,
-      ok = lineageRows.map(_.getAs[Long]("ok_count")).sum,
-      err = lineageRows.map(_.getAs[Long]("err_count")).sum,
-      skippedParts = skipped)
+    RunSummary(lineage.map(_.row_count).sum, lineage.map(_.ok_count).sum,
+      lineage.map(_.err_count).sum, skippedParts = doneSet.size.toLong)
   }
 }

@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Storage seam (SURVEY.md §7.1.9). Production binds this to Iceberg
@@ -58,8 +59,12 @@ final class ParquetTableIO(warehouse: String) extends TableIO {
       .partitionBy(partitionCol)
       .parquet(path(name))
 
-  override def tableExists(spark: SparkSession, name: String): Boolean =
-    new java.io.File(path(name)).exists()
+  /** Asks the path's own Hadoop FileSystem, so a URI warehouse (`file:`,
+    * `hdfs:`, `s3a:`) resolves like a plain local directory. */
+  override def tableExists(spark: SparkSession, name: String): Boolean = {
+    val p = new Path(path(name))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 }
 
 /** Bucketed-table layout for the recurring-join workloads (SURVEY §2's

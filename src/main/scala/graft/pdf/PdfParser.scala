@@ -1010,7 +1010,8 @@ object PdfParser {
   /** Per-stream decode ceiling: a corrupt or hostile stream (zip bomb,
     * runaway RunLength/LZW repeats) must error-row the document, not OOM an
     * executor shared by thousands of other documents. 256 MiB is far above
-    * any legitimate text content stream. */
+    * any legitimate text content stream. WARC Content-Encoding decode
+    * (`Warc.contentDecode`) shares it. */
   private[graft] val MaxDecodedBytes: Int = 256 << 20
 
   private[graft] def inflate(data: Array[Byte]): Array[Byte] = {

@@ -11,6 +11,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import graft.pdf.PdfParser.MaxDecodedBytes
 
 /** One parsed WARC record. For `response` records carrying an
   * `application/http` block, [[httpStatus]]/[[contentType]]/[[body]] are
@@ -159,11 +160,15 @@ object Warc {
     null // unreachable
   }
 
+  /** `in` to its end, or null once it passes the per-stream decode ceiling. */
   private def readAll(in: InputStream): Array[Byte] = {
     val out = new ByteArrayOutputStream(1 << 12)
     val buf = new Array[Byte](1 << 12)
     var k = in.read(buf)
-    while (k >= 0) { out.write(buf, 0, k); k = in.read(buf) }
+    while (k >= 0) {
+      if (out.size() + k > MaxDecodedBytes) return null
+      out.write(buf, 0, k); k = in.read(buf)
+    }
     out.toByteArray
   }
 
@@ -185,23 +190,30 @@ object Warc {
     out.toByteArray
   }
 
+  /** Deflate decode, or null once the output passes the per-stream decode
+    * ceiling. A zlib stream that asks for a preset dictionary is damaged
+    * data here (no dictionary is ever known), not a reason to spin. */
   private def inflateWith(data: Array[Byte], nowrap: Boolean): Array[Byte] = {
     val inf = new java.util.zip.Inflater(nowrap)
-    inf.setInput(data)
-    val out = new ByteArrayOutputStream(data.length * 2 + 64)
-    val buf = new Array[Byte](1 << 12)
-    while (!inf.finished()) {
-      val k = inf.inflate(buf)
-      if (k == 0 && inf.needsInput()) throw new EOFException("deflate truncated")
-      out.write(buf, 0, k)
-    }
-    inf.end()
-    out.toByteArray
+    try {
+      inf.setInput(data)
+      val out = new ByteArrayOutputStream(data.length * 2 + 64)
+      val buf = new Array[Byte](1 << 12)
+      while (!inf.finished()) {
+        val k = inf.inflate(buf)
+        if (k == 0 && (inf.needsInput() || inf.needsDictionary())) throw new EOFException("deflate truncated")
+        if (out.size() + k > MaxDecodedBytes) return null
+        out.write(buf, 0, k)
+      }
+      out.toByteArray
+    } finally inf.end()
   }
 
   /** Content-Encoding decode: gzip / x-gzip, deflate (zlib-wrapped AND
     * the bare form servers mislabel as "deflate"), identity. Unknown
-    * coding or damaged data → null (caller keeps the raw bytes). */
+    * coding, damaged data or a body that decodes past the per-stream
+    * ceiling (PdfParser.MaxDecodedBytes: a decompression bomb) → null
+    * (caller keeps the raw bytes). */
   def contentDecode(enc: String, data: Array[Byte]): Array[Byte] = {
     val e = enc.trim.toLowerCase
     try e match {

@@ -138,6 +138,120 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(linChecksum == refChecksum)
   }
 
+  test("resume on a file: URI warehouse: the second run skips every part") {
+    import spark.implicits._
+    val pages = Synth.pagesDs(spark, 60, seed = 5L, parallelism = 4).toDF()
+    val io = new ParquetTableIO("file:" + SparkTestBase.tempDir("wh-uri"))
+    val s1 = ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2)
+    assert(s1.total == 60 && s1.skippedParts == 0)
+    val parts = io.readTable(spark, "manifest").select("part_id").distinct().count()
+    assert(ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2) ==
+      ExtractJob.RunSummary(0, 0, 0, parts))
+  }
+
+  test("empty input, and a local input the manifest skips entirely, finish with an empty run") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import spark.implicits._
+    val io = new ParquetTableIO(SparkTestBase.tempDir("wh-empty"))
+    def run(pages: org.apache.spark.sql.DataFrame) = Await.result(Future(
+      ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2))(ExecutionContext.global), 60.seconds)
+    assert(run(spark.emptyDataset[graft.model.Page].toDF()) == ExtractJob.RunSummary(0, 0, 0, 0))
+    val local = Synth.pagesDs(spark, 20, seed = 19L, parallelism = 2).collect().toSeq.toDS().toDF()
+    val first = run(local)
+    assert(first.total == 20 && first.skippedParts == 0)
+    val parts = io.readTable(spark, "manifest").count()
+    assert(run(local) == ExtractJob.RunSummary(0, 0, 0, parts))
+  }
+
+  test("partial resume: parts marked done beforehand are skipped; the rest are written once") {
+    import spark.implicits._
+    val pages = Synth.pagesDs(spark, 120, seed = 13L, parallelism = 4).toDF()
+    val wh = SparkTestBase.tempDir("wh-partial")
+    val io = new ParquetTableIO(wh)
+    val done = Set(0, 2, 4, 6)
+    io.appendTable(done.toSeq.sorted.map(p => graft.model.ManifestRow(p, runTs, "done")).toDS().toDF(), "manifest")
+    val inputParts = pages.select(pmod(xxhash64($"url"), lit(8)).cast("int").as("p"))
+      .groupBy("p").count().as[(Int, Long)].collect().toMap
+    val todo = inputParts.keySet -- done
+    assert(todo.nonEmpty && inputParts.keySet.exists(done))
+
+    val s = ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2)
+    assert(s.skippedParts == 4)
+    assert(s.total == todo.toSeq.map(inputParts).sum)
+    val resultParts = io.readTable(spark, "results").groupBy("part_id").count().as[(Int, Long)].collect()
+    assert(resultParts.toMap == inputParts.filter { case (p, _) => todo(p) })
+    assert(new java.io.File(s"$wh/results").listFiles().map(_.getName)
+      .filter(_.startsWith("part_id=")).toSet == todo.map(p => s"part_id=$p"))
+    val lineage = io.readTable(spark, "lineage").select("part_id", "row_count").as[(Int, Long)].collect()
+    assert(lineage.toMap == inputParts.filter { case (p, _) => todo(p) } && lineage.length == todo.size)
+    val manifest = io.readTable(spark, "manifest").select("part_id").as[Int].collect()
+    assert(manifest.sorted.toSeq == (done ++ todo).toSeq.sorted)
+  }
+
+  test("one pass: run scans the input once, never reads results back; the tally sits above the exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{CollectMetricsExec, FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    object Plans extends AdaptiveSparkPlanHelper
+    val in = SparkTestBase.tempDir("one-pass-in")
+    Synth.pagesDs(spark, 80, seed = 17L, parallelism = 4).write.parquet(s"$in/pages")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen.add(qe)
+    }
+    def scans(qe: QueryExecution): Seq[String] = Plans.collect(qe.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
+    }.flatten
+    def writes(qe: QueryExecution): Option[String] = Plans.collectFirst(qe.executedPlan) {
+      case w: DataWritingCommandExec if w.cmd.isInstanceOf[InsertIntoHadoopFsRelationCommand] =>
+        w.cmd.asInstanceOf[InsertIntoHadoopFsRelationCommand].outputPath.getName
+    }
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.listenerManager.register(listener)
+    try {
+      for (aqe <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        seen.clear()
+        val io = new ParquetTableIO(SparkTestBase.tempDir("wh-one-pass"))
+        ExtractJob.run(spark, spark.read.parquet(s"$in/pages"), io, runTs, partitions = 8, salt = 2)
+        // listener events arrive in order; the manifest append is the run's last action
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (!seen.asScala.exists(writes(_).contains("manifest"))) {
+          assert(System.nanoTime() < deadline, s"aqe=$aqe: no manifest append seen")
+          Thread.sleep(20)
+        }
+        val qes = seen.asScala.toSeq
+        assert(!qes.exists(scans(_).contains("results")), s"aqe=$aqe: results read back")
+        assert(qes.count(scans(_).contains("pages")) == 1, s"aqe=$aqe: ${qes.map(scans)}")
+        // the tally is evaluated in the write's result stage: above the
+        // one part-aligned exchange, with no exchange above it
+        val write = qes.filter(writes(_).contains("results"))
+        assert(write.length == 1)
+        val plan = write.head.executedPlan
+        val tallies = Plans.collect(plan) { case c: CollectMetricsExec => c }
+        assert(tallies.length == 1, s"aqe=$aqe\n$plan")
+        val below = Plans.collect(tallies.head) { case e: ShuffleExchangeExec => e }
+        assert(below.length == 1 && Plans.collect(plan) { case e: ShuffleExchangeExec => e }.length == 1,
+          s"aqe=$aqe\n$plan")
+        below.head.outputPartitioning match {
+          case HashPartitioning(keys, _) =>
+            assert(keys.flatMap(_.references.map(_.name)) == Seq("part_id", "salt_k"), s"aqe=$aqe\n$plan")
+          case other => fail(s"aqe=$aqe: not a hash exchange: $other\n$plan")
+        }
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
+  }
+
   test("content-class hint beats an equally-sized link farm without article tags") {
     import graft.extract.HtmlExtractor
     // no <main>/<article>: selection must fall back to scoring; the link

@@ -224,6 +224,35 @@ class WarcSpec extends AnyFunSuite {
     assert(Warc.contentDecode("gzip", "not gzip at all".getBytes(UTF_8)) == null)
   }
 
+  test("content-decode bomb: gzip and deflate past the per-stream ceiling are null, not an OOM") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // ~300 MiB of zeros compresses to ~300 KiB; decode must refuse it
+    def bomb(out: java.io.OutputStream, flush: () => Unit): Unit = {
+      val chunk = new Array[Byte](1 << 20)
+      (0 until 300).foreach(_ => out.write(chunk))
+      flush()
+    }
+    val gz = new ByteArrayOutputStream()
+    val gzOut = new java.util.zip.GZIPOutputStream(gz)
+    bomb(gzOut, () => gzOut.close())
+    assert(Warc.contentDecode("gzip", gz.toByteArray) == null)
+    for (nowrap <- Seq(false, true)) {
+      val zl = new ByteArrayOutputStream()
+      val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, nowrap)
+      val zlOut = new java.util.zip.DeflaterOutputStream(zl, d)
+      bomb(zlOut, () => { zlOut.close(); d.end() })
+      assert(Warc.contentDecode("deflate", zl.toByteArray) == null, s"nowrap=$nowrap")
+    }
+    // an ordinary 1 MiB body still decodes
+    val fine = new Array[Byte](1 << 20)
+    assert(Warc.contentDecode("gzip", Warc.gzipEncode(fine)).sameElements(fine))
+    // a zlib header asking for a preset dictionary (FDICT) is damaged
+    // data: decoded or null within the time bound, never a spin
+    val fdict = Array(0x78, 0xbb, 0, 0, 0, 1).map(_.toByte) ++ Warc.deflateEncode(fine, zlibWrapper = false)
+    Await.result(Future(Warc.contentDecode("deflate", fdict))(ExecutionContext.global), 5.seconds)
+  }
+
   test("codec: chunked + gzip response records decode transparently in parse") {
     val body = "<html><body>" + ("wire-coded content " * 50) + "</body></html>"
     val out = new ByteArrayOutputStream()
