@@ -64,7 +64,7 @@ object Bmp {
     if ((compression == 1 || compression == 2) && topDown)
       return Left("bmp: top-down RLE is invalid")
     if (width <= 0 || height == 0) return Left("bmp: bad dimensions")
-    if (width.toLong * height > (1L << 28) / 4) return Left("bmp: image too large")
+    if (width.toLong * height > Streams.MaxDecodedBytes / 4) return Left("bmp: image too large")
     if (bpp != 1 && bpp != 4 && bpp != 8 && bpp != 16 && bpp != 24 && bpp != 32)
       return Left(s"bmp: $bpp-bit depth unsupported")
 

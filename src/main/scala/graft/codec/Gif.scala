@@ -65,7 +65,7 @@ object Gif {
             p += 3 * n
           }
           if (pal == null) return Left("gif: no color table")
-          if (iw <= 0 || ih <= 0 || iw.toLong * ih > (1L << 28) / 4)
+          if (iw <= 0 || ih <= 0 || iw.toLong * ih > Streams.MaxDecodedBytes / 4)
             return Left("gif: bad frame size") // alloc ceiling, not just overflow guard
           if (p >= b.length) return Left("gif: missing LZW code size")
           val minCode = b(p) & 0xff
@@ -305,7 +305,7 @@ object Gif {
     if (!isGif(b)) return Left("gif: bad signature")
     if (b.length < 13) return Left("gif: truncated header")
     val sw = u16(b, 6); val sh = u16(b, 8)
-    if (sw <= 0 || sh <= 0 || sw.toLong * sh > (1L << 28) / 4) return Left("gif: bad screen size")
+    if (sw <= 0 || sh <= 0 || sw.toLong * sh > Streams.MaxDecodedBytes / 4) return Left("gif: bad screen size")
     val flags = b(10) & 0xff
     var p = 13
     var gct: Array[Byte] = null

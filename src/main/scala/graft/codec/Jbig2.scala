@@ -1103,7 +1103,7 @@ object Jbig2 {
 
   // ------------------------------------------------------------ segments
 
-  private val MaxPixels = (1L << 28) / 4
+  private val MaxPixels: Long = Streams.MaxDecodedBytes / 4
 
   private def be32(b: Array[Byte], p: Int): Long =
     ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |

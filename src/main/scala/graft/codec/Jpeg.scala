@@ -390,10 +390,11 @@ object Jpeg {
                 mcusY = (height + 8 * maxV - 1) / (8 * maxV)
                 progCoefs = comps.map { c =>
                   val n = (mcusX.toLong * c.h) * (mcusY.toLong * c.v) * 64L
-                  // progressive buffers 4 bytes/coefficient: cap decoded
-                  // pixels at 64M so a crafted SOF can't OOM an executor
-                  // before the old Int.MaxValue guard would trip
-                  if (n > (1L << 26) * 4) return Left("jpeg: image too large")
+                  // progressive buffers hold one Int per coefficient: cap
+                  // the coefficient count at the decode ceiling so a
+                  // crafted SOF can't OOM an executor before the old
+                  // Int.MaxValue guard would trip
+                  if (n > Streams.MaxDecodedBytes) return Left("jpeg: image too large")
                   new Array[Int](n.toInt)
                 }
               }
@@ -751,9 +752,9 @@ object Jpeg {
       c.planeW = mcusX * 8 * c.h
       c.planeH = mcusY * 8 * c.v
       val bytes = c.planeW.toLong * c.planeH
-      // 256M samples/plane ceiling: a crafted 65k x 65k SOF should be an
-      // error row, not an executor OOM
-      if (bytes > (1L << 28)) return Left("jpeg: image too large")
+      // one byte a sample, so a plane answers to the decode ceiling: a
+      // crafted 65k x 65k SOF should be an error row, not an executor OOM
+      if (bytes > Streams.MaxDecodedBytes) return Left("jpeg: image too large")
       c.plane = new Array[Byte](bytes.toInt)
       c.pred = 0
     }

@@ -4,8 +4,8 @@ package graft.codec
   * covers the two dominant crawl image formats losslessly vs lossily.
   *
   * Decode: signature + chunk walk (CRC-validated), IHDR, concatenated
-  * IDAT zlib streams (JDK Inflater — the same public primitive the PDF
-  * FlateDecode path uses), per-row filters None/Sub/Up/Average/Paeth,
+  * IDAT zlib streams ([[Streams.inflateExactly]], the one Flate kernel),
+  * per-row filters None/Sub/Up/Average/Paeth,
   * color types 0 (gray), 2 (RGB), 3 (palette), 4 (gray+alpha) and
   * 6 (RGBA) at bit depths 8 and 16 — alpha is dropped on output (the
   * feature extraction consumers read color planes; compositing policy
@@ -43,6 +43,15 @@ object Png {
   private def u32(b: Array[Byte], p: Int): Long =
     ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) | ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
 
+  /** The concatenated IDAT zlib stream, inflated to exactly `rawLen`
+    * bytes through the one Flate kernel. */
+  private[graft] def inflateIdat(idat: Array[Byte], rawLen: Int): Either[String, Array[Byte]] =
+    Streams.inflateExactly(idat, rawLen) match {
+      case Right(out) => if (out.length < rawLen) Left("png: short pixel data") else Right(out)
+      case Left(Streams.Stop.Corrupt(m)) => Left(s"png: DataFormatException: $m")
+      case Left(_) => Left("png: truncated IDAT")
+    }
+
   def decode(b: Array[Byte]): Either[String, Jpeg.Image] =
     try decodeImpl(b)
     catch { case e: Exception => Left(s"png: ${e.getClass.getSimpleName}: ${e.getMessage}") }
@@ -70,9 +79,9 @@ object Png {
           if ((b(p + 19) & 0xff) != 0) return Left("png: unknown filter method")
           interlace = b(p + 20) & 0xff
           if (width <= 0 || height <= 0) return Left("png: bad dimensions")
-          // 256M-pixel ceiling (bpp up to 4): crafted IHDRs become error
-          // rows, not executor OOMs
-          if (width.toLong * height > (1L << 28) / 8) return Left("png: image too large")
+          // up to 8 bytes a pixel (16-bit RGBA) under the decode ceiling:
+          // crafted IHDRs become error rows, not executor OOMs
+          if (width.toLong * height > Streams.MaxDecodedBytes / 8) return Left("png: image too large")
           if (!Set(1, 2, 4, 8, 16).contains(bitDepth))
             return Left(s"png: bit depth $bitDepth invalid")
           if (bitDepth == 16 && colorType == 3) return Left("png: 16-bit palette is invalid")
@@ -123,17 +132,10 @@ object Png {
       if (pw == 0 || ph == 0) 0L else ph.toLong * (1 + rowBytes(pw))
     }.sum
     if (rawLen > (1L << 30)) return Left("png: image too large")
-    val raw = new Array[Byte](rawLen.toInt)
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    var got = 0
-    while (got < raw.length && !inf.finished()) {
-      val n = inf.inflate(raw, got, raw.length - got)
-      if (n == 0 && inf.needsInput()) return Left("png: truncated IDAT")
-      got += n
+    val raw = inflateIdat(idat.toByteArray, rawLen.toInt) match {
+      case Right(out) => out
+      case Left(err) => return Left(err)
     }
-    inf.end()
-    if (got < raw.length) return Left("png: short pixel data")
 
     /** Defilter `rows` scanlines of `rowBytes` pixels-bytes starting at
       * raw(off) (each prefixed by its filter byte) into a fresh buffer. */

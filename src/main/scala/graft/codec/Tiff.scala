@@ -116,7 +116,7 @@ object Tiff {
     if (width <= 0 || height <= 0) return Left("tiff: bad dimensions")
     // 64M-sample ceiling (3 samples/px max): crafted IFDs become error
     // rows, not multi-GB allocations (the shared codec alloc discipline)
-    if (width.toLong * height > (1L << 28) / 4) return Left("tiff: image too large")
+    if (width.toLong * height > Streams.MaxDecodedBytes / 4) return Left("tiff: image too large")
     val compression = scalar(259, 1L).toInt
     val photometric = scalar(262).toInt
     val spp = scalar(277, 1L).toInt
@@ -357,98 +357,40 @@ object Tiff {
   }
 
   /** Decompress one strip/tile payload: 1 raw, 5 LZW, 8/32946 zlib
-    * Deflate (the Adobe and legacy tags; JDK Inflater — the same public
-    * primitive the PNG/PDF Flate paths use), 32773 PackBits. */
-  private def decompressChunk(data: Array[Byte], expected: Int,
+    * Deflate (the Adobe and legacy tags; [[Streams.inflateExactly]], the
+    * one Flate kernel), 32773 PackBits. */
+  private[graft] def decompressChunk(data: Array[Byte], expected: Int,
       compression: Int): Either[String, Array[Byte]] = compression match {
     case 1 => Right(data)
     case 5 => Lzw.decode(data, expected)
     case 8 | 32946 =>
-      if (expected < 0 || expected > (1 << 28)) Left("tiff: deflate output too large")
-      else try {
-        val out = new Array[Byte](expected)
-        val inf = new java.util.zip.Inflater()
-        inf.setInput(data)
-        var got = 0
-        while (got < expected && !inf.finished()) {
-          val n = inf.inflate(out, got, expected - got)
-          if (n == 0 && inf.needsInput()) { inf.end(); return Left("tiff: deflate truncated") }
-          got += n
-        }
-        inf.end()
-        if (got < expected) Left("tiff: deflate output short") else Right(out)
-      } catch { case e: Exception => Left(s"tiff: deflate: ${e.getMessage}") }
+      if (expected < 0 || expected > Streams.MaxDecodedBytes) Left("tiff: deflate output too large")
+      else Streams.inflateExactly(data, expected) match {
+        case Right(out) => if (out.length < expected) Left("tiff: deflate output short") else Right(out)
+        case Left(Streams.Stop.Corrupt(m)) => Left(s"tiff: deflate: $m")
+        case Left(_) => Left("tiff: deflate truncated")
+      }
     case 32773 => PackBits.decode(data, expected)
     case c     => Left(s"tiff: compression $c unsupported here")
   }
 
   /** TIFF-variant LZW (TIFF 6.0 §13): MSB-first codes, Clear=256, EOI=257,
     * 9→12-bit widths with the "early change" bump at table size 2^w − 1.
-    * Per-strip; `expected` bounds the output allocation. */
+    * Per-strip; `expected` bounds the output. Decodes through
+    * [[Streams.lzw]]; the end code is required. */
   private[graft] object Lzw {
     private val Clear = 256
     private val Eoi = 257
 
-    def decode(data: Array[Byte], expected: Int): Either[String, Array[Byte]] = {
-      if (expected < 0 || expected > (1 << 28)) return Left("tiff: lzw output too large")
-      val out = new Array[Byte](expected)
-      var outPos = 0
-      // string table: packed (prefixCode, byte); 0..255 implicit roots
-      val prefix = new Array[Int](4096)
-      val suffix = new Array[Byte](4096)
-      var next = 258
-      var width = 9
-      var acc = 0L; var nBits = 0; var p = 0
-      var old = -1
-      val stack = new Array[Byte](4096)
-      def readCode(): Int = {
-        while (nBits < width) {
-          if (p >= data.length) return -1
-          acc = (acc << 8) | (data(p) & 0xff); p += 1; nBits += 8
-        }
-        nBits -= width
-        ((acc >>> nBits) & ((1 << width) - 1)).toInt
+    def decode(data: Array[Byte], expected: Int): Either[String, Array[Byte]] =
+      if (expected < 0 || expected > Streams.MaxDecodedBytes) Left("tiff: lzw output too large")
+      else Streams.lzw(data, earlyChange = 1, limit = expected) match {
+        case Right(out) => if (out.length < expected) Left("tiff: lzw output short") else Right(out)
+        case Left(Streams.Stop.TooLarge) => Left("tiff: lzw output overrun")
+        case Left(Streams.Stop.BadFirstCode) => Left("tiff: lzw bad first code")
+        case Left(Streams.Stop.BadCode) => Left("tiff: lzw code out of range")
+        case Left(_) => Left("tiff: lzw stream truncated")
       }
-      while (true) {
-        val code = readCode()
-        if (code < 0) return Left("tiff: lzw stream truncated")
-        if (code == Eoi) {
-          if (outPos < expected) return Left("tiff: lzw output short")
-          return Right(out)
-        }
-        if (code == Clear) {
-          next = 258; width = 9; old = -1
-        } else if (old < 0) {
-          if (code > 255) return Left("tiff: lzw bad first code")
-          if (outPos >= expected) return Left("tiff: lzw output overrun")
-          out(outPos) = code.toByte; outPos += 1
-          old = code
-        } else {
-          if (code > next) return Left("tiff: lzw code out of range")
-          var sp = 0
-          var c = code
-          if (code == next) { // KwK: emit old + first(old)
-            c = old
-            stack(sp) = 0; sp += 1 // placeholder for the repeated first byte
-          }
-          while (c > 255) { stack(sp) = suffix(c); sp += 1; c = prefix(c) }
-          val first = c.toByte
-          if (code == next) stack(0) = first
-          if (outPos + sp + 1 > expected) return Left("tiff: lzw output overrun")
-          out(outPos) = first; outPos += 1
-          var i = sp - 1
-          while (i >= 0) { out(outPos) = stack(i); outPos += 1; i -= 1 }
-          if (next < 4096) {
-            prefix(next) = old; suffix(next) = first
-            next += 1
-          }
-          old = code
-        }
-        // early change: bump when the NEXT add would need more bits
-        if (code != Clear && next == (1 << width) - 1 && width < 12) width += 1
-      }
-      Left("tiff: unreachable")
-    }
 
     def encode(data: Array[Byte]): Array[Byte] = {
       val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
@@ -508,7 +450,7 @@ object Tiff {
   /** PackBits (TIFF 6.0 §9 / classic Mac RLE). */
   private[graft] object PackBits {
     def decode(data: Array[Byte], expected: Int): Either[String, Array[Byte]] = {
-      if (expected < 0 || expected > (1 << 28)) return Left("tiff: packbits output too large")
+      if (expected < 0 || expected > Streams.MaxDecodedBytes) return Left("tiff: packbits output too large")
       val out = new Array[Byte](expected)
       var p = 0; var o = 0
       while (o < expected) {

@@ -115,7 +115,7 @@ object Vp8 {
     val width = ((b(off + 6) & 0xff) | ((b(off + 7) & 0xff) << 8)) & 0x3fff
     val height = ((b(off + 8) & 0xff) | ((b(off + 9) & 0xff) << 8)) & 0x3fff
     if (width == 0 || height == 0) return Left("vp8: zero dimensions")
-    if (width.toLong * height > (1L << 26)) return Left("vp8: image too large")
+    if (width.toLong * height > Streams.MaxDecodedBytes / 4) return Left("vp8: image too large")
     val dataStart = off + 10
     if (part0Len <= 0 || dataStart + part0Len > off + len) return Left("vp8: partition 0 overruns")
     val bd = new Bool(b, dataStart, dataStart + part0Len)

@@ -340,7 +340,7 @@ object WebpVp8l {
 
   // ------------------------------------------------------------ decoder core
 
-  private val MaxPixels = (1L << 28) / 4
+  private val MaxPixels: Long = Streams.MaxDecodedBytes / 4
 
   private def decodeVp8l(b: Array[Byte], off: Int, len: Int): Either[String, Jpeg.Image] = {
     if (len < 5) return Left("webp: vp8l too short")

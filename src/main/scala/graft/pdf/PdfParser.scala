@@ -1,9 +1,11 @@
 package graft.pdf
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
-import java.util.zip.Inflater
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
+
+import graft.codec.Streams
+import graft.codec.Streams.Stop
 
 /** From-scratch PDF layout parser (north_star; replaces the reference's
   * MuPDF rasterize + LLM OCR, /root/reference/mvp/utils/pdf_processor.py:24-58
@@ -1007,32 +1009,15 @@ object PdfParser {
     }
   }
 
-  /** Per-stream decode ceiling: a corrupt or hostile stream (zip bomb,
-    * runaway RunLength/LZW repeats) must error-row the document, not OOM an
-    * executor shared by thousands of other documents. 256 MiB is far above
-    * any legitimate text content stream. WARC Content-Encoding decode
-    * (`Warc.contentDecode`) shares it. */
-  private[graft] val MaxDecodedBytes: Int = 256 << 20
-
-  private[graft] def inflate(data: Array[Byte]): Array[Byte] = {
-    val inf = new Inflater()
-    inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream(data.length * 4)
-    val buf = new Array[Byte](8192)
-    try {
-      while (!inf.finished()) {
-        val k = inf.inflate(buf)
-        if (k == 0) {
-          if (inf.needsInput() || inf.needsDictionary()) throw PdfError("pdf_flate_truncated")
-        } else {
-          if (out.size() + k > MaxDecodedBytes) throw PdfError("pdf_stream_too_large")
-          out.write(buf, 0, k)
-        }
-      }
-    } catch {
-      case _: java.util.zip.DataFormatException => throw PdfError("pdf_flate_corrupt")
-    } finally inf.end()
-    out.toByteArray
+  /** FlateDecode through the one Flate kernel, capped at the per-stream
+    * ceiling ([[Streams.MaxDecodedBytes]]): a corrupt or hostile stream
+    * (zip bomb) must error-row the document, not OOM an executor shared by
+    * thousands of other documents. */
+  private[graft] def inflate(data: Array[Byte]): Array[Byte] = Streams.inflate(data) match {
+    case Right(out) => out
+    case Left(Stop.TooLarge) => throw PdfError("pdf_stream_too_large")
+    case Left(Stop.Corrupt(_)) => throw PdfError("pdf_flate_corrupt")
+    case Left(_) => throw PdfError("pdf_flate_truncated")
   }
 
   private[graft] def asciiHex(data: Array[Byte]): Array[Byte] = {
@@ -1107,57 +1092,22 @@ object PdfParser {
         var k = 257 - tag
         while (k > 0) { out.write(b); k -= 1 }
       }
-      if (out.size() > MaxDecodedBytes) throw PdfError("pdf_stream_too_large")
+      if (out.size() > Streams.MaxDecodedBytes) throw PdfError("pdf_stream_too_large")
     }
     out.toByteArray
   }
 
-  /** LZWDecode (TIFF-style, MSB-first, 9→12-bit codes, clear=256,
-    * EOD=257). With EarlyChange=1 (the PDF default) the code width grows
-    * one entry early: after table index `next` is assigned, width bumps
-    * when next + earlyChange == 1 << width. */
-  private[graft] def lzw(data: Array[Byte], earlyChange: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(data.length * 3)
-    val table = new Array[Array[Byte]](4096)
-    var i = 0
-    while (i < 256) { table(i) = Array(i.toByte); i += 1 }
-    var next = 258
-    var width = 9
-    var prev: Array[Byte] = null
-    var bitBuf = 0L
-    var bitCnt = 0
-    var pos = 0
-    var stop = false
-    while (!stop) {
-      while (bitCnt < width && pos < data.length) {
-        bitBuf = (bitBuf << 8) | (data(pos) & 0xff)
-        bitCnt += 8
-        pos += 1
-      }
-      if (bitCnt < width) stop = true // ran out of input: tolerate missing EOD
-      else {
-        val code = ((bitBuf >>> (bitCnt - width)) & ((1 << width) - 1)).toInt
-        bitCnt -= width
-        if (code == 256) { next = 258; width = 9; prev = null }
-        else if (code == 257) stop = true
-        else {
-          val entry: Array[Byte] =
-            if (code < 256 || (code >= 258 && code < next && table(code) != null)) table(code)
-            else if (code == next && prev != null) prev :+ prev(0) // KwKwK
-            else throw PdfError("pdf_lzw_bad_code")
-          if (prev != null && next < 4096) {
-            table(next) = prev :+ entry(0)
-            next += 1
-            if (next + earlyChange >= (1 << width) && width < 12) width += 1
-          }
-          if (out.size() + entry.length > MaxDecodedBytes) throw PdfError("pdf_stream_too_large")
-          out.write(entry, 0, entry.length)
-          prev = entry
-        }
-      }
+  /** LZWDecode through the one LZW kernel (TIFF-style, MSB-first, 9→12-bit
+    * codes, clear=256, EOD=257; EarlyChange=1 is the PDF default), capped
+    * at the per-stream ceiling. A stream that ends without EOD keeps what
+    * it decoded. */
+  private[graft] def lzw(data: Array[Byte], earlyChange: Int): Array[Byte] =
+    Streams.lzw(data, earlyChange, Streams.MaxDecodedBytes) match {
+      case Right(out) => out
+      case Left(Stop.Truncated(out)) => out
+      case Left(Stop.TooLarge) => throw PdfError("pdf_stream_too_large")
+      case Left(_) => throw PdfError("pdf_lzw_bad_code")
     }
-    out.toByteArray
-  }
 
   // --------------------------------------------------------- text machine
 

@@ -11,7 +11,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
-import graft.pdf.PdfParser.MaxDecodedBytes
+import graft.codec.Streams
 
 /** One parsed WARC record. For `response` records carrying an
   * `application/http` block, [[httpStatus]]/[[contentType]]/[[body]] are
@@ -166,7 +166,7 @@ object Warc {
     val buf = new Array[Byte](1 << 12)
     var k = in.read(buf)
     while (k >= 0) {
-      if (out.size() + k > MaxDecodedBytes) return null
+      if (out.size() + k > Streams.MaxDecodedBytes) return null
       out.write(buf, 0, k); k = in.read(buf)
     }
     out.toByteArray
@@ -190,30 +190,13 @@ object Warc {
     out.toByteArray
   }
 
-  /** Deflate decode, or null once the output passes the per-stream decode
-    * ceiling. A zlib stream that asks for a preset dictionary is damaged
-    * data here (no dictionary is ever known), not a reason to spin. */
-  private def inflateWith(data: Array[Byte], nowrap: Boolean): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(nowrap)
-    try {
-      inf.setInput(data)
-      val out = new ByteArrayOutputStream(data.length * 2 + 64)
-      val buf = new Array[Byte](1 << 12)
-      while (!inf.finished()) {
-        val k = inf.inflate(buf)
-        if (k == 0 && (inf.needsInput() || inf.needsDictionary())) throw new EOFException("deflate truncated")
-        if (out.size() + k > MaxDecodedBytes) return null
-        out.write(buf, 0, k)
-      }
-      out.toByteArray
-    } finally inf.end()
-  }
-
   /** Content-Encoding decode: gzip / x-gzip, deflate (zlib-wrapped AND
     * the bare form servers mislabel as "deflate"), identity. Unknown
     * coding, damaged data or a body that decodes past the per-stream
-    * ceiling (PdfParser.MaxDecodedBytes: a decompression bomb) → null
-    * (caller keeps the raw bytes). */
+    * ceiling (Streams.MaxDecodedBytes: a decompression bomb) → null
+    * (caller keeps the raw bytes). Deflate goes through the one Flate
+    * kernel, zlib first, then bare; a zlib header asking for a preset
+    * dictionary is damaged data (none is ever known). */
   def contentDecode(enc: String, data: Array[Byte]): Array[Byte] = {
     val e = enc.trim.toLowerCase
     try e match {
@@ -221,8 +204,11 @@ object Warc {
       case "gzip" | "x-gzip" =>
         readAll(new GZIPInputStream(new java.io.ByteArrayInputStream(data)))
       case "deflate" =>
-        try inflateWith(data, nowrap = false)
-        catch { case _: Exception => inflateWith(data, nowrap = true) }
+        Streams.inflate(data) match {
+          case Right(out) => out
+          case Left(Streams.Stop.TooLarge) => null
+          case Left(_) => Streams.inflate(data, nowrap = true).getOrElse(null)
+        }
       case _ => null
     } catch { case _: Exception => null }
   }

@@ -8,14 +8,23 @@ package graft.tools
   * HEIF/AVIF labeling walk; this main hammers ALL of them.
   *
   * Usage: FuzzCampaign [mutationsPerSeed] (default 2000)
-  * Every decode must return (Left or Right) without throwing and
-  * without runaway allocation; any throw aborts with the seed/mutation
-  * indices so the case can be frozen into a regression spec.
+  * Every decode must return (Left or Right) without throwing, without
+  * runaway allocation and within [[DeadlineMs]]; a throw or a missed
+  * deadline aborts (exit 1) with the seed/mutation indices so the case
+  * can be frozen into a regression spec. Decodes run one at a time on one
+  * reused daemon worker thread, so a hung decode cannot keep the JVM up.
   */
 object FuzzCampaign {
+
+  /** Per-decode wall bound. Clean decodes of these small seeds take well
+    * under a millisecond once warm; the slack absorbs JIT and GC pauses. */
+  val DeadlineMs = 2000L
+
   def main(args: Array[String]): Unit = {
     val perSeed = args.headOption.map(_.toInt).getOrElse(2000)
     import graft.codec._
+    import graft.pdf.{PdfParser, PdfWriter}
+    import graft.sources.Warc
     val gray = Array.tabulate[Byte](32 * 24)(i => (i * 7).toByte)
     val rgb = Array.tabulate[Byte](24 * 16 * 3)(i => (i * 5).toByte)
     val pal16 = Array.tabulate[Byte](16 * 3)(i => (i * 11).toByte)
@@ -23,6 +32,10 @@ object FuzzCampaign {
     val idx = Array.tabulate[Byte](24 * 16)(i => (i % 16).toByte)
     val glyphs = Vector((3, 4, Array.fill[Byte](12)(1)), (2, 3, Array.fill[Byte](6)(1)))
     val placements = Seq((0, 1, 1), (1, 6, 2), (0, 11, 1), (1, 16, 6))
+    val lines = Vector.tabulate(12)(i => s"line $i of the fuzz page, filtered stream text")
+    def pdf(f: PdfWriter.Filter): Array[Byte] =
+      PdfWriter.write(Vector(PdfWriter.PageSpec(Vector(lines), filters = Vector(f))))
+    val text = lines.mkString("\n").getBytes("UTF-8")
 
     val seeds: Seq[(String, Array[Byte], Array[Byte] => Any)] = Seq(
       ("vp8-synth", Vp8Synth.wrapWebp(Vp8Synth.synthesize(33, 21, 55, 25)),
@@ -81,8 +94,20 @@ object FuzzCampaign {
         bb.putInt(0xf800).putInt(0x07e0).putInt(0x001f)
         (0 until stride * h).foreach(i => bb.put((i * 7).toByte))
         bb.array()
-      }, (m: Array[Byte]) => Bmp.decode(m))
+      }, (m: Array[Byte]) => Bmp.decode(m)),
+      ("tiff-deflate", Tiff.encodeCompressed(gray, 32, 24, 1, 8, rowsPerStrip = 8),
+        (m: Array[Byte]) => Tiff.decode(m)),
+      ("tiff-lzw", Tiff.encodeCompressed(rgb, 24, 16, 3, 5, rowsPerStrip = 6, predictor = true),
+        (m: Array[Byte]) => Tiff.decode(m)),
+      ("pdf-flate", pdf(PdfWriter.FlateF), (m: Array[Byte]) => PdfParser.parse(m)),
+      ("pdf-lzw", pdf(PdfWriter.LzwF), (m: Array[Byte]) => PdfParser.parse(m)),
+      ("pdf-runlength", pdf(PdfWriter.RunLengthF), (m: Array[Byte]) => PdfParser.parse(m)),
+      ("warc-deflate", Warc.deflateEncode(text), (m: Array[Byte]) => Warc.contentDecode("deflate", m))
     )
+
+    val worker = java.util.concurrent.Executors.newSingleThreadExecutor { (r: Runnable) =>
+      val t = new Thread(r, "fuzz-decode"); t.setDaemon(true); t
+    }
 
     var total = 0L
     val t0 = System.nanoTime()
@@ -100,10 +125,16 @@ object FuzzCampaign {
           case _ => ()
         }
         val sl = if (i % 3 == 2) java.util.Arrays.copyOf(m, 1 + rng.nextInt(m.length)) else m
-        try decode(sl)
+        val d0 = System.nanoTime()
+        val task: java.util.concurrent.Callable[Any] = () => decode(sl)
+        try worker.submit(task).get(DeadlineMs, java.util.concurrent.TimeUnit.MILLISECONDS)
         catch {
-          case e: Throwable =>
-            System.err.println(s"FUZZ FAILURE seed=$name mutation=$i: ${e.getClass.getName}: ${e.getMessage}")
+          case _: java.util.concurrent.TimeoutException =>
+            System.err.println(f"FUZZ TIMEOUT seed=$name mutation=$i: still decoding after ${(System.nanoTime() - d0) / 1e6}%.0f ms")
+            sys.exit(1)
+          case e: java.util.concurrent.ExecutionException =>
+            val c = e.getCause
+            System.err.println(s"FUZZ FAILURE seed=$name mutation=$i: ${c.getClass.getName}: ${c.getMessage}")
             sys.exit(1)
         }
         total += 1
@@ -111,7 +142,8 @@ object FuzzCampaign {
       }
       System.err.println(f"[fuzz] $name%-16s $perSeed%d mutations clean")
     }
+    worker.shutdown()
     val secs = (System.nanoTime() - t0) / 1e9
-    println(f"campaign clean: $total%d decodes across ${seeds.size}%d seeds in $secs%.1fs")
+    println(f"campaign clean: $total%d decodes across ${seeds.size}%d seeds in $secs%.1fs, none past ${DeadlineMs}%d ms")
   }
 }

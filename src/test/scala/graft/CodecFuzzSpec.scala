@@ -154,4 +154,55 @@ class CodecFuzzSpec extends AnyFunSuite {
     for (m <- mutations(seed, 300)) graft.codec.Avi.decode(m)
     succeed
   }
+
+  test("every Flate/LZW adapter ends within one time bound on mutations and FDICT headers") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import graft.codec.Tiff
+    import graft.pdf.{PdfParser, PdfWriter}
+    import graft.sources.Warc
+    val pix = Array.tabulate[Byte](24 * 16)(i => ((i * 7) % 13).toByte)
+    val text = ("BT (kernel fuzz) Tj ET\n" * 30).getBytes("ISO-8859-1")
+    // zlib headers that pass the header check and ask for a preset dictionary
+    def fdict(z: Array[Byte]): Array[Byte] = {
+      val flg = Seq(0x20, 0xbb, 0xf9)(r.nextInt(3)).toByte
+      Array[Byte](0x78, flg) ++ Array.fill(r.nextInt(5))(0.toByte) ++ z.drop(2)
+    }
+    def fdictAt(f: Array[Byte], at: Int): Array[Byte] = { // header patched in place
+      val m = f.clone(); m(at) = 0x78; m(at + 1) = Seq(0x20, 0xbb, 0xf9)(r.nextInt(3)).toByte; m
+    }
+    val png = Png.encode(pix, 24, 16, 1)
+    val idat = png.indexOfSlice("IDAT".getBytes("US-ASCII")) + 4
+    val hostilePng = { // FDICT IDAT with its chunk CRC redone, so the inflate is reached
+      val m = fdictAt(png, idat)
+      val len = java.nio.ByteBuffer.wrap(m, idat - 8, 4).getInt
+      val crc = new java.util.zip.CRC32(); crc.update(m, idat - 4, len + 4)
+      java.nio.ByteBuffer.wrap(m, idat + len, 4).putInt(crc.getValue.toInt)
+      m
+    }
+    val tiffDeflate = Tiff.encodeCompressed(pix, 24, 16, 1, 8)
+    val flate = PdfWriter.encodeOne(PdfWriter.FlateF, text)
+    val lzw = PdfWriter.encodeOne(PdfWriter.LzwF, text)
+    val adapters: Seq[(Array[Byte], Array[Byte] => Any)] = Seq(
+      png -> (Png.decode(_)),
+      tiffDeflate -> (Tiff.decode(_)),
+      Tiff.encodeCompressed(pix, 24, 16, 1, 5, rowsPerStrip = 5) -> (Tiff.decode(_)),
+      Tiff.Lzw.encode(pix) -> (m => Tiff.Lzw.decode(m, pix.length)),
+      flate -> (m => try PdfParser.inflate(m) catch { case _: PdfParser.PdfError => () }),
+      lzw -> (m => for (e <- 0 to 1) try PdfParser.lzw(m, e) catch { case _: PdfParser.PdfError => () }),
+      Warc.deflateEncode(text) -> (Warc.contentDecode("deflate", _)),
+      Warc.deflateEncode(text, zlibWrapper = false) -> (Warc.contentDecode("deflate", _)))
+    val hostile = Seq(hostilePng, fdictAt(tiffDeflate, 8), fdict(flate),
+      fdict(Warc.deflateEncode(text)))
+    val run = Future {
+      for ((seed, decode) <- adapters) {
+        for (m <- mutations(seed, 300)) decode(m)
+        for (_ <- 0 until 20) decode(fdict(seed))
+      }
+      for ((seed, decode) <- adapters; h <- hostile) decode(h)
+      (Png.decode(hostile(0)), Tiff.decode(hostile(1)))
+    }(ExecutionContext.global)
+    // the FDICT splices reach the inflate: the formats' truncated errors
+    assert(Await.result(run, 30.seconds) == ((Left("png: truncated IDAT"), Left("tiff: deflate truncated"))))
+  }
 }

@@ -272,6 +272,38 @@ class Jbig2Spec extends AnyFunSuite {
     }
   }
 
+  test("arithmetic dictionary whose export runs keep decoding 0 fails closed within 5 s") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // page info (30 bytes) + a valid arithmetic dictionary (#2) exporting
+    // two symbols; its data length sits at 37..40 and its data at 41
+    val syms = Vector((3, 3, Array.fill[Byte](9)(1)), (2, 2, Array.fill[Byte](4)(1)))
+    val good = Jbig2.encodeSymbolPage(30, 12, syms, Seq((0, 1, 1), (1, 6, 2)))
+    val dictLen = ((good(37) & 0xff) << 24) | ((good(38) & 0xff) << 16) | ((good(39) & 0xff) << 8) | (good(40) & 0xff)
+    def be32(v: Int): Array[Byte] = Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
+    // IAEX runs of 0, MQ-coded: sign 0, prefix 0, two value bits 00, each
+    // bit in the PREV-walked context of T.88 A.2
+    def zeroRuns(n: Int): Array[Byte] = {
+      val enc = new Jbig2.MQEncoder
+      val ix = new Array[Int](512); val mps = new Array[Byte](512)
+      for (_ <- 0 until n) {
+        var prev = 1
+        for (_ <- 0 until 4) { enc.encode(ix, mps, prev, 0); prev = prev << 1 }
+      }
+      enc.flush()
+    }
+    for (n <- Seq(7, 64, 4096)) {
+      // dictionary #3 refers to #2: no new symbols, two input symbols, so
+      // a valid stream needs at most 2 * 2 + 2 = 6 export runs
+      val data = java.util.Arrays.copyOfRange(good, 41, 51) ++ // flags + nominal AT
+        be32(2) ++ be32(0) ++ zeroRuns(n)
+      val hostile = good.take(41 + dictLen) ++
+        be32(3) ++ Array[Byte](0, 1 << 5, 2, 1) ++ be32(data.length) ++ data
+      val r = Await.result(Future(Jbig2.decode(hostile))(ExecutionContext.global), 5.seconds)
+      assert(r == Left("jbig2: too many export runs"), s"n=$n")
+    }
+  }
+
   test("typed errors: unsupported features and truncation, never throws") {
     val good = Jbig2.encode(textLike(20, 10, 5L), 20, 10)
     // truncations

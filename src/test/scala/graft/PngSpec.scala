@@ -364,4 +364,33 @@ class PngSpec extends AnyFunSuite {
     for (y <- 0 until h; x <- 0 until w; c <- 0 until 3)
       assert(ref.getRaster.getSample(x, y, c) == samples((y * w + x) * 3 + c), s"imageio $x,$y,$c")
   }
+
+  test("a zlib header asking for a preset dictionary (FDICT) is a truncated IDAT within 5 s, not a spin") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // 1x1 gray: IDAT = FDICT zlib header + dictionary id + the raw deflate
+    // of its one scanline; every chunk CRC is valid
+    val raw = new java.io.ByteArrayOutputStream()
+    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
+    d.setInput(Array[Byte](0, 7)); d.finish()
+    val buf = new Array[Byte](64)
+    while (!d.finished()) raw.write(buf, 0, d.deflate(buf))
+    d.end()
+    val idat = Array(0x78, 0x20, 0, 0, 0, 1).map(_.toByte) ++ raw.toByteArray
+    def chunk(typ: String, body: Array[Byte]): Array[Byte] = {
+      val o = new java.io.ByteArrayOutputStream()
+      def be32(v: Long): Unit = for (s <- Seq(24, 16, 8, 0)) o.write(((v >> s) & 0xff).toInt)
+      val tb = typ.getBytes("US-ASCII")
+      val crc = new java.util.zip.CRC32(); crc.update(tb); crc.update(body)
+      be32(body.length); o.write(tb); o.write(body); be32(crc.getValue)
+      o.toByteArray
+    }
+    val ihdr = Array[Byte](0, 0, 0, 1, 0, 0, 0, 1, 8, 0, 0, 0, 0)
+    val png = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte) ++
+      chunk("IHDR", ihdr) ++ chunk("IDAT", idat) ++ chunk("IEND", Array.emptyByteArray)
+    assert(idat.take(6).sameElements(Array(0x78, 0x20, 0, 0, 0, 1).map(_.toByte)))
+    def within5s[T](f: => T): T = Await.result(Future(f)(ExecutionContext.global), 5.seconds)
+    assert(within5s(Png.decode(png)) == Left("png: truncated IDAT"))
+    assert(within5s(graft.ops.Multimodal.decodeImage(png)) == Left("png: truncated IDAT"))
+  }
 }

@@ -354,4 +354,16 @@ class TiffSpec extends AnyFunSuite {
     for (n <- Seq(lzw.length - 3, lzw.length / 2))
       assert(Tiff.decode(java.util.Arrays.copyOf(lzw, n)).isLeft, s"lzw prefix $n decoded")
   }
+
+  test("a deflate strip whose zlib header asks for a preset dictionary (FDICT) is truncated within 5 s, not a spin") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val good = Tiff.encodeCompressed(Array.tabulate[Byte](64)(i => (i * 3).toByte), 8, 8, 1, 8)
+    // the one strip starts right after the 8-byte header: 78 9c
+    assert((good(8) & 0xff) == 0x78 && (good(9) & 0xff) == 0x9c)
+    val fdict = good.clone()
+    fdict(9) = 0x20 // 0x7820 % 31 == 0 with the FDICT bit set
+    val r = Await.result(Future(Tiff.decode(fdict))(ExecutionContext.global), 5.seconds)
+    assert(r == Left("tiff: deflate truncated"))
+  }
 }
