@@ -5,11 +5,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.plans.{ExtractExpression, PolyHashExpression}
 
-/** Session extensions (the public injection seam): registers the native
-  * `graft_extract` and `graft_polyhash` Catalyst expressions. Enable with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")`; sessions
-  * built without it transparently use the equivalent Scala UDF paths
-  * (same kernels, same bytes, just the converter overhead). */
+/** Session extensions (the public injection seam): names the native
+  * `graft_extract` and `graft_polyhash` Catalyst expressions for SQL.
+  * Enable with `.config("spark.sql.extensions", "graft.GraftExtensions")`.
+  * The DataFrame API does not need it: `ExtractJob.extractedDf` and
+  * `Dedup.polyHash` build the same expressions straight into the plan on
+  * every session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((

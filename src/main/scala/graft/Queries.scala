@@ -120,9 +120,9 @@ object Queries {
     s.read.format("graft.sources.WarcSource").load(out)
 
   /** `n_bytes` and `body_hash` (polyhash of the UTF-8 text) of a read-back `body`. */
-  private def bodyDigest(s: SparkSession): Seq[Column] = Seq(
+  private def bodyDigest: Seq[Column] = Seq(
     length(col("body")).cast("long").as("n_bytes"),
-    graft.ops.Dedup.polyHashFn(s)(decode(col("body"), "UTF-8")).as("body_hash"))
+    graft.ops.Dedup.polyHash(decode(col("body"), "UTF-8")).as("body_hash"))
 
   /** `doc_id` plus the fields of `f(doc_id)`, named `names`, for every
     * document: the per-document fixture row a closed-form query builds. */
@@ -2984,12 +2984,11 @@ object Queries {
     // stand-in for HLL corpus profiling. DuckDB recomputes hash → distinct
     // → rank ≤ k → (k-1)·p/h_k independently.
     "q51_kmv" -> Query((s, dir) => {
-      val hashUdf = graft.ops.Dedup.polyHashFn(s)
       val toks = docs(s, dir)
         .select(col("source"),
           explode(split(trim(col("text")), "[ \\t\\n\\r]+")).as("tok"))
         .filter(col("tok") =!= "")
-        .select(col("source"), hashUdf(col("tok")).as("h"))
+        .select(col("source"), graft.ops.Dedup.polyHash(col("tok")).as("h"))
       graft.ops.Sketches.kmvDistinct(toks, "source", col("h"), k = 64)
     },
       // q51: hash → distinct → rank ≤ k → (k-1)·p/h_k, all in signed-64 SQL
@@ -3574,10 +3573,9 @@ object Queries {
     // everywhere, and every collision is deterministic integer arithmetic
     // both engines land on (no RNG in the sketch).
     "q69_countmin" -> Query((s, dir) => {
-      val hashUdf = graft.ops.Dedup.polyHashFn(s)
       val obs = docs(s, dir)
         .select(explode(split(trim(col("text")), "\\s+")).as("term"))
-        .withColumn("h", hashUdf(col("term")))
+        .withColumn("h", graft.ops.Dedup.polyHash(col("term")))
       val sketch = graft.ops.Sketches.countMin(obs, col("h"), lit(1L), depth = 3, width = 16)
       val q = obs.groupBy(col("term")).agg(count(lit(1)).as("exact"), max(col("h")).as("__h"))
       graft.ops.Sketches.countMinEstimate(sketch, q, col("__h"), depth = 3, width = 16)
@@ -5925,7 +5923,7 @@ object Queries {
       readWarc(s, out)
         .select(Seq(col("url"),
           col("http_status").cast("long").as("http_status"),
-          unix_seconds(col("warc_ts")).as("ts_sec")) ++ bodyDigest(s): _*)
+          unix_seconds(col("warc_ts")).as("ts_sec")) ++ bodyDigest: _*)
     },
       // q145: the round-trip projection recomputed straight from the
       // documents table — url construction, fixed status, epoch+id
@@ -6147,7 +6145,7 @@ object Queries {
       val out = fixtureDir("graft_wet_", dir)
       graft.sources.Warc.writeConversion(
         warcCapture(docs(s, dir), status = 0, contentType = "text/plain"), out)
-      readWarc(s, out).select(Seq(col("url"), col("record_type")) ++ bodyDigest(s): _*)
+      readWarc(s, out).select(Seq(col("url"), col("record_type")) ++ bodyDigest: _*)
     },
       // q154: q145's projection with the conversion record type
       raw"""SELECT 'http://' || source || '.example/doc/' || doc_id AS url,
@@ -8635,7 +8633,7 @@ object Queries {
         contentEncoding = "gzip", chunked = true)
       readWarc(s, out)
         .select(Seq(col("url"), col("http_status").cast("long").as("http_status")) ++
-          bodyDigest(s): _*)
+          bodyDigest: _*)
     },
       // q220: the oracle knows nothing about gzip or chunk framing — it
       // restates the projection from the documents table, so equality
@@ -8681,7 +8679,7 @@ object Queries {
       val digestOf = udf((b: Array[Byte]) => graft.sources.Warc.payloadDigest(b))
       idx.select(col("key"), col("url"))
         .join(fetched, Seq("url"))
-        .select(Seq(col("url"), col("key")) ++ bodyDigest(s) :+
+        .select(Seq(col("url"), col("key")) ++ bodyDigest :+
           (col("digest") === digestOf(col("body"))).as("digest_ok"): _*)
     },
       // q221: the oracle restates the index-driven ranged reads straight
@@ -8712,7 +8710,7 @@ object Queries {
       val out = fixtureDir("graft_rev_", dir)
       graft.sources.Warc.write(base, out, dedupRevisits = true)
       graft.sources.Warc.resolveRevisits(readWarc(s, out))
-        .select(Seq(col("url"), col("was_revisit")) ++ bodyDigest(s) :+ col("refers_to"): _*)
+        .select(Seq(col("url"), col("was_revisit")) ++ bodyDigest :+ col("refers_to"): _*)
     },
       // q222: originals and revisits restated relationally — the group
       // representative's text (+' #grp' uniquifier), the lexicographic
@@ -8923,13 +8921,12 @@ object Queries {
     "q229_dehyphen" -> Query((s, dir) => {
       val t = concat(expr("replace(text, ' the ', '-\nthe ')"),
         lit("\nwell-\nKnown end"))
-      val hash = graft.ops.Dedup.polyHashFn(s)
       docs(s, dir).select(col("doc_id"),
           graft.ops.TextOps.dehyphenate(t).as("__d"),
           length(t).cast("long").as("n_before"))
         .select(col("doc_id"), col("n_before"),
           length(col("__d")).cast("long").as("n_after"),
-          hash(col("__d")).as("h"))
+          graft.ops.Dedup.polyHash(col("__d")).as("h"))
     },
       // q229: the oracle rebuilds the hyphen-broken text and replays the
       // SAME pattern — plus the uppercase 'Known' tail that must keep its
@@ -9086,7 +9083,7 @@ object Queries {
         kept.select(col("url"), col("warc_ts"), lit(0).as("http_status"),
           lit("text/plain").as("content_type"), encode(col("md"), "UTF-8").as("body")),
         wet)
-      readWarc(s, wet).select(col("url") +: bodyDigest(s): _*)
+      readWarc(s, wet).select(col("url") +: bodyDigest: _*)
         .join(kept.select(col("url"), col("n_docs").cast("long").as("n_docs")), Seq("url"))
     },
       // q233: one group survives per 5-doc duplicate family — the
@@ -9250,7 +9247,7 @@ object Queries {
     "q238_truncation" -> Query((s, dir) => {
       val out = fixtureDir("graft_trunc_", dir)
       graft.sources.Warc.write(warcCapture(docs(s, dir)), out, truncateAt = 200)
-      val Seq(nBytes, bodyHash) = bodyDigest(s)
+      val Seq(nBytes, bodyHash) = bodyDigest
       readWarc(s, out)
         .select(col("url"), nBytes, (col("truncated") =!= "").as("is_truncated"), bodyHash)
     },
@@ -9412,7 +9409,6 @@ object Queries {
     "q243_revalidate_merge" -> Query((s, dir) => {
       val d = docs(s, dir)
       val m = pmod(col("doc_id"), lit(3))
-      val hash = graft.ops.Dedup.polyHashFn(s)
       val state = d.select(col("doc_id"),
         concat(lit("http://"), col("source"), lit(".example/doc/"), col("doc_id")).as("url"),
         col("text").as("body"), lit(100000L).as("fetched_at"))
@@ -9428,7 +9424,7 @@ object Queries {
           when(col("status") === 200, col("new_body")).otherwise(col("body")).as("b"),
           coalesce(col("now"), col("fetched_at")).as("fetched_at"),
           coalesce(col("status"), lit(0)).cast("long").as("last_status"))
-        .select(col("doc_id"), col("url"), hash(col("b")).as("body_hash"),
+        .select(col("doc_id"), col("url"), graft.ops.Dedup.polyHash(col("b")).as("body_hash"),
           col("fetched_at"), col("last_status"))
     },
       // q243: the merged crawl state — 304s keep the stored body with a

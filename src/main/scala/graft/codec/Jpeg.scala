@@ -759,54 +759,7 @@ object Jpeg {
       c.pred = 0
     }
 
-    // --- bit reader over the entropy segment (handles 0xFF00 stuffing)
-    var pos = start
-    var bitBuf = 0
-    var bitCnt = 0
-    var hitMarker = false // next marker reached (RST consumed separately)
-
-    def nextByte(): Int = {
-      if (pos >= b.length) { hitMarker = true; return -1 }
-      val v = b(pos) & 0xff
-      pos += 1
-      if (v == 0xff) {
-        if (pos >= b.length) { hitMarker = true; return -1 }
-        val f = b(pos) & 0xff
-        if (f == 0x00) { pos += 1; 0xff }
-        else { pos -= 1; hitMarker = true; -1 } // a real marker
-      } else v
-    }
-    def readBit(): Int = {
-      if (bitCnt == 0) {
-        val v = nextByte()
-        if (v < 0) return -1
-        bitBuf = v; bitCnt = 8
-      }
-      bitCnt -= 1
-      (bitBuf >> bitCnt) & 1
-    }
-    def receive(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { val bit = readBit(); if (bit < 0) return Int.MinValue; v = (v << 1) | bit; i += 1 }
-      v
-    }
-    // T.81 F.12 EXTEND
-    def extend(v: Int, t: Int): Int =
-      if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-
-    def decodeHuff(h: Huff): Int = {
-      var code = readBit()
-      if (code < 0) return -1
-      var l = 1
-      while (l <= 16) {
-        if (h.maxCode(l) >= 0 && code <= h.maxCode(l)) return h.value(l, code)
-        val bit = readBit()
-        if (bit < 0) return -1
-        code = (code << 1) | bit
-        l += 1
-      }
-      -1
-    }
+    val r = new BitReader(b, start)
 
     val coef = new Array[Int](64)
     val blk = new Array[Int](64)
@@ -815,10 +768,10 @@ object Jpeg {
     /** One 8x8 block: huffman -> dequant -> IDCT -> plane at (px, py). */
     def decodeBlock(c: Component, px: Int, py: Int): Boolean = {
       java.util.Arrays.fill(coef, 0)
-      val t = decodeHuff(dcTab(c.td))
+      val t = r.decodeHuff(dcTab(c.td))
       if (t < 0 || t > 11) return false
       val diff = if (t == 0) 0 else {
-        val v = receive(t); if (v == Int.MinValue) return false; extend(v, t)
+        val v = r.receive(t); if (v == Int.MinValue) return false; extend(v, t)
       }
       c.pred += diff
       val qt = quant(c.tq)
@@ -826,16 +779,16 @@ object Jpeg {
       var k = 1
       var eob = false
       while (k < 64 && !eob) {
-        val rs = decodeHuff(acTab(c.ta))
+        val rs = r.decodeHuff(acTab(c.ta))
         if (rs < 0) return false
-        val r = rs >> 4; val s = rs & 0x0f
+        val run = rs >> 4; val s = rs & 0x0f
         if (s == 0) {
-          if (r == 15) k += 16 // ZRL
+          if (run == 15) k += 16 // ZRL
           else eob = true
         } else {
-          k += r
+          k += run
           if (k > 63) return false
-          val v = receive(s); if (v == Int.MinValue) return false
+          val v = r.receive(s); if (v == Int.MinValue) return false
           val nat = ZigZag(k)
           coef(nat) = extend(v, s) * qt(nat)
           k += 1
@@ -843,12 +796,12 @@ object Jpeg {
       }
       idct(coef, tmp, blk)
       // store (planes are padded to whole blocks, no bounds risk)
-      var r = 0
-      while (r < 8) {
-        val off = (py + r) * c.planeW + px
+      var row = 0
+      while (row < 8) {
+        val off = (py + row) * c.planeW + px
         var cix = 0
-        while (cix < 8) { c.plane(off + cix) = blk(r * 8 + cix).toByte; cix += 1 }
-        r += 1
+        while (cix < 8) { c.plane(off + cix) = blk(row * 8 + cix).toByte; cix += 1 }
+        row += 1
       }
       true
     }
@@ -879,11 +832,7 @@ object Jpeg {
         val last = my == mcusY - 1 && mx == mcusX - 1
         if (restartInterval > 0 && mcusLeft == 0 && !last) {
           // byte-align, expect RSTn, reset predictors
-          bitCnt = 0; hitMarker = false
-          if (pos + 2 > b.length || (b(pos) & 0xff) != 0xff ||
-              (b(pos + 1) & 0xff) != 0xd0 + rstNext)
-            return Left(s"jpeg: expected RST$rstNext at $pos")
-          pos += 2
+          if (!r.expectRst(rstNext)) return Left(s"jpeg: expected RST$rstNext at ${r.pos}")
           rstNext = (rstNext + 1) & 7
           comps.foreach(_.pred = 0)
           mcusLeft = restartInterval

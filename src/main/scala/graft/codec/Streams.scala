@@ -69,7 +69,9 @@ object Streams {
       while (n < cap && !inf.finished()) {
         if (n == out.length) out = grow(out, n + 1, cap)
         val k = inf.inflate(out, n, out.length - n)
-        if (k == 0 && (inf.needsInput() || inf.needsDictionary()))
+        // finished() first: a complete stream with empty output ends with
+        // needsInput() already true
+        if (k == 0 && !inf.finished() && (inf.needsInput() || inf.needsDictionary()))
           return Left(Stop.Truncated(trim(out, n)))
         n += k
       }

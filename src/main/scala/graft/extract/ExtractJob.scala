@@ -1,12 +1,14 @@
 package graft.extract
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Encoder, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ExpressionColumns
 import graft.io.TableIO
 import graft.model.{LineageRow, ManifestRow}
+import graft.plans.ExtractExpression
 
 /** The extraction pipeline (north_rule): scan → resume-skip (parts the
   * manifest records done) → the `graft_extract` Catalyst expression on the
@@ -42,18 +44,20 @@ object ExtractJob {
   val LineageTable = "lineage"
   val ManifestTable = "manifest"
 
-  /** Extraction as a DataFrame stage: url + html binary → extracted struct.
-    * Prefers the native `graft_extract` Catalyst expression (no ScalaUDF
-    * converter round-trip per row — registered by graft.GraftExtensions);
-    * sessions built without the extension get the byte-identical Scala UDF. */
-  def extractedDf(pages: DataFrame): DataFrame = {
-    if (pages.sparkSession.catalog.functionExists("graft_extract"))
-      pages.withColumn("extracted", call_function("graft_extract", col("url"), col("html")))
-    else {
-      val extractUdf = udf((url: String, payload: Array[Byte]) => Extractor.extract(url, payload))
-      pages.withColumn("extracted", extractUdf(col("url"), col("html")))
-    }
-  }
+  /** Extraction as a DataFrame stage: url + html binary → extracted struct,
+    * built from the native `graft_extract` Catalyst expression on every
+    * session (no ScalaUDF converter round-trip per row, inside whole-stage
+    * codegen). */
+  def extractedDf(pages: DataFrame): DataFrame =
+    pages.withColumn("extracted", ExpressionColumns.column(ExtractExpression(
+      ExpressionColumns.expression(col("url")), ExpressionColumns.expression(col("html")))))
+
+  /** The per-document results columns of an [[extractedDf]] frame: the
+    * page keys, then every field of the extracted struct (text and span
+    * offsets included). The batch job and the streaming surface write
+    * these same columns. */
+  private[graft] val resultColumns: Seq[Column] =
+    Seq(col("url"), col("warc_ts"), col("lang"), col("extracted.*"))
 
   /** The results rows of `todo` (pages with `part_id`), extracted on the
     * scan splits and then exchanged on `(part_id, salt_k)` from
@@ -62,16 +66,7 @@ object ExtractJob {
     * the same hash exchange as a plain repartition. */
   private[graft] def resultsDf(todo: DataFrame, runTs: Timestamp, partitions: Int, salt: Int): DataFrame = {
     val keyed = extractedDf(todo.withColumn("salt_k", pmod(xxhash64(col("url"), col("warc_ts")), lit(salt))))
-      .select(
-        col("url"), col("warc_ts"), col("lang"),
-        col("extracted.status").as("status"),
-        col("extracted.content_type").as("content_type"),
-        col("extracted.markdown").as("markdown"),
-        col("extracted.spans").as("spans"),
-        col("extracted.pages").as("pages"),
-        col("extracted.error").as("error"),
-        lit(runTs).as("run_ts"),
-        col("part_id"), col("salt_k"))
+      .select(resultColumns ++ Seq(lit(runTs).as("run_ts"), col("part_id"), col("salt_k")): _*)
     val buckets = partitions * salt
     val keys = Seq(col("part_id"), col("salt_k"))
     val exchanged =

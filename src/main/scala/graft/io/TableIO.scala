@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Storage seam (SURVEY.md §7.1.9). Production binds this to Iceberg
   * (`spark.read.format("iceberg")`, append snapshots, a manifest table);
@@ -45,11 +46,30 @@ final class ParquetTableIO(warehouse: String) extends TableIO {
       if (e.keySet != i.keySet) fail("column-set mismatch")
       for ((n, ef) <- e) {
         val inf = i(n)
-        if (ef.dataType != inf.dataType) fail(s"type mismatch on '$n'")
+        if (!appendable(ef.dataType, inf.dataType)) fail(s"type mismatch on '$n'")
         if (!ef.nullable && inf.nullable) fail(s"nullable append into required column '$n'")
       }
     }
     df.write.mode("append").parquet(path(name))
+  }
+
+  /** Whether values of type `in` may be appended into a column of type
+    * `table`: the same type, with the column rule at every nesting level
+    * (a required struct field, array element or map value may go into a
+    * nullable one, never the reverse). Parquet stores nested fields
+    * nullable, so a frame with a required nested field, such as the
+    * extracted `spans`, must still append onto its own earlier output. */
+  private def appendable(table: DataType, in: DataType): Boolean = (table, in) match {
+    case (t: StructType, i: StructType) =>
+      t.length == i.length && t.fields.zip(i.fields).forall { case (tf, f) =>
+        tf.name == f.name && appendable(tf.dataType, f.dataType) && (tf.nullable || !f.nullable)
+      }
+    case (t: ArrayType, i: ArrayType) =>
+      appendable(t.elementType, i.elementType) && (t.containsNull || !i.containsNull)
+    case (t: MapType, i: MapType) =>
+      appendable(t.keyType, i.keyType) && appendable(t.valueType, i.valueType) &&
+        (t.valueContainsNull || !i.valueContainsNull)
+    case _ => table == in
   }
 
   override def overwritePartitions(df: DataFrame, name: String, partitionCol: String): Unit =

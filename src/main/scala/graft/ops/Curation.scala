@@ -272,14 +272,13 @@ object Curation {
       corpus: DataFrame, idCol: String, textCol: String,
       benchmark: DataFrame, benchTextCol: String, k: Int = 5): DataFrame = {
     val shingleUdf = udf(Dedup.wordShinglesKernel(k))
-    val hashUdf = Dedup.polyHashFn(corpus.sparkSession)
     val bm = benchmark
       .select(explode(shingleUdf(col(benchTextCol))).as("sg"))
-      .select(hashUdf(col("sg")).as("ngh"))
+      .select(Dedup.polyHash(col("sg")).as("ngh"))
       .distinct()
     corpus
       .select(col(idCol).as("id"), explode(shingleUdf(col(textCol))).as("sg"))
-      .select(col("id"), hashUdf(col("sg")).as("ngh"))
+      .select(col("id"), Dedup.polyHash(col("sg")).as("ngh"))
       .join(broadcast(bm), Seq("ngh")) // inner: non-hits never leave the map side
       .groupBy("id")
       .agg(count(lit(1)).as("n_hits"))
@@ -329,15 +328,14 @@ object Curation {
       corpus: DataFrame, textCol: String,
       benchmark: DataFrame, benchTextCol: String, k: Int = 5): DataFrame = {
     val shingleUdf = udf(Dedup.wordShinglesKernel(k))
-    val hashUdf = Dedup.polyHashFn(corpus.sparkSession)
     val bm = benchmark
       .select(explode(shingleUdf(col(benchTextCol))).as("sg"))
-      .select(hashUdf(col("sg")).as("ngh"))
+      .select(Dedup.polyHash(col("sg")).as("ngh"))
       .distinct()
     val nEval = broadcast(bm.agg(count(lit(1)).as("n_eval_grams")))
     val covered = corpus
       .select(explode(shingleUdf(col(textCol))).as("sg"))
-      .select(hashUdf(col("sg")).as("ngh"))
+      .select(Dedup.polyHash(col("sg")).as("ngh"))
       .join(broadcast(bm), Seq("ngh"))
       .distinct()
       .agg(count(lit(1)).as("n_covered"))
@@ -400,13 +398,12 @@ object Curation {
       k: Int = 5, numHashes: Int = 3, bits: Int = 8192): DataFrame = {
     require(numHashes >= 1 && bits >= 64, "degenerate bloom geometry")
     val shingleUdf = udf(Dedup.wordShinglesKernel(k))
-    val hashUdf = Dedup.polyHashFn(corpus.sparkSession)
     val posUdf = udf((ngh: Long) => bloomPositions(ngh, numHashes, bits))
     // benchmark → distinct set positions (≤ bits rows by construction —
     // THE bounded collect of the bloom design, like the IVF codebook)
     val setPositions = benchmark
       .select(explode(shingleUdf(col(benchTextCol))).as("sg"))
-      .select(explode(posUdf(hashUdf(col("sg")))).as("pos"))
+      .select(explode(posUdf(Dedup.polyHash(col("sg")))).as("pos"))
       .distinct()
       .collect().map(_.getInt(0))
     val bitset = new java.util.BitSet(bits)
@@ -467,6 +464,10 @@ object Curation {
     df.withColumn("in_filter", maybe(col(keyCol).cast("long")))
   }
 
+  /** `polyHash(salt || id) mod 1e6`, with `id` read as a long. */
+  private def ticket(salt: String, id: Column): Column =
+    Dedup.polyHash(concat(lit(salt), id.cast("long").cast("string"))) % 1000000L
+
   /** Deterministic hash-based importance resampling (the DSIR-style
     * "sample proportionally to a per-document weight" stage, Xie et al.
     * 2023): a document is accepted iff
@@ -485,10 +486,9 @@ object Curation {
   def importanceResample(
       df: DataFrame, idCol: String, weightMicro: Column,
       salt: String = "rs:"): DataFrame = {
-    val ticketUdf = udf((id: Long) => Dedup.polyHash(salt + id) % 1000000L)
     val w = greatest(lit(0L), least(lit(1000000L), weightMicro.cast("long")))
     df.withColumn("weight_micro", w)
-      .withColumn("ticket", ticketUdf(col(idCol).cast("long")))
+      .withColumn("ticket", ticket(salt, col(idCol)))
       .withColumn("accepted", col("ticket") < col("weight_micro"))
   }
 
@@ -512,11 +512,10 @@ object Curation {
       df: DataFrame, keyCol: String, idCol: String, weightMicro: Column,
       k: Int, salt: String = "ws:"): DataFrame = {
     require(k > 0)
-    val ticketUdf = udf((id: Long) => Dedup.polyHash(salt + id) % 1000000L)
     val w = greatest(lit(1L), least(lit(1000000L), weightMicro.cast("long")))
     val win = Window.partitionBy(col(keyCol)).orderBy(col("priority").asc, col(idCol).asc)
     df.withColumn("weight_micro", w)
-      .withColumn("__ticket", ticketUdf(col(idCol).cast("long")))
+      .withColumn("__ticket", ticket(salt, col(idCol)))
       .withColumn("priority", expr("__ticket * 1000000 div weight_micro"))
       .withColumn("rank", row_number().over(win))
       .filter(col("rank") <= k)
@@ -630,10 +629,9 @@ object Curation {
   def dupPassageStats(
       df: DataFrame, idCol: String, textCol: String, k: Int = 5): DataFrame = {
     val shingleUdf = udf(Dedup.wordShinglesKernel(k))
-    val hashUdf = Dedup.polyHashFn(df.sparkSession)
     val docNg = df
       .select(col(idCol).as("id"), explode(shingleUdf(col(textCol))).as("sg"))
-      .select(col("id"), hashUdf(col("sg")).as("ngh"))
+      .select(col("id"), Dedup.polyHash(col("sg")).as("ngh"))
     val counts = docNg.groupBy("ngh").agg(count(lit(1)).as("ndocs"))
     docNg.join(counts, Seq("ngh"))
       .groupBy(col("id"))
@@ -658,12 +656,11 @@ object Curation {
     * at most |sources|² rows per token; per-source sizes broadcast back.
     * Ratios are exact integer micro-units. */
   def sourceOverlap(df: DataFrame, sourceCol: String, textCol: String): DataFrame = {
-    val hashUdf = Dedup.polyHashFn(df.sparkSession)
     val st = df
       .select(col(sourceCol).as("source"),
         explode(split(trim(col(textCol)), "[ \\t\\n\\r]+")).as("term"))
       .filter(col("term") =!= "")
-      .select(col("source"), hashUdf(col("term")).as("th"))
+      .select(col("source"), Dedup.polyHash(col("term")).as("th"))
       .distinct()
     val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("n"))
     st.select(col("source").as("src_a"), col("th"))
@@ -693,10 +690,9 @@ object Curation {
   def noveltyStats(
       df: DataFrame, idCol: String, textCol: String, k: Int = 5): DataFrame = {
     val shingleUdf = udf(Dedup.wordShinglesKernel(k))
-    val hashUdf = Dedup.polyHashFn(df.sparkSession)
     val docNg = df
       .select(col(idCol).cast("long").as("id"), explode(shingleUdf(col(textCol))).as("sg"))
-      .select(col("id"), hashUdf(col("sg")).as("ngh"))
+      .select(col("id"), Dedup.polyHash(col("sg")).as("ngh"))
       .distinct()
     val w = Window.partitionBy(col("ngh")).orderBy(col("id"))
     val novel = docNg
@@ -734,11 +730,10 @@ object Curation {
     * row per map partition, not 10^8 — the hot-key story is handled
     * before the wire, same as [[capPerKey]]. */
   def dedupParagraphs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val hashUdf = Dedup.polyHashFn(df.sparkSession)
     val lines = df
       .select(col(idCol).as("id"), posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
       .filter(col("line") =!= "")
-      .withColumn("ph", hashUdf(col("line")))
+      .withColumn("ph", Dedup.polyHash(col("line")))
     val w = Window.partitionBy(col("ph")).orderBy(col("id"), col("pos"))
     lines
       .withColumn("__rn", row_number().over(w))
@@ -915,13 +910,12 @@ object Curation {
   def rateDivergence(
       oldDf: DataFrame, newDf: DataFrame,
       keyCol: String, textCol: String): DataFrame = {
-    val hashUdf = Dedup.polyHashFn(oldDf.sparkSession)
     def rates(df: DataFrame) = {
       val tf = df
         .select(col(keyCol).as("key"),
           explode(split(trim(col(textCol)), "[ \\t\\n\\r]+")).as("term"))
         .filter(col("term") =!= "")
-        .select(col("key"), hashUdf(col("term")).as("th"))
+        .select(col("key"), Dedup.polyHash(col("term")).as("th"))
         .groupBy(col("key"), col("th")).agg(count(lit(1)).as("c"))
       val tot = tf.groupBy(col("key")).agg(sum(col("c")).as("t"))
       tf.join(broadcast(tot), Seq("key"))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ExpressionColumns
+import graft.plans.PolyHashExpression
 
 /** Deduplication operators for a web-scale training-data pipeline.
   *
@@ -88,21 +90,12 @@ object Dedup {
     acc
   }
 
-  /** [[polyHash]] as a Column factory: the native codegen'd
-    * `graft_polyhash` Catalyst expression when the session registered
-    * [[graft.GraftExtensions]] (no ScalaUDF converter round-trip, no
-    * String allocation, stays inside whole-stage codegen — the
-    * graft_extract precedent, measured ~4-10% there), the equivalent
-    * ScalaUDF otherwise. One factory call per operator; the returned
-    * function is used per column. Every per-token/per-shingle hash site
-    * in the ops routes through this. */
-  def polyHashFn(spark: org.apache.spark.sql.SparkSession): Column => Column =
-    if (spark.catalog.functionExists("graft_polyhash"))
-      c => call_function("graft_polyhash", c)
-    else {
-      val u = udf((s: String) => polyHash(s))
-      c => u(c)
-    }
+  /** [[polyHash]] as a Column: the native `graft_polyhash` Catalyst
+    * expression, built on every session (no ScalaUDF converter round-trip,
+    * no String allocation, inside whole-stage codegen). Null in, null out.
+    * Every per-token/per-shingle hash site in the ops routes through this. */
+  def polyHash(c: Column): Column =
+    ExpressionColumns.column(PolyHashExpression(ExpressionColumns.expression(c)))
 
   /** Affine coefficients for hash function h (fixed pseudo-random, < p).
     * Shared with the Bloom-filter positions in [[Curation]] so one DuckDB
@@ -404,10 +397,9 @@ object Dedup {
       pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
       k: Int = 3): DataFrame = {
     val shingleUdf = udf(wordShinglesKernel(k))
-    val hashUdf = polyHashFn(corpus.sparkSession)
     val ng = corpus
       .select(col(idCol).cast("long").as("__cid"), explode(shingleUdf(col(textCol))).as("sg"))
-      .select(col("__cid"), hashUdf(col("sg")).as("ngh"))
+      .select(col("__cid"), polyHash(col("sg")).as("ngh"))
       .distinct()
     val sizes = ng.groupBy(col("__cid")).agg(count(lit(1)).as("n"))
     val p = pairs.select(col(aCol).cast("long").as("id_a"), col(bCol).cast("long").as("id_b"))
@@ -702,7 +694,6 @@ object Dedup {
 
   def stitchPairs(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     require(k >= 1, "boundary width must be >= 1 token")
-    val hashUdf = polyHashFn(df.sparkSession)
     val base = df
       .select(col(idCol).cast("long").as("id"),
         split(trim(col(textCol)), "\\s+").as("__ws"))
@@ -710,8 +701,8 @@ object Dedup {
       .select(col("id"),
         array_join(slice(col("__ws"), 1, k), " ").as("__head"),
         array_join(slice(col("__ws"), -k, k), " ").as("__tail"))
-    val heads = base.select(col("id").as("dst_id"), hashUdf(col("__head")).as("bh"))
-    val tails = base.select(col("id").as("src_id"), hashUdf(col("__tail")).as("bh"))
+    val heads = base.select(col("id").as("dst_id"), polyHash(col("__head")).as("bh"))
+    val tails = base.select(col("id").as("src_id"), polyHash(col("__tail")).as("bh"))
     tails.join(heads, Seq("bh")).filter(col("src_id") =!= col("dst_id"))
       .join(base.select(col("id").as("src_id"), col("__tail")), Seq("src_id"))
       .join(base.select(col("id").as("dst_id"), col("__head")), Seq("dst_id"))

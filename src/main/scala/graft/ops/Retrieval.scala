@@ -247,12 +247,11 @@ object Retrieval {
       reference: DataFrame, refTextCol: String,
       alpha: Double = 0.1): DataFrame = {
     require(alpha > 0, "alpha must be positive (unsmoothed zeros diverge)")
-    val hashUdf = Dedup.polyHashFn(corpus.sparkSession)
     val bgUdf = udf(bigramHashKernel)
     // reference unigram counts + vocabulary size (hash-keyed)
     val c1 = reference
       .select(explode(tokensCol(col(refTextCol))).as("__t"))
-      .select(hashUdf(col("__t")).as("h1"))
+      .select(Dedup.polyHash(col("__t")).as("h1"))
       .groupBy(col("h1")).agg(count(lit(1)).as("c1"))
     val vocab = c1.agg(count(lit(1)).as("v"))
     // reference bigram counts (hash-keyed; multiplicity preserved)
@@ -437,12 +436,11 @@ object Retrieval {
       df: DataFrame, idCol: String, sourceCol: String, textCol: String,
       targetSource: String, buckets: Int = 4096): DataFrame = {
     require(buckets >= 2)
-    val ph = Dedup.polyHashFn(df.sparkSession)
     val toks = df.select(col(idCol).cast("long").as("id"),
         col(sourceCol).as("__src"),
         explode(split(trim(col(textCol)), "\\s+")).as("__w"))
       .filter(col("__w") =!= "")
-      .withColumn("__b", ph(col("__w")) % buckets)
+      .withColumn("__b", Dedup.polyHash(col("__w")) % buckets)
     val stats = toks.groupBy(col("__b")).agg(
       sum(when(col("__src") === targetSource, 1L).otherwise(0L)).as("__ct"),
       sum(when(col("__src") =!= targetSource, 1L).otherwise(0L)).as("__cr"))

@@ -126,14 +126,13 @@ object Sketches {
     * max aggregate over at most 64 keys. Returns (bucket, register) for
     * non-empty buckets. */
   def hllRegisters(df: DataFrame, itemCol: String): DataFrame = {
-    val hashUdf = Dedup.polyHashFn(df.sparkSession)
     // polyHash alone CANNOT feed leading-zero ranks: base 131 diffuses
     // upward too slowly, so same-length shared-prefix keys ("item_1",
     // "item_2", …) collapse to one high-bit pattern and every register
     // reads the same rank (measured: E=363 on 5000 such keys). The
     // Carter-Wegman affine mix (the family's aCoef/bCoef constants)
     // spreads the high bits; E=4875 on the same keys.
-    df.select(hashUdf(col(itemCol).cast("string")).as("__h0"))
+    df.select(Dedup.polyHash(col(itemCol).cast("string")).as("__h0"))
       .select(pmod(col("__h0") * lit(1103515245L) + lit(12345L),
         lit(Dedup.MersenneP)).as("__h"))
       .select(pmod(col("__h"), lit(64L)).as("bucket"),

@@ -832,11 +832,10 @@ object TextOps {
   def hashEmbedding(
       df: DataFrame, idCol: String, textCol: String, dims: Int = 32): DataFrame = {
     require(dims >= 2)
-    val hashUdf = Dedup.polyHashFn(df.sparkSession)
     df.select(col(idCol).cast("long").as("id"),
         explode(split(trim(col(textCol)), "\\s+")).as("w"))
       .filter(col("w") =!= "")
-      .select(col("id"), hashUdf(col("w")).as("__h"))
+      .select(col("id"), Dedup.polyHash(col("w")).as("__h"))
       .select(col("id"), pmod(col("__h"), lit(dims.toLong)).as("dim"),
         when(expr(s"(__h div $dims) % 2") === 0L, 1L).otherwise(-1L).as("__s"))
       .groupBy(col("id"), col("dim"))

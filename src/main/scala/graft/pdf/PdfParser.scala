@@ -1222,16 +1222,14 @@ object PdfParser {
 
   private[graft] val defaultFont: FontDec = FontDec(twoByte = false, Map.empty, winAnsiTable)
 
-  /** Parse a ToUnicode CMap (bfchar + bfrange sections, incl. the array
-    * destination form); lenient — anything unparseable just ends the scan. */
-  private[graft] def parseCMap(data: Array[Byte]): Map[Int, String] = {
-    val out = Map.newBuilder[Int, String]
-    def codeOf(b: Array[Byte]): Int = b.foldLeft(0)((acc, x) => (acc << 8) | (x & 0xff))
-    def strOf(b: Array[Byte]): String =
-      new String(b, java.nio.charset.StandardCharsets.UTF_16BE)
-    def bump(s: String, k: Int): String =
-      if (s.isEmpty) s
-      else s.substring(0, s.length - 1) + (s.charAt(s.length - 1) + k).toChar
+  /** The token walk both CMap parsers share. Operands outside a section
+    * are skipped; each `begin<name>` of `sections` reads entries of
+    * `arity` objects up to its `end<name>`, handing each to `entry`, which
+    * returns false on an entry it cannot use (that ends the section).
+    * Lenient: a missing `end<name>` or anything unparseable ends the walk,
+    * keeping what was read before it. */
+  private def walkCMap(data: Array[Byte],
+      sections: (String, Int, Seq[PObj] => Boolean)*): Unit =
     try {
       val lx = new Lexer(data)
       var going = true
@@ -1243,45 +1241,56 @@ object PdfParser {
           if (c == '/' || c == '(' || c == '<' || c == '[' ||
               (c >= '0' && c <= '9') || c == '-' || c == '+' || c == '.') {
             lx.obj() // operand of some CMap operator we don't care about
-          } else lx.token() match {
-            case "beginbfchar" =>
+          } else {
+            val op = lx.token()
+            if (op.isEmpty) going = false
+            else sections.find(s => op == "begin" + s._1).foreach { case (name, arity, entry) =>
               var in = true
               while (in) {
                 lx.skipWs()
                 if (lx.pos >= lx.n) { in = false; going = false }
-                else if (lx.peek == '<') (lx.obj(), lx.obj()) match {
-                  case (PStr(src), PStr(dst)) => out += codeOf(src) -> strOf(dst)
-                  case _                      => in = false
-                }
-                else { if (lx.token() != "endbfchar") going = false; in = false }
+                else if (lx.peek == '<') in = entry(Seq.fill(arity)(lx.obj()))
+                else { if (lx.token() != "end" + name) going = false; in = false }
               }
-            case "beginbfrange" =>
-              var in = true
-              while (in) {
-                lx.skipWs()
-                if (lx.pos >= lx.n) { in = false; going = false }
-                else if (lx.peek == '<') (lx.obj(), lx.obj(), lx.obj()) match {
-                  case (PStr(lo), PStr(hi), PStr(dst)) =>
-                    val (l, h) = (codeOf(lo), codeOf(hi))
-                    val base = strOf(dst)
-                    var k = 0
-                    while (l + k <= h && k < 65536) { out += (l + k) -> bump(base, k); k += 1 }
-                  case (PStr(lo), PStr(hi), PArr(items)) =>
-                    val l = codeOf(lo)
-                    items.zipWithIndex.foreach {
-                      case (PStr(d), k) if l + k <= codeOf(hi) => out += (l + k) -> strOf(d)
-                      case _                                   => ()
-                    }
-                  case _ => in = false
-                }
-                else { if (lx.token() != "endbfrange") going = false; in = false }
-              }
-            case "" => going = false
-            case _  => () // other CMap keywords (begincodespacerange etc.)
+            } // other CMap keywords (usecmap, def, endcmap, ...) are skipped
           }
         }
       }
     } catch { case _: Throwable => () } // lenient: keep whatever parsed
+
+  /** A CMap code: its bytes big-endian. */
+  private def cmapCode(b: Array[Byte]): Int = b.foldLeft(0)((acc, x) => (acc << 8) | (x & 0xff))
+
+  /** Parse a ToUnicode CMap (bfchar + bfrange sections, incl. the array
+    * destination form); lenient — anything unparseable just ends the scan. */
+  private[graft] def parseCMap(data: Array[Byte]): Map[Int, String] = {
+    val out = Map.newBuilder[Int, String]
+    def strOf(b: Array[Byte]): String =
+      new String(b, java.nio.charset.StandardCharsets.UTF_16BE)
+    def bump(s: String, k: Int): String =
+      if (s.isEmpty) s
+      else s.substring(0, s.length - 1) + (s.charAt(s.length - 1) + k).toChar
+    walkCMap(data,
+      ("bfchar", 2, {
+        case Seq(PStr(src), PStr(dst)) => out += cmapCode(src) -> strOf(dst); true
+        case _                         => false
+      }),
+      ("bfrange", 3, {
+        case Seq(PStr(lo), PStr(hi), PStr(dst)) =>
+          val (l, h) = (cmapCode(lo), cmapCode(hi))
+          val base = strOf(dst)
+          var k = 0
+          while (l + k <= h && k < 65536) { out += (l + k) -> bump(base, k); k += 1 }
+          true
+        case Seq(PStr(lo), PStr(hi), PArr(items)) =>
+          val l = cmapCode(lo)
+          items.zipWithIndex.foreach {
+            case (PStr(d), k) if l + k <= cmapCode(hi) => out += (l + k) -> strOf(d)
+            case _                                     => ()
+          }
+          true
+        case _ => false
+      }))
     out.result()
   }
 
@@ -1297,60 +1306,20 @@ object PdfParser {
     val spaces = Vector.newBuilder[(Int, Int, Int)]
     val chars = Map.newBuilder[Int, Int]
     val ranges = Vector.newBuilder[(Int, Int, Int)]
-    def codeOf(b: Array[Byte]): Int = b.foldLeft(0)((acc, x) => (acc << 8) | (x & 0xff))
-    try {
-      val lx = new Lexer(data)
-      var going = true
-      while (going) {
-        lx.skipWs()
-        if (lx.pos >= lx.n) going = false
-        else {
-          val c = lx.peek
-          if (c == '/' || c == '(' || c == '<' || c == '[' ||
-              (c >= '0' && c <= '9') || c == '-' || c == '+' || c == '.') {
-            lx.obj() // operand of some CMap operator we don't care about
-          } else lx.token() match {
-            case "begincodespacerange" =>
-              var in = true
-              while (in) {
-                lx.skipWs()
-                if (lx.pos >= lx.n) { in = false; going = false }
-                else if (lx.peek == '<') (lx.obj(), lx.obj()) match {
-                  case (PStr(lo), PStr(hi)) if lo.length >= 1 && lo.length <= 4 =>
-                    spaces += ((lo.length, codeOf(lo), codeOf(hi)))
-                  case _ => in = false
-                }
-                else { if (lx.token() != "endcodespacerange") going = false; in = false }
-              }
-            case "begincidchar" =>
-              var in = true
-              while (in) {
-                lx.skipWs()
-                if (lx.pos >= lx.n) { in = false; going = false }
-                else if (lx.peek == '<') (lx.obj(), lx.obj()) match {
-                  case (PStr(src), PNum(cid)) => chars += codeOf(src) -> cid.toInt
-                  case _                      => in = false
-                }
-                else { if (lx.token() != "endcidchar") going = false; in = false }
-              }
-            case "begincidrange" =>
-              var in = true
-              while (in) {
-                lx.skipWs()
-                if (lx.pos >= lx.n) { in = false; going = false }
-                else if (lx.peek == '<') (lx.obj(), lx.obj(), lx.obj()) match {
-                  case (PStr(lo), PStr(hi), PNum(st)) =>
-                    ranges += ((codeOf(lo), codeOf(hi), st.toInt))
-                  case _ => in = false
-                }
-                else { if (lx.token() != "endcidrange") going = false; in = false }
-              }
-            case "" => going = false
-            case _  => () // usecmap, def, endcmap, ...
-          }
-        }
-      }
-    } catch { case _: Throwable => () } // lenient: keep whatever parsed
+    walkCMap(data,
+      ("codespacerange", 2, {
+        case Seq(PStr(lo), PStr(hi)) if lo.length >= 1 && lo.length <= 4 =>
+          spaces += ((lo.length, cmapCode(lo), cmapCode(hi))); true
+        case _ => false
+      }),
+      ("cidchar", 2, {
+        case Seq(PStr(src), PNum(cid)) => chars += cmapCode(src) -> cid.toInt; true
+        case _                         => false
+      }),
+      ("cidrange", 3, {
+        case Seq(PStr(lo), PStr(hi), PNum(st)) => ranges += ((cmapCode(lo), cmapCode(hi), st.toInt)); true
+        case _                                 => false
+      }))
     (spaces.result(), chars.result(), ranges.result())
   }
 

@@ -47,8 +47,9 @@ object ExtractKernel {
   * Total like the kernel it wraps: never null, never throws — null/absent
   * payloads become status='error' rows, so `nullable = false` and the
   * expression stays inside whole-stage codegen with no null branches.
-  * Registered via [[graft.GraftExtensions]]; ExtractJob falls back to the
-  * equivalent Scala UDF on sessions built without the extension. */
+  * [[graft.extract.ExtractJob.extractedDf]] builds it straight into the
+  * plan on every session; [[graft.GraftExtensions]] only names it for
+  * SQL. */
 case class ExtractExpression(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -42,9 +42,9 @@ object PolyHashKernel {
 /** `graft_polyhash(string) -> long` as a native Catalyst expression —
   * the brief's preference order (codegen'd Expression > Scala UDF) for
   * the hash that anchors the MinHash/stitch/DSIR pipelines. Null in,
-  * null out (standard unary scalar semantics). Registered via
-  * [[graft.GraftExtensions]]; [[graft.ops.Dedup.polyHashFn]] falls
-  * back to the equivalent Scala UDF on sessions without the extension. */
+  * null out (standard unary scalar semantics). The Column factory
+  * [[graft.ops.Dedup.polyHash]] builds it straight into the plan on every
+  * session; [[graft.GraftExtensions]] only names it for SQL. */
 case class PolyHashExpression(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import graft.extract.ExtractJob
 import graft.io.TableIO
+import graft.ops.Dedup
 
 /** Structured Streaming surface for the extraction pipeline.
   *
@@ -36,7 +38,12 @@ object StreamingExtract {
   /** Streaming extraction over a parquet drop-box directory. Each batch
     * runs scan → extract → append through `io`; progress checkpoints to
     * `checkpointDir`. Returns the started query (AvailableNow: drains
-    * what exists, then stops). */
+    * what exists, then stops). A results row has the batch job's columns
+    * ([[ExtractJob.resultColumns]]): text and span offsets per document.
+    *
+    * MIGRATION: a streaming results table written before its rows carried
+    * `spans` lacks that column, so `appendTable`'s schema check rejects
+    * the next batch; point such feeds at a fresh results table. */
   def run(
       spark: SparkSession,
       srcDir: String,
@@ -57,13 +64,7 @@ object StreamingExtract {
       raw.withColumn("url_h", xxhash64(col("url")))
         .dropDuplicates("url_h").drop("url_h")
     else raw
-    val extracted = graft.extract.ExtractJob.extractedDf(pages).select(
-      col("url"), col("warc_ts"), col("lang"),
-      col("extracted.status").as("status"),
-      col("extracted.content_type").as("content_type"),
-      col("extracted.markdown").as("markdown"),
-      col("extracted.pages").as("pages"),
-      col("extracted.error").as("error"))
+    val extracted = ExtractJob.extractedDf(pages).select(ExtractJob.resultColumns: _*)
     extracted.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
@@ -106,10 +107,9 @@ object StreamingExtract {
   def streamingCountMin(
       spark: SparkSession, srcDir: String,
       depth: Int = 3, width: Int = 64): DataFrame = {
-    val hashUdf = graft.ops.Dedup.polyHashFn(spark)
     val toks = spark.readStream.schema(pageSchema).parquet(srcDir)
       .select(explode(split(trim(col("text")), "\\s+")).as("term"))
-      .select(hashUdf(col("term")).as("h"))
+      .select(Dedup.polyHash(col("term")).as("h"))
     graft.ops.Sketches.countMin(toks, col("h"), lit(1L), depth, width)
   }
 

@@ -102,7 +102,13 @@ object FuzzCampaign {
       ("pdf-flate", pdf(PdfWriter.FlateF), (m: Array[Byte]) => PdfParser.parse(m)),
       ("pdf-lzw", pdf(PdfWriter.LzwF), (m: Array[Byte]) => PdfParser.parse(m)),
       ("pdf-runlength", pdf(PdfWriter.RunLengthF), (m: Array[Byte]) => PdfParser.parse(m)),
-      ("warc-deflate", Warc.deflateEncode(text), (m: Array[Byte]) => Warc.contentDecode("deflate", m))
+      ("warc-deflate", Warc.deflateEncode(text), (m: Array[Byte]) => Warc.contentDecode("deflate", m)),
+      // complete zlib streams with empty output; PdfParser.inflate fails
+      // with a PdfError, which is a result here, not a fault
+      ("warc-deflate-empty", Warc.deflateEncode(Array.emptyByteArray),
+        (m: Array[Byte]) => Warc.contentDecode("deflate", m)),
+      ("pdf-flate-empty", Warc.deflateEncode(Array.emptyByteArray),
+        (m: Array[Byte]) => try PdfParser.inflate(m) catch { case e: PdfParser.PdfError => e.msg })
     )
 
     val worker = java.util.concurrent.Executors.newSingleThreadExecutor { (r: Runnable) =>

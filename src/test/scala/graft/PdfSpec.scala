@@ -534,4 +534,12 @@ class PdfSpec extends AnyFunSuite {
     val r = PdfParser.parse(out.toByteArray)
     assert(r.map(_.text) == Right("NEW CONTENT"))
   }
+
+  test("FlateDecode: a complete zlib stream with empty output inflates to empty, not truncated") {
+    val empty = graft.sources.Warc.deflateEncode(Array.emptyByteArray)
+    assert(PdfParser.inflate(empty).isEmpty)
+    // cut short, the same bytes are still truncated
+    val e = intercept[PdfParser.PdfError](PdfParser.inflate(empty.take(3)))
+    assert(e.msg == "pdf_flate_truncated")
+  }
 }

@@ -266,4 +266,25 @@ class StreamingSpec extends AnyFunSuite {
     assert(all.count() == urls.size) // exactly-once: no url published twice
     assert(all.filter(col("record_type") === "conversion").count() == all.count())
   }
+
+  test("streamed results keep the batch columns: spans equal the batch extractedDf spans per url") {
+    import org.apache.spark.sql.Row
+    val src = SparkTestBase.tempDir("stream_spans_src")
+    val io = new ParquetTableIO(SparkTestBase.tempDir("stream_spans_wh"))
+    writeBatch(src, 0 until 40, "a")
+    StreamingExtract.run(spark, src, io, "sresults", SparkTestBase.tempDir("stream_spans_ckpt"))
+      .awaitTermination()
+    val out = io.readTable(spark, "sresults")
+    assert(out.columns.toSet == Set("url", "warc_ts", "lang", "status", "content_type",
+      "markdown", "spans", "pages", "error", "batch_id"), out.columns.mkString(","))
+    def spansByUrl(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Row]] =
+      df.collect().map(r => r.getString(0) -> r.getSeq[Row](1)).toMap
+    val streamed = spansByUrl(out.select($"url", $"spans"))
+    val batch = spansByUrl(graft.extract.ExtractJob.extractedDf(
+      spark.createDataset((0 until 40).map(i => graft.synth.Synth.page(42L, i.toLong))).toDF())
+      .select($"url", $"extracted.spans"))
+    assert(streamed.size == 40 && streamed.keySet == batch.keySet)
+    assert(streamed.values.exists(_.nonEmpty))
+    batch.foreach { case (url, spans) => assert(streamed(url) == spans, url) }
+  }
 }

@@ -126,4 +126,24 @@ class TableIOSpec extends AnyFunSuite {
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
       df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
   }
+
+  test("append nullability holds at every nesting level: required nested fields append onto their own output") {
+    val (tio, _) = fresh()
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def spans(required: Boolean) = StructType(Seq(StructField("spans", ArrayType(StructType(Seq(
+      StructField("start", LongType, nullable = !required))), containsNull = !required))))
+    def frame(schema: StructType, v: Long) = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(Seq(Row(v))))), schema)
+    tio.appendTable(frame(spans(required = true), 1L), "nested")
+    tio.appendTable(frame(spans(required = true), 2L), "nested") // required into the stored nullable
+    assert(tio.readTable(spark, "nested").count() == 2)
+    // a different nested type is still rejected
+    val other = StructType(Seq(StructField("spans", ArrayType(StructType(Seq(
+      StructField("start", IntegerType)))))))
+    val e = intercept[IllegalArgumentException] {
+      tio.appendTable(spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(Seq(Row(3))))), other), "nested")
+    }
+    assert(e.getMessage.contains("type mismatch on 'spans'"))
+  }
 }

@@ -499,4 +499,13 @@ class WarcSpec extends AnyFunSuite {
     (1 to 20).foreach(i =>
       assert(got(s"http://w.example/$i") == s"doc $i " + ("content " * i)))
   }
+
+  test("deflate: a complete zlib stream with empty output is an empty body, not null") {
+    val empty = Warc.deflateEncode(Array.emptyByteArray)
+    assert(empty.toSeq == Seq(0x78, 0x9c, 0x03, 0x00, 0x00, 0x00, 0x00, 0x01).map(_.toByte))
+    val body = Warc.contentDecode("deflate", empty)
+    assert(body != null && body.isEmpty)
+    val raw = Warc.contentDecode("deflate", Warc.deflateEncode(Array.emptyByteArray, zlibWrapper = false))
+    assert(raw != null && raw.isEmpty)
+  }
 }
