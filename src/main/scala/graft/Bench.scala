@@ -133,7 +133,7 @@ object Bench {
     println(f"SCALE_WALL=${walls.min}%.6f")
   }
 
-  private val addOpens = Seq(
+  private[graft] val addOpens = Seq(
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
     "java.net", "java.nio", "java.util", "java.util.concurrent",
     "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",

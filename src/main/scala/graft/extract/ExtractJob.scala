@@ -1,20 +1,19 @@
 package graft.extract
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ExpressionColumns
 import graft.io.TableIO
-import graft.model.{LineageRow, ManifestRow}
+import graft.model.ManifestRow
 import graft.plans.ExtractExpression
 
 /** The extraction pipeline (north_rule): scan → resume-skip (parts the
   * manifest records done) → the `graft_extract` Catalyst expression on the
   * scan splits → one part-aligned, salted rebalance exchange → results
-  * write, which tallies the per-partition lineage → lineage write +
-  * manifest append.
+  * write, which tallies → one manifest append.
   *
   * Scale design notes (100 TB / 10^12 rows):
   *  - `part_id = pmod(xxhash64(url), P)` is a STABLE unit of work derived
@@ -30,17 +29,19 @@ import graft.plans.ExtractExpression
   *    small buckets and splits skewed ones; with AQE off it is a plain
   *    P*S hash exchange.
   *  - The input is scanned once and the results are never read back: the
-  *    write itself tallies the per-part lineage (an observed aggregate in
-  *    its result stage, above the exchange). The driver receives only
-  *    ≤ P-row sets: the done part ids and the lineage rows, which it
-  *    writes, turns into the manifest's done rows and sums into the run
-  *    summary.
+  *    write itself tallies each part's manifest row, its lineage and job
+  *    counters (an observed aggregate in its result stage, above the
+  *    exchange). The driver receives only ≤ P-row sets: the done part ids
+  *    and the tallied rows, which it appends to the manifest as one file,
+  *    the run's single commit, and sums into the run summary.
   *  - Results are written partitioned by part_id (dynamic partition
   *    overwrite), so a rerun of an unfinished partition is idempotent.
   */
 object ExtractJob {
 
   val ResultsTable = "results"
+  /** The retired per-part lineage table, now the manifest's done rows.
+    * `run` no longer writes it; the name stays for callers that label it. */
   val LineageTable = "lineage"
   val ManifestTable = "manifest"
 
@@ -78,26 +79,37 @@ object ExtractJob {
 
   final case class RunSummary(total: Long, ok: Long, err: Long, skippedParts: Long)
 
-  /** The lineage of the rows a write task passes, as a sparse part id →
-    * lineage map: a task holds only the parts it writes, so the driver
-    * merges at most P entries. `checksum` is the XOR of the rows'
-    * `xxhash64(url, markdown)`: commutative and overflow-free, so identical
-    * at any parallelism and row order. */
-  private object LineageTally
-      extends Aggregator[(Int, Boolean, Boolean, Long), Map[Int, LineageRow], Seq[LineageRow]] {
-    private def add(m: Map[Int, LineageRow], r: LineageRow) =
-      m.updated(r.part_id, m.get(r.part_id).fold(r)(t => LineageRow(r.part_id, t.row_count + r.row_count,
-        t.ok_count + r.ok_count, t.err_count + r.err_count, t.checksum ^ r.checksum)))
-    def zero: Map[Int, LineageRow] = Map.empty
-    def reduce(b: Map[Int, LineageRow], in: (Int, Boolean, Boolean, Long)): Map[Int, LineageRow] =
-      add(b, LineageRow(in._1, 1, if (in._2) 1 else 0, if (in._3) 1 else 0, in._4))
-    def merge(a: Map[Int, LineageRow], b: Map[Int, LineageRow]): Map[Int, LineageRow] = b.values.foldLeft(a)(add)
-    def finish(b: Map[Int, LineageRow]): Seq[LineageRow] = b.values.toSeq.sortBy(_.part_id)
-    def bufferEncoder: Encoder[Map[Int, LineageRow]] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[LineageRow]] = ExpressionEncoder()
+  /** The manifest rows of the rows a write task passes, as a sparse part
+    * id → row map: a task holds only the parts it writes, so the driver
+    * merges at most P entries. Every field is a sum, a per-key count or
+    * an XOR: commutative and overflow-free, so identical at any
+    * parallelism and row order. Input: part id, status, content type,
+    * error class, `xxhash64(url, markdown)`, markdown bytes. */
+  private final case class LineageTally(runTs: Timestamp) extends Aggregator[
+      (Int, String, String, String, Long, Long), Map[Int, ManifestRow], Seq[ManifestRow]] {
+    private def plus(a: Map[String, Long], b: Map[String, Long]) =
+      b.foldLeft(a) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
+    private def add(m: Map[Int, ManifestRow], r: ManifestRow) =
+      m.updated(r.part_id, m.get(r.part_id).fold(r)(t => t.copy(row_count = t.row_count + r.row_count,
+        ok_count = t.ok_count + r.ok_count, err_count = t.err_count + r.err_count, checksum = t.checksum ^ r.checksum,
+        by_content_type = plus(t.by_content_type, r.by_content_type),
+        by_error_class = plus(t.by_error_class, r.by_error_class), markdown_bytes = t.markdown_bytes + r.markdown_bytes)))
+    def zero: Map[Int, ManifestRow] = Map.empty
+    def reduce(b: Map[Int, ManifestRow], in: (Int, String, String, String, Long, Long)): Map[Int, ManifestRow] =
+      add(b, ManifestRow(in._1, runTs, "done", 1, if (in._2 == "ok") 1 else 0, if (in._2 == "error") 1 else 0,
+        in._5, Option(in._3).map(_ -> 1L).toMap, Option(in._4).map(_ -> 1L).toMap, in._6))
+    def merge(a: Map[Int, ManifestRow], b: Map[Int, ManifestRow]): Map[Int, ManifestRow] = b.values.foldLeft(a)(add)
+    def finish(b: Map[Int, ManifestRow]): Seq[ManifestRow] = b.values.toSeq.sortBy(_.part_id)
+    def bufferEncoder: Encoder[Map[Int, ManifestRow]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Seq[ManifestRow]] = ExpressionEncoder()
   }
 
-  /** Full run. `partitions` = P (work units), `salt` = S (hot-host spread). */
+  /** Full run. `partitions` = P (work units), `salt` = S (hot-host spread).
+    *
+    * MIGRATION: a manifest written before its rows carried the lineage
+    * (columns `part_id, run_ts, status` only) is refused before any
+    * results are written. Rewrite it with the [[ManifestRow]] columns, or
+    * delete `manifest/` and the retired `lineage/` and rerun. */
   def run(
       spark: SparkSession,
       pages: DataFrame,
@@ -107,41 +119,39 @@ object ExtractJob {
       salt: Int = 4): RunSummary = {
     import spark.implicits._
 
-    val withPart = pages.withColumn("part_id",
-      pmod(xxhash64(col("url")), lit(partitions)).cast("int"))
-
     // resume: skip partitions already recorded 'done' in the manifest
     // (a ≤ P-int set, collected once)
     val doneSet: Set[Int] =
-      if (io.tableExists(spark, ManifestTable))
-        io.readTable(spark, ManifestTable)
-          .filter($"status" === "done").select("part_id").distinct()
-          .as[Int].collect().toSet
-      else Set.empty
-    val todo =
-      if (doneSet.isEmpty) withPart
-      else withPart.filter(!$"part_id".isin(doneSet.toSeq: _*))
+      if (!io.tableExists(spark, ManifestTable)) Set.empty
+      else {
+        val manifest = io.readTable(spark, ManifestTable)
+        require(manifest.columns.toSet == Encoders.product[ManifestRow].schema.fieldNames.toSet, "manifest columns " +
+          s"(${manifest.columns.mkString(", ")}) are not ManifestRow's: migrate it, see ExtractJob.run's MIGRATION")
+        manifest.filter($"status" === "done").select("part_id").distinct().as[Int].collect().toSet
+      }
+    // every part is done: plan nothing, so the rerun scans and writes nothing
+    if ((0 until partitions).forall(doneSet)) return RunSummary(0, 0, 0, doneSet.size)
+    val withPart = pages.withColumn("part_id", pmod(xxhash64(col("url")), lit(partitions)).cast("int"))
+    val todo = if (doneSet.isEmpty) withPart else withPart.filter(!$"part_id".isin(doneSet.toSeq: _*))
 
-    // The lineage is tallied by the write itself, above the part-aligned
-    // exchange, so in the write's result stage: Spark applies a result
-    // task's metrics once even when the task is retried (below the
-    // exchange, a map-stage retry would count its rows twice).
+    // The manifest rows are tallied by the write itself, above the
+    // part-aligned exchange, so in the write's result stage: Spark applies
+    // a result task's metrics once even when the task is retried (below
+    // the exchange, a map-stage retry would count its rows twice).
     val tally = Observation()
     io.overwritePartitions(
-      resultsDf(todo, runTs, partitions, salt).observe(tally, udaf(LineageTally).apply(
-        $"part_id", $"status" <=> "ok", $"status" <=> "error", xxhash64($"url", $"markdown")).as("lineage")),
+      resultsDf(todo, runTs, partitions, salt).observe(tally, udaf(LineageTally(runTs)).apply($"part_id", $"status",
+        $"content_type", substring_index($"error", ":", 1), xxhash64($"url", $"markdown"),
+        coalesce(octet_length($"markdown"), lit(0)).cast("long")).as("done")),
       ResultsTable, "part_id")
-    val lineage = tally.get("lineage").asInstanceOf[Seq[Row]]
-      .map(r => LineageRow(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    io.overwritePartitions(lineage.toDS().withColumn("part_lbl", $"part_id"), LineageTable, "part_lbl")
+    val done = tally.get("done").asInstanceOf[Seq[Row]].map(r => ManifestRow(r.getInt(0), r.getTimestamp(1),
+      r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getMap[String, Long](7).toMap,
+      r.getMap[String, Long](8).toMap, r.getLong(9)))
 
-    // manifest: mark this invocation's partitions done (append-only). The
+    // the single commit: mark this invocation's parts done, one file. The
     // extractor is total, so every todo row has a results row and the
-    // lineage part ids are exactly the todo parts that have input.
-    if (lineage.nonEmpty)
-      io.appendTable(lineage.map(l => ManifestRow(l.part_id, runTs, "done")).toDS().toDF(), ManifestTable)
-
-    RunSummary(lineage.map(_.row_count).sum, lineage.map(_.ok_count).sum,
-      lineage.map(_.err_count).sum, skippedParts = doneSet.size.toLong)
+    // tallied part ids are exactly the todo parts that have input.
+    if (done.nonEmpty) io.appendTable(done.toDS().coalesce(1).toDF(), ManifestTable)
+    RunSummary(done.map(_.row_count).sum, done.map(_.ok_count).sum, done.map(_.err_count).sum, doneSet.size.toLong)
   }
 }

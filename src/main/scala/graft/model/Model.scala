@@ -38,14 +38,18 @@ final case class ResultRow(
     pages: Int,
     error: String)
 
-/** Per-partition lineage (north_rule: partition id, row counts, commutative
-  * checksum). */
-final case class LineageRow(
-    part_id: Int,
-    row_count: Long,
-    ok_count: Long,
-    err_count: Long,
-    checksum: Long)
-
-/** Resume manifest: partitions already completed (left-anti joined on rerun). */
-final case class ManifestRow(part_id: Int, run_ts: Timestamp, status: String)
+/** One part's row in the manifest, written when the part's results are
+  * committed: the resume record (`status` "done": the part is skipped on
+  * rerun) and the part's lineage (north_rule: partition id, row counts,
+  * commutative checksum) with the job counters of the same pass.
+  * `checksum` is the XOR of the rows' `xxhash64(url, markdown)`;
+  * `by_content_type` counts docs per `content_type`, `by_error_class` per
+  * error class (the `error` text before its first `:`), and
+  * `markdown_bytes` is the UTF-8 size of the markdown. Every field but
+  * `run_ts` is identical at any parallelism. Kernel nanos are not
+  * counted: they are not deterministic. Payload bytes in are not counted
+  * either: the tally runs above the exchange, and counting them would
+  * carry one more column across it. */
+final case class ManifestRow(
+    part_id: Int, run_ts: Timestamp, status: String, row_count: Long, ok_count: Long, err_count: Long,
+    checksum: Long, by_content_type: Map[String, Long], by_error_class: Map[String, Long], markdown_bytes: Long)

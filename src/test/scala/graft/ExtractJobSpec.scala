@@ -1,18 +1,87 @@
 package graft
 
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.TaskAttemptContext
+import org.apache.parquet.hadoop.ParquetOutputCommitter
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.extract.{ExtractJob, Extractor, HtmlExtractor}
 import graft.io.ParquetTableIO
+import graft.model.ManifestRow
 import graft.synth.Synth
 
-/** End-to-end pipeline tests: synth corpus → extract → results/lineage/
-  * manifest, plus the determinism + resume properties the north_rule demands.
+/** End-to-end pipeline tests: synth corpus → extract → results + manifest
+  * (whose done rows are the per-part lineage), plus the determinism +
+  * resume properties the north_rule demands.
   */
 class ExtractJobSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val runTs = Timestamp.valueOf("2023-09-05 00:00:00")
+
+  /** The manifest's done rows (the per-part lineage), `run_ts` cleared,
+    * ordered by part. */
+  private def doneRows(io: ParquetTableIO): Seq[ManifestRow] = {
+    import spark.implicits._
+    io.readTable(spark, "manifest").filter($"status" === "done").as[ManifestRow].collect()
+      .map(_.copy(run_ts = null)).sortBy(_.part_id).toSeq
+  }
+
+  /** What the done rows must hold for a results table: a groupBy over it. */
+  private def doneRowsOf(results: DataFrame): Seq[ManifestRow] = {
+    import spark.implicits._
+    val r = results.select($"part_id", $"status", $"content_type", substring_index($"error", ":", 1).as("class"),
+      xxhash64($"url", $"markdown").as("h"), octet_length($"markdown").cast("long").as("bytes"))
+    def counts(key: String): Map[Int, Map[String, Long]] =
+      r.filter(col(key).isNotNull).groupBy("part_id", key).count().as[(Int, String, Long)].collect()
+        .groupBy(_._1).map { case (p, xs) => p -> xs.map(x => x._2 -> x._3).toMap }
+    val (byType, byClass) = (counts("content_type"), counts("class"))
+    r.groupBy("part_id").agg(count(lit(1)), count(when($"status" === "ok", 1)), count(when($"status" === "error", 1)),
+      expr("bit_xor(h)"), sum("bytes")).as[(Int, Long, Long, Long, Long, Long)].collect()
+      .map { case (p, n, ok, err, h, bytes) =>
+        ManifestRow(p, null, "done", n, ok, err, h, byType.getOrElse(p, Map.empty), byClass.getOrElse(p, Map.empty), bytes)
+      }.sortBy(_.part_id).toSeq
+  }
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private def scans(qe: QueryExecution): Seq[String] = Plans.collect(qe.executedPlan) {
+    case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
+  }.flatten
+
+  private def writes(qe: QueryExecution): Option[String] = Plans.collectFirst(qe.executedPlan) {
+    case org.apache.spark.sql.execution.command.DataWritingCommandExec(
+        w: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand, _) =>
+      w.outputPath.getName
+  }
+
+  /** The SQL executions `body` runs, as a listener sees them. Listener
+    * events arrive in order, so once a marker query run after `body` is
+    * seen, every execution of `body` is too. */
+  private def executions(body: => Unit): Seq[QueryExecution] = {
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen.add(qe)
+    }
+    def marker(qe: QueryExecution) = qe.analyzed.output.map(_.name) == Seq("executions_marker")
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("executions_marker").collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.asScala.exists(marker)) {
+        assert(System.nanoTime() < deadline, "no marker execution seen")
+        Thread.sleep(20)
+      }
+      seen.asScala.toSeq.filterNot(marker)
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("synth corpus extracts end-to-end: ok + error rows, job never fails") {
     import spark.implicits._
@@ -35,7 +104,7 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(Extractor.extract("https://h/u.html",
       Array[Byte](0xff.toByte, 0xfe.toByte, 0x00, 0x01, 0x80.toByte)).status == "error")
     // lineage covers all non-empty partitions and counts add up
-    val lin = io.readTable(spark, "lineage")
+    val lin = io.readTable(spark, "manifest").filter($"status" === "done")
     val (rc, okc, ec) = lin.agg(sum("row_count"), sum("ok_count"), sum("err_count"))
       .as[(Long, Long, Long)].first()
     assert(rc == 200 && okc == s.ok && ec == s.err)
@@ -83,7 +152,7 @@ class ExtractJobSpec extends AnyFunSuite {
     val io = new ParquetTableIO(wh)
     val s1 = ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2)
     assert(s1.skippedParts == 0)
-    val chk1 = io.readTable(spark, "lineage")
+    val chk1 = io.readTable(spark, "manifest").filter($"status" === "done")
       .agg(expr("bit_xor(checksum)")).as[Long].first()
     // capture results file mtimes
     def mtimes(dir: String): Map[String, Long] = {
@@ -99,7 +168,7 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(s2.skippedParts > 0)
     val m2 = mtimes("results")
     assert(m1 == m2, "resume must not rewrite completed partitions")
-    val chk2 = io.readTable(spark, "lineage")
+    val chk2 = io.readTable(spark, "manifest").filter($"status" === "done")
       .agg(expr("bit_xor(checksum)")).as[Long].first()
     assert(chk1 == chk2)
   }
@@ -134,7 +203,8 @@ class ExtractJobSpec extends AnyFunSuite {
       ref.values.count(_.status == "error"), 0))
     val refChecksum = ref.toSeq.map { case (url, e) => (url, e.markdown) }.toDF("url", "markdown")
       .agg(expr("bit_xor(xxhash64(url, markdown))")).as[Long].first()
-    val linChecksum = io.readTable(spark, "lineage").agg(expr("bit_xor(checksum)")).as[Long].first()
+    val linChecksum = io.readTable(spark, "manifest").filter($"status" === "done")
+      .agg(expr("bit_xor(checksum)")).as[Long].first()
     assert(linChecksum == refChecksum)
   }
 
@@ -170,7 +240,9 @@ class ExtractJobSpec extends AnyFunSuite {
     val wh = SparkTestBase.tempDir("wh-partial")
     val io = new ParquetTableIO(wh)
     val done = Set(0, 2, 4, 6)
-    io.appendTable(done.toSeq.sorted.map(p => graft.model.ManifestRow(p, runTs, "done")).toDS().toDF(), "manifest")
+    val earlier = Timestamp.valueOf("2023-09-04 00:00:00")
+    io.appendTable(done.toSeq.sorted.map(p => ManifestRow(p, earlier, "done", 0, 0, 0, 0, Map.empty, Map.empty, 0))
+      .toDS().toDF(), "manifest")
     val inputParts = pages.select(pmod(xxhash64($"url"), lit(8)).cast("int").as("p"))
       .groupBy("p").count().as[(Int, Long)].collect().toMap
     val todo = inputParts.keySet -- done
@@ -183,7 +255,8 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(resultParts.toMap == inputParts.filter { case (p, _) => todo(p) })
     assert(new java.io.File(s"$wh/results").listFiles().map(_.getName)
       .filter(_.startsWith("part_id=")).toSet == todo.map(p => s"part_id=$p"))
-    val lineage = io.readTable(spark, "lineage").select("part_id", "row_count").as[(Int, Long)].collect()
+    val lineage = io.readTable(spark, "manifest").filter($"status" === "done" && $"run_ts" === runTs)
+      .select("part_id", "row_count").as[(Int, Long)].collect()
     assert(lineage.toMap == inputParts.filter { case (p, _) => todo(p) } && lineage.length == todo.size)
     val manifest = io.readTable(spark, "manifest").select("part_id").as[Int].collect()
     assert(manifest.sorted.toSeq == (done ++ todo).toSeq.sorted)
@@ -191,45 +264,23 @@ class ExtractJobSpec extends AnyFunSuite {
 
   test("one pass: run scans the input once, never reads results back; the tally sits above the exchange") {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{CollectMetricsExec, FileSourceScanExec, QueryExecution}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.CollectMetricsExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
-    object Plans extends AdaptiveSparkPlanHelper
     val in = SparkTestBase.tempDir("one-pass-in")
     Synth.pagesDs(spark, 80, seed = 17L, parallelism = 4).write.parquet(s"$in/pages")
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen.add(qe)
-    }
-    def scans(qe: QueryExecution): Seq[String] = Plans.collect(qe.executedPlan) {
-      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
-    }.flatten
-    def writes(qe: QueryExecution): Option[String] = Plans.collectFirst(qe.executedPlan) {
-      case w: DataWritingCommandExec if w.cmd.isInstanceOf[InsertIntoHadoopFsRelationCommand] =>
-        w.cmd.asInstanceOf[InsertIntoHadoopFsRelationCommand].outputPath.getName
-    }
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.listenerManager.register(listener)
     try {
       for (aqe <- Seq("true", "false")) {
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        seen.clear()
-        val io = new ParquetTableIO(SparkTestBase.tempDir("wh-one-pass"))
-        ExtractJob.run(spark, spark.read.parquet(s"$in/pages"), io, runTs, partitions = 8, salt = 2)
-        // listener events arrive in order; the manifest append is the run's last action
-        val deadline = System.nanoTime() + 60L * 1000000000L
-        while (!seen.asScala.exists(writes(_).contains("manifest"))) {
-          assert(System.nanoTime() < deadline, s"aqe=$aqe: no manifest append seen")
-          Thread.sleep(20)
-        }
-        val qes = seen.asScala.toSeq
+        val wh = SparkTestBase.tempDir("wh-one-pass")
+        val io = new ParquetTableIO(wh)
+        val qes = executions(
+          ExtractJob.run(spark, spark.read.parquet(s"$in/pages"), io, runTs, partitions = 8, salt = 2))
         assert(!qes.exists(scans(_).contains("results")), s"aqe=$aqe: results read back")
         assert(qes.count(scans(_).contains("pages")) == 1, s"aqe=$aqe: ${qes.map(scans)}")
+        // two writes: the results, then the manifest append, as one file
+        assert(qes.flatMap(writes) == Seq("results", "manifest"), s"aqe=$aqe: ${qes.map(writes)}")
+        assert(new java.io.File(s"$wh/manifest").list().count(_.endsWith(".parquet")) == 1)
         // the tally is evaluated in the write's result stage: above the
         // one part-aligned exchange, with no exchange above it
         val write = qes.filter(writes(_).contains("results"))
@@ -246,10 +297,69 @@ class ExtractJobSpec extends AnyFunSuite {
           case other => fail(s"aqe=$aqe: not a hash exchange: $other\n$plan")
         }
       }
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("a manifest of the old columns is refused before any results are written") {
+    import spark.implicits._
+    val wh = SparkTestBase.tempDir("wh-old-manifest")
+    val io = new ParquetTableIO(wh)
+    io.appendTable(Seq((0, runTs, "done")).toDF("part_id", "run_ts", "status"), "manifest")
+    val pages = Synth.pagesDs(spark, 40, seed = 29L, parallelism = 2).toDF()
+    val e = intercept[IllegalArgumentException](ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2))
+    assert(e.getMessage.contains("MIGRATION"), e.getMessage)
+    assert(!new java.io.File(s"$wh/results").exists())
+  }
+
+  test("a rerun over a fully done manifest scans no pages and writes nothing") {
+    val in = SparkTestBase.tempDir("fully-done-in")
+    Synth.pagesDs(spark, 80, seed = 17L, parallelism = 4).write.parquet(s"$in/pages")
+    val io = new ParquetTableIO(SparkTestBase.tempDir("wh-fully-done"))
+    val first = ExtractJob.run(spark, spark.read.parquet(s"$in/pages"), io, runTs, partitions = 8, salt = 2)
+    assert(first.total == 80 && doneRows(io).map(_.part_id) == (0 until 8))
+    var rerun: ExtractJob.RunSummary = null
+    val qes = executions {
+      rerun = ExtractJob.run(spark, spark.read.parquet(s"$in/pages"), io, runTs, partitions = 8, salt = 2)
     }
+    assert(rerun == ExtractJob.RunSummary(0, 0, 0, 8))
+    assert(!qes.exists(scans(_).contains("pages")), qes.map(scans))
+    assert(qes.flatMap(writes).isEmpty, qes.map(writes))
+  }
+
+  test("done rows are identical at any parallelism, and their counters are a groupBy over the results") {
+    import spark.implicits._
+    def run(pages: DataFrame): (Seq[ManifestRow], Seq[ManifestRow]) = {
+      val io = new ParquetTableIO(SparkTestBase.tempDir("wh-counters"))
+      ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2)
+      (doneRows(io), doneRowsOf(io.readTable(spark, "results")))
+    }
+    val (a, aOf) = run(Synth.pagesDs(spark, 150, seed = 42L, parallelism = 2).toDF())
+    val (b, bOf) = run(Synth.pagesDs(spark, 150, seed = 42L, parallelism = 7).toDF().repartition(13, $"url"))
+    assert(a.length == 8 && a == b)
+    assert(a == aOf && b == bOf)
+    // the corpus exercises every counter
+    assert(a.flatMap(_.by_content_type.keys).toSet.size >= 3 && a.exists(_.by_error_class.nonEmpty))
+    assert(a.map(_.row_count).sum == 150 && a.map(_.markdown_bytes).sum > 0)
+  }
+
+  test("lineage under a task retry: the done rows count each row once") {
+    // The shared local[4] session allows no task retry, so the job runs in
+    // a child JVM at local[4,2] whose committer fails one results task once.
+    val wh = SparkTestBase.tempDir("wh-retry")
+    val javaBin = new java.io.File(new java.io.File(System.getProperty("java.home"), "bin"), "java").getPath
+    val log = java.io.File.createTempFile("retry-child", ".log")
+    log.deleteOnExit()
+    val cmd = Seq(javaBin) ++ graft.Bench.addOpens ++ Seq("-Xmx1g",
+      "-cp", System.getProperty("java.class.path"), RetryChild.getClass.getName.stripSuffix("$"), wh)
+    val proc = new ProcessBuilder(cmd: _*).redirectError(log).start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    val rc = proc.waitFor()
+    def tail = scala.io.Source.fromFile(log).getLines().toSeq.takeRight(40).mkString("\n")
+    assert(rc == 0, s"child exit $rc\n$out\n$tail")
+    assert(out.linesIterator.contains("failed=1 retried=1"), s"$out\n$tail")
+    val io = new ParquetTableIO(wh)
+    val done = doneRows(io)
+    assert(done.map(_.row_count).sum == 120 && done == doneRowsOf(io.readTable(spark, "results")))
   }
 
   test("content-class hint beats an equally-sized link farm without article tags") {
@@ -438,4 +548,44 @@ class ExtractJobSpec extends AnyFunSuite {
       assert(s.start >= 0 && s.end <= e.markdown.length && s.start < s.end)
     }
   }
+}
+
+/** The child JVM of the "lineage under a task retry" spec: one
+  * `ExtractJob.run` of 120 synth pages into the warehouse `args(0)` at
+  * `local[4,2]` (one retry per task) with [[FailOnceCommitter]], then one
+  * stdout line with the failed and retried results-task commits. */
+object RetryChild {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[4,2]").appName("graft-retry")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.parquet.output.committer.class", classOf[FailOnceCommitter].getName)
+      .getOrCreate()
+    val pages = Synth.pagesDs(spark, 120, seed = 23L, parallelism = 4).toDF()
+    ExtractJob.run(spark, pages, new ParquetTableIO(args(0)), Timestamp.valueOf("2023-09-05 00:00:00"),
+      partitions = 8, salt = 2)
+    println(s"failed=${FailOnceCommitter.failed.get} retried=${FailOnceCommitter.retried.get}")
+    spark.stop()
+  }
+}
+
+/** A parquet committer whose task commit of the results table fails on
+  * attempt 0 of task 0, so that task runs again. */
+class FailOnceCommitter(path: Path, context: TaskAttemptContext) extends ParquetOutputCommitter(path, context) {
+  override def commitTask(context: TaskAttemptContext): Unit = {
+    val task = TaskContext.get()
+    val results = path.toString.contains("/results/")
+    if (results && task.partitionId() == 0 && task.attemptNumber() == 0) {
+      FailOnceCommitter.failed.incrementAndGet()
+      throw new java.io.IOException("injected commit failure")
+    }
+    super.commitTask(context)
+    if (results && task.partitionId() == 0 && task.attemptNumber() > 0) FailOnceCommitter.retried.incrementAndGet()
+  }
+}
+
+object FailOnceCommitter {
+  val failed = new AtomicInteger
+  val retried = new AtomicInteger
 }
