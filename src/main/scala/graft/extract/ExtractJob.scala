@@ -120,14 +120,15 @@ object ExtractJob {
     import spark.implicits._
 
     // resume: skip partitions already recorded 'done' in the manifest
-    // (a ≤ P-int set, collected once)
+    // (≤ P rows per run, collected once; the set dedups them, so the read
+    // plans no aggregate and no exchange)
     val doneSet: Set[Int] =
       if (!io.tableExists(spark, ManifestTable)) Set.empty
       else {
         val manifest = io.readTable(spark, ManifestTable)
         require(manifest.columns.toSet == Encoders.product[ManifestRow].schema.fieldNames.toSet, "manifest columns " +
           s"(${manifest.columns.mkString(", ")}) are not ManifestRow's: migrate it, see ExtractJob.run's MIGRATION")
-        manifest.filter($"status" === "done").select("part_id").distinct().as[Int].collect().toSet
+        manifest.filter($"status" === "done").select("part_id").as[Int].collect().toSet
       }
     // every part is done: plan nothing, so the rerun scans and writes nothing
     if ((0 until partitions).forall(doneSet)) return RunSummary(0, 0, 0, doneSet.size)

@@ -324,6 +324,12 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(rerun == ExtractJob.RunSummary(0, 0, 0, 8))
     assert(!qes.exists(scans(_).contains("pages")), qes.map(scans))
     assert(qes.flatMap(writes).isEmpty, qes.map(writes))
+    // the resume read collects the done ids as they are: no aggregate, no exchange
+    val reads = qes.filter(scans(_).contains("manifest"))
+    assert(reads.nonEmpty, qes.map(scans))
+    for (qe <- reads) assert(Plans.collect(qe.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }.isEmpty, qe.executedPlan)
   }
 
   test("done rows are identical at any parallelism, and their counters are a groupBy over the results") {

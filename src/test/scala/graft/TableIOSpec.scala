@@ -1,9 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path => JPath}
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.io.{ParquetTableIO, TableIO}
+import graft.io.{BucketedTableIO, ForkFreeLocalFileSystem, ParquetTableIO, TableIO}
 
 /** Contract tests for the storage seam (SURVEY §7.1.9): these encode
   * the semantics production Iceberg provides, asserted against the
@@ -145,5 +147,121 @@ class TableIOSpec extends AnyFunSuite {
       tio.appendTable(spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(Seq(Row(3))))), other), "nested")
     }
     assert(e.getMessage.contains("type mismatch on 'spans'"))
+  }
+
+  /** The commands of the processes the JVM starts while `body` runs, from
+    * a JFR recording of `jdk.ProcessStart`. */
+  private def processStarts(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val dump = Files.createTempFile("process-starts", ".jfr")
+    rec.start()
+    try body
+    finally {
+      rec.stop()
+      rec.dump(dump)
+      rec.close()
+    }
+    try jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+    finally Files.delete(dump)
+  }
+
+  private def oct(s: String): Int = Integer.parseInt(s, 8)
+
+  private def mode(p: JPath): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+
+  /** Every file and directory under `root`: its path (each write's job
+    * uuid masked), whether it is a directory, and its mode. */
+  private def listing(root: String): Set[(String, Boolean, Int)] = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    val walk = Files.walk(r)
+    try walk.iterator().asScala.map { p =>
+      (r.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>"),
+        Files.isDirectory(p), mode(p))
+    }.toSet
+    finally walk.close()
+  }
+
+  test("a local write starts no process: overwrite, append and bucketed writes, plain and file: warehouses") {
+    val frame = (0L until 160L).map(i => ((i % 16).toInt, i, s"v$i")).toDF("part_id", "id", "v")
+    for (uri <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("tio-nofork").toString
+      val wh = if (uri) s"file:$dir" else dir
+      val tio = new ParquetTableIO(wh)
+      tio.appendTable(frame, "appended")
+      val starts = processStarts {
+        tio.overwritePartitions(frame, "parts", "part_id")
+        tio.appendTable(frame, "appended")
+        BucketedTableIO.writeBucketed(frame, "tio_nofork_bucketed", wh, "id", 4)
+      }
+      assert(starts.isEmpty, s"uri=$uri: ${starts.size} processes, first: ${starts.take(3)}")
+      assert(new java.io.File(s"$dir/parts").list().count(_.startsWith("part_id=")) == 16)
+      assert(tio.readTable(spark, "appended").count() == 320)
+      assert(spark.table("tio_nofork_bucketed").count() == 160)
+      // the filesystem binding is per write: the catalog entry does not keep it
+      val ddl = spark.sql("SHOW CREATE TABLE tio_nofork_bucketed").head().getString(0)
+      assert(!ddl.contains("fs.file.impl"), ddl)
+      spark.sql("DROP TABLE tio_nofork_bucketed")
+    }
+    // only a local warehouse binds the filesystem
+    assert(ForkFreeLocalFileSystem.writeOptions(spark, "/x").keySet == Set("fs.file.impl", "fs.file.impl.disable.cache"))
+    assert(ForkFreeLocalFileSystem.writeOptions(spark, "file:/x") == ForkFreeLocalFileSystem.writeOptions(spark, "/x"))
+    assert(ForkFreeLocalFileSystem.writeOptions(spark, "hdfs://nn:8020/x").isEmpty)
+    assert(ForkFreeLocalFileSystem.writeOptions(spark, "s3a://bucket/x").isEmpty)
+  }
+
+  test("the fork-free filesystem sets the same modes as Hadoop's chmod on twin files and directories") {
+    val root = Files.createTempDirectory("tio-modes")
+    val forkFree = new ForkFreeLocalFileSystem.Raw
+    val stock = new RawLocalFileSystem // the oracle: forks chmod
+    def twins(parent: JPath, name: String, dir: Boolean): (JPath, JPath) = {
+      val (a, b) = (parent.resolve(s"$name-a"), parent.resolve(s"$name-b"))
+      if (dir) { Files.createDirectory(a); Files.createDirectory(b) }
+      else { Files.createFile(a); Files.createFile(b) }
+      (a, b)
+    }
+    def set(fs: RawLocalFileSystem, p: JPath, m: Int): Unit = fs.setPermission(new Path(p.toUri), new FsPermission(m.toShort))
+    val modes = Seq("600", "640", "644", "700", "750", "755", "777").map(oct)
+    val oracleStarts = processStarts {
+      for (dir <- Seq(false, true); m <- modes) {
+        val (a, b) = twins(root, s"${if (dir) "d" else "f"}${m.toOctalString}", dir)
+        assert(processStarts(set(forkFree, a, m)).isEmpty, s"${m.toOctalString} forked")
+        set(stock, b, m)
+        assert(mode(a) == m && mode(a) == mode(b), s"${m.toOctalString}: ${mode(a).toOctalString} vs ${mode(b).toOctalString}")
+        assert(Files.getPosixFilePermissions(a) == Files.getPosixFilePermissions(b))
+      }
+    }
+    assert(oracleStarts.count(_.contains("chmod")) >= 2 * modes.length, oracleStarts.take(3))
+    // what the POSIX view cannot express takes Hadoop's path: a sticky bit,
+    // and a directory's setgid bit, which chmod keeps
+    val (sa, sb) = twins(root, "sticky", dir = true)
+    assert(processStarts(set(forkFree, sa, oct("1777"))).exists(_.contains("chmod")))
+    set(stock, sb, oct("1777"))
+    assert(mode(sa) == oct("1777") && mode(sa) == mode(sb))
+    val shared = Files.createDirectory(root.resolve("shared"))
+    Files.setAttribute(shared, "unix:mode", oct("2755"))
+    val (ga, gb) = twins(shared, "sub", dir = true)
+    assert(processStarts(set(forkFree, ga, oct("755"))).exists(_.contains("chmod")))
+    set(stock, gb, oct("755"))
+    assert(mode(ga) == oct("2755") && mode(ga) == mode(gb))
+  }
+
+  test("a results write lists the same files and modes as a stock Hadoop write") {
+    import graft.extract.ExtractJob
+    val pages = graft.synth.Synth.pagesDs(spark, 120, seed = 11L, parallelism = 4).toDF()
+      .withColumn("part_id", pmod(xxhash64(col("url")), lit(8)).cast("int"))
+    val results = ExtractJob.resultsDf(pages, java.sql.Timestamp.valueOf("2023-09-05 00:00:00"), 8, 2)
+    val (tio, dir) = fresh()
+    tio.overwritePartitions(results, "results", "part_id")
+    val stockDir = Files.createTempDirectory("tio-stock").toString
+    results.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy("part_id")
+      .parquet(s"$stockDir/results")
+    val (got, want) = (listing(s"$dir/results"), listing(s"$stockDir/results"))
+    assert(got == want, s"\nonly ours: ${(got -- want).toSeq.sorted}\nonly stock: ${(want -- got).toSeq.sorted}")
+    assert(got.count { case (p, dir, _) => dir && p.startsWith("part_id=") } == 8)
+    assert(got.exists(_._1.endsWith(".parquet.crc")))
   }
 }
