@@ -153,6 +153,10 @@ class TableIOSpec extends AnyFunSuite {
     * a JFR recording of `jdk.ProcessStart`. */
   private def processStarts(body: => Unit): Seq[String] = {
     import scala.jdk.CollectionConverters._
+    // Spark's process-tree metrics reader forks `getconf PAGESIZE` once per
+    // JVM, when a heartbeat first polls executor metrics (10-20 s after the
+    // context starts). Initialise it here so that fork cannot land in `body`.
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     val dump = Files.createTempFile("process-starts", ".jfr")
