@@ -85,7 +85,7 @@ object ExtractJob {
     * an XOR: commutative and overflow-free, so identical at any
     * parallelism and row order. Input: part id, status, content type,
     * error class, `xxhash64(url, markdown)`, markdown bytes. */
-  private final case class LineageTally(runTs: Timestamp) extends Aggregator[
+  private final case class LineageTally(runTs: Timestamp, partitions: Int) extends Aggregator[
       (Int, String, String, String, Long, Long), Map[Int, ManifestRow], Seq[ManifestRow]] {
     private def plus(a: Map[String, Long], b: Map[String, Long]) =
       b.foldLeft(a) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
@@ -96,8 +96,8 @@ object ExtractJob {
         by_error_class = plus(t.by_error_class, r.by_error_class), markdown_bytes = t.markdown_bytes + r.markdown_bytes)))
     def zero: Map[Int, ManifestRow] = Map.empty
     def reduce(b: Map[Int, ManifestRow], in: (Int, String, String, String, Long, Long)): Map[Int, ManifestRow] =
-      add(b, ManifestRow(in._1, runTs, "done", 1, if (in._2 == "ok") 1 else 0, if (in._2 == "error") 1 else 0,
-        in._5, Option(in._3).map(_ -> 1L).toMap, Option(in._4).map(_ -> 1L).toMap, in._6))
+      add(b, ManifestRow(in._1, partitions, runTs, "done", 1, if (in._2 == "ok") 1 else 0,
+        if (in._2 == "error") 1 else 0, in._5, Option(in._3).map(_ -> 1L).toMap, Option(in._4).map(_ -> 1L).toMap, in._6))
     def merge(a: Map[Int, ManifestRow], b: Map[Int, ManifestRow]): Map[Int, ManifestRow] = b.values.foldLeft(a)(add)
     def finish(b: Map[Int, ManifestRow]): Seq[ManifestRow] = b.values.toSeq.sortBy(_.part_id)
     def bufferEncoder: Encoder[Map[Int, ManifestRow]] = ExpressionEncoder()
@@ -109,7 +109,14 @@ object ExtractJob {
     * MIGRATION: a manifest written before its rows carried the lineage
     * (columns `part_id, run_ts, status` only) is refused before any
     * results are written. Rewrite it with the [[ManifestRow]] columns, or
-    * delete `manifest/` and the retired `lineage/` and rerun. */
+    * delete `manifest/` and the retired `lineage/` and rerun. A manifest
+    * written before its rows carried `partitions` (the other ten columns)
+    * is refused the same way: add `partitions` with the P the warehouse
+    * was run with.
+    *
+    * A manifest written under another `partitions` is refused before any
+    * results are written: its part ids name other sets of urls, so a
+    * resume would extract its done urls again. */
   def run(
       spark: SparkSession,
       pages: DataFrame,
@@ -128,7 +135,11 @@ object ExtractJob {
         val manifest = io.readTable(spark, ManifestTable)
         require(manifest.columns.toSet == Encoders.product[ManifestRow].schema.fieldNames.toSet, "manifest columns " +
           s"(${manifest.columns.mkString(", ")}) are not ManifestRow's: migrate it, see ExtractJob.run's MIGRATION")
-        manifest.filter($"status" === "done").select("part_id").as[Int].collect().toSet
+        val rows = manifest.filter($"status" === "done").select("part_id", "partitions").as[(Int, Int)].collect()
+        val other = rows.map(_._2).filter(_ != partitions).distinct.sorted
+        require(other.isEmpty, s"manifest was written with partitions = ${other.mkString(", ")}; this run has " +
+          s"partitions = $partitions: rerun with the manifest's partitions, or start a new warehouse")
+        rows.map(_._1).toSet
       }
     // every part is done: plan nothing, so the rerun scans and writes nothing
     if ((0 until partitions).forall(doneSet)) return RunSummary(0, 0, 0, doneSet.size)
@@ -140,14 +151,13 @@ object ExtractJob {
     // a result task's metrics once even when the task is retried (below
     // the exchange, a map-stage retry would count its rows twice).
     val tally = Observation()
-    io.overwritePartitions(
-      resultsDf(todo, runTs, partitions, salt).observe(tally, udaf(LineageTally(runTs)).apply($"part_id", $"status",
-        $"content_type", substring_index($"error", ":", 1), xxhash64($"url", $"markdown"),
-        coalesce(octet_length($"markdown"), lit(0)).cast("long")).as("done")),
-      ResultsTable, "part_id")
-    val done = tally.get("done").asInstanceOf[Seq[Row]].map(r => ManifestRow(r.getInt(0), r.getTimestamp(1),
-      r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getMap[String, Long](7).toMap,
-      r.getMap[String, Long](8).toMap, r.getLong(9)))
+    val tallied = udaf(LineageTally(runTs, partitions)).apply($"part_id", $"status", $"content_type",
+      substring_index($"error", ":", 1), xxhash64($"url", $"markdown"),
+      coalesce(octet_length($"markdown"), lit(0)).cast("long")).as("done")
+    io.overwritePartitions(resultsDf(todo, runTs, partitions, salt).observe(tally, tallied), ResultsTable, "part_id")
+    val done = tally.get("done").asInstanceOf[Seq[Row]].map(r => ManifestRow(r.getInt(0), r.getInt(1),
+      r.getTimestamp(2), r.getString(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7),
+      r.getMap[String, Long](8).toMap, r.getMap[String, Long](9).toMap, r.getLong(10)))
 
     // the single commit: mark this invocation's parts done, one file. The
     // extractor is total, so every todo row has a results row and the

@@ -1,7 +1,9 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetSchemas
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Storage seam (SURVEY.md §7.1.9). Production binds this to Iceberg
@@ -28,13 +30,40 @@ trait TableIO {
   * largest cost of `ExtractJob.run`'s results write. The files, bytes and
   * modes on disk are the same. Reads fork nothing and keep the stock
   * filesystem; warehouses on other schemes run as before.
+  *
+  * A read takes its schema from one footer, read on the driver:
+  * `spark.read.parquet(dir)` would infer it in a one-task Spark job that
+  * reads that same footer. The file is the first data file Spark's file
+  * index lists (a directory's files before its subdirectories', hidden
+  * `_`/`.` names skipped), found by listing one directory per level; its
+  * footer is converted by Spark's own code
+  * ([[org.apache.spark.sql.graftbridge.ParquetSchemas]]). The read then
+  * passes that data schema to `spark.read.schema(...)`, and Spark still
+  * discovers the partition columns from the paths. A directory with no
+  * data file reads as `spark.read.parquet` does, and fails as it does.
+  * Partition discovery itself is Spark's: a level of more than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` directories is
+  * listed by a Spark job.
   */
 final class ParquetTableIO(warehouse: String) extends TableIO {
   private def path(name: String) = s"$warehouse/$name"
   private def writer(df: DataFrame) = df.write.options(ForkFreeLocalFileSystem.writeOptions(df.sparkSession, warehouse))
 
   override def readTable(spark: SparkSession, name: String): DataFrame =
-    spark.read.parquet(path(name))
+    firstDataFile(spark, new Path(path(name))) match {
+      case Some(file) => spark.read.schema(ParquetSchemas.fromFooter(spark, file)).parquet(path(name))
+      case None => spark.read.parquet(path(name))
+    }
+
+  private def firstDataFile(spark: SparkSession, dir: Path): Option[FileStatus] = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(d: Path): Iterator[FileStatus] = {
+      val (dirs, here) =
+        fs.listStatus(d).filterNot(s => ParquetSchemas.notData(s.getPath.getName)).partition(_.isDirectory)
+      here.iterator ++ dirs.iterator.flatMap(s => files(s.getPath))
+    }
+    try files(dir).nextOption() catch { case _: FileNotFoundException => None }
+  }
 
   override def appendTable(df: DataFrame, name: String): Unit = {
     // Iceberg rejects appends whose schema does not match the table
@@ -47,7 +76,7 @@ final class ParquetTableIO(warehouse: String) extends TableIO {
       // Iceberg resolves append columns BY NAME (order-insensitive) and
       // enforces nullability one-directionally: writing a nullable column
       // into a required one is rejected, required-into-nullable is fine.
-      val existing = df.sparkSession.read.parquet(path(name)).schema
+      val existing = readTable(df.sparkSession, name).schema
       val e = existing.fields.map(f => f.name -> f).toMap
       val i = df.schema.fields.map(f => f.name -> f).toMap
       def fail(why: String) = throw new IllegalArgumentException(

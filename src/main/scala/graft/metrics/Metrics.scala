@@ -85,23 +85,49 @@ object Metrics {
     dist
   }
 
-  /** CER (eval.py:145-150): both sides Python-stripped; empty ref -> 0.0 if
-    * hyp empty else 1.0; else distance / len(ref) (code points). */
-  def cer(refIn: String, hypIn: String): Double = {
-    val ref = PyStr.strip(refIn)
-    val hyp = PyStr.strip(hypIn)
-    if (ref.isEmpty) { if (hyp.isEmpty) 0.0 else 1.0 }
-    else {
-      val r = ref.codePoints().toArray
-      val h = hyp.codePoints().toArray
-      editDistanceSeq(r, h).toDouble / r.length
+  /** What the eight metrics read of one side, each part computed on first
+    * use: `evaluateOcr` profiles each normalized side once for all eight. */
+  final class Profile(text: String) {
+    lazy val codePoints: Array[Int] = text.codePoints().toArray
+    lazy val words: Array[String] = PyStr.split(text)
+    lazy val lowerWords: mutable.HashMap[String, Int] = { // normalized text is lowercase already
+      val lower = PyStr.lower(text)
+      counts(if (lower eq text) words else PyStr.split(lower))
     }
+    lazy val tables: Vector[Vector[Vector[String]]] = TextNorm.extractTable(text)
+    lazy val cells: mutable.HashMap[String, Int] = counts(tables.iterator.flatten.flatten)
+  }
+
+  private def counts(xs: IterableOnce[String]): mutable.HashMap[String, Int] =
+    xs.iterator.foldLeft(mutable.HashMap.empty[String, Int])((m, x) => m += x -> (m.getOrElse(x, 0) + 1))
+
+  /** Multiset (NOT set) overlap share: sum over keys of min(count_a,
+    * count_b), over the size of `a`; 0.0 for an empty `a`. */
+  private def overlapShare(a: mutable.HashMap[String, Int], b: mutable.HashMap[String, Int]): Double = {
+    val n = a.valuesIterator.sum
+    if (n == 0) 0.0 else a.iterator.map { case (k, c) => math.min(c, b.getOrElse(k, 0)) }.sum.toDouble / n
+  }
+
+  // each metric over two strings, profiled for that metric alone
+  def cer(ref: String, hyp: String): Double = cer(new Profile(PyStr.strip(ref)), new Profile(PyStr.strip(hyp)))
+  def wer(ref: String, hyp: String): Double = wer(new Profile(ref), new Profile(hyp))
+  def wordAccuracy(ref: String, hyp: String): Double = wordAccuracy(new Profile(ref), new Profile(hyp))
+  def tableAccuracy(ref: String, hyp: String): Double = tableAccuracy(new Profile(ref), new Profile(hyp))
+  def tableStructureAccuracy(ref: String, hyp: String): StructureAcc =
+    tableStructureAccuracy(new Profile(ref), new Profile(hyp))
+  def sequenceSimilarity(ref: String, hyp: String): Double = SequenceMatcher.ratio(ref, hyp)
+
+  /** CER (eval.py:145-150) of two Python-stripped sides: empty ref -> 0.0 if
+    * hyp empty else 1.0; else distance / len(ref) (code points). */
+  def cer(ref: Profile, hyp: Profile): Double = {
+    val (r, h) = (ref.codePoints, hyp.codePoints)
+    if (r.isEmpty) { if (h.isEmpty) 0.0 else 1.0 }
+    else editDistanceSeq(r, h).toDouble / r.length
   }
 
   /** WER (eval.py:152-157): whitespace tokenization via Python str.split(). */
-  def wer(ref: String, hyp: String): Double = {
-    val rw = PyStr.split(ref)
-    val hw = PyStr.split(hyp)
+  def wer(ref: Profile, hyp: Profile): Double = {
+    val (rw, hw) = (ref.words, hyp.words)
     if (rw.isEmpty) { if (hw.isEmpty) 0.0 else 1.0 }
     else {
       // intern both sides' words into dense ids for the Int kernel
@@ -111,30 +137,11 @@ object Metrics {
     }
   }
 
-  /** Multiset intersection size: sum over keys of min(count_a, count_b). */
-  private def multisetOverlap(as: Iterable[String], bs: Iterable[String]): Int = {
-    val ca = as.groupMapReduce(identity)(_ => 1)(_ + _)
-    val cb = bs.groupMapReduce(identity)(_ => 1)(_ + _)
-    ca.iterator.map { case (k, n) => math.min(n, cb.getOrElse(k, 0)) }.sum
-  }
-
   /** word_accuracy (eval.py:159-166): lowercased multiset word overlap / |ref|. */
-  def wordAccuracy(ref: String, hyp: String): Double = {
-    val rw = PyStr.split(PyStr.lower(ref))
-    val hw = PyStr.split(PyStr.lower(hyp))
-    if (rw.isEmpty) 0.0
-    else multisetOverlap(rw, hw).toDouble / rw.length
-  }
+  def wordAccuracy(ref: Profile, hyp: Profile): Double = overlapShare(ref.lowerWords, hyp.lowerWords)
 
   /** table_accuracy (eval.py:184-195): multiset cell overlap / |ref cells|. */
-  def tableAccuracy(ref: String, hyp: String): Double = {
-    val rt = TextNorm.extractTable(ref)
-    if (rt.isEmpty) return 0.0
-    val refCells = rt.flatten.flatten
-    if (refCells.isEmpty) return 0.0
-    val hypCells = TextNorm.extractTable(hyp).flatten.flatten
-    multisetOverlap(refCells, hypCells).toDouble / refCells.length
-  }
+  def tableAccuracy(ref: Profile, hyp: Profile): Double = overlapShare(ref.cells, hyp.cells)
 
   final case class StructureAcc(rowAccuracy: Double, columnAccuracy: Double, cellAccuracy: Double)
 
@@ -143,68 +150,42 @@ object Metrics {
     * exactly (it can exceed 1.0 when several hyp tables match; that is the
     * reference's behavior and is preserved).
     */
-  def tableStructureAccuracy(ref: String, hyp: String): StructureAcc = {
-    val refT = TextNorm.extractTable(ref)
-    val hypT = TextNorm.extractTable(hyp)
-    if (refT.isEmpty) return StructureAcc(0.0, 0.0, 0.0)
-
+  def tableStructureAccuracy(ref: Profile, hyp: Profile): StructureAcc = {
+    val (refT, hypT) = (ref.tables, hyp.tables)
     val totalRows = refT.map(_.length).sum
     val totalCols = refT.map(t => if (t.nonEmpty) t.head.length else 0).sum
     val totalCells = refT.map(t => if (t.nonEmpty && t.head.nonEmpty) t.length * t.head.length else 0).sum
     if (totalRows == 0 || totalCols == 0) return StructureAcc(0.0, 0.0, 0.0)
 
-    var matchedRows = 0
-    refT.foreach { rt =>
-      hypT.find(ht => ht.length == rt.length).foreach(_ => matchedRows += rt.length)
-    }
+    val matchedRows = refT.map(rt => if (hypT.exists(_.length == rt.length)) rt.length else 0).sum
+    // eval.py:223 guards `ref_table and hyp_table` inside the scan
+    val matchedCols = refT.map(rt =>
+      if (rt.nonEmpty && hypT.exists(ht => ht.nonEmpty && rt.head.length == ht.head.length)) rt.head.length else 0).sum
+    // NOTE: no break over the hyp tables here (eval.py:229-234)
+    val matchedCells = (for (rt <- refT; ht <- hypT if rt.length == ht.length && rt.nonEmpty)
+      yield rt.lazyZip(ht).map((rr, hr) => if (rr.length == hr.length) rr.length else 0).sum).sum
 
-    var matchedCols = 0
-    refT.foreach { rt =>
-      // eval.py:223 guards `ref_table and hyp_table` inside the scan
-      hypT.find(ht => rt.nonEmpty && ht.nonEmpty && rt.head.length == ht.head.length)
-        .foreach(_ => matchedCols += rt.head.length)
-    }
-
-    var matchedCells = 0
-    refT.foreach { rt =>
-      hypT.foreach { ht => // NOTE: no break here (eval.py:229-234)
-        if (rt.length == ht.length && rt.nonEmpty && ht.nonEmpty) {
-          rt.zip(ht).foreach { case (rr, hr) =>
-            if (rr.length == hr.length) matchedCells += rr.length
-          }
-        }
-      }
-    }
-
-    StructureAcc(
-      if (totalRows > 0) matchedRows.toDouble / totalRows else 0.0,
-      if (totalCols > 0) matchedCols.toDouble / totalCols else 0.0,
+    StructureAcc(matchedRows.toDouble / totalRows, matchedCols.toDouble / totalCols,
       if (totalCells > 0) matchedCells.toDouble / totalCells else 0.0)
   }
 
-  /** sequence_similarity (eval.py:242-245). */
-  def sequenceSimilarity(ref: String, hyp: String): Double =
-    SequenceMatcher.ratio(ref, hyp)
+  /** sequence_similarity (eval.py:242-245), over code points. */
+  def sequenceSimilarity(ref: Profile, hyp: Profile): Double = new SequenceMatcher(ref.codePoints, hyp.codePoints).ratio
 
   final case class OcrMetrics(
       cer: Double, wer: Double, wordAcc: Double, tableAcc: Double,
       sequenceSimilarity: Double, rowAccuracy: Double, columnAccuracy: Double,
       cellAccuracy: Double)
 
-  /** evaluate_ocr (eval.py:248-267): normalize both sides, then all 8. */
+  /** evaluate_ocr (eval.py:248-267): normalize both sides, then all 8 over
+    * one profile per side. Normalized text is stripped, so CER's strip
+    * leaves it as it is and CER and the similarity share the code points. */
   def evaluateOcr(refRaw: String, hypRaw: String): OcrMetrics = {
-    val ref = TextNorm.normalize(refRaw)
-    val hyp = TextNorm.normalize(hypRaw)
+    val ref = new Profile(TextNorm.normalize(refRaw))
+    val hyp = new Profile(TextNorm.normalize(hypRaw))
     val s = tableStructureAccuracy(ref, hyp)
-    OcrMetrics(
-      cer = cer(ref, hyp),
-      wer = wer(ref, hyp),
-      wordAcc = wordAccuracy(ref, hyp),
-      tableAcc = tableAccuracy(ref, hyp),
-      sequenceSimilarity = sequenceSimilarity(ref, hyp),
-      rowAccuracy = s.rowAccuracy,
-      columnAccuracy = s.columnAccuracy,
-      cellAccuracy = s.cellAccuracy)
+    OcrMetrics(cer(ref, hyp), wer(ref, hyp), wordAccuracy(ref, hyp), tableAccuracy(ref, hyp),
+      sequenceSimilarity(ref, hyp), s.rowAccuracy, s.columnAccuracy, s.cellAccuracy)
   }
 
   /** Failed-row worst-case imputation (eval.py:290-301). */

@@ -7,35 +7,24 @@ import scala.collection.mutable
   * `difflib.SequenceMatcher(None, ref, hyp).ratio()`
   * (/root/reference/mvp/evaluation/eval.py:242-245).
   *
-  * Matches CPython's documented behavior including **autojunk**: when
-  * `len(b) >= 200`, elements occurring more than `len(b)//100 + 1` times in
-  * `b` are "popular" and cannot *seed* a longest match, but can still extend
-  * one at its edges. isjunk is None (as in the reference call), so the junk
-  * set proper is empty.
+  * The sequences are code points, the elements of a Python `str`, so an
+  * astral symbol is one element. Matches CPython's documented behavior
+  * including **autojunk**: when `len(b) >= 200`, elements occurring more
+  * than `len(b)//100 + 1` times in `b` are "popular" and cannot *seed* a
+  * longest match, but can still extend one at its edges. isjunk is None (as
+  * in the reference call), so the junk set proper is empty.
   */
-final class SequenceMatcher(a: String, b: String) {
-  private val la = a.length
+final class SequenceMatcher(a: Array[Int], b: Array[Int]) {
   private val lb = b.length
 
-  // b2j: element -> ascending positions in b, minus popular elements
-  private val b2j: mutable.HashMap[Char, Array[Int]] = {
-    val m = mutable.HashMap.empty[Char, mutable.ArrayBuffer[Int]]
-    var j = 0
-    while (j < lb) {
-      m.getOrElseUpdate(b.charAt(j), mutable.ArrayBuffer.empty[Int]) += j
-      j += 1
-    }
-    if (lb >= 200) {
-      val ntest = lb / 100 + 1
-      val popular = m.collect { case (c, idxs) if idxs.length > ntest => c }
-      popular.foreach(m.remove)
-    }
-    val out = mutable.HashMap.empty[Char, Array[Int]]
-    m.foreach { case (c, idxs) => out(c) = idxs.toArray }
-    out
+  // b2j: element -> ascending positions in b, minus popular elements (null);
+  // code points below 256 also index an array
+  private val b2j: mutable.LongMap[Array[Int]] = {
+    val at = mutable.LongMap.empty[mutable.ArrayBuilder.ofInt]
+    for (j <- 0 until lb) at.getOrElseUpdate(b(j), new mutable.ArrayBuilder.ofInt) += j
+    at.mapValuesNow(_.result()).filter { case (_, js) => lb < 200 || js.length <= lb / 100 + 1 }
   }
-
-  private val emptyInts = Array.empty[Int]
+  private val low = Array.tabulate(256)(b2j.getOrNull(_))
 
   // CPython's per-row j2len/newj2len dicts as two reusable arrays indexed by
   // j + 1 (so j - 1 = -1 reads slot 0), each with the list of slots it set;
@@ -59,10 +48,10 @@ final class SequenceMatcher(a: String, b: String) {
     var i = alo
     while (i < ahi) {
       var nNew = 0
-      val idxs = b2j.getOrElse(a.charAt(i), emptyInts)
+      val idxs = if (a(i) < 256) low(a(i)) else b2j.getOrNull(a(i))
       var p = 0
       var break = false
-      while (p < idxs.length && !break) {
+      while (idxs != null && p < idxs.length && !break) {
         val j = idxs(p)
         if (j < blo) p += 1
         else if (j >= bhi) break = true
@@ -84,20 +73,15 @@ final class SequenceMatcher(a: String, b: String) {
     clearJ2len(nTouched)
     // edge extension (bjunk is empty so the non-junk loops are the only ones
     // that can fire; the junk loops are no-ops and omitted)
-    while (besti > alo && bestj > blo && a.charAt(besti - 1) == b.charAt(bestj - 1)) {
-      besti -= 1; bestj -= 1; bestsize += 1
-    }
-    while (besti + bestsize < ahi && bestj + bestsize < bhi &&
-           a.charAt(besti + bestsize) == b.charAt(bestj + bestsize)) {
-      bestsize += 1
-    }
+    while (besti > alo && bestj > blo && a(besti - 1) == b(bestj - 1)) { besti -= 1; bestj -= 1; bestsize += 1 }
+    while (besti + bestsize < ahi && bestj + bestsize < bhi && a(besti + bestsize) == b(bestj + bestsize)) bestsize += 1
     (besti, bestj, bestsize)
   }
 
   /** Sum of matching-block sizes (all `ratio` needs). */
   def totalMatches: Int = {
     var total = 0
-    val queue = mutable.Stack[(Int, Int, Int, Int)]((0, la, 0, lb))
+    val queue = mutable.Stack[(Int, Int, Int, Int)]((0, a.length, 0, lb))
     while (queue.nonEmpty) {
       val (alo, ahi, blo, bhi) = queue.pop()
       val (i, j, k) = findLongestMatch(alo, ahi, blo, bhi)
@@ -112,11 +96,11 @@ final class SequenceMatcher(a: String, b: String) {
 
   /** difflib ratio(): 2*M / (len(a)+len(b)); 1.0 when both empty. */
   def ratio: Double = {
-    val length = la + lb
+    val length = a.length + lb
     if (length == 0) 1.0 else 2.0 * totalMatches / length
   }
 }
 
 object SequenceMatcher {
-  def ratio(a: String, b: String): Double = new SequenceMatcher(a, b).ratio
+  def ratio(a: String, b: String): Double = new SequenceMatcher(a.codePoints().toArray, b.codePoints().toArray).ratio
 }

@@ -42,6 +42,8 @@ final case class ResultRow(
   * committed: the resume record (`status` "done": the part is skipped on
   * rerun) and the part's lineage (north_rule: partition id, row counts,
   * commutative checksum) with the job counters of the same pass.
+  * `partitions` is the run's P, which `part_id` = `pmod(xxhash64(url), P)`
+  * depends on: a resume under another P would assign urls to other parts.
   * `checksum` is the XOR of the rows' `xxhash64(url, markdown)`;
   * `by_content_type` counts docs per `content_type`, `by_error_class` per
   * error class (the `error` text before its first `:`), and
@@ -51,5 +53,5 @@ final case class ResultRow(
   * either: the tally runs above the exchange, and counting them would
   * carry one more column across it. */
 final case class ManifestRow(
-    part_id: Int, run_ts: Timestamp, status: String, row_count: Long, ok_count: Long, err_count: Long,
+    part_id: Int, partitions: Int, run_ts: Timestamp, status: String, row_count: Long, ok_count: Long, err_count: Long,
     checksum: Long, by_content_type: Map[String, Long], by_error_class: Map[String, Long], markdown_bytes: Long)

@@ -46,11 +46,6 @@ object PyStr {
     out.toArray
   }
 
-  /** Regex char-class body matching Python's whitespace set exactly —
-    * use `"[" + WS + "]"` wherever the reference pattern says `\s`. */
-  val WS: String =
-    "\\t\\n\\x0b\\f\\r\\x1c-\\x1f \\x85\\xa0\\u1680\\u2000-\\u200a\\u2028\\u2029\\u202f\\u205f\\u3000"
-
   /** Python str.lower() is Java toLowerCase(ROOT) for our corpus; exotic
     * divergences documented in SURVEY.md section 2.8 N4; goldens are
     * engine-generated so internally consistent. */

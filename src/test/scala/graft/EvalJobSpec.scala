@@ -183,4 +183,16 @@ class EvalJobSpec extends AnyFunSuite {
     val b = EvalJob.summary(EvalJob.detail(shuffled, goldens)).collect().head.toSeq
     assert(a == b)
   }
+
+  test("detail plus summary over TableIO tables start a pinned number of Spark jobs") {
+    val io = new graft.io.ParquetTableIO(SparkTestBase.tempDir("eval-jobs"))
+    io.appendTable(results, "results")
+    io.appendTable(goldens, "goldens")
+    val jobs = SparkTestBase.jobsDuring {
+      io.appendTable(EvalJob.detail(io.readTable(spark, "results"), io.readTable(spark, "goldens")), "eval_detail")
+      EvalJob.summary(io.readTable(spark, "eval_detail")).collect()
+    }
+    // none of the three reads plans a schema-inference job
+    assert(jobs.length == 6, jobs)
+  }
 }

@@ -31,7 +31,8 @@ class ExtractJobSpec extends AnyFunSuite {
       .map(_.copy(run_ts = null)).sortBy(_.part_id).toSeq
   }
 
-  /** What the done rows must hold for a results table: a groupBy over it. */
+  /** What the done rows must hold for a results table of a P = 8 run: a
+    * groupBy over it. */
   private def doneRowsOf(results: DataFrame): Seq[ManifestRow] = {
     import spark.implicits._
     val r = results.select($"part_id", $"status", $"content_type", substring_index($"error", ":", 1).as("class"),
@@ -43,7 +44,7 @@ class ExtractJobSpec extends AnyFunSuite {
     r.groupBy("part_id").agg(count(lit(1)), count(when($"status" === "ok", 1)), count(when($"status" === "error", 1)),
       expr("bit_xor(h)"), sum("bytes")).as[(Int, Long, Long, Long, Long, Long)].collect()
       .map { case (p, n, ok, err, h, bytes) =>
-        ManifestRow(p, null, "done", n, ok, err, h, byType.getOrElse(p, Map.empty), byClass.getOrElse(p, Map.empty), bytes)
+        ManifestRow(p, 8, null, "done", n, ok, err, h, byType.getOrElse(p, Map.empty), byClass.getOrElse(p, Map.empty), bytes)
       }.sortBy(_.part_id).toSeq
   }
 
@@ -241,7 +242,7 @@ class ExtractJobSpec extends AnyFunSuite {
     val io = new ParquetTableIO(wh)
     val done = Set(0, 2, 4, 6)
     val earlier = Timestamp.valueOf("2023-09-04 00:00:00")
-    io.appendTable(done.toSeq.sorted.map(p => ManifestRow(p, earlier, "done", 0, 0, 0, 0, Map.empty, Map.empty, 0))
+    io.appendTable(done.toSeq.sorted.map(p => ManifestRow(p, 8, earlier, "done", 0, 0, 0, 0, Map.empty, Map.empty, 0))
       .toDS().toDF(), "manifest")
     val inputParts = pages.select(pmod(xxhash64($"url"), lit(8)).cast("int").as("p"))
       .groupBy("p").count().as[(Int, Long)].collect().toMap
@@ -309,6 +310,35 @@ class ExtractJobSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2))
     assert(e.getMessage.contains("MIGRATION"), e.getMessage)
     assert(!new java.io.File(s"$wh/results").exists())
+    // a manifest of the ten columns before `partitions` is refused the same way
+    val wh10 = SparkTestBase.tempDir("wh-ten-column-manifest")
+    val io10 = new ParquetTableIO(wh10)
+    io10.appendTable(Seq(ManifestRow(0, 8, runTs, "done", 0, 0, 0, 0, Map.empty, Map.empty, 0)).toDS()
+      .drop("partitions"), "manifest")
+    val e10 = intercept[IllegalArgumentException](ExtractJob.run(spark, pages, io10, runTs, partitions = 8, salt = 2))
+    assert(e10.getMessage.contains("MIGRATION"), e10.getMessage)
+    assert(!new java.io.File(s"$wh10/results").exists())
+  }
+
+  test("a resume under another partitions count is refused before any write") {
+    import spark.implicits._
+    val pages = Synth.pagesDs(spark, 200, seed = 23L, parallelism = 4).toDF()
+    val wh = SparkTestBase.tempDir("wh-other-partitions")
+    val io = new ParquetTableIO(wh)
+    assert(ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2).total == 200)
+    def files(): Set[(String, Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(wh))
+      try walk.iterator().asScala.map(_.toFile).filter(_.isFile).map(f => (f.getPath, f.length, f.lastModified)).toSet
+      finally walk.close()
+    }
+    val before = files()
+    val e = intercept[IllegalArgumentException](ExtractJob.run(spark, pages, io, runTs, partitions = 16, salt = 2))
+    assert(e.getMessage.contains("partitions = 8") && e.getMessage.contains("partitions = 16"), e.getMessage)
+    assert(files() == before)
+    val urls = io.readTable(spark, "results").select("url").as[String].collect()
+    assert(urls.length == 200 && urls.distinct.length == 200)
+    assert(doneRows(io).map(_.partitions).toSet == Set(8))
   }
 
   test("a rerun over a fully done manifest scans no pages and writes nothing") {

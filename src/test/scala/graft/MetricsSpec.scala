@@ -212,6 +212,86 @@ class MetricsSpec extends AnyFunSuite {
     }
   }
 
+  test("SequenceMatcher.ratio counts code points, as CPython difflib does") {
+    // CPython 3: difflib.SequenceMatcher(None, a, b).ratio(); over UTF-16
+    // units the first two read 0.75 and 0.6667
+    assert(~=(SequenceMatcher.ratio("a😀b", "a😀c"), 2.0 / 3))
+    assert(~=(SequenceMatcher.ratio("x😀😁y", "x😁😀y"), 0.75))
+    // autojunk counts code points too: b is 200 code points (300 UTF-16
+    // units), so an element is popular above 3 occurrences, not 4; every
+    // astral symbol of b occurs 4 times. Over UTF-16 units: 0.8805...
+    def sym(k: Int): Int = if (k % 2 == 0) 0x1F600 + ((k / 2) * 7) % 25 else 0x4E00 + ((k / 2) * 13) % 50
+    def str(f: Int => Int) =
+      (0 until 200).foldLeft(new java.lang.StringBuilder)((sb, k) => sb.appendCodePoint(f(k))).toString
+    val b = str(sym)
+    val a = str(k => if (k % 7 == 3) 0x4E00 + (k * 11) % 50 else sym(k))
+    assert(b.length == 300 && b.codePointCount(0, b.length) == 200)
+    assert(~=(SequenceMatcher.ratio(a, b), 0.06))
+  }
+
+  /** The string-level word and table metrics the per-side profiles
+    * replaced, as their differential oracle. */
+  private object Unshared {
+    import graft.textnorm.{PyStr, TextNorm}
+    private def overlap(as: Iterable[String], bs: Iterable[String]): Int = {
+      val ca = as.groupMapReduce(identity)(_ => 1)(_ + _)
+      val cb = bs.groupMapReduce(identity)(_ => 1)(_ + _)
+      ca.iterator.map { case (k, n) => math.min(n, cb.getOrElse(k, 0)) }.sum
+    }
+    def wordAccuracy(ref: String, hyp: String): Double = {
+      val rw = PyStr.split(PyStr.lower(ref))
+      if (rw.isEmpty) 0.0 else overlap(rw, PyStr.split(PyStr.lower(hyp))).toDouble / rw.length
+    }
+    def tableAccuracy(ref: String, hyp: String): Double = {
+      val refCells = TextNorm.extractTable(ref).flatten.flatten
+      if (refCells.isEmpty) 0.0
+      else overlap(refCells, TextNorm.extractTable(hyp).flatten.flatten).toDouble / refCells.length
+    }
+    def structure(ref: String, hyp: String): Metrics.StructureAcc = {
+      val refT = TextNorm.extractTable(ref)
+      val hypT = TextNorm.extractTable(hyp)
+      val totalRows = refT.map(_.length).sum
+      val totalCols = refT.map(t => if (t.nonEmpty) t.head.length else 0).sum
+      val totalCells = refT.map(t => if (t.nonEmpty && t.head.nonEmpty) t.length * t.head.length else 0).sum
+      if (refT.isEmpty || totalRows == 0 || totalCols == 0) return Metrics.StructureAcc(0.0, 0.0, 0.0)
+      var (rows, cols, cells) = (0, 0, 0)
+      refT.foreach(rt => hypT.find(_.length == rt.length).foreach(_ => rows += rt.length))
+      refT.foreach(rt => hypT.find(ht => rt.nonEmpty && ht.nonEmpty && rt.head.length == ht.head.length)
+        .foreach(_ => cols += rt.head.length))
+      for (rt <- refT; ht <- hypT if rt.length == ht.length && rt.nonEmpty && ht.nonEmpty; (rr, hr) <- rt.zip(ht))
+        if (rr.length == hr.length) cells += rr.length
+      Metrics.StructureAcc(rows.toDouble / totalRows, cols.toDouble / totalCols,
+        if (totalCells > 0) cells.toDouble / totalCells else 0.0)
+    }
+  }
+
+  test("evaluateOcr over shared profiles equals the unshared metrics on the normalized sides") {
+    import graft.textnorm.TextNorm
+    val rnd = new scala.util.Random(13L)
+    val edits = Seq("| x | y |\n", "| x |\n", "**", "A ", "Word ", "\n\n", "| --- |\n", "_", "😀", "ΣΑΣ ")
+    var tables = 0
+    for (i <- 0L until 160L) {
+      val p = graft.synth.Synth.page(3L, i)
+      val md = graft.extract.Extractor.extract(p.url, p.html).markdown
+      def edited() = {
+        val sb = new StringBuilder(md)
+        for (_ <- 0 until rnd.nextInt(10)) sb.insert(rnd.nextInt(sb.length + 1), edits(rnd.nextInt(edits.length)))
+        sb.toString
+      }
+      val (ref, hyp) = (edited(), edited())
+      val (r, h) = (TextNorm.normalize(ref), TextNorm.normalize(hyp))
+      val s = Unshared.structure(r, h)
+      if (s.rowAccuracy > 0) tables += 1
+      assert(Metrics.evaluateOcr(ref, hyp) == Metrics.OcrMetrics(Metrics.cer(r, h), Metrics.wer(r, h),
+        Unshared.wordAccuracy(r, h), Unshared.tableAccuracy(r, h), Metrics.sequenceSimilarity(r, h),
+        s.rowAccuracy, s.columnAccuracy, s.cellAccuracy), s"page $i")
+      assert(Metrics.wordAccuracy(ref, hyp) == Unshared.wordAccuracy(ref, hyp), s"page $i")
+      assert(Metrics.tableAccuracy(ref, hyp) == Unshared.tableAccuracy(ref, hyp), s"page $i")
+      assert(Metrics.tableStructureAccuracy(ref, hyp) == Unshared.structure(ref, hyp), s"page $i")
+    }
+    assert(tables > 20, s"only $tables pairs with matched tables")
+  }
+
   test("evaluate_ocr: identical docs score perfectly; metric bounds hold") {
     val md = "# Title\n\nSome **bold** text.\n\n| a | b |\n| --- | --- |\n| 1 | 2 |"
     val m = Metrics.evaluateOcr(md, md)

@@ -268,4 +268,94 @@ class TableIOSpec extends AnyFunSuite {
     assert(got.count { case (p, dir, _) => dir && p.startsWith("part_id=") } == 8)
     assert(got.exists(_._1.endsWith(".parquet.crc")))
   }
+
+  /** A frame's rows as comparable values, binary as byte sequences, in a fixed order. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }).sortBy(_.toString)
+
+  test("a read starts no Spark job, and an append onto a table starts only its write") {
+    val (tio, _) = fresh()
+    val frame = (0L until 40L).map(i => ((i % 8).toInt, i, s"v$i")).toDF("part_id", "id", "v")
+    tio.appendTable(frame, "plain")
+    tio.overwritePartitions(frame, "parts", "part_id")
+    assert(SparkTestBase.jobsDuring(tio.readTable(spark, "plain")).isEmpty)
+    assert(SparkTestBase.jobsDuring(tio.readTable(spark, "parts")).isEmpty)
+    val appendJobs = SparkTestBase.jobsDuring(tio.appendTable(frame, "plain"))
+    assert(appendJobs.length == 1, appendJobs)
+    assert(tio.readTable(spark, "plain").count() == 80)
+  }
+
+  test("a read's schema is the schema Spark infers, for every table shape TableIO writes") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.extract.ExtractJob
+    import graft.model.ManifestRow
+    val (tio, dir) = fresh()
+    def check(name: String): Unit = {
+      val got = tio.readTable(spark, name)
+      val want = spark.read.parquet(s"$dir/$name")
+      assert(got.schema == want.schema, s"$name:\n${got.schema.treeString}\n${want.schema.treeString}")
+      assert(rows(got) == rows(want), name)
+    }
+    tio.appendTable(Seq((1L, 0.5, "x", true)).toDF("id", "score", "name", "flag"), "plain")
+    check("plain")
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    tio.appendTable(Seq((ts, java.time.LocalDateTime.of(2026, 1, 2, 3, 4), java.sql.Date.valueOf("2026-01-03"),
+      BigDecimal("1.25"))).toDF("ts", "ntz", "day", "amount"), "times")
+    check("times")
+    val pages = graft.synth.Synth.pagesDs(spark, 60, seed = 5L, parallelism = 2).toDF()
+      .withColumn("part_id", pmod(xxhash64(col("url")), lit(8)).cast("int"))
+    tio.overwritePartitions(ExtractJob.resultsDf(pages, ts, 8, 2), "results", "part_id")
+    assert(tio.readTable(spark, "results").schema.fieldNames.contains("spans"))
+    check("results")
+    tio.appendTable(Seq(ManifestRow(3, 8, ts, "done", 2, 1, 1, 7L, Map("text/html" -> 2L), Map("pdf" -> 1L), 10))
+      .toDS().toDF(), "manifest")
+    check("manifest")
+    val required = StructType(Seq(StructField("id", LongType, nullable = false), StructField("spans", ArrayType(
+      StructType(Seq(StructField("start", LongType, nullable = false))), containsNull = false), nullable = false)))
+    tio.appendTable(spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(1L, Seq(Row(2L))))), required),
+      "required")
+    check("required")
+  }
+
+  test("a parquet file without Spark's schema metadata reads as spark.read.parquet reads it") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val (tio, dir) = fresh()
+    val schema = MessageTypeParser.parseMessageType(
+      """message doc {
+        |  required int64 id;
+        |  optional binary name (UTF8);
+        |  optional binary raw;
+        |  optional int96 legacy_ts;
+        |  optional int64 micros (TIMESTAMP(MICROS,false));
+        |  optional int64 utc (TIMESTAMP(MILLIS,true));
+        |  optional int32 day (DATE);
+        |  optional group tags (LIST) { repeated group list { optional binary element (UTF8); } }
+        |}""".stripMargin)
+    val groups = new SimpleGroupFactory(schema)
+    val writer = ExampleParquetWriter.builder(new Path(s"$dir/bare/part-0.parquet")).withType(schema).build()
+    try for (i <- 0 until 3) {
+      val g = groups.newGroup().append("id", i.toLong).append("name", s"n$i").append("raw", s"r$i")
+        .append("micros", 1700000000000000L + i).append("utc", 1700000000000L + i).append("day", 19000 + i)
+      g.addGroup("tags").addGroup("list").append("element", s"t$i")
+      writer.write(g)
+    } finally writer.close()
+    val got = tio.readTable(spark, "bare")
+    val want = spark.read.parquet(s"$dir/bare")
+    assert(got.schema == want.schema, s"\n${got.schema.treeString}\n${want.schema.treeString}")
+    assert(rows(got) == rows(want))
+  }
+
+  test("a directory with no data file reads and fails as spark.read.parquet does") {
+    val (tio, dir) = fresh()
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/empty/_temporary"))
+    Files.createFile(java.nio.file.Paths.get(s"$dir/empty/_SUCCESS"))
+    val got = intercept[Exception](tio.readTable(spark, "empty"))
+    val want = intercept[Exception](spark.read.parquet(s"$dir/empty"))
+    assert(got.getClass == want.getClass && got.getMessage == want.getMessage, got)
+    val missing = intercept[Exception](tio.readTable(spark, "missing"))
+    assert(missing.getMessage == intercept[Exception](spark.read.parquet(s"$dir/missing")).getMessage, missing)
+  }
 }
