@@ -1,7 +1,7 @@
 package graft.extract
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -32,8 +32,9 @@ import graft.plans.ExtractExpression
   *    write itself tallies each part's manifest row, its lineage and job
   *    counters (an observed aggregate in its result stage, above the
   *    exchange). The driver receives only ≤ P-row sets: the done part ids
-  *    and the tallied rows, which it appends to the manifest as one file,
-  *    the run's single commit, and sums into the run summary.
+  *    and the tallied rows, which it appends to the manifest as one file
+  *    (`TableIO.appendRows`: written on the driver, no Spark job), the
+  *    run's single commit, and sums into the run summary.
   *  - Results are written partitioned by part_id (dynamic partition
   *    overwrite), so a rerun of an unfinished partition is idempotent.
   */
@@ -100,9 +101,17 @@ object ExtractJob {
         if (in._2 == "error") 1 else 0, in._5, Option(in._3).map(_ -> 1L).toMap, Option(in._4).map(_ -> 1L).toMap, in._6))
     def merge(a: Map[Int, ManifestRow], b: Map[Int, ManifestRow]): Map[Int, ManifestRow] = b.values.foldLeft(a)(add)
     def finish(b: Map[Int, ManifestRow]): Seq[ManifestRow] = b.values.toSeq.sortBy(_.part_id)
-    def bufferEncoder: Encoder[Map[Int, ManifestRow]] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[ManifestRow]] = ExpressionEncoder()
+    def bufferEncoder: Encoder[Map[Int, ManifestRow]] = tallyBuffer
+    def outputEncoder: Encoder[Seq[ManifestRow]] = tallyOutput
   }
+
+  /** The tally's and the manifest's encoders, derived once per JVM: each
+    * `ExpressionEncoder()` reflects over its type, and the analyzer asks
+    * the aggregate for its encoders again on every copy of it. */
+  private val tallyInput: Encoder[(Int, String, String, String, Long, Long)] = ExpressionEncoder()
+  private val tallyBuffer: Encoder[Map[Int, ManifestRow]] = ExpressionEncoder()
+  private val tallyOutput: Encoder[Seq[ManifestRow]] = ExpressionEncoder()
+  private val manifestRows: Encoder[ManifestRow] = ExpressionEncoder()
 
   /** Full run. `partitions` = P (work units), `salt` = S (hot-host spread).
     *
@@ -133,7 +142,7 @@ object ExtractJob {
       if (!io.tableExists(spark, ManifestTable)) Set.empty
       else {
         val manifest = io.readTable(spark, ManifestTable)
-        require(manifest.columns.toSet == Encoders.product[ManifestRow].schema.fieldNames.toSet, "manifest columns " +
+        require(manifest.columns.toSet == manifestRows.schema.fieldNames.toSet, "manifest columns " +
           s"(${manifest.columns.mkString(", ")}) are not ManifestRow's: migrate it, see ExtractJob.run's MIGRATION")
         val rows = manifest.filter($"status" === "done").select("part_id", "partitions").as[(Int, Int)].collect()
         val other = rows.map(_._2).filter(_ != partitions).distinct.sorted
@@ -151,7 +160,7 @@ object ExtractJob {
     // a result task's metrics once even when the task is retried (below
     // the exchange, a map-stage retry would count its rows twice).
     val tally = Observation()
-    val tallied = udaf(LineageTally(runTs, partitions)).apply($"part_id", $"status", $"content_type",
+    val tallied = udaf(LineageTally(runTs, partitions), tallyInput).apply($"part_id", $"status", $"content_type",
       substring_index($"error", ":", 1), xxhash64($"url", $"markdown"),
       coalesce(octet_length($"markdown"), lit(0)).cast("long")).as("done")
     io.overwritePartitions(resultsDf(todo, runTs, partitions, salt).observe(tally, tallied), ResultsTable, "part_id")
@@ -159,10 +168,11 @@ object ExtractJob {
       r.getTimestamp(2), r.getString(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7),
       r.getMap[String, Long](8).toMap, r.getMap[String, Long](9).toMap, r.getLong(10)))
 
-    // the single commit: mark this invocation's parts done, one file. The
-    // extractor is total, so every todo row has a results row and the
-    // tallied part ids are exactly the todo parts that have input.
-    if (done.nonEmpty) io.appendTable(done.toDS().coalesce(1).toDF(), ManifestTable)
+    // the single commit: mark this invocation's parts done, one file
+    // written from the driver (no rows, no commit). The extractor is
+    // total, so every todo row has a results row and the tallied part ids
+    // are exactly the todo parts that have input.
+    io.appendRows(spark, done, ManifestTable)(manifestRows)
     RunSummary(done.map(_.row_count).sum, done.map(_.ok_count).sum, done.map(_.err_count).sum, doneSet.size.toLong)
   }
 }

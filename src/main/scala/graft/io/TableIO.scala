@@ -2,8 +2,9 @@ package graft.io
 
 import java.io.FileNotFoundException
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftbridge.ParquetSchemas
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.graftbridge.{ParquetCommit, ParquetSchemas}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Storage seam (SURVEY.md §7.1.9). Production binds this to Iceberg
@@ -15,6 +16,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 trait TableIO {
   def readTable(spark: SparkSession, name: String): DataFrame
   def appendTable(df: DataFrame, name: String): Unit
+  /** Append `rows`, already on the driver, as one data file in one
+    * commit, under [[appendTable]]'s schema contract and without a Spark
+    * job: the commit of a table that gains a few rows at a time, such as
+    * the manifest. No rows, no file. Iceberg: a driver-side
+    * `newAppend().appendFile(...).commit()`. */
+  def appendRows[T](spark: SparkSession, rows: Seq[T], name: String)(implicit encoder: Encoder[T]): Unit
   /** Overwrite only the hive partitions present in `df` (Iceberg: dynamic
     * partition overwrite). */
   def overwritePartitions(df: DataFrame, name: String, partitionCol: String): Unit
@@ -66,22 +73,39 @@ final class ParquetTableIO(warehouse: String) extends TableIO {
   }
 
   override def appendTable(df: DataFrame, name: String): Unit = {
-    // Iceberg rejects appends whose schema does not match the table
-    // (evolution is an explicit DDL step); plain parquet would silently
-    // accept them and leave the directory with MIXED schemas whose read
-    // schema depends on which file gets sampled. Enforce the Iceberg
-    // contract here so the production swap changes no behavior
-    // (TableIOSpec pins this).
-    if (tableExists(df.sparkSession, name)) {
-      // Iceberg resolves append columns BY NAME (order-insensitive) and
-      // enforces nullability one-directionally: writing a nullable column
-      // into a required one is rejected, required-into-nullable is fine.
-      val existing = readTable(df.sparkSession, name).schema
+    requireAppendable(df.sparkSession, name, df.schema)
+    writer(df).mode("append").parquet(path(name))
+  }
+
+  /** Spark's parquet writer run on the driver
+    * ([[org.apache.spark.sql.graftbridge.ParquetCommit]]), with the
+    * Hadoop options of every other write: the file is written under a
+    * hidden name and committed by one rename, so a reader sees all of its
+    * rows or none, and a commit cut short leaves only a hidden file that
+    * no reader lists. */
+  override def appendRows[T](spark: SparkSession, rows: Seq[T], name: String)(implicit encoder: Encoder[T]): Unit = {
+    val rowEncoder = encoderFor(encoder)
+    requireAppendable(spark, name, rowEncoder.schema)
+    if (rows.nonEmpty) ParquetCommit.commit(spark, ForkFreeLocalFileSystem.writeOptions(spark, warehouse),
+      new Path(path(name)), rowEncoder.schema, rows.iterator.map(rowEncoder.createSerializer()))
+  }
+
+  /** Iceberg rejects appends whose schema does not match the table
+    * (evolution is an explicit DDL step); plain parquet would silently
+    * accept them and leave the directory with MIXED schemas whose read
+    * schema depends on which file gets sampled. Both appends enforce the
+    * Iceberg contract here so the production swap changes no behavior
+    * (TableIOSpec pins this): columns resolve BY NAME (order-insensitive)
+    * and nullability holds one way: a nullable column into a required one
+    * is rejected, required-into-nullable is fine. */
+  private def requireAppendable(spark: SparkSession, name: String, in: StructType): Unit =
+    if (tableExists(spark, name)) {
+      val existing = readTable(spark, name).schema
       val e = existing.fields.map(f => f.name -> f).toMap
-      val i = df.schema.fields.map(f => f.name -> f).toMap
+      val i = in.fields.map(f => f.name -> f).toMap
       def fail(why: String) = throw new IllegalArgumentException(
         s"appendTable($name): $why — table has ${existing.simpleString}; " +
-          s"append has ${df.schema.simpleString}. Evolve the table explicitly instead.")
+          s"append has ${in.simpleString}. Evolve the table explicitly instead.")
       if (e.keySet != i.keySet) fail("column-set mismatch")
       for ((n, ef) <- e) {
         val inf = i(n)
@@ -89,8 +113,6 @@ final class ParquetTableIO(warehouse: String) extends TableIO {
         if (!ef.nullable && inf.nullable) fail(s"nullable append into required column '$n'")
       }
     }
-    writer(df).mode("append").parquet(path(name))
-  }
 
   /** Whether values of type `in` may be appended into a column of type
     * `table`: the same type, with the column rule at every nesting level
@@ -118,12 +140,13 @@ final class ParquetTableIO(warehouse: String) extends TableIO {
       .partitionBy(partitionCol)
       .parquet(path(name))
 
-  /** Asks the path's own Hadoop FileSystem, so a URI warehouse (`file:`,
-    * `hdfs:`, `s3a:`) resolves like a plain local directory. */
-  override def tableExists(spark: SparkSession, name: String): Boolean = {
-    val p = new Path(path(name))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** A table exists once it holds a data file: a directory with only
+    * hidden or in-flight files, as a first write cut short leaves it, is
+    * no table yet. Asks the path's own Hadoop FileSystem, so a URI
+    * warehouse (`file:`, `hdfs:`, `s3a:`) resolves like a plain local
+    * directory. */
+  override def tableExists(spark: SparkSession, name: String): Boolean =
+    firstDataFile(spark, new Path(path(name))).isDefined
 }
 
 /** Bucketed-table layout for the recurring-join workloads (SURVEY §2's

@@ -21,10 +21,12 @@ object EvalJob {
     * always beats a failed retry, then (status, markdown[, error]) break
     * remaining ties totally — `dropDuplicates("url")` kept an ARBITRARY
     * row, so a url carrying both a failed retry and a success scored
-    * nondeterministically across runs. The rn=1 filter compiles to a
-    * partial WindowGroupLimit below the exchange (SPARK-37099), so a hot
-    * url ships one row per map partition — same scale shape as the old
-    * dropDuplicates. */
+    * nondeterministically across runs. `results` is already semi-filtered
+    * to the golden urls, and the pick's output is broadcast or collected,
+    * so the driver holds it anyway: the pick runs over one partition, and
+    * the one exchange ships all semi-filtered rows to it. A hash exchange
+    * would write `spark.sql.shuffle.partitions` shuffle outputs per map
+    * task for a few hundred rows. */
   private def pickPerUrl(results: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tiebreak = Seq("status", "markdown", "error")
@@ -32,7 +34,7 @@ object EvalJob {
       .map(c => col(c).asc_nulls_last)
     val w = Window.partitionBy(col("url"))
       .orderBy((when(col("status") === "ok", 0).otherwise(1).asc +: tiebreak): _*)
-    results.withColumn("__rn", row_number().over(w))
+    results.repartition(1).withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
 

@@ -12,11 +12,15 @@ import graft.ops.Dedup
   *
   * The reference is strictly batch (SURVEY §2.10) and the north_rule asks
   * for resumable batch; this wraps the SAME extraction stage under
-  * `Trigger.AvailableNow` so an incremental crawl drop-box is processed
-  * exactly once per file: source progress lives in the checkpoint (the
-  * streaming analog of the processed-partition manifest), each micro-batch
-  * lands through the same TableIO seam, and a restart after failure
-  * resumes from the last committed batch without reprocessing.
+  * `Trigger.AvailableNow` for an incremental crawl drop-box: source
+  * progress lives in the checkpoint (the streaming analog of the
+  * processed-partition manifest), each micro-batch lands through the same
+  * TableIO seam, and a restart after failure resumes from the last
+  * committed batch. Delivery is at-least-once on replay: Spark re-runs a
+  * batch whose commit-log entry is missing, with the same `batchId`, and
+  * its append writes the batch's rows a second time (40 streamed pages
+  * read back as 80 rows after such a replay). ROADMAP Direction 2, the
+  * batch job's body keyed by `batchId`, is what makes a replay overwrite.
   *
   * `dedupedStream` adds the one stateful operator a crawl feed wants:
   * first-seen-wins url dedup via dropDuplicates state (at 10^12 scale the
@@ -69,8 +73,8 @@ object StreamingExtract {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent append per batch through the same storage seam the
-        // batch job uses; batchId is available for exactly-once sinks
+        // one append per batch through the same storage seam the batch job
+        // uses; not idempotent: a replayed batchId appends its rows again
         io.appendTable(batch.withColumn("batch_id", lit(batchId)), resultsTable)
       }
       .start()

@@ -184,6 +184,26 @@ class EvalJobSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("the per-url pick runs over one partition: one SinglePartition exchange below its window") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try for (aqe <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      val det = EvalJob.detail(results.repartition(3), goldens)
+      assert(det.collect().length == 3)
+      val plan = det.queryExecution.executedPlan
+      val windows = Plans.collect(plan) { case w: WindowExec => w }
+      assert(windows.length == 1, s"aqe=$aqe\n$plan")
+      val exchanges = Plans.collect(windows.head) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.map(_.outputPartitioning) == Seq(SinglePartition), s"aqe=$aqe\n$plan")
+      // no partial group limit below the exchange: every semi-filtered row ships
+      assert(Plans.collect(exchanges.head) { case g: WindowGroupLimitExec => g }.isEmpty, s"aqe=$aqe\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
   test("detail plus summary over TableIO tables start a pinned number of Spark jobs") {
     val io = new graft.io.ParquetTableIO(SparkTestBase.tempDir("eval-jobs"))
     io.appendTable(results, "results")

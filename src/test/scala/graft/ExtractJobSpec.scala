@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.TaskAttemptContext
 import org.apache.parquet.hadoop.ParquetOutputCommitter
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -275,13 +275,19 @@ class ExtractJobSpec extends AnyFunSuite {
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
         val wh = SparkTestBase.tempDir("wh-one-pass")
         val io = new ParquetTableIO(wh)
-        val qes = executions(
-          ExtractJob.run(spark, spark.read.parquet(s"$in/pages"), io, runTs, partitions = 8, salt = 2))
+        val pages = spark.read.parquet(s"$in/pages")
+        var jobs = Seq.empty[String]
+        val qes = executions {
+          jobs = SparkTestBase.jobsDuring(ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2))
+        }
         assert(!qes.exists(scans(_).contains("results")), s"aqe=$aqe: results read back")
         assert(qes.count(scans(_).contains("pages")) == 1, s"aqe=$aqe: ${qes.map(scans)}")
-        // two writes: the results, then the manifest append, as one file
-        assert(qes.flatMap(writes) == Seq("results", "manifest"), s"aqe=$aqe: ${qes.map(writes)}")
+        // one write, the results; the manifest commit is written on the
+        // driver, still as one file
+        assert(qes.flatMap(writes) == Seq("results"), s"aqe=$aqe: ${qes.map(writes)}")
         assert(new java.io.File(s"$wh/manifest").list().count(_.endsWith(".parquet")) == 1)
+        // the results write's job, and under AQE the job of its map stage
+        assert(jobs.length == (if (aqe == "true") 2 else 1), s"aqe=$aqe: $jobs")
         // the tally is evaluated in the write's result stage: above the
         // one part-aligned exchange, with no exchange above it
         val write = qes.filter(writes(_).contains("results"))
@@ -299,6 +305,46 @@ class ExtractJobSpec extends AnyFunSuite {
         }
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("a manifest commit cut short before its rename: the next run redoes exactly its parts") {
+    import spark.implicits._
+    val pages = Synth.pagesDs(spark, 120, seed = 31L, parallelism = 4).toDF()
+    val firstHalf = pages.filter(pmod(xxhash64($"url"), lit(8)) < 4)
+    def results(io: ParquetTableIO) = io.readTable(spark, "results")
+      .select("part_id", "url", "status", "markdown").as[(Int, String, String, String)].collect().sorted.toSeq
+    def hidden(wh: String) = new java.io.File(s"$wh/manifest").list().toSeq.filter(_.startsWith("."))
+    val clean = new ParquetTableIO(SparkTestBase.tempDir("wh-clean"))
+    ExtractJob.run(spark, pages, clean, runTs, partitions = 8, salt = 2)
+    val (cleanDone, cleanResults) = (doneRows(clean), results(clean))
+    assert(cleanDone.map(_.part_id) == (0 until 8))
+
+    // the first commit of a warehouse, cut short: no manifest, so the next run redoes every part
+    val fresh = SparkTestBase.tempDir("wh-cut-fresh")
+    intercept[java.io.IOException](ExtractJob.run(spark, pages, new CutShortCommits(fresh), runTs, 8, 2))
+    assert(hidden(fresh).exists(_.endsWith(".parquet")) && !new ParquetTableIO(fresh).tableExists(spark, "manifest"))
+    val io = new ParquetTableIO(fresh)
+    assert(ExtractJob.run(spark, pages, io, runTs, partitions = 8, salt = 2) ==
+      ExtractJob.RunSummary(120, cleanDone.map(_.ok_count).sum, cleanDone.map(_.err_count).sum, 0))
+    assert(doneRows(io) == cleanDone && results(io) == cleanResults)
+
+    // a later commit, cut short: readers see the earlier commit only, and
+    // the next run redoes exactly the parts of the one cut short
+    val wh = SparkTestBase.tempDir("wh-cut-later")
+    val later = new ParquetTableIO(wh)
+    assert(ExtractJob.run(spark, firstHalf, later, runTs, partitions = 8, salt = 2).skippedParts == 0)
+    val committed = later.readTable(spark, "manifest").as[ManifestRow].collect().toSeq
+    assert(committed.map(_.part_id).sorted == (0 until 4))
+    intercept[java.io.IOException](ExtractJob.run(spark, pages, new CutShortCommits(wh), runTs, 8, 2))
+    assert(hidden(wh).count(_.endsWith(".parquet")) == 1, hidden(wh))
+    assert(new java.io.File(s"$wh/manifest").list().count(n => !n.startsWith(".")) == 1)
+    assert(later.readTable(spark, "manifest").as[ManifestRow].collect().toSeq == committed)
+    assert(spark.read.parquet(s"$wh/manifest").as[ManifestRow].collect().toSeq == committed)
+    val redo = ExtractJob.run(spark, pages, later, runTs, partitions = 8, salt = 2)
+    val redone = cleanDone.filter(_.part_id >= 4)
+    assert(redo == ExtractJob.RunSummary(redone.map(_.row_count).sum, redone.map(_.ok_count).sum,
+      redone.map(_.err_count).sum, 4))
+    assert(doneRows(later) == cleanDone && results(later) == cleanResults)
   }
 
   test("a manifest of the old columns is refused before any results are written") {
@@ -584,6 +630,19 @@ class ExtractJobSpec extends AnyFunSuite {
       assert(s.start >= 0 && s.end <= e.markdown.length && s.start < s.end)
     }
   }
+}
+
+/** A warehouse whose `appendRows` commits are cut short: once the file
+  * is written, before its rename, the rows run out with an exception. */
+final class CutShortCommits(warehouse: String) extends graft.io.TableIO {
+  private val io = new ParquetTableIO(warehouse)
+  def readTable(spark: SparkSession, name: String): DataFrame = io.readTable(spark, name)
+  def appendTable(df: DataFrame, name: String): Unit = io.appendTable(df, name)
+  def appendRows[T](spark: SparkSession, rows: Seq[T], name: String)(implicit encoder: Encoder[T]): Unit =
+    io.appendRows(spark, rows.to(LazyList).lazyAppendedAll(throw new java.io.IOException("cut short")), name)
+  def overwritePartitions(df: DataFrame, name: String, partitionCol: String): Unit =
+    io.overwritePartitions(df, name, partitionCol)
+  def tableExists(spark: SparkSession, name: String): Boolean = io.tableExists(spark, name)
 }
 
 /** The child JVM of the "lineage under a task retry" spec: one

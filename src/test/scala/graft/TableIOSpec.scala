@@ -189,6 +189,15 @@ class TableIOSpec extends AnyFunSuite {
     finally walk.close()
   }
 
+  /** Manifest rows with every field shape: maps (one empty), timestamps, a null status. */
+  private lazy val manifestRows = {
+    import graft.model.ManifestRow
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00.123456")
+    Seq(ManifestRow(3, 8, ts, "done", 2, 1, 1, 7L, Map("html" -> 1L, "pdf" -> 1L), Map("pdf_no_text" -> 1L), 10),
+      ManifestRow(5, 8, null, null, 0, 0, 0, Long.MinValue, Map.empty, Map.empty, 0),
+      ManifestRow(0, 8, ts, "done", Long.MaxValue, 3, 4, -1L, Map("image" -> 4L), Map("unsupported_media" -> 4L), 1))
+  }
+
   test("a local write starts no process: overwrite, append and bucketed writes, plain and file: warehouses") {
     val frame = (0L until 160L).map(i => ((i % 16).toInt, i, s"v$i")).toDF("part_id", "id", "v")
     for (uri <- Seq(false, true)) {
@@ -200,11 +209,14 @@ class TableIOSpec extends AnyFunSuite {
         tio.overwritePartitions(frame, "parts", "part_id")
         tio.appendTable(frame, "appended")
         BucketedTableIO.writeBucketed(frame, "tio_nofork_bucketed", wh, "id", 4)
+        tio.appendRows(spark, manifestRows, "rows")
+        tio.appendRows(spark, manifestRows, "rows")
       }
       assert(starts.isEmpty, s"uri=$uri: ${starts.size} processes, first: ${starts.take(3)}")
       assert(new java.io.File(s"$dir/parts").list().count(_.startsWith("part_id=")) == 16)
       assert(tio.readTable(spark, "appended").count() == 320)
       assert(spark.table("tio_nofork_bucketed").count() == 160)
+      assert(tio.readTable(spark, "rows").count() == 2 * manifestRows.length)
       // the filesystem binding is per write: the catalog entry does not keep it
       val ddl = spark.sql("SHOW CREATE TABLE tio_nofork_bucketed").head().getString(0)
       assert(!ddl.contains("fs.file.impl"), ddl)
@@ -358,4 +370,80 @@ class TableIOSpec extends AnyFunSuite {
     val missing = intercept[Exception](tio.readTable(spark, "missing"))
     assert(missing.getMessage == intercept[Exception](spark.read.parquet(s"$dir/missing")).getMessage, missing)
   }
+
+  /** The visible parquet files of `dir`. */
+  private def parquetFiles(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten.filter(n => !n.startsWith(".") && n.endsWith(".parquet")).sorted
+
+  test("appendRows writes what appendTable writes, as one file, and starts no Spark job") {
+    import graft.model.ManifestRow
+    val (tio, dir) = fresh()
+    tio.appendTable(manifestRows.toDS().coalesce(1).toDF(), "by_frame")
+    assert(SparkTestBase.jobsDuring(tio.appendRows(spark, manifestRows, "by_rows")).isEmpty)
+    val (byFrame, byRows) = (tio.readTable(spark, "by_frame"), tio.readTable(spark, "by_rows"))
+    assert(byRows.schema == byFrame.schema, s"\n${byRows.schema.treeString}\n${byFrame.schema.treeString}")
+    assert(rows(byRows) == rows(byFrame))
+    assert(byRows.as[ManifestRow].collect().sortBy(_.part_id).toSeq == manifestRows.sortBy(_.part_id))
+    assert(rows(spark.read.parquet(s"$dir/by_rows")) == rows(byFrame))
+    // one visible data file, named as a Spark write names it, with its checksum
+    val files = parquetFiles(s"$dir/by_rows")
+    assert(files.length == 1 && files.head.matches("part-00000-[0-9a-f-]{36}-c000\\.snappy\\.parquet"), files)
+    assert(new java.io.File(s"$dir/by_rows").list().toSet == Set(files.head, s".${files.head}.crc"))
+    assert(mode(java.nio.file.Paths.get(s"$dir/by_rows/${files.head}")) ==
+      mode(java.nio.file.Paths.get(s"$dir/by_frame/${parquetFiles(s"$dir/by_frame").head}")))
+    // a second commit adds one file; no rows, no file
+    tio.appendRows(spark, manifestRows.take(1), "by_rows")
+    tio.appendRows(spark, Seq.empty[ManifestRow], "by_rows")
+    tio.appendRows(spark, Seq.empty[ManifestRow], "never")
+    assert(parquetFiles(s"$dir/by_rows").length == 2 && !tio.tableExists(spark, "never"))
+    assert(tio.readTable(spark, "by_rows").count() == manifestRows.length + 1)
+  }
+
+  test("appendRows refuses a mismatched schema with appendTable's message") {
+    val (tio, dir) = fresh()
+    tio.appendTable(Seq((1L, "a")).toDF("id", "v"), "t")
+    def refused(rows: => Unit, frame: => Unit): Unit = {
+      val (got, want) = (intercept[IllegalArgumentException](rows), intercept[IllegalArgumentException](frame))
+      assert(got.getMessage == want.getMessage)
+    }
+    import TableIOSpec._
+    refused(tio.appendRows(spark, Seq(IdVScore(2L, "b", 0.5)), "t"), tio.appendTable(Seq(IdVScore(2L, "b", 0.5)).toDF(), "t"))
+    refused(tio.appendRows(spark, Seq(IdIntV(2, "b")), "t"), tio.appendTable(Seq(IdIntV(2, "b")).toDF(), "t"))
+    val names = intercept[IllegalArgumentException](tio.appendRows(spark, Seq((2L, "b")), "t"))
+    assert(names.getMessage.contains("appendTable(t): column-set mismatch"), names.getMessage)
+    val types = intercept[IllegalArgumentException](tio.appendRows(spark, Seq(IdIntV(2, "b")), "t"))
+    assert(types.getMessage.contains("type mismatch on 'id'"), types.getMessage)
+    // by name, as appendTable resolves it: a case class with the same columns appends
+    tio.appendRows(spark, Seq(IdV("r", 4L)), "t")
+    assert(parquetFiles(s"$dir/t").length == 2)
+    assert(tio.readTable(spark, "t").select("id", "v").as[(Long, String)].collect().sortBy(_._1).toSeq ==
+      Seq((1L, "a"), (4L, "r")))
+  }
+
+  test("a commit cut short before its rename leaves only a hidden file, which no reader lists") {
+    val (tio, dir) = fresh()
+    val cut = new CutShortCommits(dir) // the rows run out with an exception once the writer has written them
+    // the first commit of a table: it does not exist afterwards
+    assert(intercept[java.io.IOException](cut.appendRows(spark, manifestRows, "m")).getMessage == "cut short")
+    val leftover = new java.io.File(s"$dir/m").list().toSeq
+    assert(leftover.nonEmpty && leftover.forall(_.startsWith(".")) && leftover.exists(_.endsWith(".parquet")), leftover)
+    assert(!tio.tableExists(spark, "m"))
+    // the hidden file holds every row (read under a visible name), and readers still skip it
+    val copy = Files.createTempDirectory("tio-leftover")
+    Files.copy(java.nio.file.Paths.get(s"$dir/m/${leftover.filter(_.endsWith(".parquet")).head}"), copy.resolve("m.parquet"))
+    assert(spark.read.parquet(copy.toString).count() == manifestRows.length)
+    // a later commit: readers see the committed rows only
+    tio.appendRows(spark, manifestRows.take(1), "m")
+    intercept[java.io.IOException](cut.appendRows(spark, manifestRows, "m"))
+    assert(parquetFiles(s"$dir/m").length == 1)
+    assert(new java.io.File(s"$dir/m").list().count(n => n.startsWith(".") && n.endsWith(".parquet")) == 2)
+    assert(rows(tio.readTable(spark, "m")) == rows(manifestRows.take(1).toDS().toDF()))
+    assert(rows(spark.read.parquet(s"$dir/m")) == rows(manifestRows.take(1).toDS().toDF()))
+  }
+}
+
+object TableIOSpec {
+  final case class IdV(v: String, id: Long)
+  final case class IdIntV(id: Int, v: String)
+  final case class IdVScore(id: Long, v: String, score: Double)
 }
