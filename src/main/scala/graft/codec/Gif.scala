@@ -6,16 +6,16 @@ package graft.codec
   *
   * Decode: logical screen descriptor, global/local color tables,
   * extension-block skipping, the FIRST image frame via variable-width
-  * LZW (clear/end codes, 4096-entry dictionary) including the 4-pass
-  * interlace layout — [[decode]] is the thumbnail/feature-extraction
-  * read. [[decodeFrames]] decodes the WHOLE animation with GIF89a
+  * LZW ([[Streams.lzwExactly]], LSB-first from the frame's minimum code
+  * size) including the 4-pass interlace layout — [[decode]] is the
+  * thumbnail/feature-extraction read. [[decodeFrames]] decodes the WHOLE animation with GIF89a
   * compositing semantics (frame offsets, transparency holes, disposal
   * 1/2/3, NETSCAPE loop count) — animated GIFs are the web's
   * lightweight video, and frame sampling needs true composited frames.
   *
   * Encode (test/fixture twins): GIF87a single frame and GIF89a
-  * animation ([[encodeAnimated]]), global palette, real LZW with
-  * dictionary growth. Lossless given a ≤256-color palette, so
+  * animation ([[encodeAnimated]]), global palette, LZW through
+  * [[Streams.lzwEncode]]. Lossless given a ≤256-color palette, so
   * round-trips are bit-exact.
   */
 object Gif {
@@ -30,166 +30,126 @@ object Gif {
 
   private def u16(b: Array[Byte], p: Int): Int = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
 
-  private def decodeImpl(b: Array[Byte]): Either[String, Jpeg.Image] = {
+  /** The logical screen and the global color table (null when absent);
+    * `start` is where the blocks begin. */
+  private final case class Screen(w: Int, h: Int, gct: Array[Byte], start: Int)
+
+  /** The header, with the caller's bound on the screen size (`fits`). */
+  private def readScreen(b: Array[Byte], fits: (Int, Int) => Boolean): Either[String, Screen] = {
     if (!isGif(b)) return Left("gif: bad signature")
     if (b.length < 13) return Left("gif: truncated header")
     val sw = u16(b, 6); val sh = u16(b, 8)
-    if (sw <= 0 || sh <= 0) return Left("gif: bad screen size")
+    if (sw <= 0 || sh <= 0 || !fits(sw, sh)) return Left("gif: bad screen size")
     val flags = b(10) & 0xff
-    var p = 13
-    var gct: Array[Byte] = null
-    if ((flags & 0x80) != 0) {
-      val n = 2 << (flags & 7)
-      if (p + 3 * n > b.length) return Left("gif: truncated global color table")
-      gct = java.util.Arrays.copyOfRange(b, p, p + 3 * n)
+    if ((flags & 0x80) == 0) return Right(Screen(sw, sh, null, 13))
+    val n = 2 << (flags & 7)
+    if (13 + 3 * n > b.length) return Left("gif: truncated global color table")
+    Right(Screen(sw, sh, java.util.Arrays.copyOfRange(b, 13, 13 + 3 * n), 13 + 3 * n))
+  }
+
+  /** Past the extension block at `p` (label, then sub-blocks). */
+  private def skipExtension(b: Array[Byte], p0: Int): Int = {
+    var p = p0 + 2
+    while (p < b.length && (b(p) & 0xff) != 0) p += 1 + (b(p) & 0xff)
+    p + 1
+  }
+
+  /** One image: its rect, palette and indices, `rows(k)` the row the k-th
+    * stored row belongs on (the four passes when interlaced), `end` past
+    * its block terminator. */
+  private final case class Frame(left: Int, top: Int, w: Int, h: Int, pal: Array[Byte],
+      indices: Array[Byte], rows: Array[Int], end: Int)
+
+  /** The image at `p0` (its 0x2c separator): descriptor, local color
+    * table, the caller's rect check (`fits`, else `misfit`), LZW code
+    * size, data sub-blocks and the LZW decode of w × h indices. */
+  private def readFrame(b: Array[Byte], p0: Int, gct: Array[Byte],
+      fits: (Int, Int, Int, Int) => Boolean, misfit: String): Either[String, Frame] = {
+    if (p0 + 10 > b.length) return Left("gif: truncated image descriptor")
+    val left = u16(b, p0 + 1); val top = u16(b, p0 + 3)
+    val iw = u16(b, p0 + 5); val ih = u16(b, p0 + 7)
+    val iflags = b(p0 + 9) & 0xff
+    var p = p0 + 10
+    var pal = gct
+    if ((iflags & 0x80) != 0) {
+      val n = 2 << (iflags & 7)
+      if (p + 3 * n > b.length) return Left("gif: truncated local color table")
+      pal = java.util.Arrays.copyOfRange(b, p, p + 3 * n)
       p += 3 * n
     }
+    if (pal == null) return Left("gif: no color table")
+    if (iw <= 0 || ih <= 0 || !fits(left, top, iw, ih)) return Left(misfit)
+    if (p >= b.length) return Left("gif: missing LZW code size")
+    val minCode = b(p) & 0xff
+    p += 1
+    if (minCode < 2 || minCode > 8) return Left("gif: bad LZW min code size")
+    val data = new java.io.ByteArrayOutputStream()
+    while (p < b.length && (b(p) & 0xff) != 0) {
+      val n = b(p) & 0xff
+      if (p + 1 + n > b.length) return Left("gif: truncated data sub-block")
+      data.write(b, p + 1, n)
+      p += 1 + n
+    }
+    // a decoder stops at w × h indices and needs no end code after them
+    val indices = Streams.lzwExactly(data.toByteArray, iw * ih, rootWidth = minCode) match {
+      case Right(ix) if ix.length == iw * ih => ix
+      case Right(_) => return Left("gif: LZW ended early")
+      case Left(Streams.Stop.Truncated(_)) => return Left("gif: LZW stream truncated")
+      case Left(_) => return Left("gif: LZW code out of range")
+    }
+    val rows =
+      if ((iflags & 0x40) == 0) Array.tabulate(ih)(identity)
+      else Seq((0, 8), (4, 8), (2, 4), (1, 2)).flatMap { case (y, step) => y until ih by step }.toArray
+    Right(Frame(left, top, iw, ih, pal, indices, rows, p + 1))
+  }
+
+  /** Draws `f` with its top-left at (x0, y0) on an RGB canvas `cw` pixels
+    * wide, leaving pixels of index `trans` (−1: none) as they are; the
+    * error when an index is past the palette. */
+  private def draw(f: Frame, canvas: Array[Byte], cw: Int, x0: Int, y0: Int,
+      trans: Int): Option[String] = {
+    val maxIdx = f.pal.length / 3
+    var k = 0
+    while (k < f.h) {
+      val dstY = y0 + f.rows(k)
+      var x = 0
+      while (x < f.w) {
+        val idx = f.indices(k * f.w + x) & 0xff
+        if (idx >= maxIdx) return Some("gif: palette index out of range")
+        if (idx != trans) {
+          val o = (dstY * cw + x0 + x) * 3
+          canvas(o) = f.pal(3 * idx); canvas(o + 1) = f.pal(3 * idx + 1); canvas(o + 2) = f.pal(3 * idx + 2)
+        }
+        x += 1
+      }
+      k += 1
+    }
+    None
+  }
+
+  private def decodeImpl(b: Array[Byte]): Either[String, Jpeg.Image] = {
+    val screen = readScreen(b, (_, _) => true) match {
+      case Right(s) => s
+      case Left(e) => return Left(e)
+    }
+    var p = screen.start
     while (p < b.length) {
       (b(p) & 0xff) match {
         case 0x3b => return Left("gif: no image data before trailer")
-        case 0x21 => // extension: label + sub-blocks
-          p += 2
-          while (p < b.length && (b(p) & 0xff) != 0) p += 1 + (b(p) & 0xff)
-          p += 1
-        case 0x2c => // image descriptor
-          if (p + 10 > b.length) return Left("gif: truncated image descriptor")
-          val iw = u16(b, p + 5); val ih = u16(b, p + 7)
-          val iflags = b(p + 9) & 0xff
-          val interlaced = (iflags & 0x40) != 0
-          p += 10
-          var pal = gct
-          if ((iflags & 0x80) != 0) {
-            val n = 2 << (iflags & 7)
-            if (p + 3 * n > b.length) return Left("gif: truncated local color table")
-            pal = java.util.Arrays.copyOfRange(b, p, p + 3 * n)
-            p += 3 * n
-          }
-          if (pal == null) return Left("gif: no color table")
-          if (iw <= 0 || ih <= 0 || iw.toLong * ih > Streams.MaxDecodedBytes / 4)
-            return Left("gif: bad frame size") // alloc ceiling, not just overflow guard
-          if (p >= b.length) return Left("gif: missing LZW code size")
-          val minCode = b(p) & 0xff
-          p += 1
-          if (minCode < 2 || minCode > 8) return Left("gif: bad LZW min code size")
-          // gather sub-blocks
-          val data = new java.io.ByteArrayOutputStream()
-          while (p < b.length && (b(p) & 0xff) != 0) {
-            val n = b(p) & 0xff
-            if (p + 1 + n > b.length) return Left("gif: truncated data sub-block")
-            data.write(b, p + 1, n)
-            p += 1 + n
-          }
-          val indices = lzwDecode(data.toByteArray, minCode, iw * ih) match {
-            case Right(ix) => ix
+        case 0x21 => p = skipExtension(b, p)
+        case 0x2c =>
+          // the frame alone is the image: its size is the alloc ceiling
+          val f = readFrame(b, p, screen.gct, (_, _, w, h) => w.toLong * h <= Streams.MaxDecodedBytes / 4,
+            "gif: bad frame size") match {
+            case Right(f) => f
             case Left(e) => return Left(e)
           }
-          // de-interlace + palette resolve
-          val maxIdx = pal.length / 3
-          val out = new Array[Byte](iw * ih * 3)
-          val rowOrder: Array[Int] =
-            if (!interlaced) Array.tabulate(ih)(identity)
-            else {
-              val o = new Array[Int](ih)
-              var k = 0
-              for (start <- Seq(0, 4, 2, 1); step <- Seq(Seq(8, 8, 4, 2)(Seq(0, 4, 2, 1).indexOf(start)))) {
-                var y = start
-                while (y < ih) { o(k) = y; k += 1; y += step }
-              }
-              o
-            }
-          var srcRow = 0
-          while (srcRow < ih) {
-            val dstY = rowOrder(srcRow)
-            var x = 0
-            while (x < iw) {
-              val idx = indices(srcRow * iw + x) & 0xff
-              if (idx >= maxIdx) return Left("gif: palette index out of range")
-              val o = (dstY * iw + x) * 3
-              out(o) = pal(3 * idx); out(o + 1) = pal(3 * idx + 1); out(o + 2) = pal(3 * idx + 2)
-              x += 1
-            }
-            srcRow += 1
-          }
-          return Right(Jpeg.Image(iw, ih, 3, out))
+          val out = new Array[Byte](f.w * f.h * 3)
+          return draw(f, out, f.w, 0, 0, -1).toLeft(Jpeg.Image(f.w, f.h, 3, out))
         case other => return Left(f"gif: unknown block 0x$other%02x")
       }
     }
     Left("gif: no image frame")
-  }
-
-  /** Variable-width LZW decode (GIF flavor: little-endian bit packing,
-    * clear/end codes, dictionary capped at 4096). */
-  private def lzwDecode(data: Array[Byte], minCode: Int, nPixels: Int): Either[String, Array[Byte]] = {
-    val clearCode = 1 << minCode
-    val endCode = clearCode + 1
-    val out = new Array[Byte](nPixels)
-    var outPos = 0
-    // dictionary as (prefix, suffix) pairs
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    var dictSize = 0
-    var codeWidth = 0
-    def reset(): Unit = { dictSize = endCode + 1; codeWidth = minCode + 1 }
-    reset()
-    var bitPos = 0
-    val nBits = data.length * 8
-    def readCode(): Int = {
-      if (bitPos + codeWidth > nBits) return -1
-      var v = 0; var i = 0
-      while (i < codeWidth) {
-        val bp = bitPos + i
-        v |= ((data(bp >> 3) >> (bp & 7)) & 1) << i
-        i += 1
-      }
-      bitPos += codeWidth
-      v
-    }
-    val stack = new Array[Byte](4096)
-    var prev = -1
-    while (outPos < nPixels) {
-      val code = readCode()
-      if (code < 0) return Left("gif: LZW stream truncated")
-      if (code == clearCode) { reset(); prev = -1 }
-      else if (code == endCode) {
-        if (outPos < nPixels) return Left("gif: LZW ended early")
-      } else {
-        if (code >= dictSize && !(code == dictSize && prev >= 0))
-          return Left("gif: LZW code out of range")
-        // expand code (or the KwK special case) onto the stack
-        var sp = 0
-        var cur = code
-        var firstByte: Byte = 0
-        if (code == dictSize) { // KwK: prev string + its first byte
-          cur = prev
-          // placeholder; the appended byte equals prev's first byte
-        }
-        while (cur >= clearCode + 2) { // composite entry
-          stack(sp) = suffix(cur); sp += 1
-          cur = prefix(cur)
-        }
-        firstByte = cur.toByte // literal root
-        stack(sp) = firstByte; sp += 1
-        if (code == dictSize) {
-          // emit prev's expansion then firstByte (already arranged: the
-          // stack currently holds prev's string; append firstByte FIRST
-          // in output order means pushing it at the BOTTOM — handle by
-          // writing stack then the extra byte)
-        }
-        // write stack in reverse
-        var i = sp - 1
-        while (i >= 0 && outPos < nPixels) { out(outPos) = stack(i); outPos += 1; i -= 1 }
-        if (code == dictSize && outPos < nPixels) { out(outPos) = firstByte; outPos += 1 }
-        // grow dictionary
-        if (prev >= 0 && dictSize < 4096) {
-          prefix(dictSize) = prev
-          suffix(dictSize) = firstByte
-          dictSize += 1
-          if (dictSize == (1 << codeWidth) && codeWidth < 12) codeWidth += 1
-        }
-        prev = code
-      }
-    }
-    Right(out)
   }
 
   /** Encode indexed pixels (values < palette size) as a one-frame GIF87a.
@@ -197,71 +157,42 @@ object Gif {
   def encode(indices: Array[Byte], width: Int, height: Int, palette: Array[Byte]): Array[Byte] = {
     require(width > 0 && height > 0 && indices.length == width * height, "bad image shape")
     require(palette.length % 3 == 0, "palette must be RGB triples")
-    val nColors = palette.length / 3
-    require(nColors >= 2 && nColors <= 256 && Integer.bitCount(nColors) == 1,
-      "palette size must be a power of two in [2, 256]")
-    val colorBits = Integer.numberOfTrailingZeros(nColors)
-    val minCode = math.max(2, colorBits)
     val out = new java.io.ByteArrayOutputStream(indices.length / 2 + 64)
-    out.write("GIF87a".getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    le16(width); le16(height)
-    out.write(0x80 | (colorBits - 1 max 0)) // GCT present, size bits
-    out.write(0); out.write(0)
-    out.write(palette, 0, palette.length)
-    out.write(0x2c) // image descriptor
-    le16(0); le16(0); le16(width); le16(height)
-    out.write(0) // no LCT, not interlaced
-    out.write(minCode)
-    writeLzwBlocks(out, indices, minCode)
+    val minCode = writeScreen(out, "GIF87a", width, height, palette)
+    writeImage(out, 0, 0, width, height, indices, minCode)
     out.write(0x3b) // trailer
     out.toByteArray
   }
 
-  /** LZW-encode indices and append as length-prefixed sub-blocks +
-    * terminator (shared by the still and animated writers). */
-  private def writeLzwBlocks(out: java.io.ByteArrayOutputStream,
+  /** Signature, logical screen descriptor and global palette; the LZW
+    * minimum code size for the palette. */
+  private def writeScreen(out: java.io.ByteArrayOutputStream, version: String, w: Int, h: Int,
+      palette: Array[Byte]): Int = {
+    val nColors = palette.length / 3
+    require(nColors >= 2 && nColors <= 256 && Integer.bitCount(nColors) == 1,
+      "palette size must be a power of two in [2, 256]")
+    val colorBits = Integer.numberOfTrailingZeros(nColors)
+    out.write(version.getBytes("US-ASCII"))
+    le16(out, w); le16(out, h)
+    out.write(0x80 | (colorBits - 1 max 0)) // GCT present, size bits
+    out.write(0); out.write(0)
+    out.write(palette, 0, palette.length)
+    math.max(2, colorBits)
+  }
+
+  private def le16(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
+    out.write(v & 0xff); out.write((v >> 8) & 0xff)
+  }
+
+  /** Image descriptor (no local table, not interlaced) and the LZW data
+    * as length-prefixed sub-blocks plus the terminator. */
+  private def writeImage(out: java.io.ByteArrayOutputStream, left: Int, top: Int, w: Int, h: Int,
       indices: Array[Byte], minCode: Int): Unit = {
-    val clearCode = 1 << minCode
-    val endCode = clearCode + 1
-    val dict = new java.util.HashMap[Integer, Integer]() // (prev<<8|byte) -> code
-    var dictSize = endCode + 1
-    var codeWidth = minCode + 1
-    val bits = new java.io.ByteArrayOutputStream()
-    var acc = 0L; var accN = 0
-    def putCode(c: Int): Unit = {
-      acc |= c.toLong << accN
-      accN += codeWidth
-      while (accN >= 8) { bits.write((acc & 0xff).toInt); acc >>>= 8; accN -= 8 }
-    }
-    putCode(clearCode)
-    var prev = indices(0) & 0xff
-    var i = 1
-    while (i < indices.length) {
-      val b = indices(i) & 0xff
-      val key = (prev << 8) | b
-      val hit = dict.get(key)
-      if (hit != null) prev = hit.intValue()
-      else {
-        putCode(prev)
-        if (dictSize < 4096) {
-          dict.put(key, dictSize)
-          if (dictSize == (1 << codeWidth) && codeWidth < 12) codeWidth += 1
-          dictSize += 1
-        } else {
-          putCode(clearCode)
-          dict.clear()
-          dictSize = endCode + 1
-          codeWidth = minCode + 1
-        }
-        prev = b
-      }
-      i += 1
-    }
-    putCode(prev)
-    putCode(endCode)
-    if (accN > 0) bits.write((acc & 0xff).toInt)
-    val z = bits.toByteArray
+    out.write(0x2c)
+    le16(out, left); le16(out, top); le16(out, w); le16(out, h)
+    out.write(0)
+    out.write(minCode)
+    val z = Streams.lzwEncode(indices, earlyChange = 0, lsbFirst = true, rootWidth = minCode)
     var off = 0
     while (off < z.length) {
       val n = math.min(255, z.length - off)
@@ -302,19 +233,12 @@ object Gif {
     catch { case e: Exception => Left(s"gif: ${e.getClass.getSimpleName}: ${e.getMessage}") }
 
   private def decodeFramesImpl(b: Array[Byte], maxFrames: Int): Either[String, Anim] = {
-    if (!isGif(b)) return Left("gif: bad signature")
-    if (b.length < 13) return Left("gif: truncated header")
-    val sw = u16(b, 6); val sh = u16(b, 8)
-    if (sw <= 0 || sh <= 0 || sw.toLong * sh > Streams.MaxDecodedBytes / 4) return Left("gif: bad screen size")
-    val flags = b(10) & 0xff
-    var p = 13
-    var gct: Array[Byte] = null
-    if ((flags & 0x80) != 0) {
-      val n = 2 << (flags & 7)
-      if (p + 3 * n > b.length) return Left("gif: truncated global color table")
-      gct = java.util.Arrays.copyOfRange(b, p, p + 3 * n)
-      p += 3 * n
-    }
+    val Screen(sw, sh, gct, start) =
+      readScreen(b, (w, h) => w.toLong * h <= Streams.MaxDecodedBytes / 4) match {
+        case Right(s) => s
+        case Left(e) => return Left(e)
+      }
+    var p = start
     val canvas = new Array[Byte](sw * sh * 3) // starts black
     var loop = -1
     val frames = Vector.newBuilder[Jpeg.Image]
@@ -324,7 +248,7 @@ object Gif {
     var delayCs = 0; var disposal = 0; var transIdx = -1
     // disposal of the PREVIOUS frame, to apply before the next draw
     var prevDisposal = 0
-    var prevRect: (Int, Int, Int, Int) = null
+    var prevRect: (Int, Int, Int, Int) = null // (left, top, w, h)
     var prevCanvas: Array[Byte] = null
     while (p < b.length) {
       (b(p) & 0xff) match {
@@ -347,50 +271,22 @@ object Gif {
             if (q + 4 <= b.length && (b(q) & 0xff) >= 3 && (b(q + 1) & 0xff) == 1)
               loop = u16(b, q + 2)
           }
-          p += 2
-          while (p < b.length && (b(p) & 0xff) != 0) p += 1 + (b(p) & 0xff)
-          p += 1
+          p = skipExtension(b, p)
         case 0x2c =>
           if (n >= maxFrames) return Left("gif: too many frames")
-          if (p + 10 > b.length) return Left("gif: truncated image descriptor")
-          val left = u16(b, p + 1); val top = u16(b, p + 3)
-          val iw = u16(b, p + 5); val ih = u16(b, p + 7)
-          val iflags = b(p + 9) & 0xff
-          val interlaced = (iflags & 0x40) != 0
-          p += 10
-          var pal = gct
-          if ((iflags & 0x80) != 0) {
-            val nn = 2 << (iflags & 7)
-            if (p + 3 * nn > b.length) return Left("gif: truncated local color table")
-            pal = java.util.Arrays.copyOfRange(b, p, p + 3 * nn)
-            p += 3 * nn
+          val f = readFrame(b, p, gct, (l, t, w, h) => l + w <= sw && t + h <= sh,
+            "gif: frame rect outside canvas") match {
+            case Right(f) => f
+            case Left(e) => return Left(e)
           }
-          if (pal == null) return Left("gif: no color table")
-          if (iw <= 0 || ih <= 0 || left + iw > sw || top + ih > sh)
-            return Left("gif: frame rect outside canvas")
-          if (p >= b.length) return Left("gif: missing LZW code size")
-          val minCode = b(p) & 0xff
-          p += 1
-          if (minCode < 2 || minCode > 8) return Left("gif: bad LZW min code size")
-          val data = new java.io.ByteArrayOutputStream()
-          while (p < b.length && (b(p) & 0xff) != 0) {
-            val nn = b(p) & 0xff
-            if (p + 1 + nn > b.length) return Left("gif: truncated data sub-block")
-            data.write(b, p + 1, nn)
-            p += 1 + nn
-          }
-          p += 1 // sub-block terminator
-          val indices = lzwDecode(data.toByteArray, minCode, iw * ih) match {
-            case Right(ix) => ix
-            case Left(e)   => return Left(e)
-          }
+          p = f.end
           // apply the PREVIOUS frame's disposal before drawing this one
           prevDisposal match {
             case 2 if prevRect != null =>
-              val (pl, pt, pw2, ph2) = prevRect
+              val (pl, pt, pw, ph) = prevRect
               var y = pt
-              while (y < pt + ph2) {
-                java.util.Arrays.fill(canvas, (y * sw + pl) * 3, (y * sw + pl + pw2) * 3, 0.toByte)
+              while (y < pt + ph) {
+                java.util.Arrays.fill(canvas, (y * sw + pl) * 3, (y * sw + pl + pw) * 3, 0.toByte)
                 y += 1
               }
             case 3 if prevCanvas != null =>
@@ -398,39 +294,12 @@ object Gif {
             case _ => ()
           }
           val saved = if (disposal == 3) canvas.clone() else null
-          val maxIdx = pal.length / 3
-          val rowOrder: Array[Int] =
-            if (!interlaced) Array.tabulate(ih)(identity)
-            else {
-              val o = new Array[Int](ih)
-              var k = 0
-              for ((start, step) <- Seq((0, 8), (4, 8), (2, 4), (1, 2))) {
-                var y = start
-                while (y < ih) { o(k) = y; k += 1; y += step }
-              }
-              o
-            }
-          var srcRow = 0
-          while (srcRow < ih) {
-            val dstY = top + rowOrder(srcRow)
-            var x = 0
-            while (x < iw) {
-              val idx = indices(srcRow * iw + x) & 0xff
-              if (idx >= maxIdx) return Left("gif: palette index out of range")
-              if (idx != transIdx) {
-                val o = (dstY * sw + left + x) * 3
-                canvas(o) = pal(3 * idx); canvas(o + 1) = pal(3 * idx + 1)
-                canvas(o + 2) = pal(3 * idx + 2)
-              }
-              x += 1
-            }
-            srcRow += 1
-          }
+          draw(f, canvas, sw, f.left, f.top, transIdx).foreach(e => return Left(e))
           frames += Jpeg.Image(sw, sh, 3, canvas.clone())
           delays += delayCs
           n += 1
           prevDisposal = disposal
-          prevRect = (left, top, iw, ih)
+          prevRect = (f.left, f.top, f.w, f.h)
           prevCanvas = saved
           delayCs = 0; disposal = 0; transIdx = -1
         case other => return Left(f"gif: unknown block 0x$other%02x")
@@ -445,22 +314,12 @@ object Gif {
       loop: Int, frames: Seq[FrameSpec]): Array[Byte] = {
     require(screenW > 0 && screenH > 0, "bad screen size")
     require(frames.nonEmpty, "at least one frame")
-    val nColors = palette.length / 3
-    require(nColors >= 2 && nColors <= 256 && Integer.bitCount(nColors) == 1,
-      "palette size must be a power of two in [2, 256]")
-    val colorBits = Integer.numberOfTrailingZeros(nColors)
-    val minCode = math.max(2, colorBits)
     val out = new java.io.ByteArrayOutputStream()
-    out.write("GIF89a".getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    le16(screenW); le16(screenH)
-    out.write(0x80 | (colorBits - 1 max 0))
-    out.write(0); out.write(0)
-    out.write(palette, 0, palette.length)
+    val minCode = writeScreen(out, "GIF89a", screenW, screenH, palette)
     // NETSCAPE2.0 loop extension
     out.write(0x21); out.write(0xff); out.write(11)
     out.write("NETSCAPE2.0".getBytes("US-ASCII"))
-    out.write(3); out.write(1); le16(loop); out.write(0)
+    out.write(3); out.write(1); le16(out, loop); out.write(0)
     for (f <- frames) {
       require(f.indices.length == f.width * f.height, "bad frame shape")
       require(f.left >= 0 && f.top >= 0 && f.left + f.width <= screenW &&
@@ -468,15 +327,10 @@ object Gif {
       // graphic control extension
       out.write(0x21); out.write(0xf9); out.write(4)
       out.write(((f.disposal & 7) << 2) | (if (f.transIdx >= 0) 1 else 0))
-      le16(f.delayCs)
+      le16(out, f.delayCs)
       out.write(if (f.transIdx >= 0) f.transIdx else 0)
       out.write(0)
-      // image descriptor + data
-      out.write(0x2c)
-      le16(f.left); le16(f.top); le16(f.width); le16(f.height)
-      out.write(0)
-      out.write(minCode)
-      writeLzwBlocks(out, f.indices, minCode)
+      writeImage(out, f.left, f.top, f.width, f.height, f.indices, minCode)
     }
     out.write(0x3b)
     out.toByteArray

@@ -301,53 +301,15 @@ object Png {
       System.arraycopy(pix, y * stride, raw, y * (stride + 1) + 1, stride)
       y += 1
     }
-    val defl = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    defl.setInput(raw); defl.finish()
-    val zbuf = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
-    val tmp = new Array[Byte](8192)
-    while (!defl.finished()) zbuf.write(tmp, 0, defl.deflate(tmp))
-    defl.end()
-
-    val out = new java.io.ByteArrayOutputStream(zbuf.size() + 128)
-    out.write(Signature, 0, 8)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      val l = data.length
-      out.write((l >>> 24) & 0xff); out.write((l >>> 16) & 0xff)
-      out.write((l >>> 8) & 0xff); out.write(l & 0xff)
-      val td = new Array[Byte](4 + l)
-      var i = 0
-      while (i < 4) { td(i) = typ.charAt(i).toByte; i += 1 }
-      System.arraycopy(data, 0, td, 4, l)
-      out.write(td, 0, td.length)
-      val c = crc(td, 0, td.length)
-      out.write(((c >>> 24) & 0xff).toInt); out.write(((c >>> 16) & 0xff).toInt)
-      out.write(((c >>> 8) & 0xff).toInt); out.write((c & 0xff).toInt)
-    }
-    val ihdr = new Array[Byte](13)
-    def be32(a: Array[Byte], p: Int, v: Int): Unit = {
-      a(p) = ((v >>> 24) & 0xff).toByte; a(p + 1) = ((v >>> 16) & 0xff).toByte
-      a(p + 2) = ((v >>> 8) & 0xff).toByte; a(p + 3) = (v & 0xff).toByte
-    }
-    be32(ihdr, 0, width); be32(ihdr, 4, height)
-    ihdr(8) = 8 // bit depth
-    ihdr(9) = (if (nComponents == 1) 0 else 2).toByte
-    ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0
-    chunk("IHDR", ihdr)
-    chunk("IDAT", zbuf.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
+    assemble(width, height, 8, if (nComponents == 1) 0 else 2, null, raw)
   }
 
-  // shared chunk-stream assembly for the low-bit twins
+  /** The chunk stream every encoder writes: IHDR, PLTE when given, one
+    * IDAT of the filtered rows, IEND. */
   private def assemble(width: Int, height: Int, bitDepth: Int, colorType: Int,
       plte: Array[Byte], packedRows: Array[Byte]): Array[Byte] = {
-    val defl = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    defl.setInput(packedRows); defl.finish()
-    val zbuf = new java.io.ByteArrayOutputStream(packedRows.length / 2 + 64)
-    val tmp = new Array[Byte](8192)
-    while (!defl.finished()) zbuf.write(tmp, 0, defl.deflate(tmp))
-    defl.end()
-    val out = new java.io.ByteArrayOutputStream(zbuf.size() + 128)
+    val zbuf = Streams.deflate(packedRows)
+    val out = new java.io.ByteArrayOutputStream(zbuf.length + 128)
     out.write(Signature, 0, 8)
     def chunk(typ: String, data: Array[Byte]): Unit = {
       val l = data.length
@@ -371,7 +333,7 @@ object Png {
     ihdr(8) = bitDepth.toByte; ihdr(9) = colorType.toByte
     chunk("IHDR", ihdr)
     if (plte != null) chunk("PLTE", plte)
-    chunk("IDAT", zbuf.toByteArray)
+    chunk("IDAT", zbuf)
     chunk("IEND", Array.emptyByteArray)
     out.toByteArray
   }

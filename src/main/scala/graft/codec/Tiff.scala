@@ -379,9 +379,6 @@ object Tiff {
     * Per-strip; `expected` bounds the output. Decodes through
     * [[Streams.lzw]]; the end code is required. */
   private[graft] object Lzw {
-    private val Clear = 256
-    private val Eoi = 257
-
     def decode(data: Array[Byte], expected: Int): Either[String, Array[Byte]] =
       if (expected < 0 || expected > Streams.MaxDecodedBytes) Left("tiff: lzw output too large")
       else Streams.lzw(data, earlyChange = 1, limit = expected) match {
@@ -391,60 +388,6 @@ object Tiff {
         case Left(Streams.Stop.BadCode) => Left("tiff: lzw code out of range")
         case Left(_) => Left("tiff: lzw stream truncated")
       }
-
-    def encode(data: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
-      var acc = 0L; var nBits = 0
-      var width = 9
-      def put(code: Int): Unit = {
-        acc = (acc << width) | code; nBits += width
-        while (nBits >= 8) { out.write(((acc >>> (nBits - 8)) & 0xff).toInt); nBits -= 8 }
-      }
-      // table: (prefixCode << 8 | byte) -> code
-      var table = new java.util.HashMap[Integer, Integer]()
-      var next = 258
-      put(Clear)
-      var cur = -1
-      var i = 0
-      while (i < data.length) {
-        val b = data(i) & 0xff
-        if (cur < 0) cur = b
-        else {
-          val key = (cur << 8) | b
-          val hit = table.get(key)
-          if (hit != null) cur = hit
-          else {
-            put(cur)
-            table.put(key, next)
-            next += 1
-            // early-change alignment: the encoder's k-th add happens one
-            // code EARLIER in the stream than the decoder's (the decoder
-            // only adds from its 2nd post-clear code), so the encoder
-            // widens at 1<<w where the decoder widens at (1<<w)-1 —
-            // validated both ways against ImageIO's independent codec
-            if (next == (1 << width) && width < 12) width += 1
-            if (next >= 4094) { // table nearly full: reset
-              put(Clear)
-              table = new java.util.HashMap[Integer, Integer]()
-              next = 258
-              width = 9
-            }
-            cur = b
-          }
-        }
-        i += 1
-      }
-      if (cur >= 0) put(cur)
-      // EOI fencepost: mid-stream the decoder lags the encoder by one
-      // add, so enc-bump-at-2^w / dec-bump-at-2^w-1 stay aligned — but
-      // at EOI the add counts coincide (no add follows the final code),
-      // so when the table size sits exactly on 2^w - 1 the decoder has
-      // widened and the encoder must too (ImageIO's decoder agrees)
-      if (next == (1 << width) - 1 && width < 12) width += 1
-      put(Eoi)
-      if (nBits > 0) out.write(((acc << (8 - nBits)) & 0xff).toInt)
-      out.toByteArray
-    }
   }
 
   /** PackBits (TIFF 6.0 §9 / classic Mac RLE). */
@@ -551,15 +494,8 @@ object Tiff {
   private def compressChunk(raw: Array[Byte], compression: Int): Array[Byte] =
     compression match {
       case 1 => raw
-      case 5 => Lzw.encode(raw)
-      case 8 =>
-        val defl = new java.util.zip.Deflater()
-        defl.setInput(raw); defl.finish()
-        val out = new java.io.ByteArrayOutputStream(raw.length / 2 + 32)
-        val buf = new Array[Byte](4096)
-        while (!defl.finished()) out.write(buf, 0, defl.deflate(buf))
-        defl.end()
-        out.toByteArray
+      case 5 => Streams.lzwEncode(raw, earlyChange = 1)
+      case 8 => Streams.deflate(raw)
       case _ => PackBits.encode(raw)
     }
 

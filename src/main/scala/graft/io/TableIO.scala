@@ -57,20 +57,38 @@ final class ParquetTableIO(warehouse: String) extends TableIO {
   private def writer(df: DataFrame) = df.write.options(ForkFreeLocalFileSystem.writeOptions(df.sparkSession, warehouse))
 
   override def readTable(spark: SparkSession, name: String): DataFrame =
-    firstDataFile(spark, new Path(path(name))) match {
-      case Some(file) => spark.read.schema(ParquetSchemas.fromFooter(spark, file)).parquet(path(name))
-      case None => spark.read.parquet(path(name))
-    }
+    read(spark, name, firstDataFile(spark, new Path(path(name))).map(_._1))
 
-  private def firstDataFile(spark: SparkSession, dir: Path): Option[FileStatus] = {
+  /** The table read with the data schema of `file`, its first data file. */
+  private def read(spark: SparkSession, name: String, file: Option[FileStatus]): DataFrame = file match {
+    case Some(f) => spark.read.schema(ParquetSchemas.fromFooter(spark, f)).parquet(path(name))
+    case None => spark.read.parquet(path(name))
+  }
+
+  /** The first data file under `dir`, and whether `dir` holds a
+    * subdirectory (so a read discovers partition columns). */
+  private def firstDataFile(spark: SparkSession, dir: Path): Option[(FileStatus, Boolean)] = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def list(d: Path) = fs.listStatus(d).filterNot(s => ParquetSchemas.notData(s.getPath.getName)).partition(_.isDirectory)
     def files(d: Path): Iterator[FileStatus] = {
-      val (dirs, here) =
-        fs.listStatus(d).filterNot(s => ParquetSchemas.notData(s.getPath.getName)).partition(_.isDirectory)
+      val (dirs, here) = list(d)
       here.iterator ++ dirs.iterator.flatMap(s => files(s.getPath))
     }
-    try files(dir).nextOption() catch { case _: FileNotFoundException => None }
+    try {
+      val (dirs, here) = list(dir)
+      (here.iterator ++ dirs.iterator.flatMap(s => files(s.getPath))).nextOption().map(_ -> dirs.nonEmpty)
+    } catch { case _: FileNotFoundException => None }
   }
+
+  /** The schema an append must match (None: no table yet), from one walk.
+    * An unpartitioned table's is its first file's footer as a read returns
+    * it; a partitioned table's adds the partition columns Spark's
+    * discovery infers, so it comes from the read. */
+  private[graft] def appendSchema(spark: SparkSession, name: String): Option[StructType] =
+    firstDataFile(spark, new Path(path(name))).map {
+      case (file, false) => ParquetSchemas.asRead(spark, file)
+      case (file, true) => read(spark, name, Some(file)).schema
+    }
 
   override def appendTable(df: DataFrame, name: String): Unit = {
     requireAppendable(df.sparkSession, name, df.schema)
@@ -99,8 +117,7 @@ final class ParquetTableIO(warehouse: String) extends TableIO {
     * and nullability holds one way: a nullable column into a required one
     * is rejected, required-into-nullable is fine. */
   private def requireAppendable(spark: SparkSession, name: String, in: StructType): Unit =
-    if (tableExists(spark, name)) {
-      val existing = readTable(spark, name).schema
+    appendSchema(spark, name).foreach { existing =>
       val e = existing.fields.map(f => f.name -> f).toMap
       val i = in.fields.map(f => f.name -> f).toMap
       def fail(why: String) = throw new IllegalArgumentException(

@@ -2,7 +2,8 @@ package graft.pdf
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.ISO_8859_1
-import java.util.zip.Deflater
+
+import graft.codec.Streams
 
 /** Minimal deterministic PDF writer — exists so the from-scratch parser is
   * testable with zero external data (SURVEY.md §7.1.2). Emits PDF 1.4 with a
@@ -222,7 +223,7 @@ object PdfWriter {
     filters.reverse.foldLeft(raw)((d, f) => encodeOne(f, d))
 
   def encodeOne(f: Filter, data: Array[Byte]): Array[Byte] = f match {
-    case FlateF     => deflate(data)
+    case FlateF     => Streams.deflate(data)
     case AsciiHexF  =>
       val sb = new StringBuilder(data.length * 2 + 1)
       data.foreach(b => sb.append(f"${b & 0xff}%02x"))
@@ -230,7 +231,7 @@ object PdfWriter {
       sb.toString.getBytes(ISO_8859_1)
     case Ascii85F   => ascii85Encode(data)
     case RunLengthF => runLengthEncode(data)
-    case LzwF       => lzwEncode(data)
+    case LzwF       => Streams.lzwEncode(data, earlyChange = 1) // the PDF default
   }
 
   private def ascii85Encode(data: Array[Byte]): Array[Byte] = {
@@ -292,60 +293,6 @@ object PdfWriter {
     out.toByteArray
   }
 
-  /** TIFF-style LZW with EarlyChange=1 (the PDF default). The encoder's
-    * dictionary runs one entry AHEAD of the decoder's (the decoder only
-    * learns an entry from the following code), so the encoder's classic
-    * bump at next == 1<<width is what an EarlyChange decoder — which bumps
-    * at next + 1 == 1<<width on its lagged count — stays aligned with. */
-  private def lzwEncode(data: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(data.length + 16)
-    var bitBuf = 0L
-    var bitCnt = 0
-    var width = 9
-    var next = 258
-    val table = scala.collection.mutable.LongMap.empty[Int] // (prefixCode << 8 | byte) → code
-    def put(code: Int): Unit = {
-      bitBuf = (bitBuf << width) | code
-      bitCnt += width
-      while (bitCnt >= 8) {
-        out.write(((bitBuf >>> (bitCnt - 8)) & 0xff).toInt)
-        bitCnt -= 8
-      }
-    }
-    def bumpWidth(): Unit = if (next >= (1 << width) && width < 12) width += 1
-    put(256) // clear
-    var prefix = -1
-    var i = 0
-    while (i < data.length) {
-      val b = data(i) & 0xff
-      if (prefix < 0) prefix = b
-      else {
-        val key = (prefix.toLong << 8) | b
-        val hit = table.getOrElse(key, -1)
-        if (hit >= 0) prefix = hit
-        else {
-          put(prefix)
-          if (next < 4095) {
-            table.update(key, next)
-            next += 1
-            bumpWidth()
-          } else { // table full: clear and restart
-            put(256)
-            table.clear()
-            next = 258
-            width = 9
-          }
-          prefix = b
-        }
-      }
-      i += 1
-    }
-    if (prefix >= 0) put(prefix)
-    put(257) // EOD
-    if (bitCnt > 0) out.write(((bitBuf << (8 - bitCnt)) & 0xff).toInt)
-    out.toByteArray
-  }
-
   /** Cross-reference flavor: classic PDF 1.4 table, or PDF 1.5+ xref
     * STREAM (optionally with the non-stream objects packed into a
     * compressed /ObjStm and the xref data run through the PNG Up
@@ -353,19 +300,6 @@ object PdfWriter {
   sealed trait XrefFlavor
   case object Classic extends XrefFlavor
   final case class XrefStream(objStm: Boolean = false, predictor: Boolean = false) extends XrefFlavor
-
-  private def deflate(raw: Array[Byte]): Array[Byte] = {
-    val d = new Deflater()
-    d.setInput(raw); d.finish()
-    val buf = new Array[Byte](raw.length * 2 + 64)
-    val out = new ByteArrayOutputStream()
-    while (!d.finished()) {
-      val n = d.deflate(buf)
-      out.write(buf, 0, n)
-    }
-    d.end()
-    out.toByteArray
-  }
 
   private def filterEntry(filters: Vector[Filter]): String = filters match {
     case Vector()  => ""
@@ -576,7 +510,7 @@ object PdfWriter {
           }
           streamObj(objStmNum,
             s" /Type /ObjStm /N ${dictObjs.length} /First $first /Filter /FlateDecode",
-            deflate(payload))
+            Streams.deflate(payload))
         } else {
           dictObjs.foreach { case (n, body) => directObj(n, body) }
         }
@@ -621,7 +555,7 @@ object PdfWriter {
         }
         val rawRows = rows.toByteArray
         val (xdata, parms) =
-          if (!predictor) (deflate(rawRows), "")
+          if (!predictor) (Streams.deflate(rawRows), "")
           else {
             // PNG Up (tag 2) per row — what real-world writers emit
             val nRows = rawRows.length / rowLen
@@ -637,7 +571,7 @@ object PdfWriter {
                 i += 1
               }
             }
-            (deflate(enc.toByteArray),
+            (Streams.deflate(enc.toByteArray),
               s" /DecodeParms << /Predictor 12 /Columns $rowLen >>")
           }
         streamObj(xrefNum,

@@ -179,17 +179,6 @@ object Warc {
     bos.toByteArray
   }
 
-  /** Deflate encode; `zlibWrapper = false` is the bare-deflate form. */
-  def deflateEncode(data: Array[Byte], zlibWrapper: Boolean = true): Array[Byte] = {
-    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, !zlibWrapper)
-    d.setInput(data); d.finish()
-    val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    val buf = new Array[Byte](1 << 12)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
   /** Content-Encoding decode: gzip / x-gzip, deflate (zlib-wrapped AND
     * the bare form servers mislabel as "deflate"), identity. Unknown
     * coding, damaged data or a body that decodes past the per-stream
@@ -225,7 +214,7 @@ object Warc {
     val encoded0 = contentEncoding match {
       case ""        => r.body
       case "gzip"    => gzipEncode(r.body)
-      case "deflate" => deflateEncode(r.body)
+      case "deflate" => Streams.deflate(r.body)
       case other     => throw new IllegalArgumentException(s"unsupported coding: $other")
     }
     val wire = if (chunked) chunkEncode(encoded0, chunkSize) else encoded0

@@ -36,6 +36,7 @@ object FuzzCampaign {
     def pdf(f: PdfWriter.Filter): Array[Byte] =
       PdfWriter.write(Vector(PdfWriter.PageSpec(Vector(lines), filters = Vector(f))))
     val text = lines.mkString("\n").getBytes("UTF-8")
+    val gif = Gif.encode(idx, 24, 16, pal16)
 
     val seeds: Seq[(String, Array[Byte], Array[Byte] => Any)] = Seq(
       ("vp8-synth", Vp8Synth.wrapWebp(Vp8Synth.synthesize(33, 21, 55, 25)),
@@ -99,15 +100,23 @@ object FuzzCampaign {
         (m: Array[Byte]) => Tiff.decode(m)),
       ("tiff-lzw", Tiff.encodeCompressed(rgb, 24, 16, 3, 5, rowsPerStrip = 6, predictor = true),
         (m: Array[Byte]) => Tiff.decode(m)),
+      ("gif", gif, (m: Array[Byte]) => Gif.decode(m)),
+      ("gif-interlaced", { val g = gif.clone(); g(13 + pal16.length + 9) = 0x40; g }, // descriptor flags
+        (m: Array[Byte]) => Gif.decode(m)),
+      ("gif-animated", Gif.encodeAnimated(24, 16, pal16, 0, Seq(
+        Gif.FrameSpec(idx, 0, 0, 24, 16, 5, 1),
+        Gif.FrameSpec(idx.take(8 * 5), 3, 2, 8, 5, 5, 2, transIdx = 7),
+        Gif.FrameSpec(idx.take(4 * 4), 10, 9, 4, 4, 5, 3))),
+        (m: Array[Byte]) => Gif.decodeFrames(m)),
       ("pdf-flate", pdf(PdfWriter.FlateF), (m: Array[Byte]) => PdfParser.parse(m)),
       ("pdf-lzw", pdf(PdfWriter.LzwF), (m: Array[Byte]) => PdfParser.parse(m)),
       ("pdf-runlength", pdf(PdfWriter.RunLengthF), (m: Array[Byte]) => PdfParser.parse(m)),
-      ("warc-deflate", Warc.deflateEncode(text), (m: Array[Byte]) => Warc.contentDecode("deflate", m)),
+      ("warc-deflate", Streams.deflate(text), (m: Array[Byte]) => Warc.contentDecode("deflate", m)),
       // complete zlib streams with empty output; PdfParser.inflate fails
       // with a PdfError, which is a result here, not a fault
-      ("warc-deflate-empty", Warc.deflateEncode(Array.emptyByteArray),
+      ("warc-deflate-empty", Streams.deflate(Array.emptyByteArray),
         (m: Array[Byte]) => Warc.contentDecode("deflate", m)),
-      ("pdf-flate-empty", Warc.deflateEncode(Array.emptyByteArray),
+      ("pdf-flate-empty", Streams.deflate(Array.emptyByteArray),
         (m: Array[Byte]) => try PdfParser.inflate(m) catch { case e: PdfParser.PdfError => e.msg })
     )
 

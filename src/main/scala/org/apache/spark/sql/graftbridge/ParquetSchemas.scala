@@ -30,4 +30,8 @@ object ParquetSchemas {
     val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(conf))
   }
+
+  /** [[fromFooter]] as a read of the file's unpartitioned directory
+    * returns it: a file source reads every field as nullable. */
+  def asRead(spark: SparkSession, file: FileStatus): StructType = fromFooter(spark, file).asNullable
 }

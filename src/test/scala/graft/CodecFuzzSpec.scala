@@ -14,32 +14,7 @@ class CodecFuzzSpec extends AnyFunSuite {
   private val r = new scala.util.Random(20260820)
 
   private def mutations(valid: Array[Byte], n: Int): Iterator[Array[Byte]] =
-    Iterator.tabulate(n) { i =>
-      val m = valid.clone()
-      (i % 4) match {
-        case 0 => // flip 1-4 random bytes
-          for (_ <- 0 to r.nextInt(4)) {
-            val p = r.nextInt(m.length)
-            m(p) = (m(p) ^ (1 << r.nextInt(8))).toByte
-          }
-          m
-        case 1 => // truncate
-          java.util.Arrays.copyOf(m, 1 + r.nextInt(m.length))
-        case 2 => // splice a random window with noise
-          val p = r.nextInt(m.length)
-          val len = math.min(1 + r.nextInt(16), m.length - p)
-          for (k <- 0 until len) m(p + k) = r.nextInt(256).toByte
-          m
-        case _ => // duplicate a slice (structure confusion)
-          val p = r.nextInt(m.length)
-          val len = math.min(1 + r.nextInt(32), m.length - p)
-          val out = new Array[Byte](m.length + len)
-          System.arraycopy(m, 0, out, 0, p + len)
-          System.arraycopy(m, p, out, p + len, len)
-          System.arraycopy(m, p + len, out, p + 2 * len, m.length - p - len)
-          out
-      }
-    }
+    CodecFuzzSpec.mutations(valid, n, r)
 
   private def flatJpeg(): Array[Byte] = {
     val pix = Array.tabulate[Byte](48 * 32)(i => ((i * 7) % 256).toByte)
@@ -81,21 +56,12 @@ class CodecFuzzSpec extends AnyFunSuite {
   }
 
   test("gif decode survives 300 mutations") {
-    val pal = Array.tabulate[Byte](16 * 3)(i => (i * 5).toByte)
-    val idx = Array.tabulate[Byte](30 * 18)(i => (i % 16).toByte)
-    val seed = Gif.encode(idx, 30, 18, pal)
-    for (m <- mutations(seed, 300)) Gif.decode(m)
+    for (m <- mutations(CodecFuzzSpec.gifStill, 300)) Gif.decode(m)
     succeed
   }
 
   test("animated gif decode survives 300 mutations") {
-    val pal = Array.tabulate[Byte](16 * 3)(i => (i * 5).toByte)
-    val frames = Seq(
-      Gif.FrameSpec(Array.tabulate[Byte](12 * 8)(i => (i % 16).toByte), 0, 0, 12, 8, 5, 1),
-      Gif.FrameSpec(Array.tabulate[Byte](4 * 3)(i => (i % 16).toByte), 4, 2, 4, 3, 5, 2, transIdx = 7),
-      Gif.FrameSpec(Array.tabulate[Byte](2 * 2)(i => (i % 4).toByte), 1, 1, 2, 2, 5, 3))
-    val seed = Gif.encodeAnimated(12, 8, pal, 2, frames)
-    for (m <- mutations(seed, 300)) Gif.decodeFrames(m)
+    for (m <- mutations(CodecFuzzSpec.gifAnimated, 300)) Gif.decodeFrames(m)
     succeed
   }
 
@@ -158,7 +124,7 @@ class CodecFuzzSpec extends AnyFunSuite {
   test("every Flate/LZW adapter ends within one time bound on mutations and FDICT headers") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
-    import graft.codec.Tiff
+    import graft.codec.{Streams, Tiff}
     import graft.pdf.{PdfParser, PdfWriter}
     import graft.sources.Warc
     val pix = Array.tabulate[Byte](24 * 16)(i => ((i * 7) % 13).toByte)
@@ -187,13 +153,13 @@ class CodecFuzzSpec extends AnyFunSuite {
       png -> (Png.decode(_)),
       tiffDeflate -> (Tiff.decode(_)),
       Tiff.encodeCompressed(pix, 24, 16, 1, 5, rowsPerStrip = 5) -> (Tiff.decode(_)),
-      Tiff.Lzw.encode(pix) -> (m => Tiff.Lzw.decode(m, pix.length)),
+      Streams.lzwEncode(pix, earlyChange = 1) -> (m => Tiff.Lzw.decode(m, pix.length)),
       flate -> (m => try PdfParser.inflate(m) catch { case _: PdfParser.PdfError => () }),
       lzw -> (m => for (e <- 0 to 1) try PdfParser.lzw(m, e) catch { case _: PdfParser.PdfError => () }),
-      Warc.deflateEncode(text) -> (Warc.contentDecode("deflate", _)),
-      Warc.deflateEncode(text, zlibWrapper = false) -> (Warc.contentDecode("deflate", _)))
+      Streams.deflate(text) -> (Warc.contentDecode("deflate", _)),
+      StreamsSpec.rawDeflate(text) -> (Warc.contentDecode("deflate", _)))
     val hostile = Seq(hostilePng, fdictAt(tiffDeflate, 8), fdict(flate),
-      fdict(Warc.deflateEncode(text)))
+      fdict(Streams.deflate(text)))
     val run = Future {
       for ((seed, decode) <- adapters) {
         for (m <- mutations(seed, 300)) decode(m)
@@ -205,4 +171,47 @@ class CodecFuzzSpec extends AnyFunSuite {
     // the FDICT splices reach the inflate: the formats' truncated errors
     assert(Await.result(run, 30.seconds) == ((Left("png: truncated IDAT"), Left("tiff: deflate truncated"))))
   }
+}
+
+object CodecFuzzSpec {
+  import graft.codec.Gif
+
+  private val gifPalette = Array.tabulate[Byte](16 * 3)(i => (i * 5).toByte)
+
+  /** The still and animated GIF seeds. */
+  val gifStill: Array[Byte] = Gif.encode(Array.tabulate[Byte](30 * 18)(i => (i % 16).toByte), 30, 18, gifPalette)
+  val gifAnimated: Array[Byte] = Gif.encodeAnimated(12, 8, gifPalette, 2, Seq(
+    Gif.FrameSpec(Array.tabulate[Byte](12 * 8)(i => (i % 16).toByte), 0, 0, 12, 8, 5, 1),
+    Gif.FrameSpec(Array.tabulate[Byte](4 * 3)(i => (i % 16).toByte), 4, 2, 4, 3, 5, 2, transIdx = 7),
+    Gif.FrameSpec(Array.tabulate[Byte](2 * 2)(i => (i % 4).toByte), 1, 1, 2, 2, 5, 3)))
+
+  /** `n` mutations of `valid`: byte flips, truncation, a noise splice
+    * and a duplicated slice in turn, drawn from `r`. */
+  def mutations(valid: Array[Byte], n: Int, r: scala.util.Random): Iterator[Array[Byte]] =
+    Iterator.tabulate(n) { i =>
+      val m = valid.clone()
+      (i % 4) match {
+        case 0 => // flip 1-4 random bytes
+          for (_ <- 0 to r.nextInt(4)) {
+            val p = r.nextInt(m.length)
+            m(p) = (m(p) ^ (1 << r.nextInt(8))).toByte
+          }
+          m
+        case 1 => // truncate
+          java.util.Arrays.copyOf(m, 1 + r.nextInt(m.length))
+        case 2 => // splice a random window with noise
+          val p = r.nextInt(m.length)
+          val len = math.min(1 + r.nextInt(16), m.length - p)
+          for (k <- 0 until len) m(p + k) = r.nextInt(256).toByte
+          m
+        case _ => // duplicate a slice (structure confusion)
+          val p = r.nextInt(m.length)
+          val len = math.min(1 + r.nextInt(32), m.length - p)
+          val out = new Array[Byte](m.length + len)
+          System.arraycopy(m, 0, out, 0, p + len)
+          System.arraycopy(m, p, out, p + len, len)
+          System.arraycopy(m, p + len, out, p + 2 * len, m.length - p - len)
+          out
+      }
+    }
 }

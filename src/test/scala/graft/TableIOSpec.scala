@@ -308,6 +308,8 @@ class TableIOSpec extends AnyFunSuite {
       val want = spark.read.parquet(s"$dir/$name")
       assert(got.schema == want.schema, s"$name:\n${got.schema.treeString}\n${want.schema.treeString}")
       assert(rows(got) == rows(want), name)
+      // an append checks against the schema a read returns, without the read's listing
+      assert(tio.asInstanceOf[ParquetTableIO].appendSchema(spark, name).contains(got.schema), name)
     }
     tio.appendTable(Seq((1L, 0.5, "x", true)).toDF("id", "score", "name", "flag"), "plain")
     check("plain")
@@ -357,6 +359,7 @@ class TableIOSpec extends AnyFunSuite {
     val got = tio.readTable(spark, "bare")
     val want = spark.read.parquet(s"$dir/bare")
     assert(got.schema == want.schema, s"\n${got.schema.treeString}\n${want.schema.treeString}")
+    assert(tio.asInstanceOf[ParquetTableIO].appendSchema(spark, "bare").contains(got.schema))
     assert(rows(got) == rows(want))
   }
 

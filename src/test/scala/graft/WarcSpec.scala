@@ -8,6 +8,7 @@ import java.time.Instant
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.codec.Streams
 import graft.sources.{Warc, WarcRecord}
 
 /** WARC codec round-trips + the DataSourceV2 reader: distributed sink →
@@ -190,7 +191,7 @@ class WarcSpec extends AnyFunSuite {
     val wires = Seq(
       Warc.chunkEncode(body, 64),
       Warc.gzipEncode(body),
-      Warc.deflateEncode(body),
+      Streams.deflate(body),
       Warc.chunkEncode(Warc.gzipEncode(body), 32))
     var decoded = 0
     for (w <- wires; k <- 0 until 150) {
@@ -216,9 +217,9 @@ class WarcSpec extends AnyFunSuite {
     val data = ("payload " * 100).getBytes(UTF_8)
     assert(Warc.contentDecode("gzip", Warc.gzipEncode(data)).sameElements(data))
     assert(Warc.contentDecode("x-gzip", Warc.gzipEncode(data)).sameElements(data))
-    assert(Warc.contentDecode("deflate", Warc.deflateEncode(data)).sameElements(data))
+    assert(Warc.contentDecode("deflate", Streams.deflate(data)).sameElements(data))
     assert(Warc.contentDecode("deflate",
-      Warc.deflateEncode(data, zlibWrapper = false)).sameElements(data))
+      StreamsSpec.rawDeflate(data)).sameElements(data))
     assert(Warc.contentDecode("identity", data).sameElements(data))
     assert(Warc.contentDecode("br", data) == null)                          // unsupported
     assert(Warc.contentDecode("gzip", "not gzip at all".getBytes(UTF_8)) == null)
@@ -249,7 +250,7 @@ class WarcSpec extends AnyFunSuite {
     assert(Warc.contentDecode("gzip", Warc.gzipEncode(fine)).sameElements(fine))
     // a zlib header asking for a preset dictionary (FDICT) is damaged
     // data: decoded or null within the time bound, never a spin
-    val fdict = Array(0x78, 0xbb, 0, 0, 0, 1).map(_.toByte) ++ Warc.deflateEncode(fine, zlibWrapper = false)
+    val fdict = Array(0x78, 0xbb, 0, 0, 0, 1).map(_.toByte) ++ StreamsSpec.rawDeflate(fine)
     Await.result(Future(Warc.contentDecode("deflate", fdict))(ExecutionContext.global), 5.seconds)
   }
 
@@ -501,11 +502,11 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("deflate: a complete zlib stream with empty output is an empty body, not null") {
-    val empty = Warc.deflateEncode(Array.emptyByteArray)
+    val empty = Streams.deflate(Array.emptyByteArray)
     assert(empty.toSeq == Seq(0x78, 0x9c, 0x03, 0x00, 0x00, 0x00, 0x00, 0x01).map(_.toByte))
     val body = Warc.contentDecode("deflate", empty)
     assert(body != null && body.isEmpty)
-    val raw = Warc.contentDecode("deflate", Warc.deflateEncode(Array.emptyByteArray, zlibWrapper = false))
+    val raw = Warc.contentDecode("deflate", StreamsSpec.rawDeflate(Array.emptyByteArray))
     assert(raw != null && raw.isEmpty)
   }
 }
