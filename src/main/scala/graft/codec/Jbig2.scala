@@ -16,8 +16,8 @@ package graft.codec
   *        templates 0–3 and TPGDON typical prediction, NOMINAL adaptive
   *        pixels only (what real encoders emit; non-nominal AT is a
   *        typed error, not a wrong decode — see note below).
-  *  - Symbol dictionaries + text regions, BOTH codings (round 4 arith,
-  *    round 5 huffman): SDHUFF dictionaries (standard tables B.1–B.5 +
+  *  - Symbol dictionaries + text regions, BOTH codings, one body per
+  *    segment type (see [[Coding]]): SDHUFF dictionaries (standard tables B.1–B.5 +
   *    stream-defined custom type-53 tables; collective bitmaps MMR via
   *    the JDK-pinned [[CcittG4]] or uncompressed) and SBHUFF text
   *    regions (custom FS/DS/DT tables + the runcode symbol-ID code
@@ -81,13 +81,18 @@ object Jbig2 {
 
   /** MQ arithmetic decoder (T.88 E.3). Context state lives in the
     * caller-owned arrays (index, mps) so region decoders can keep many
-    * contexts. Bytes past the end read as 0xFF per the convention. */
+    * contexts. Bytes past the end read as 0xFF per the convention, and so
+    * does a marker (0xFF, then a byte above 0x8F): neither advances. A
+    * valid stream needs few such fills, so past [[MaxFills]] `decode`
+    * throws [[MQExhausted]], which ends the segment with a typed Left
+    * instead of decoding a hostile region's every pixel from nothing. */
   final class MQDecoder(data: Array[Byte], off: Int, len: Int) {
     private var bp = off
     private val end = off + len
     private var c = 0L
     private var a = 0
     private var ct = 0
+    private var fills = 0
     private def byteAt(i: Int): Int = if (i < end) data(i) & 0xff else 0xff
     // INITDEC
     c = byteAt(bp).toLong << 16
@@ -96,7 +101,11 @@ object Jbig2 {
 
     private def byteIn(): Unit = {
       if (byteAt(bp) == 0xff) {
-        if (byteAt(bp + 1) > 0x8f) { c += 0xff00; ct = 8 }
+        if (byteAt(bp + 1) > 0x8f) {
+          fills += 1
+          if (fills > MaxFills) throw new MQExhausted
+          c += 0xff00; ct = 8
+        }
         else { bp += 1; c += byteAt(bp).toLong << 9; ct = 7 }
       } else { bp += 1; c += byteAt(bp).toLong << 8; ct = 8 }
     }
@@ -140,6 +149,17 @@ object Jbig2 {
     }
   }
 
+  /** Fills an [[MQDecoder]] may feed before it gives up: 16 times the
+    * most any valid stream needed (2, over the 25k streams of Jbig2Spec,
+    * FuzzCampaign, the q249/q251/q262 generators and the round-trip
+    * sweeps). A fill feeds 8 bits, which an all-MPS context can stretch
+    * over about 260k decisions. */
+  private final val MaxFills = 32
+
+  /** An [[MQDecoder]] ran past [[MaxFills]]. */
+  private[graft] final class MQExhausted
+      extends RuntimeException("jbig2: arithmetic data exhausted", null, false, false)
+
   /** MQ arithmetic encoder (T.88 E.2) — the round-trip twin. The B
     * register is the last element of `buf`; element 0 is a sentinel
     * pre-start byte that absorbs a first-byteout carry (stripped at
@@ -180,13 +200,13 @@ object Jbig2 {
     }
 
     private def byteOut(): Unit = {
-      if (buf.last == 0xff) { // stuffing: only 7 bits follow an 0xFF
-        buf += ((c >> 20) & 0x7f).toInt; c &= 0xfffff; ct = 7
+      if (buf.last == 0xff) { // stuffing: 7 bits follow an 0xFF, the carry above them
+        buf += (c >> 20).toInt; c &= 0xfffff; ct = 7
       } else {
         if (c < 0x8000000L) { buf += ((c >> 19) & 0xff).toInt; c &= 0x7ffff; ct = 8 }
         else {
           buf(buf.length - 1) += 1 // carry into B
-          if (buf.last == 0xff) { c &= 0x7ffffff; buf += ((c >> 20) & 0x7f).toInt; c &= 0xfffff; ct = 7 }
+          if (buf.last == 0xff) { c &= 0x7ffffff; buf += (c >> 20).toInt; c &= 0xfffff; ct = 7 }
           else { buf += ((c >> 19) & 0xff).toInt; c &= 0x7ffff; ct = 8 }
         }
       }
@@ -231,18 +251,18 @@ object Jbig2 {
   private val TpgdonContext = Array(0x9b25, 0x0795, 0xe5, 0x195)
 
   /** Nominal AT coordinates per template, as serialized in the segment. */
-  private val NominalAt: Array[Array[(Int, Int)]] = Array(
+  private[graft] val NominalAt: Array[Array[(Int, Int)]] = Array(
     Array((3, -1), (-3, -1), (2, -2), (-2, -2)),
     Array((3, -1)), Array((2, -1)), Array((2, -1)))
 
   // ------------------------------------------------------------ generic region
 
-  private def genericCtxSize(template: Int): Int =
+  private[graft] def genericCtxSize(template: Int): Int =
     math.max(1 << Templates(template).length, TpgdonContext(template) + 1)
 
   /** Decode one arithmetic generic region into a row-major bit-per-byte
     * bitmap (1 = black). */
-  private def decodeGenericArith(data: Array[Byte], off: Int, len: Int,
+  private[graft] def decodeGenericArith(data: Array[Byte], off: Int, len: Int,
       w: Int, h: Int, template: Int, tpgdon: Boolean): Array[Byte] = {
     val ctxSize = genericCtxSize(template)
     val ix = new Array[Int](ctxSize)
@@ -254,7 +274,7 @@ object Jbig2 {
   /** Same, but continuing an EXISTING MQ decoder + context state — the
     * symbol-dictionary path: all symbol bitmaps of a dictionary share
     * one arithmetic decoder and one generic context set (T.88 6.5.8). */
-  private def decodeGenericWith(dec: MQDecoder, ix: Array[Int], mps: Array[Byte],
+  private[graft] def decodeGenericWith(dec: MQDecoder, ix: Array[Int], mps: Array[Byte],
       w: Int, h: Int, template: Int, tpgdon: Boolean): Array[Byte] = {
     val tpl = Templates(template)
     val bm = new Array[Byte](w * h)
@@ -350,7 +370,7 @@ object Jbig2 {
 
   /** One IAx integer-decoding context (T.88 A.2): 512 adaptive states
     * walked by the PREV register. */
-  private final class IntCtx {
+  private[graft] final class IntCtx {
     val ix = new Array[Int](512)
     val mps = new Array[Byte](512)
   }
@@ -359,7 +379,7 @@ object Jbig2 {
     if (prev < 256) (prev << 1) | b else ((((prev << 1) | b) & 511) | 256)
 
   /** Decode one IAx integer; None = OOB. */
-  private def decodeInt(dec: MQDecoder, cx: IntCtx): Option[Int] = {
+  private[graft] def decodeInt(dec: MQDecoder, cx: IntCtx): Option[Int] = {
     var prev = 1
     def bit(): Int = {
       val b = dec.decode(cx.ix, cx.mps, prev)
@@ -411,7 +431,7 @@ object Jbig2 {
 
   /** Symbol-id decode (T.88 A.3): a plain prefix walk of symCodeLen
     * adaptive bits. */
-  private def decodeIaid(dec: MQDecoder, ctx: IntCtx, symCodeLen: Int): Int = {
+  private[graft] def decodeIaid(dec: MQDecoder, ctx: IntCtx, symCodeLen: Int): Int = {
     var prev = 1
     var k = 0
     while (k < symCodeLen) {
@@ -438,11 +458,11 @@ object Jbig2 {
   /** One huffman-table line. kind: 0 normal (value = rangeLow + bits),
     * 1 lower-range (value = rangeLow - 32-bit offset), 2 upper-range
     * (value = rangeLow + 32-bit offset), 3 OOB. prefLen 0 = unused. */
-  private final case class HuffLine(prefLen: Int, rangeLen: Int, rangeLow: Int, kind: Int = 0)
+  private[graft] final case class HuffLine(prefLen: Int, rangeLen: Int, rangeLow: Int, kind: Int = 0)
 
   /** Canonical prefix-code table per T.88 B.3: codes assigned by
     * ascending prefix length, table order within a length. */
-  private final class HuffTable(val lines: Array[HuffLine]) {
+  private[graft] final class HuffTable(val lines: Array[HuffLine]) {
     val codes: Array[Int] = new Array[Int](lines.length)
     locally {
       val maxLen = lines.map(_.prefLen).max
@@ -522,7 +542,7 @@ object Jbig2 {
   }
 
   /** MSB-first bit reader over a byte slice. */
-  private final class HuffReader(b: Array[Byte], val start: Int, val end: Int) {
+  private[graft] final class HuffReader(b: Array[Byte], val start: Int, val end: Int) {
     var pos: Int = start
     var bitPos: Int = 0
     def bit(): Int = {
@@ -569,22 +589,22 @@ object Jbig2 {
     * mistyped table decodes WRONG rather than failing — custom tables
     * (fully stream-defined, zero transcription risk) cover those roles.
     */
-  private val TableB1 = new HuffTable(Array(
+  private[graft] val TableB1 = new HuffTable(Array(
     HuffLine(1, 4, 0), HuffLine(2, 8, 16), HuffLine(3, 16, 272),
     HuffLine(3, 0, 65808, kind = 2)))
-  private val TableB2 = new HuffTable(Array(
+  private[graft] val TableB2 = new HuffTable(Array(
     HuffLine(1, 0, 0), HuffLine(2, 0, 1), HuffLine(3, 0, 2),
     HuffLine(4, 3, 3), HuffLine(5, 6, 11),
     HuffLine(6, 0, 75, kind = 2), HuffLine(6, 0, 0, kind = 3)))
-  private val TableB3 = new HuffTable(Array(
+  private[graft] val TableB3 = new HuffTable(Array(
     HuffLine(8, 8, -256), HuffLine(1, 0, 0), HuffLine(2, 0, 1), HuffLine(3, 0, 2),
     HuffLine(4, 3, 3), HuffLine(5, 6, 11),
     HuffLine(8, 0, -257, kind = 1), HuffLine(7, 0, 75, kind = 2),
     HuffLine(6, 0, 0, kind = 3)))
-  private val TableB4 = new HuffTable(Array(
+  private[graft] val TableB4 = new HuffTable(Array(
     HuffLine(1, 0, 1), HuffLine(2, 0, 2), HuffLine(3, 0, 3),
     HuffLine(4, 3, 4), HuffLine(5, 6, 12), HuffLine(5, 0, 76, kind = 2)))
-  private val TableB5 = new HuffTable(Array(
+  private[graft] val TableB5 = new HuffTable(Array(
     HuffLine(7, 8, -255), HuffLine(1, 0, 1), HuffLine(2, 0, 2), HuffLine(3, 0, 3),
     HuffLine(4, 3, 4), HuffLine(5, 6, 12),
     HuffLine(7, 0, -256, kind = 1), HuffLine(6, 0, 76, kind = 2)))
@@ -605,7 +625,7 @@ object Jbig2 {
     }
 
   /** Parse a custom huffman table segment (type 53, T.88 B.5 syntax). */
-  private def parseCustomTable(b: Array[Byte], off: Int, end: Int): Either[String, HuffTable] = {
+  private[graft] def parseCustomTable(b: Array[Byte], off: Int, end: Int): Either[String, HuffTable] = {
     if (off + 9 > end) return Left("jbig2: short table segment")
     val flags = b(off) & 0xff
     val htoob = (flags & 1) != 0
@@ -634,39 +654,136 @@ object Jbig2 {
     Right(new HuffTable(lines.toArray))
   }
 
+  // ------------------------------------------------ the two codings
+
+  // Integer roles of symbol dictionaries (T.88 6.5) and text regions
+  // (6.4): one IAx context each in the arithmetic coding, one selected
+  // table each in the huffman coding. BM (BMSIZE) is huffman's only, IT
+  // (CURT) arithmetic's only; ID is IAID's context or the symbol-ID table.
+  private final val DH = 0; private final val DW = 1; private final val EX = 2
+  private final val BM = 3; private final val DT = 4; private final val FS = 5
+  private final val DS = 6; private final val IT = 7; private final val ID = 8
+  private final val Roles = 9
+
+  /** How a symbol dictionary's or a text region's data is read. The two
+    * codings differ in three places, and each segment body is written
+    * once around them:
+    *  - how an integer of each role is read ([[int]]);
+    *  - how one height class's bitmaps are read: arithmetic decodes one
+    *    generic region per symbol as its width arrives, huffman one
+    *    collective bitmap after the class's OOB ([[collectiveSymbols]]);
+    *  - how CURT and the symbol ID are read: IAIT and IAID, or raw bits
+    *    and the stream's symbol-ID table ([[symbolIdTable]]). */
+  private sealed abstract class Coding {
+    /** Right(None) = OOB. */
+    def int(role: Int): Either[String, Option[Int]]
+    /** An integer where OOB is an error. */
+    def value(role: Int, oob: String): Either[String, Int] = int(role).flatMap(_.toRight(oob))
+    /** Whether the data is used up. A huffman reader then yields zero
+      * bits, which loops whose counts come from the stream would read
+      * forever; an [[MQDecoder]] bounds its own fill. */
+    def exhausted: Boolean
+  }
+
+  private final class ArithIn(val dec: MQDecoder) extends Coding {
+    private val cx = Array.fill(Roles)(new IntCtx)
+    def int(role: Int): Either[String, Option[Int]] = Right(decodeInt(dec, cx(role)))
+    def symbolId(codeLen: Int): Int = decodeIaid(dec, cx(ID), codeLen)
+    def exhausted: Boolean = false
+  }
+
+  private final class HuffIn(val r: HuffReader, tables: Map[Int, HuffTable]) extends Coding {
+    def int(role: Int): Either[String, Option[Int]] = tables(role).decode(r)
+    def exhausted: Boolean = r.exhausted
+  }
+
+  /** The encoder's twin of [[Coding]]. */
+  private sealed abstract class CodingOut {
+    def int(role: Int, v: Option[Int]): Unit
+    def bytes(): Array[Byte]
+  }
+
+  private final class ArithOut extends CodingOut {
+    val enc = new MQEncoder
+    private val cx = Array.fill(Roles)(new IntCtx)
+    def int(role: Int, v: Option[Int]): Unit = encodeInt(enc, cx(role), v)
+    def symbolId(codeLen: Int, id: Int): Unit = encodeIaid(enc, cx(ID), codeLen, id)
+    def bytes(): Array[Byte] = enc.flush()
+  }
+
+  private final class HuffOut(tables: Map[Int, HuffTable]) extends CodingOut {
+    val w = new HuffWriter
+    def int(role: Int, v: Option[Int]): Unit = tables(role).encode(w, v)
+    def bytes(): Array[Byte] = w.result()
+  }
+
+  /** The huffman table selection `sel` names: the next referred custom
+    * table when it is `escape`, else `standard(sel)`. */
+  private def selectTable(sel: Int, escape: Int, custom: Iterator[HuffTable],
+      standard: Int => Either[String, HuffTable]): Either[String, HuffTable] =
+    if (sel != escape) standard(sel)
+    else if (custom.hasNext) Right(custom.next())
+    else Left("jbig2: missing custom table")
+
+  /** SBSYMCODELEN: the bits of an arithmetic symbol ID, at least 1. */
+  private def symCodeLen(numSyms: Int): Int =
+    math.max(1, 32 - Integer.numberOfLeadingZeros(numSyms - 1))
+
   // ------------------------------------------------ symbol dict + text region
 
-  private final case class SymBitmap(w: Int, h: Int, px: Array[Byte])
+  private[graft] final case class SymBitmap(w: Int, h: Int, px: Array[Byte])
 
-  /** Decode an arithmetic symbol dictionary's data; `inputSyms` are the
-    * symbols of referred dictionaries, in segment order. Returns the
-    * EXPORTED symbols. Fences: SDHUFF, SDREFAGG, non-nominal AT. */
+  private def be16(b: Array[Byte], p: Int): Int = ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)
+
+  /** Whether the AT pixels at `p` are `template`'s nominal ones. */
+  private def nominalAt(b: Array[Byte], p: Int, template: Int): Boolean =
+    NominalAt(template).indices.map(k => (b(p + 2 * k).toInt, b(p + 2 * k + 1).toInt)) ==
+      NominalAt(template).toSeq
+
+  /** A symbol dictionary's data (T.88 7.4.2), in either coding;
+    * `inputSyms` are the symbols of referred dictionaries, in segment
+    * order. Returns the EXPORTED symbols. Huffman (SDHUFF) table
+    * selections: DH 0→B.4 1→B.5, DW 0→B.2 1→B.3, BMSIZE 0→B.1, and DH/DW
+    * 3 or BMSIZE 1 → the next referred custom table; EX runs always B.1.
+    * Fences: SDREFAGG, non-nominal AT. */
   private def decodeSymbolDict(b: Array[Byte], off: Int, end: Int,
       inputSyms: Vector[SymBitmap],
       customTables: Vector[HuffTable]): Either[String, Vector[SymBitmap]] = {
     if (off + 12 > end) return Left("jbig2: short symbol dict")
-    val flags = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-    val sdhuff = (flags & 1) != 0
-    val sdrefagg = (flags & 2) != 0
+    val flags = be16(b, off)
+    val huff = (flags & 1) != 0
     val template = (flags >> 10) & 3
-    if (sdrefagg) return Left("jbig2: refinement/aggregate symbol dict unsupported")
-    if (sdhuff) return decodeSymbolDictHuff(b, off, end, flags, inputSyms, customTables)
-    var q = off + 2
-    val atCount = if (template == 0) 4 else 1
-    if (q + 2 * atCount + 8 > end) return Left("jbig2: short symbol dict")
-    val at = (0 until atCount).map(k => (b(q + 2 * k).toInt, b(q + 2 * k + 1).toInt))
-    if (at != NominalAt(template).toSeq)
+    if ((flags & 2) != 0) return Left("jbig2: refinement/aggregate symbol dict unsupported")
+    val tables = if (!huff) Map.empty[Int, HuffTable] else {
+      val custom = customTables.iterator
+      (for {
+        dh <- selectTable((flags >> 2) & 3, 3, custom, {
+          case 0 => Right(TableB4)
+          case 1 => Right(TableB5)
+          case _ => Left("jbig2: bad DH table selection")
+        })
+        dw <- selectTable((flags >> 4) & 3, 3, custom, {
+          case 0 => Right(TableB2)
+          case 1 => Right(TableB3)
+          case _ => Left("jbig2: bad DW table selection")
+        })
+        bm <- selectTable((flags >> 6) & 1, 1, custom, _ => Right(TableB1))
+      } yield Map(DH -> dh, DW -> dw, EX -> TableB1, BM -> bm)).fold(e => return Left(e), t => t)
+    }
+    val q = off + 2 + (if (huff) 0 else 2 * NominalAt(template).length) // AT pixels
+    if (q + 8 > end) return Left("jbig2: short symbol dict")
+    if (!huff && !nominalAt(b, off + 2, template))
       return Left("jbig2: non-nominal AT pixels unsupported")
-    q += 2 * atCount
     val numEx = be32(b, q).toInt
     val numNew = be32(b, q + 4).toInt
-    q += 8
     if (numNew < 0 || numNew > 100000 || numEx < 0 || numEx > 100000)
       return Left("jbig2: implausible symbol counts")
-    val dec = new MQDecoder(b, q, end - q)
-    val iadh = new IntCtx; val iadw = new IntCtx; val iaex = new IntCtx
-    val gix = new Array[Int](genericCtxSize(template))
-    val gmps = new Array[Byte](genericCtxSize(template))
+    val coding =
+      if (huff) new HuffIn(new HuffReader(b, q + 8, end), tables)
+      else new ArithIn(new MQDecoder(b, q + 8, end - (q + 8)))
+    val ctxSize = if (huff) 0 else genericCtxSize(template)
+    val gix = new Array[Int](ctxSize)
+    val gmps = new Array[Byte](ctxSize)
     val newSyms = Vector.newBuilder[SymBitmap]
     var decoded = 0
     var height = 0
@@ -677,26 +794,34 @@ object Jbig2 {
     // 25k-mutation fuzz campaign as an OOM, not a Left)
     var totalPixels = 0L
     while (decoded < numNew) {
-      val dh = decodeInt(dec, iadh).getOrElse(
-        return Left("jbig2: OOB height-class delta"))
-      height += dh
-      if (height <= 0 || height > (1 << 14)) return Left("jbig2: bad symbol height")
+      height += coding.value(DH, "jbig2: OOB height-class delta").fold(e => return Left(e), v => v)
+      if (height <= 0 || height > MaxSymbolSide) return Left("jbig2: bad symbol height")
+      val widths = scala.collection.mutable.ArrayBuffer.empty[Int]
       var width = 0
+      var classWidth = 0L
       var classDone = false
-      while (!classDone) {
-        decodeInt(dec, iadw) match {
-          case None => classDone = true
-          case Some(dw) =>
-            width += dw
-            if (width <= 0 || width > (1 << 14) || decoded >= numNew)
-              return Left("jbig2: bad symbol width")
-            if (width.toLong * height > MaxPixels) return Left("jbig2: symbol too large")
-            totalPixels += width.toLong * height
-            if (totalPixels > MaxPixels) return Left("jbig2: dictionary too large")
-            val px = decodeGenericWith(dec, gix, gmps, width, height, template, tpgdon = false)
-            newSyms += SymBitmap(width, height, px)
-            decoded += 1
-        }
+      while (!classDone) coding.int(DW) match {
+        case Right(None) => classDone = true
+        case Right(Some(dw)) =>
+          width += dw
+          if (width <= 0 || width > MaxSymbolSide || decoded >= numNew)
+            return Left("jbig2: bad symbol width")
+          classWidth += width
+          if (classWidth * height > MaxClassPixels) return Left("jbig2: height class too large")
+          totalPixels += width.toLong * height
+          if (totalPixels > MaxPixels) return Left("jbig2: dictionary too large")
+          coding match {
+            case a: ArithIn => newSyms += SymBitmap(width, height,
+              decodeGenericWith(a.dec, gix, gmps, width, height, template, tpgdon = false))
+            case _: HuffIn => widths += width
+          }
+          decoded += 1
+        case Left(e) => return Left(e)
+      }
+      coding match {
+        case h: HuffIn if widths.nonEmpty =>
+          newSyms ++= collectiveSymbols(b, h, widths.toSeq, height).fold(e => return Left(e), s => s)
+        case _ =>
       }
     }
     // export flags: alternating run lengths over input ++ new. A run may
@@ -710,7 +835,8 @@ object Jbig2 {
     while (exIndex < all.length) {
       runs += 1
       if (runs > 2 * all.length + 2) return Left("jbig2: too many export runs")
-      val run = decodeInt(dec, iaex).getOrElse(return Left("jbig2: OOB export run"))
+      if (coding.exhausted) return Left("jbig2: truncated export runs")
+      val run = coding.value(EX, "jbig2: OOB export run").fold(e => return Left(e), v => v)
       if (run < 0 || exIndex + run > all.length) return Left("jbig2: bad export run")
       if (curFlag) (exIndex until exIndex + run).foreach(i => exported += all(i))
       exIndex += run
@@ -721,363 +847,165 @@ object Jbig2 {
     Right(ex)
   }
 
-  /** Huffman-coded (SDHUFF) symbol dictionary, T.88 6.5: height classes
-    * whose per-symbol bitmaps are stored as one COLLECTIVE bitmap per
-    * class — MMR-coded (riding the JDK-pinned [[CcittG4]]) or
-    * uncompressed when BMSIZE = 0. Table selections: DH 0→B.4 1→B.5,
-    * DW 0→B.2 1→B.3, BMSIZE 0→B.1, each 3→next custom table from the
-    * referred table segments; EX runs always B.1. */
-  private def decodeSymbolDictHuff(b: Array[Byte], off: Int, end: Int, flags: Int,
-      inputSyms: Vector[SymBitmap],
-      customTables: Vector[HuffTable]): Either[String, Vector[SymBitmap]] = {
-    val dhSel = (flags >> 2) & 3
-    val dwSel = (flags >> 4) & 3
-    val bmSel = (flags >> 6) & 1
-    var customIdx = 0
-    def nextCustom(): Either[String, HuffTable] =
-      if (customIdx < customTables.length) { customIdx += 1; Right(customTables(customIdx - 1)) }
-      else Left("jbig2: missing custom table")
-    val dhT = dhSel match {
-      case 0 => TableB4
-      case 1 => TableB5
-      case 3 => nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
-      case _ => return Left("jbig2: bad DH table selection")
+  /** One huffman height class's symbols (T.88 6.5.9): BMSIZE, then one
+    * collective bitmap as wide as the class, MMR-coded (riding the
+    * JDK-pinned [[CcittG4]]) or, when BMSIZE = 0, uncompressed rows
+    * padded to bytes; cut into the symbols by their widths. */
+  private def collectiveSymbols(b: Array[Byte], h: HuffIn, widths: Seq[Int],
+      height: Int): Either[String, Seq[SymBitmap]] = {
+    val bmSize = h.int(BM) match {
+      case Right(Some(v)) if v >= 0 => v
+      case Right(_) => return Left("jbig2: bad BMSIZE")
+      case Left(e) => return Left(e)
     }
-    val dwT = dwSel match {
-      case 0 => TableB2
-      case 1 => TableB3
-      case 3 => nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
-      case _ => return Left("jbig2: bad DW table selection")
-    }
-    val bmT = if (bmSel == 0) TableB1
-      else nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
-
-    var q = off + 2 // SDHUFF: no AT pixels follow the flags
-    if (q + 8 > end) return Left("jbig2: short symbol dict")
-    val numEx = be32(b, q).toInt
-    val numNew = be32(b, q + 4).toInt
-    q += 8
-    if (numNew < 0 || numNew > 100000 || numEx < 0 || numEx > 100000)
-      return Left("jbig2: implausible symbol counts")
-    val r = new HuffReader(b, q, end)
-    val newSyms = Vector.newBuilder[SymBitmap]
-    var decoded = 0
-    var height = 0
-    var totalPixels = 0L
-    while (decoded < numNew) {
-      val dh = dhT.decode(r) match {
-        case Right(Some(v)) => v
-        case Right(None) => return Left("jbig2: OOB height-class delta")
-        case Left(e) => return Left(e)
-      }
-      height += dh
-      if (height <= 0 || height > (1 << 14)) return Left("jbig2: bad symbol height")
-      val widths = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var width = 0
-      var totWidth = 0L
-      var classDone = false
-      while (!classDone) {
-        dwT.decode(r) match {
-          case Right(None) => classDone = true
-          case Right(Some(dw)) =>
-            width += dw
-            if (width <= 0 || width > (1 << 14) || decoded + widths.length >= numNew)
-              return Left("jbig2: bad symbol width")
-            totWidth += width
-            // glyph dictionaries hold character-scale symbols; a hostile
-            // stream claiming a multi-megapixel height class costs a
-            // full (bounded but slow) MMR decode attempt PER MUTATION —
-            // cap classes at 4M pixels to keep hostile cost low (the
-            // fuzz campaign surfaced this as ~150ms/decode, not a crash)
-            if (totWidth * height > (1L << 22)) return Left("jbig2: height class too large")
-            widths += width
-          case Left(e) => return Left(e)
-        }
-      }
-      if (widths.nonEmpty) {
-        totalPixels += totWidth * height
-        if (totalPixels > MaxPixels) return Left("jbig2: dictionary too large")
-        val bmSize = bmT.decode(r) match {
-          case Right(Some(v)) if v >= 0 => v
-          case Right(_) => return Left("jbig2: bad BMSIZE")
-          case Left(e) => return Left(e)
-        }
-        r.align()
-        val tw = totWidth.toInt
-        val collective: Array[Byte] =
-          if (bmSize == 0) {
-            // uncompressed: height rows, each padded to a byte boundary
-            val rowBytes = (tw + 7) / 8
-            if (r.pos + rowBytes.toLong * height > end)
-              return Left("jbig2: truncated collective bitmap")
-            val px = new Array[Byte](tw * height)
-            var y = 0
-            while (y < height) {
-              var x = 0
-              while (x < tw) {
-                px(y * tw + x) =
-                  ((b(r.pos + y * rowBytes + (x >> 3)) >> (7 - (x & 7))) & 1).toByte
-                x += 1
-              }
-              y += 1
-            }
-            r.pos += rowBytes * height
-            px
-          } else {
-            if (r.pos + bmSize.toLong > end)
-              return Left("jbig2: truncated collective bitmap")
-            CcittG4.decode(java.util.Arrays.copyOfRange(b, r.pos, r.pos + bmSize),
-              tw, height) match {
-              case Right(px) => r.pos += bmSize; px
-              case Left(err) => return Left(s"jbig2: collective mmr: $err")
-            }
+    val r = h.r
+    r.align()
+    val tw = widths.sum
+    val collective: Array[Byte] =
+      if (bmSize == 0) {
+        val rowBytes = (tw + 7) / 8
+        if (r.pos + rowBytes.toLong * height > r.end)
+          return Left("jbig2: truncated collective bitmap")
+        val px = new Array[Byte](tw * height)
+        var y = 0
+        while (y < height) {
+          var x = 0
+          while (x < tw) {
+            px(y * tw + x) = ((b(r.pos + y * rowBytes + (x >> 3)) >> (7 - (x & 7))) & 1).toByte
+            x += 1
           }
-        // split by widths
-        var x0 = 0
-        widths.foreach { sw =>
-          val px = new Array[Byte](sw * height)
-          var y = 0
-          while (y < height) {
-            System.arraycopy(collective, y * tw + x0, px, y * sw, sw)
-            y += 1
-          }
-          newSyms += SymBitmap(sw, height, px)
-          decoded += 1
-          x0 += sw
+          y += 1
+        }
+        r.pos += rowBytes * height
+        px
+      } else {
+        if (r.pos + bmSize.toLong > r.end) return Left("jbig2: truncated collective bitmap")
+        CcittG4.decode(java.util.Arrays.copyOfRange(b, r.pos, r.pos + bmSize), tw, height) match {
+          case Right(px) => r.pos += bmSize; px
+          case Left(err) => return Left(s"jbig2: collective mmr: $err")
         }
       }
-    }
-    // export runs via Table B.1. An exhausted reader yields zero bits, which
-    // B.1 decodes as a run of 0 forever: fail instead, and bound the runs
-    // as the arithmetic path does.
-    val all = inputSyms ++ newSyms.result()
-    val exported = Vector.newBuilder[SymBitmap]
-    var exIndex = 0
-    var curFlag = false
-    var runs = 0
-    while (exIndex < all.length) {
-      runs += 1
-      if (runs > 2 * all.length + 2) return Left("jbig2: too many export runs")
-      if (r.exhausted) return Left("jbig2: truncated export runs")
-      val run = TableB1.decode(r) match {
-        case Right(Some(v)) => v
-        case Right(None) => return Left("jbig2: OOB export run")
-        case Left(e) => return Left(e)
+    var x0 = 0
+    Right(widths.map { sw =>
+      val px = new Array[Byte](sw * height)
+      var y = 0
+      while (y < height) {
+        System.arraycopy(collective, y * tw + x0, px, y * sw, sw)
+        y += 1
       }
-      if (run < 0 || exIndex + run > all.length) return Left("jbig2: bad export run")
-      if (curFlag) (exIndex until exIndex + run).foreach(i => exported += all(i))
-      exIndex += run
-      curFlag = !curFlag
-    }
-    val ex = exported.result()
-    if (ex.length != numEx) return Left("jbig2: export count mismatch")
-    Right(ex)
+      x0 += sw
+      SymBitmap(sw, height, px)
+    })
   }
 
-  /** Decode an arithmetic text region's data onto a fresh region bitmap.
-    * Fences: SBHUFF, SBREFINE, TRANSPOSED, combination ops beyond OR. */
+  /** A huffman text region's symbol-ID code table (T.88 7.4.3.1.7): 35
+    * five-bit runcode lengths → runcode prefix code → per-symbol code
+    * lengths with the 32/33/34 repeat codes → canonical symbol-ID prefix
+    * code. The reader is byte-aligned after it. */
+  private def symbolIdTable(r: HuffReader, numSyms: Int): Either[String, HuffTable] = {
+    val runLens = Array.fill(35)(r.bits(5))
+    val runTable = new HuffTable(Array.tabulate(35)(i => HuffLine(runLens(i), 0, i)))
+    val symLens = new Array[Int](numSyms)
+    var si = 0
+    var prev = 0
+    while (si < numSyms) {
+      runTable.decode(r) match {
+        case Right(Some(code)) if code <= 31 => symLens(si) = code; prev = code; si += 1
+        case Right(Some(code)) => // 32: repeat the previous length; 33, 34: runs of 0
+          val rep = code match {
+            case 32 => 3 + r.bits(2)
+            case 33 => 3 + r.bits(3)
+            case _ => 11 + r.bits(7)
+          }
+          if (si + rep > numSyms) return Left("jbig2: symbol code repeat overrun")
+          val len = if (code == 32) prev else 0
+          (0 until rep).foreach { _ => symLens(si) = len; si += 1 }
+        case _ => return Left("jbig2: bad symbol code length")
+      }
+    }
+    r.align()
+    Right(new HuffTable(Array.tabulate(numSyms)(i => HuffLine(symLens(i), 0, i))))
+  }
+
+  /** A text region's data (T.88 7.4.3), in either coding, onto a fresh
+    * region bitmap. Huffman (SBHUFF) regions take custom FS/DS/DT tables
+    * only: the standard B.6-B.15 are typed fences (see the standard-table
+    * note). Fences: SBREFINE, TRANSPOSED, combination ops beyond OR,
+    * SBDEFPIXEL. */
   private def decodeTextRegion(b: Array[Byte], off: Int, end: Int,
       rw: Int, rh: Int, syms: Vector[SymBitmap],
       customTables: Vector[HuffTable]): Either[String, Array[Byte]] = {
     if (off + 4 > end) return Left("jbig2: short text region")
-    val flags = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-    val sbhuff = (flags & 1) != 0
-    val refine = (flags & 2) != 0
+    val flags = be16(b, off)
+    val huff = (flags & 1) != 0
     val logStrips = (flags >> 2) & 3
     val refCorner = (flags >> 4) & 3 // 0 BL, 1 TL, 2 BR, 3 TR
-    val transposed = (flags & 0x40) != 0
-    val combOp = (flags >> 7) & 3
-    val defPixel = (flags >> 9) & 1
     var dsOffset = (flags >> 10) & 0x1f
     if (dsOffset > 15) dsOffset -= 32 // signed 5-bit
-    if (refine) return Left("jbig2: refinement text region unsupported")
-    if (transposed) return Left("jbig2: transposed text region unsupported")
-    if (combOp != 0) return Left("jbig2: text region comb op unsupported")
-    if (defPixel != 0) return Left("jbig2: SBDEFPIXEL unsupported")
+    if ((flags & 2) != 0) return Left("jbig2: refinement text region unsupported")
+    if ((flags & 0x40) != 0) return Left("jbig2: transposed text region unsupported")
+    if (((flags >> 7) & 3) != 0) return Left("jbig2: text region comb op unsupported")
+    if (((flags >> 9) & 1) != 0) return Left("jbig2: SBDEFPIXEL unsupported")
     if (syms.isEmpty) return Left("jbig2: text region without symbols")
-    if (sbhuff)
-      return decodeTextRegionHuff(b, off + 2, end, rw, rh, syms, customTables,
-        logStrips, refCorner, dsOffset)
-    val q = off + 2
+    val q = off + (if (huff) 4 else 2) // the huffman flags follow the region flags
     if (q + 4 > end) return Left("jbig2: short text region")
+    val tables = if (!huff) Map.empty[Int, HuffTable] else {
+      val hf = be16(b, off + 2)
+      if (((hf >> 6) & 0xff) != 0) return Left("jbig2: refinement table flags set without refine")
+      val custom = customTables.iterator
+      (for {
+        fs <- selectTable(hf & 3, 3, custom,
+          k => Left(s"jbig2: standard FS table B.${6 + k} unsupported"))
+        ds <- selectTable((hf >> 2) & 3, 3, custom,
+          k => Left(s"jbig2: standard DS table B.${8 + k} unsupported"))
+        dt <- selectTable((hf >> 4) & 3, 3, custom,
+          k => Left(s"jbig2: standard DT table B.${11 + k} unsupported"))
+      } yield Map(FS -> fs, DS -> ds, DT -> dt)).fold(e => return Left(e), t => t)
+    }
     val numInstances = be32(b, q).toInt
-    if (numInstances < 0 || numInstances > (1 << 24)) return Left("jbig2: bad instance count")
+    if (numInstances < 0 || numInstances > MaxInstances) return Left("jbig2: bad instance count")
     val strips = 1 << logStrips
-    var symCodeLen = 32 - Integer.numberOfLeadingZeros(math.max(1, syms.length - 1))
-    if ((1 << symCodeLen) < syms.length) symCodeLen += 1
-    if (symCodeLen == 0) symCodeLen = 1
-    val dec = new MQDecoder(b, q + 4, end - (q + 4))
-    val iadt = new IntCtx; val iafs = new IntCtx; val iads = new IntCtx
-    val iait = new IntCtx; val iaid = new IntCtx
+    val codeLen = symCodeLen(syms.length)
+    val coding =
+      if (huff) {
+        val r = new HuffReader(b, q + 4, end)
+        new HuffIn(r, tables + (ID -> symbolIdTable(r, syms.length).fold(e => return Left(e), t => t)))
+      } else new ArithIn(new MQDecoder(b, q + 4, end - (q + 4)))
     val bm = new Array[Byte](rw * rh)
-    var stripT = -decodeInt(dec, iadt).getOrElse(return Left("jbig2: OOB DT")) * strips
+    var stripT = -coding.value(DT, "jbig2: OOB STRIPT").fold(e => return Left(e), v => v) * strips
     var firstS = 0
     var inst = 0
     while (inst < numInstances) {
-      stripT += decodeInt(dec, iadt).getOrElse(return Left("jbig2: OOB DT")) * strips
-      firstS += decodeInt(dec, iafs).getOrElse(return Left("jbig2: OOB FS"))
+      stripT += coding.value(DT, "jbig2: OOB DT").fold(e => return Left(e), v => v) * strips
+      firstS += coding.value(FS, "jbig2: OOB FS").fold(e => return Left(e), v => v)
       var curS = firstS
       var stripDone = false
       var firstInStrip = true
       while (!stripDone && inst < numInstances) {
-        if (!firstInStrip) {
-          decodeInt(dec, iads) match {
-            case None => stripDone = true
-            case Some(ids) => curS += ids + dsOffset
-          }
+        // a valid stream still holds this instance's symbol ID
+        if (coding.exhausted) return Left("jbig2: truncated text region")
+        if (!firstInStrip) coding.int(DS) match {
+          case Right(None) => stripDone = true
+          case Right(Some(ids)) => curS += ids + dsOffset
+          case Left(e) => return Left(e)
         }
         if (!stripDone) {
-          val curT = if (strips == 1) 0 else decodeInt(dec, iait).getOrElse(
-            return Left("jbig2: OOB IT"))
-          val t = stripT + curT
-          val id = decodeIaid(dec, iaid, symCodeLen)
-          if (id < 0 || id >= syms.length) return Left("jbig2: symbol id out of range")
-          val sym = syms(id)
-          // draw (left-corner flow; right corners advance S first)
-          val x0 = refCorner match {
-            case 1 | 0 => curS // TOPLEFT / BOTTOMLEFT
-            case _ => curS // TOPRIGHT / BOTTOMRIGHT: S names the right
-              // edge, but since curS advances by WI-1 either way the left
-              // edge is curS for the first placement of the strip too
+          val curT = if (strips == 1) 0 else coding match {
+            case a: ArithIn => a.value(IT, "jbig2: OOB IT").fold(e => return Left(e), v => v)
+            case h: HuffIn => h.r.bits(logStrips)
           }
-          val y0 = refCorner match {
-            case 1 | 3 => t // top corners
-            case _ => t - sym.h + 1 // bottom corners
-          }
-          var yy = 0
-          while (yy < sym.h) {
-            var xx = 0
-            val ty = y0 + yy
-            if (ty >= 0 && ty < rh) {
-              while (xx < sym.w) {
-                val tx = x0 + xx
-                if (tx >= 0 && tx < rw && sym.px(yy * sym.w + xx) != 0)
-                  bm(ty * rw + tx) = 1
-                xx += 1
-              }
+          val id = coding match {
+            case a: ArithIn => a.symbolId(codeLen)
+            case h: HuffIn => h.int(ID) match {
+              case Right(Some(v)) => v
+              case _ => return Left("jbig2: bad symbol id code")
             }
-            yy += 1
-          }
-          curS += sym.w - 1
-          inst += 1
-          firstInStrip = false
-        }
-      }
-    }
-    Right(bm)
-  }
-
-  /** Huffman-coded (SBHUFF) text region, T.88 6.4 + 7.4.3: FS/DS/DT
-    * table selections (standard B.6-B.15 are typed fences — see the
-    * standard-table note; custom tables carry those roles), then the
-    * stream-defined symbol-ID code table (35 five-bit runcode lengths →
-    * runcode prefix code → per-symbol code lengths with the 32/33/34
-    * repeat codes → canonical symbol-ID prefix code, byte-aligned
-    * after), then the strip/instance loop with CURT read as raw bits. */
-  private def decodeTextRegionHuff(b: Array[Byte], off: Int, end: Int,
-      rw: Int, rh: Int, syms: Vector[SymBitmap], customTables: Vector[HuffTable],
-      logStrips: Int, refCorner: Int, dsOffset: Int): Either[String, Array[Byte]] = {
-    if (off + 6 > end) return Left("jbig2: short text region")
-    val hf = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-    val fsSel = hf & 3
-    val dsSel = (hf >> 2) & 3
-    val dtSel = (hf >> 4) & 3
-    if (((hf >> 6) & 0xff) != 0) return Left("jbig2: refinement table flags set without refine")
-    var customIdx = 0
-    def nextCustom(): Either[String, HuffTable] =
-      if (customIdx < customTables.length) { customIdx += 1; Right(customTables(customIdx - 1)) }
-      else Left("jbig2: missing custom table")
-    val fsT = fsSel match {
-      case 3 => nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
-      case k => return Left(s"jbig2: standard FS table B.${6 + k} unsupported")
-    }
-    val dsT = dsSel match {
-      case 3 => nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
-      case k => return Left(s"jbig2: standard DS table B.${8 + k} unsupported")
-    }
-    val dtT = dtSel match {
-      case 3 => nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
-      case k => return Left(s"jbig2: standard DT table B.${11 + k} unsupported")
-    }
-    val numInstances = be32(b, off + 2).toInt
-    if (numInstances < 0 || numInstances > (1 << 24)) return Left("jbig2: bad instance count")
-    val strips = 1 << logStrips
-    val r = new HuffReader(b, off + 6, end)
-    // ---- symbol-ID code table (7.4.3.1.7) ----
-    val runLens = Array.fill(35)(r.bits(5))
-    val runTable = new HuffTable(Array.tabulate(35)(i => HuffLine(runLens(i), 0, i)))
-    val symLens = new Array[Int](syms.length)
-    var si = 0
-    var prev = 0
-    while (si < syms.length) {
-      runTable.decode(r) match {
-        case Right(Some(code)) if code <= 31 => symLens(si) = code; prev = code; si += 1
-        case Right(Some(32)) =>
-          val rep = 3 + r.bits(2)
-          if (si + rep > syms.length) return Left("jbig2: symbol code repeat overrun")
-          (0 until rep).foreach { _ => symLens(si) = prev; si += 1 }
-        case Right(Some(33)) =>
-          val rep = 3 + r.bits(3)
-          if (si + rep > syms.length) return Left("jbig2: symbol code repeat overrun")
-          (0 until rep).foreach { _ => symLens(si) = 0; si += 1 }
-        case Right(Some(34)) =>
-          val rep = 11 + r.bits(7)
-          if (si + rep > syms.length) return Left("jbig2: symbol code repeat overrun")
-          (0 until rep).foreach { _ => symLens(si) = 0; si += 1 }
-        case _ => return Left("jbig2: bad symbol code length")
-      }
-    }
-    val symTable = new HuffTable(Array.tabulate(syms.length)(i => HuffLine(symLens(i), 0, i)))
-    r.align()
-    // ---- instances ----
-    val bm = new Array[Byte](rw * rh)
-    def readVal(t: HuffTable, what: String): Either[String, Option[Int]] =
-      t.decode(r) match {
-        case Left(e) => Left(e)
-        case ok => ok
-      }
-    var stripT = readVal(dtT, "DT") match {
-      case Right(Some(v)) => -v * strips
-      case Right(None) => return Left("jbig2: OOB STRIPT")
-      case Left(e) => return Left(e)
-    }
-    var firstS = 0
-    var inst = 0
-    while (inst < numInstances) {
-      stripT += (readVal(dtT, "DT") match {
-        case Right(Some(v)) => v * strips
-        case Right(None) => return Left("jbig2: OOB DT")
-        case Left(e) => return Left(e)
-      })
-      firstS += (readVal(fsT, "FS") match {
-        case Right(Some(v)) => v
-        case Right(None) => return Left("jbig2: OOB FS")
-        case Left(e) => return Left(e)
-      })
-      var curS = firstS
-      var stripDone = false
-      var firstInStrip = true
-      while (!stripDone && inst < numInstances) {
-        if (!firstInStrip) {
-          readVal(dsT, "DS") match {
-            case Right(None) => stripDone = true
-            case Right(Some(ids)) => curS += ids + dsOffset
-            case Left(e) => return Left(e)
-          }
-        }
-        if (!stripDone) {
-          val curT = if (strips == 1) 0 else r.bits(logStrips)
-          val t = stripT + curT
-          val id = symTable.decode(r) match {
-            case Right(Some(v)) => v
-            case _ => return Left("jbig2: bad symbol id code")
           }
           if (id < 0 || id >= syms.length) return Left("jbig2: symbol id out of range")
           val sym = syms(id)
-          val y0 = refCorner match {
-            case 1 | 3 => t
-            case _ => t - sym.h + 1
-          }
+          // S is the left edge in every corner: it advances by WI - 1
+          val t = stripT + curT
+          val y0 = if (refCorner == 1 || refCorner == 3) t else t - sym.h + 1 // top : bottom
           var yy = 0
           while (yy < sym.h) {
             val ty = y0 + yy
@@ -1085,8 +1013,7 @@ object Jbig2 {
               var xx = 0
               while (xx < sym.w) {
                 val tx = curS + xx
-                if (tx >= 0 && tx < rw && sym.px(yy * sym.w + xx) != 0)
-                  bm(ty * rw + tx) = 1
+                if (tx >= 0 && tx < rw && sym.px(yy * sym.w + xx) != 0) bm(ty * rw + tx) = 1
                 xx += 1
               }
             }
@@ -1101,9 +1028,34 @@ object Jbig2 {
     Right(bm)
   }
 
+  /** A generic region's data after its region info (T.88 7.4.6): MMR via
+    * [[CcittG4]], or arithmetic with nominal AT pixels. */
+  private def decodeGenericRegion(b: Array[Byte], p: Int, end: Int,
+      w: Int, h: Int): Either[String, Array[Byte]] = {
+    val flags = b(p) & 0xff
+    val template = (flags >> 1) & 3
+    if ((flags & 1) != 0) CcittG4.decode(java.util.Arrays.copyOfRange(b, p + 1, end), w, h) match {
+      case Left(err) => Left(s"jbig2: mmr: $err")
+      case px => px
+    }
+    else if (!nominalAt(b, p + 1, template)) Left("jbig2: non-nominal AT pixels unsupported")
+    else {
+      val r = p + 1 + 2 * NominalAt(template).length
+      Right(decodeGenericArith(b, r, end - r, w, h, template, (flags & 8) != 0))
+    }
+  }
+
   // ------------------------------------------------------------ segments
 
-  private val MaxPixels: Long = Streams.MaxDecodedBytes / 4
+  private[graft] val MaxPixels: Long = Streams.MaxDecodedBytes / 4
+  // Count bounds: a symbol's side, a text region's instances, and one
+  // height class's pixels. Glyph dictionaries hold character-scale
+  // symbols; a hostile stream claiming a multi-megapixel class costs a
+  // full (bounded but slow) decode PER MUTATION, so classes cap at 4M
+  // pixels (the fuzz campaign surfaced this as ~150 ms/decode).
+  private final val MaxSymbolSide = 1 << 14
+  private final val MaxInstances = 1 << 24
+  private final val MaxClassPixels = 1L << 22
 
   private def be32(b: Array[Byte], p: Int): Long =
     ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
@@ -1116,7 +1068,10 @@ object Jbig2 {
     * usual 1-bit → gray convention used by the CCITT path. */
   def decode(data: Array[Byte], globals: Array[Byte] = Array.emptyByteArray): Either[String, Jpeg.Image] =
     try decodeImpl(if (globals.isEmpty) data else globals ++ data)
-    catch { case e: Exception => Left(s"jbig2: ${e.getClass.getSimpleName}: ${e.getMessage}") }
+    catch {
+      case e: MQExhausted => Left(e.getMessage)
+      case e: Exception => Left(s"jbig2: ${e.getClass.getSimpleName}: ${e.getMessage}")
+    }
 
   private def decodeImpl(b: Array[Byte]): Either[String, Jpeg.Image] = {
     var p = 0
@@ -1163,6 +1118,8 @@ object Jbig2 {
       if (dataLen > Int.MaxValue || q + dataLen > b.length)
         return Left("jbig2: truncated segment data")
       val dEnd = q + dataLen.toInt
+      def referredSyms = referred.toVector.flatMap(r => dicts.getOrElse(r, Vector.empty))
+      def referredTables = referred.toVector.flatMap(r => tables.get(r))
 
       segType match {
         case 48 => // page info
@@ -1174,112 +1131,56 @@ object Jbig2 {
           if (pageH > 0 && pageW.toLong * pageH > MaxPixels)
             return Left("jbig2: image too large")
           if (pageH > 0) page = new Array[Byte](pageW * pageH)
-        case 36 | 38 | 39 => // immediate generic region (incl. lossless)
-          if (dataLen < 18) return Left("jbig2: short region segment")
+        case 36 | 38 | 39 | 4 | 6 | 7 => // generic (incl. lossless) or text region
+          val text = segType < 36
+          if (dataLen < (if (text) 17 else 18)) return Left("jbig2: short region segment")
           val rw = be32(b, q).toInt
           val rh = be32(b, q + 4).toInt
-          val rx = be32(b, q + 8).toInt
-          val ry = be32(b, q + 12).toInt
-          val combOp = b(q + 16) & 0x7
+          val rx = be32(b, q + 8) // X and Y are unsigned: they stay Long
+          val ry = be32(b, q + 12) // through the extent checks below
+          // OR and REPLACE both reduce to OR on a 0 page; AND/XOR/XNOR
+          // over scanned pages are rare — fenced, for a text region before
+          // its decode and for a generic region after its placement
+          val combOk = (b(q + 16) & 7) match { case 0 | 1 | 4 => true; case _ => false }
           if (rw <= 0 || rh <= 0 || rw.toLong * rh > MaxPixels)
             return Left("jbig2: bad region size")
-          var r = q + 17
-          val gFlags = b(r) & 0xff
-          r += 1
-          val mmr = (gFlags & 1) != 0
-          val template = (gFlags >> 1) & 3
-          val tpgdon = (gFlags & 8) != 0
-          val bitmap: Array[Byte] =
-            if (mmr) {
-              CcittG4.decode(java.util.Arrays.copyOfRange(b, r, dEnd), rw, rh) match {
-                case Right(px) =>
-                  // CcittG4.decode yields 0/1 per pixel? normalize below
-                  px
-                case Left(err) => return Left(s"jbig2: mmr: $err")
-              }
-            } else {
-              val atCount = if (template == 0) 4 else 1
-              val at = (0 until atCount).map { k =>
-                (b(r + 2 * k).toInt, b(r + 2 * k + 1).toInt)
-              }
-              r += 2 * atCount
-              if (at != NominalAt(template).toSeq)
-                return Left("jbig2: non-nominal AT pixels unsupported")
-              decodeGenericArith(b, r, dEnd - r, rw, rh, template, tpgdon)
-            }
+          if (text && !combOk) return Left("jbig2: unsupported combination operator")
+          val bitmap = (
+            if (text) decodeTextRegion(b, q + 17, dEnd, rw, rh, referredSyms, referredTables)
+            else decodeGenericRegion(b, q + 17, dEnd, rw, rh)
+          ).fold(e => return Left(e), px => px)
           sawRegion = true
           if (page == null) {
             // absent or striped (-1 height) page info: the canvas grows
-            // from region extents
-            if (pageW <= 0) pageW = rx + rw
-            pageH = math.max(pageH, ry + rh)
-            if (pageW.toLong * pageH > MaxPixels || rx + rw > pageW)
+            // from region extents (the height bound first keeps the
+            // product in range)
+            val pw = if (pageW <= 0) rx + rw else pageW.toLong
+            val ph = math.max(pageH.toLong, ry + rh)
+            if (ph > MaxPixels || pw * ph > MaxPixels || rx + rw > pw)
               return Left("jbig2: image too large")
+            pageW = pw.toInt
+            pageH = ph.toInt
             page = new Array[Byte](pageW * pageH)
           } else if (ry + rh > pageH || rx + rw > pageW) {
             return Left("jbig2: region outside page")
           }
-          // composite (OR / REPLACE both reduce to OR on a 0 page;
-          // AND/XOR/XNOR over scanned pages are rare — fence honestly)
-          if (combOp > 1 && combOp != 4) return Left("jbig2: unsupported combination operator")
+          if (!combOk) return Left("jbig2: unsupported combination operator")
+          val x0 = rx.toInt
+          val y0 = ry.toInt
           var yy = 0
           while (yy < rh) {
             var xx = 0
             while (xx < rw) {
-              val v = bitmap(yy * rw + xx)
-              if (v != 0) page((ry + yy) * pageW + (rx + xx)) = 1
+              if (bitmap(yy * rw + xx) != 0) page((y0 + yy) * pageW + (x0 + xx)) = 1
               xx += 1
             }
             yy += 1
           }
         case 0 => // symbol dictionary
-          val inputSyms = referred.toVector.flatMap(r => dicts.getOrElse(r, Vector.empty))
-          val custom = referred.toVector.flatMap(r => tables.get(r))
-          decodeSymbolDict(b, q, dEnd, inputSyms, custom) match {
-            case Right(ex) => dicts(segNum) = ex
-            case Left(err) => return Left(err)
-          }
+          dicts(segNum) = decodeSymbolDict(b, q, dEnd, referredSyms, referredTables)
+            .fold(e => return Left(e), ex => ex)
         case 53 => // custom huffman table
-          parseCustomTable(b, q, dEnd) match {
-            case Right(t) => tables(segNum) = t
-            case Left(err) => return Left(err)
-          }
-        case 4 | 6 | 7 => // text region (intermediate or immediate)
-          if (dataLen < 17) return Left("jbig2: short region segment")
-          val rw = be32(b, q).toInt
-          val rh = be32(b, q + 4).toInt
-          val rx = be32(b, q + 8).toInt
-          val ry = be32(b, q + 12).toInt
-          val combOpR = b(q + 16) & 0x7
-          if (rw <= 0 || rh <= 0 || rw.toLong * rh > MaxPixels)
-            return Left("jbig2: bad region size")
-          if (combOpR > 1 && combOpR != 4)
-            return Left("jbig2: unsupported combination operator")
-          val syms = referred.toVector.flatMap(r => dicts.getOrElse(r, Vector.empty))
-          val customT = referred.toVector.flatMap(r => tables.get(r))
-          decodeTextRegion(b, q + 17, dEnd, rw, rh, syms, customT) match {
-            case Left(err) => return Left(err)
-            case Right(bitmap) =>
-              sawRegion = true
-              if (page == null) {
-                if (pageW <= 0) pageW = rx + rw
-                pageH = math.max(pageH, ry + rh)
-                if (pageW.toLong * pageH > MaxPixels || rx + rw > pageW)
-                  return Left("jbig2: image too large")
-                page = new Array[Byte](pageW * pageH)
-              } else if (ry + rh > pageH || rx + rw > pageW) {
-                return Left("jbig2: region outside page")
-              }
-              var yy = 0
-              while (yy < rh) {
-                var xx = 0
-                while (xx < rw) {
-                  if (bitmap(yy * rw + xx) != 0) page((ry + yy) * pageW + (rx + xx)) = 1
-                  xx += 1
-                }
-                yy += 1
-              }
-          }
+          tables(segNum) = parseCustomTable(b, q, dEnd).fold(e => return Left(e), t => t)
         case 16 | 20 | 22 | 23 => return Left("jbig2: halftone unsupported")
         case 40 | 42 | 43 => return Left("jbig2: refinement region unsupported")
         case _ => () // page end / stripe end / tables / extensions: skip
@@ -1296,6 +1197,36 @@ object Jbig2 {
 
   // ------------------------------------------------------------ encoder twin
 
+  private def be(out: java.io.ByteArrayOutputStream, v: Long, n: Int): Unit = {
+    var k = n - 1
+    while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
+  }
+
+  private def bytes(f: java.io.ByteArrayOutputStream => Unit): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    f(out)
+    out.toByteArray
+  }
+
+  /** Region info (T.88 7.4.1): `w` x `h` at (0, 0), OR. */
+  private def regionInfo(out: java.io.ByteArrayOutputStream, w: Int, h: Int): Unit = {
+    be(out, w, 4); be(out, h, 4); be(out, 0, 8); out.write(0)
+  }
+
+  /** An embedded stream of page 1: page info (#1), then `segments` as
+    * (type, referred segment numbers, data) numbered from #2, then end
+    * of page. */
+  private def pageStream(w: Int, h: Int,
+      segments: Seq[(Int, Seq[Int], Array[Byte])]): Array[Byte] = bytes { out =>
+    val info = bytes { o => be(o, w, 4); be(o, h, 4); be(o, 0, 8); o.write(0); be(o, 0, 2) }
+    val all = (48, Nil, info) +: segments :+ ((49, Nil, Array.emptyByteArray))
+    all.zipWithIndex.foreach { case ((tpe, refs, data), i) =>
+      be(out, i + 1, 4); out.write(tpe)
+      out.write(refs.length << 5); refs.foreach(out.write(_)); out.write(1)
+      be(out, data.length, 4); out.write(data, 0, data.length)
+    }
+  }
+
   /** Encode a bitmap (row-major, nonzero = black) as an embedded JBIG2
     * stream: page info + one immediate lossless generic region. */
   def encode(bitmap: Array[Byte], w: Int, h: Int,
@@ -1303,39 +1234,15 @@ object Jbig2 {
     require(w > 0 && h > 0 && bitmap.length == w * h, "bitmap size mismatch")
     require(template >= 0 && template <= 3, "bad template")
     val norm = bitmap.map(v => (if (v != 0) 1 else 0).toByte)
-    val out = new java.io.ByteArrayOutputStream()
-    def be(v: Long, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-    }
-    // page info segment (#1, type 48, page 1)
-    be(1, 4); out.write(48); out.write(0); out.write(1)
-    be(19, 4)
-    be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0); be(0, 2)
-    // immediate lossless generic region (#2, type 39, page 1)
-    val payload = {
-      val body = new java.io.ByteArrayOutputStream()
-      def bbe(v: Long, n: Int): Unit = {
-        var k = n - 1
-        while (k >= 0) { body.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
+    pageStream(w, h, Seq((39, Nil, bytes { out =>
+      regionInfo(out, w, h)
+      out.write((if (mmr) 1 else 0) | (template << 1) | (if (tpgdon) 8 else 0))
+      if (mmr) out.write(CcittG4.encode(norm, w, h))
+      else {
+        NominalAt(template).foreach { case (x, y) => out.write(x & 0xff); out.write(y & 0xff) }
+        out.write(encodeGenericArith(norm, w, h, template, tpgdon))
       }
-      bbe(w, 4); bbe(h, 4); bbe(0, 4); bbe(0, 4); body.write(0) // region info, OR
-      val gFlags = (if (mmr) 1 else 0) | (template << 1) | (if (tpgdon) 8 else 0)
-      body.write(gFlags)
-      if (!mmr) {
-        NominalAt(template).foreach { case (x, y) => body.write(x & 0xff); body.write(y & 0xff) }
-        body.write(encodeGenericArith(norm, w, h, template, tpgdon))
-      } else {
-        body.write(CcittG4.encode(norm, w, h))
-      }
-      body.toByteArray
-    }
-    be(2, 4); out.write(39); out.write(0); out.write(1)
-    be(payload.length, 4)
-    out.write(payload, 0, payload.length)
-    // end of page (#3, type 49)
-    be(3, 4); out.write(49); out.write(0); out.write(1); be(0, 4)
-    out.toByteArray
+    })))
   }
 
   /** Encoder twin for the SYMBOL-CODED page (the dominant real-world
@@ -1348,148 +1255,25 @@ object Jbig2 {
   def encodeSymbolPage(w: Int, h: Int,
       symbols: Vector[(Int, Int, Array[Byte])],
       placements: Seq[(Int, Int, Int)],
-      template: Int = 0): Array[Byte] = {
-    require(w > 0 && h > 0 && symbols.nonEmpty)
-    symbols.foreach { case (sw, sh, px) =>
-      require(sw > 0 && sh > 0 && px.length == sw * sh, "bad symbol bitmap")
-    }
-    placements.foreach { case (id, _, _) => require(id >= 0 && id < symbols.length) }
-    // dictionary decode order is height-class order: sort, remap ids
-    val order = symbols.zipWithIndex.sortBy { case ((_, sh, _), i) => (sh, i) }
-    val idMap = order.zipWithIndex.map { case ((_, orig), newId) => orig -> newId }.toMap
-    val sorted = order.map(_._1)
-
-    // ---- symbol dictionary data
-    val dictBody = {
-      val out = new java.io.ByteArrayOutputStream()
-      def be(v: Long, n: Int): Unit = {
-        var k = n - 1
-        while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-      }
-      be(template << 10, 2) // flags: arith, no refagg
-      NominalAt(template).foreach { case (x, y) => out.write(x & 0xff); out.write(y & 0xff) }
-      be(sorted.length, 4) // SDNUMEXSYMS
-      be(sorted.length, 4) // SDNUMNEWSYMS
-      val enc = new MQEncoder
-      val iadh = new IntCtx; val iadw = new IntCtx; val iaex = new IntCtx
-      val gix = new Array[Int](genericCtxSize(template))
-      val gmps = new Array[Byte](genericCtxSize(template))
-      var height = 0
-      var i = 0
-      while (i < sorted.length) {
-        val classH = sorted(i)._2
-        encodeInt(enc, iadh, Some(classH - height))
-        height = classH
-        var width = 0
-        while (i < sorted.length && sorted(i)._2 == classH) {
-          val (sw, _, px) = sorted(i)
-          encodeInt(enc, iadw, Some(sw - width))
-          width = sw
-          val norm = px.map(v => (if (v != 0) 1 else 0).toByte)
-          encodeGenericWith(enc, gix, gmps, norm, sw, classH, template, tpgdon = false)
-          i += 1
-        }
-        encodeInt(enc, iadw, None) // end of height class
-      }
-      encodeInt(enc, iaex, Some(0)) // run of 0 non-exported
-      encodeInt(enc, iaex, Some(sorted.length)) // export all
-      out.write(enc.flush())
-      out.toByteArray
-    }
-
-    // ---- text region data
-    val textBody = {
-      val out = new java.io.ByteArrayOutputStream()
-      def be(v: Long, n: Int): Unit = {
-        var k = n - 1
-        while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-      }
-      be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0) // region info, OR
-      be(1 << 4, 2) // flags: TOPLEFT, strips=1, arith, no refine/transpose
-      be(placements.length, 4)
-      var symCodeLen = 32 - Integer.numberOfLeadingZeros(math.max(1, sorted.length - 1))
-      if ((1 << symCodeLen) < sorted.length) symCodeLen += 1
-      if (symCodeLen == 0) symCodeLen = 1
-      val enc = new MQEncoder
-      val iadt = new IntCtx; val iafs = new IntCtx; val iads = new IntCtx
-      val iaid = new IntCtx
-      encodeInt(enc, iadt, Some(0)) // STRIPT init
-      val byStrip = placements.map { case (id, x, y) => (idMap(id), x, y) }
-        .groupBy(_._3).toSeq.sortBy(_._1)
-      var stripT = 0
-      var firstS = 0
-      byStrip.foreach { case (y, ps) =>
-        encodeInt(enc, iadt, Some(y - stripT))
-        stripT = y
-        val inOrder = ps.sortBy(_._2)
-        var curS = 0
-        var first = true
-        inOrder.foreach { case (id, x, _) =>
-          if (first) {
-            encodeInt(enc, iafs, Some(x - firstS))
-            firstS = x
-            curS = x
-            first = false
-          } else {
-            encodeInt(enc, iads, Some(x - curS))
-            curS = x
-          }
-          encodeIaid(enc, iaid, symCodeLen, id)
-          curS += sorted(id)._1 - 1
-        }
-        encodeInt(enc, iads, None) // end of strip
-      }
-      out.write(enc.flush())
-      out.toByteArray
-    }
-
-    // ---- segments
-    val out = new java.io.ByteArrayOutputStream()
-    def be(v: Long, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-    }
-    // page info (#1)
-    be(1, 4); out.write(48); out.write(0); out.write(1)
-    be(19, 4); be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0); be(0, 2)
-    // symbol dictionary (#2)
-    be(2, 4); out.write(0); out.write(0); out.write(1)
-    be(dictBody.length, 4); out.write(dictBody, 0, dictBody.length)
-    // immediate text region (#3, refers to #2)
-    be(3, 4); out.write(6); out.write(1 << 5); out.write(2); out.write(1)
-    be(textBody.length, 4); out.write(textBody, 0, textBody.length)
-    // end of page (#4)
-    be(4, 4); out.write(49); out.write(0); out.write(1); be(0, 4)
-    out.toByteArray
-  }
-
-  // --------------------------------------------------- huffman encoder twin
+      template: Int = 0): Array[Byte] =
+    encodeSymbols(w, h, symbols, placements, template,
+      huffDict = false, huffText = false, uncompressed = false)
 
   /** Custom-table description used by the huffman twin: single normal
     * line covering [0, 2^rangeLen) at prefix 1, lower/upper lines, and
     * an optional OOB — enough shape for FS/DS/DT while staying fully
     * stream-defined (the decoder learns it from the type-53 segment,
     * never from transcription). */
-  private def customTableBytes(rangeLen: Int, oob: Boolean): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
+  private def customTableBytes(rangeLen: Int, oob: Boolean): Array[Byte] = bytes { out =>
     out.write((if (oob) 1 else 0) | ((4 - 1) << 1) | ((6 - 1) << 4)) // HTPS=4, HTRS=6
-    def be32w(v: Int): Unit = (3 to 0 by -1).foreach(k => out.write((v >> (8 * k)) & 0xff))
-    be32w(0) // HTLOW
-    be32w(1 << rangeLen) // HTHIGH
+    be(out, 0, 4) // HTLOW
+    be(out, 1 << rangeLen, 4) // HTHIGH
     val w = new HuffWriter
     w.putBits(1, 4); w.putBits(rangeLen, 6) // the one normal line
     w.putBits(2, 4) // lower-range prefix
     w.putBits(if (oob) 3 else 2, 4) // upper-range prefix
     if (oob) w.putBits(3, 4) // OOB prefix
-    val bits = w.result()
-    out.write(bits, 0, bits.length)
-    out.toByteArray
-  }
-
-  private def customTableOf(rangeLen: Int, oob: Boolean): HuffTable = {
-    val bytes = customTableBytes(rangeLen, oob)
-    parseCustomTable(bytes, 0, bytes.length)
-      .fold(e => throw new IllegalStateException(e), identity)
+    out.write(w.result())
   }
 
   /** Encoder twin for the HUFFMAN legs: SDHUFF symbol dictionary with
@@ -1502,206 +1286,158 @@ object Jbig2 {
       symbols: Vector[(Int, Int, Array[Byte])],
       placements: Seq[(Int, Int, Int)],
       huffText: Boolean = false,
-      uncompressed: Boolean = false): Array[Byte] = {
+      uncompressed: Boolean = false): Array[Byte] =
+    encodeSymbols(w, h, symbols, placements, template = 0,
+      huffDict = true, huffText = huffText, uncompressed = uncompressed)
+
+  /** Both symbol-page twins, written around the encoder's side of the
+    * [[Coding]] seam: the dictionary is segment #2, a huffman text
+    * region's custom FS/DS/DT tables follow it, and the text region
+    * refers to them all. */
+  private def encodeSymbols(w: Int, h: Int,
+      symbols: Vector[(Int, Int, Array[Byte])],
+      placements: Seq[(Int, Int, Int)],
+      template: Int, huffDict: Boolean, huffText: Boolean, uncompressed: Boolean): Array[Byte] = {
     require(w > 0 && h > 0 && symbols.nonEmpty)
     symbols.foreach { case (sw, sh, px) =>
       require(sw > 0 && sh > 0 && px.length == sw * sh, "bad symbol bitmap")
     }
     placements.foreach { case (id, _, _) => require(id >= 0 && id < symbols.length) }
+    // dictionary decode order is height-class order: sort, remap ids
     val order = symbols.zipWithIndex.sortBy { case ((_, sh, _), i) => (sh, i) }
     val idMap = order.zipWithIndex.map { case ((_, orig), newId) => orig -> newId }.toMap
-    val sorted = order.map(_._1)
+    val sorted = order.map { case ((sw, sh, px), _) =>
+      (sw, sh, px.map(v => (if (v != 0) 1 else 0).toByte))
+    }
 
-    // ---- SDHUFF dictionary body
-    val dictBody = {
-      val out = new java.io.ByteArrayOutputStream()
-      def be(v: Long, n: Int): Unit = {
-        var k = n - 1
-        while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-      }
-      be(1, 2) // flags: SDHUFF=1, DH sel 0 (B.4), DW sel 0 (B.2), BMSIZE sel 0 (B.1)
-      be(sorted.length, 4)
-      be(sorted.length, 4)
-      val hw = new HuffWriter
+    val dict = bytes { out =>
+      // flags: SDHUFF with DH B.4, DW B.2, BMSIZE B.1; or the arithmetic
+      // template and its nominal AT pixels. No refinement/aggregation.
+      be(out, if (huffDict) 1 else template << 10, 2)
+      if (!huffDict) NominalAt(template).foreach { case (x, y) => out.write(x & 0xff); out.write(y & 0xff) }
+      be(out, sorted.length, 4) // SDNUMEXSYMS
+      be(out, sorted.length, 4) // SDNUMNEWSYMS
+      val c =
+        if (huffDict) new HuffOut(Map(DH -> TableB4, DW -> TableB2, EX -> TableB1, BM -> TableB1))
+        else new ArithOut
+      val ctxSize = if (huffDict) 0 else genericCtxSize(template)
+      val gix = new Array[Int](ctxSize)
+      val gmps = new Array[Byte](ctxSize)
       var height = 0
       var i = 0
       while (i < sorted.length) {
         val classH = sorted(i)._2
-        TableB4.encode(hw, Some(classH - height))
+        c.int(DH, Some(classH - height))
         height = classH
-        val classSyms = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Byte])]
+        val first = i
         var width = 0
         while (i < sorted.length && sorted(i)._2 == classH) {
           val (sw, _, px) = sorted(i)
-          TableB2.encode(hw, Some(sw - width))
+          c.int(DW, Some(sw - width))
           width = sw
-          classSyms += ((sw, px))
+          c match {
+            case a: ArithOut => encodeGenericWith(a.enc, gix, gmps, px, sw, classH, template, tpgdon = false)
+            case _: HuffOut =>
+          }
           i += 1
         }
-        TableB2.encode(hw, None) // end of height class
-        // collective bitmap
-        val totW = classSyms.map(_._1).sum
-        val coll = new Array[Byte](totW * classH)
-        var x0 = 0
-        classSyms.foreach { case (sw, px) =>
-          var y = 0
-          while (y < classH) {
-            var x = 0
-            while (x < sw) {
-              coll(y * totW + x0 + x) = (if (px(y * sw + x) != 0) 1 else 0).toByte
-              x += 1
-            }
-            y += 1
-          }
-          x0 += sw
-        }
-        if (uncompressed) {
-          TableB1.encode(hw, Some(0))
-          val rowBytes = (totW + 7) / 8
-          val raw = new Array[Byte](rowBytes * classH)
-          var y = 0
-          while (y < classH) {
-            var x = 0
-            while (x < totW) {
-              if (coll(y * totW + x) != 0)
-                raw(y * rowBytes + (x >> 3)) =
-                  (raw(y * rowBytes + (x >> 3)) | (1 << (7 - (x & 7)))).toByte
-              x += 1
-            }
-            y += 1
-          }
-          hw.writeBytes(raw)
-        } else {
-          val mmr = CcittG4.encode(coll, totW, classH)
-          TableB1.encode(hw, Some(mmr.length))
-          hw.writeBytes(mmr)
+        c.int(DW, None) // end of height class
+        c match {
+          case hc: HuffOut => writeCollective(hc, sorted.slice(first, i), classH, uncompressed)
+          case _: ArithOut =>
         }
       }
-      TableB1.encode(hw, Some(0)) // run of 0 non-exported
-      TableB1.encode(hw, Some(sorted.length)) // export all
-      val bits = hw.result()
-      out.write(bits, 0, bits.length)
-      out.toByteArray
+      c.int(EX, Some(0)) // run of 0 non-exported
+      c.int(EX, Some(sorted.length)) // export all
+      out.write(c.bytes())
     }
 
-    // ---- text region body (+ optional custom-table segments)
     val fsLen = 32 - Integer.numberOfLeadingZeros(math.max(1, w))
-    val dsLen = fsLen
     val dtLen = 32 - Integer.numberOfLeadingZeros(math.max(1, h))
-    val (textBody, tableSegs) =
-      if (!huffText) {
-        val out = new java.io.ByteArrayOutputStream()
-        def be(v: Long, n: Int): Unit = {
-          var k = n - 1
-          while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-        }
-        be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0)
-        be(1 << 4, 2) // TOPLEFT, strips=1, arith
-        be(placements.length, 4)
-        var symCodeLen = 32 - Integer.numberOfLeadingZeros(math.max(1, sorted.length - 1))
-        if ((1 << symCodeLen) < sorted.length) symCodeLen += 1
-        if (symCodeLen == 0) symCodeLen = 1
-        val enc = new MQEncoder
-        val iadt = new IntCtx; val iafs = new IntCtx; val iads = new IntCtx
-        val iaid = new IntCtx
-        encodeInt(enc, iadt, Some(0))
-        val byStrip = placements.map { case (id, x, y) => (idMap(id), x, y) }
-          .groupBy(_._3).toSeq.sortBy(_._1)
-        var stripT = 0
-        var firstS = 0
-        byStrip.foreach { case (y, ps) =>
-          encodeInt(enc, iadt, Some(y - stripT))
-          stripT = y
-          val inOrder = ps.sortBy(_._2)
-          var curS = 0
-          var first = true
-          inOrder.foreach { case (id, x, _) =>
-            if (first) {
-              encodeInt(enc, iafs, Some(x - firstS)); firstS = x; curS = x; first = false
-            } else {
-              encodeInt(enc, iads, Some(x - curS)); curS = x
-            }
-            encodeIaid(enc, iaid, symCodeLen, id)
-            curS += sorted(id)._1 - 1
-          }
-          encodeInt(enc, iads, None)
-        }
-        out.write(enc.flush())
-        (out.toByteArray, Seq.empty[Array[Byte]])
-      } else {
-        val fsTab = customTableOf(fsLen, oob = false)
-        val dsTab = customTableOf(dsLen, oob = true)
-        val dtTab = customTableOf(dtLen, oob = false)
-        val out = new java.io.ByteArrayOutputStream()
-        def be(v: Long, n: Int): Unit = {
-          var k = n - 1
-          while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-        }
-        be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0)
-        be((1 << 4) | 1, 2) // TOPLEFT, strips=1, SBHUFF=1
-        be(3 | (3 << 2) | (3 << 4), 2) // huffman flags: FS/DS/DT all custom
-        be(placements.length, 4)
-        var symCodeLen = 32 - Integer.numberOfLeadingZeros(math.max(1, sorted.length - 1))
-        if ((1 << symCodeLen) < sorted.length) symCodeLen += 1
-        if (symCodeLen == 0) symCodeLen = 1
-        val hw = new HuffWriter
-        // runcode table: only length symCodeLen used, 1-bit runcode "0"
-        (0 until 35).foreach(i => hw.putBits(if (i == symCodeLen) 1 else 0, 5))
-        (0 until sorted.length).foreach(_ => hw.putBit(0)) // every symbol: that runcode
-        hw.align()
-        dtTab.encode(hw, Some(0)) // STRIPT init
-        val byStrip = placements.map { case (id, x, y) => (idMap(id), x, y) }
-          .groupBy(_._3).toSeq.sortBy(_._1)
-        var stripT = 0
-        var firstS = 0
-        byStrip.foreach { case (y, ps) =>
-          dtTab.encode(hw, Some(y - stripT))
-          stripT = y
-          val inOrder = ps.sortBy(_._2)
-          var curS = 0
-          var first = true
-          inOrder.foreach { case (id, x, _) =>
-            if (first) {
-              fsTab.encode(hw, Some(x - firstS)); firstS = x; curS = x; first = false
-            } else {
-              dsTab.encode(hw, Some(x - curS)); curS = x
-            }
-            hw.putBits(id, symCodeLen) // fixed-length canonical symbol code
-            curS += sorted(id)._1 - 1
-          }
-          dsTab.encode(hw, None)
-        }
-        val bits = hw.result()
-        out.write(bits, 0, bits.length)
-        (out.toByteArray,
-          Seq(customTableBytes(fsLen, oob = false),
-            customTableBytes(dsLen, oob = true),
-            customTableBytes(dtLen, oob = false)))
+    val tableSegs =
+      if (huffText) Seq((fsLen, false), (fsLen, true), (dtLen, false)) // FS, DS, DT
+        .map { case (len, oob) => customTableBytes(len, oob) }
+      else Nil
+    val text = bytes { out =>
+      regionInfo(out, w, h)
+      be(out, (1 << 4) | (if (huffText) 1 else 0), 2) // TOPLEFT, strips=1, SBHUFF
+      if (huffText) be(out, 3 | (3 << 2) | (3 << 4), 2) // FS/DS/DT all custom
+      be(out, placements.length, 4)
+      val codeLen = symCodeLen(sorted.length)
+      val c = if (!huffText) new ArithOut else {
+        val Seq(fs, ds, dt) = tableSegs.map(t =>
+          parseCustomTable(t, 0, t.length).fold(e => throw new IllegalStateException(e), identity))
+        val hc = new HuffOut(Map(FS -> fs, DS -> ds, DT -> dt))
+        // symbol-ID table: runcode lengths where only length codeLen is
+        // used, with the 1-bit runcode "0"; then that runcode per symbol
+        (0 until 35).foreach(i => hc.w.putBits(if (i == codeLen) 1 else 0, 5))
+        sorted.indices.foreach(_ => hc.w.putBit(0))
+        hc.w.align()
+        hc
       }
+      c.int(DT, Some(0)) // STRIPT init
+      val byStrip = placements.map { case (id, x, y) => (idMap(id), x, y) }
+        .groupBy(_._3).toSeq.sortBy(_._1)
+      var stripT = 0
+      var firstS = 0
+      byStrip.foreach { case (y, ps) =>
+        c.int(DT, Some(y - stripT))
+        stripT = y
+        var curS = 0
+        var first = true
+        ps.sortBy(_._2).foreach { case (id, x, _) =>
+          if (first) { c.int(FS, Some(x - firstS)); firstS = x; first = false }
+          else c.int(DS, Some(x - curS))
+          curS = x
+          c match {
+            case a: ArithOut => a.symbolId(codeLen, id)
+            case hc: HuffOut => hc.w.putBits(id, codeLen) // fixed-length canonical code
+          }
+          curS += sorted(id)._1 - 1
+        }
+        c.int(DS, None) // end of strip
+      }
+      out.write(c.bytes())
+    }
 
-    // ---- segments
-    val out = new java.io.ByteArrayOutputStream()
-    def be(v: Long, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
+    pageStream(w, h, (0, Nil, dict) +: tableSegs.map(t => (53, Nil, t)) :+
+      ((6, 2 +: tableSegs.indices.map(_ + 3), text)))
+  }
+
+  /** Twin of [[collectiveSymbols]]: BMSIZE and one height class's
+    * collective bitmap, MMR-coded or uncompressed. */
+  private def writeCollective(c: HuffOut, syms: Seq[(Int, Int, Array[Byte])],
+      height: Int, uncompressed: Boolean): Unit = {
+    val tw = syms.map(_._1).sum
+    val coll = new Array[Byte](tw * height)
+    var x0 = 0
+    syms.foreach { case (sw, _, px) =>
+      var y = 0
+      while (y < height) {
+        System.arraycopy(px, y * sw, coll, y * tw + x0, sw)
+        y += 1
+      }
+      x0 += sw
     }
-    be(1, 4); out.write(48); out.write(0); out.write(1)
-    be(19, 4); be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0); be(0, 2)
-    be(2, 4); out.write(0); out.write(0); out.write(1)
-    be(dictBody.length, 4); out.write(dictBody, 0, dictBody.length)
-    var segNum = 3
-    tableSegs.foreach { tb =>
-      be(segNum, 4); out.write(53); out.write(0); out.write(1)
-      be(tb.length, 4); out.write(tb, 0, tb.length)
-      segNum += 1
+    if (uncompressed) {
+      val rowBytes = (tw + 7) / 8
+      val raw = new Array[Byte](rowBytes * height)
+      var y = 0
+      while (y < height) {
+        var x = 0
+        while (x < tw) {
+          if (coll(y * tw + x) != 0)
+            raw(y * rowBytes + (x >> 3)) = (raw(y * rowBytes + (x >> 3)) | (1 << (7 - (x & 7)))).toByte
+          x += 1
+        }
+        y += 1
+      }
+      c.int(BM, Some(0))
+      c.w.writeBytes(raw)
+    } else {
+      val mmr = CcittG4.encode(coll, tw, height)
+      c.int(BM, Some(mmr.length))
+      c.w.writeBytes(mmr)
     }
-    // immediate text region: refers to #2 (+ table segments in FS/DS/DT order)
-    val refs = 2L +: (3L until segNum).toSeq
-    be(segNum, 4); out.write(6); out.write(refs.length << 5)
-    refs.foreach(rn => out.write(rn.toInt))
-    out.write(1)
-    be(textBody.length, 4); out.write(textBody, 0, textBody.length)
-    be(segNum + 1, 4); out.write(49); out.write(0); out.write(1); be(0, 4)
-    out.toByteArray
   }
 }

@@ -30,6 +30,7 @@ object FuzzCampaign {
     val pal16 = Array.tabulate[Byte](16 * 3)(i => (i * 11).toByte)
     val pal256 = Array.tabulate[Byte](256 * 3)(i => (i * 3).toByte)
     val idx = Array.tabulate[Byte](24 * 16)(i => (i % 16).toByte)
+    val bilevel = Array.tabulate[Byte](32 * 24)(i => if ((i % 32 + 3 * (i / 32)) % 7 < 3) 1 else 0)
     val glyphs = Vector((3, 4, Array.fill[Byte](12)(1)), (2, 3, Array.fill[Byte](6)(1)))
     val placements = Seq((0, 1, 1), (1, 6, 2), (0, 11, 1), (1, 16, 6))
     val lines = Vector.tabulate(12)(i => s"line $i of the fuzz page, filtered stream text")
@@ -42,6 +43,10 @@ object FuzzCampaign {
       ("vp8-synth", Vp8Synth.wrapWebp(Vp8Synth.synthesize(33, 21, 55, 25)),
         (m: Array[Byte]) => WebpVp8l.decode(m)),
       ("vp8l", WebpVp8l.encode(rgb, 24, 16, 3), (m: Array[Byte]) => WebpVp8l.decode(m)),
+      ("jbig2-generic-arith", Jbig2.encode(bilevel, 32, 24, template = 0, tpgdon = true),
+        (m: Array[Byte]) => Jbig2.decode(m)),
+      ("jbig2-generic-mmr", Jbig2.encode(bilevel, 32, 24, mmr = true),
+        (m: Array[Byte]) => Jbig2.decode(m)),
       ("jbig2-arith-sym", Jbig2.encodeSymbolPage(30, 14, glyphs, placements),
         (m: Array[Byte]) => Jbig2.decode(m)),
       ("jbig2-huff-mmr", Jbig2.encodeSymbolPageHuff(30, 14, glyphs, placements),

@@ -1,7 +1,11 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.util.Random
+
 import org.scalatest.funsuite.AnyFunSuite
-import graft.codec.{CcittG4, Jbig2}
+import graft.codec.{CcittG4, Jbig2, Jpeg}
 
 /** JBIG2 subset codec. Verification posture (see Jbig2 scaladoc): the
   * MMR leg is externally pinned through the JDK-differential CCITT G4
@@ -9,8 +13,25 @@ import graft.codec.{CcittG4, Jbig2}
   * decoder round-trips (the MQ pair shares only the Qe table, and the
   * bit-level streams — stuffing, carry, renormalization — are produced
   * and consumed by independently written routines following the T.88
-  * flowcharts). */
+  * flowcharts) over random bitmaps of many sizes, densities and
+  * templates: regular text-like strokes never made the encoder carry
+  * after a stuffed 0xFF.
+  *
+  * The decoder writes each segment body once for both codings. The old
+  * per-coding decoders (two symbol-dictionary loops, two text-region
+  * loops) and the old region placement live on in [[OldJbig2]] as
+  * differential references over mutated and truncated streams of every
+  * encoder shape. Allowed differences, each counted by the differential:
+  *  - the first strip's OOB DT is named "OOB STRIPT" in both codings;
+  *  - region X and Y are unsigned, so a region whose X, Y, X + W or Y + H
+  *    passes 2^31 is outside the page (or makes it too large);
+  *  - the 4M-pixel height-class cap, once huffman's only, bounds
+  *    arithmetic dictionaries too (it replaces "symbol too large"), and
+  *    the dictionary pixel cap is charged per symbol in both codings;
+  *  - a huffman text region whose data runs out ends, as an arithmetic
+  *    one does once its MQ decoder runs out of fill. */
 class Jbig2Spec extends AnyFunSuite {
+  import Jbig2Spec._
 
   private def textLike(w: Int, h: Int, seed: Long): Array[Byte] = {
     // sparse strokes on white, like a scanned page
@@ -181,17 +202,6 @@ class Jbig2Spec extends AnyFunSuite {
     }
   }
 
-  private def renderWant(w: Int, h: Int, syms: Vector[(Int, Int, Array[Byte])],
-      placements: Seq[(Int, Int, Int)]): Array[Int] = {
-    val want = new Array[Int](w * h)
-    placements.foreach { case (id, x, y) =>
-      val (sw, sh, px) = syms(id)
-      for (yy <- 0 until sh; xx <- 0 until sw)
-        if (px(yy * sw + xx) != 0) want((y + yy) * w + (x + xx)) = 1
-    }
-    want
-  }
-
   test("SDHUFF dictionary round-trips: MMR collective bitmaps (JDK-pinned leg)") {
     val rng = new scala.util.Random(7)
     val syms = Vector.tabulate(6) { i =>
@@ -250,8 +260,6 @@ class Jbig2Spec extends AnyFunSuite {
   }
 
   test("SDHUFF dictionary cut before its export runs fails closed within 5 s") {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
     // page info (30 bytes) + dictionary segment; the dictionary's data
     // length field sits at 37..40 and its data starts at 41
     val syms = Vector((3, 3, Array.fill[Byte](9)(1)), (2, 2, Array.fill[Byte](4)(1)))
@@ -273,8 +281,6 @@ class Jbig2Spec extends AnyFunSuite {
   }
 
   test("arithmetic dictionary whose export runs keep decoding 0 fails closed within 5 s") {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
     // page info (30 bytes) + a valid arithmetic dictionary (#2) exporting
     // two symbols; its data length sits at 37..40 and its data at 41
     val syms = Vector((3, 3, Array.fill[Byte](9)(1)), (2, 2, Array.fill[Byte](4)(1)))
@@ -353,5 +359,884 @@ class Jbig2Spec extends AnyFunSuite {
     val im = Jbig2.decode(rest, globals).toOption.get
     assert(im.width == w && im.height == h)
     assert(im.pixels.map(p => if (p != 0) 1 else 0).sameElements(bm.map(_.toInt)))
+  }
+
+  test("generic regions round-trip over random bitmaps: sizes, densities, templates, TPGDON") {
+    // 48 of these 6,336 streams decoded to wrong pixels while the encoder
+    // dropped the carry out of the byte after a stuffed 0xFF
+    val wrong = genericSweep.filterNot { case (_, bm, w, h, t, tp) =>
+      sameImage(Jbig2.decode(Jbig2.encode(bm, w, h, t, tp)), w, h, bits(bm))
+    }.map(_._1).toVector
+    assert(wrong.isEmpty, s"${wrong.length} streams decode wrong, first: ${wrong.headOption}")
+  }
+
+  test("arithmetic symbol pages round-trip over random glyphs, placements and templates") {
+    val rng = new Random(2)
+    val wrong = (0 until 3000).filterNot { _ =>
+      val (w, h, syms, placements, template) = symbolPage(rng, huff = false)
+      sameImage(Jbig2.decode(Jbig2.encodeSymbolPage(w, h, syms, placements, template)),
+        w, h, renderWant(w, h, syms, placements))
+    }
+    assert(wrong.isEmpty, s"${wrong.length} pages decode wrong, first: ${wrong.headOption}")
+  }
+
+  test("huffman symbol pages round-trip: MMR and uncompressed dictionaries, both text codings") {
+    val rng = new Random(3)
+    val wrong = (0 until 1000).filterNot { i =>
+      val (w, h, syms, placements, _) = symbolPage(rng, huff = true)
+      val s = Jbig2.encodeSymbolPageHuff(w, h, syms, placements,
+        huffText = i % 2 == 1, uncompressed = i % 4 >= 2)
+      sameImage(Jbig2.decode(s), w, h, renderWant(w, h, syms, placements))
+    }
+    assert(wrong.isEmpty, s"${wrong.length} pages decode wrong, first: ${wrong.headOption}")
+  }
+
+  test("region X and Y are unsigned: a location past 2^31 lies outside the page") {
+    // a 16 x 6 page with a bar at x = 1 in rows 1-5. Read as a signed Int,
+    // X = 0xFFFFFFFD passed the extent check and drew the bar at x = 14
+    // in rows 0-4
+    val bm = Array.tabulate[Byte](16 * 6)(i => if (i % 16 == 1 && i / 16 >= 1) 1 else 0)
+    val good = Jbig2.encode(bm, 16, 6)
+    assert(sameImage(Jbig2.decode(good), 16, 6, bits(bm)))
+    // page info is 30 bytes; the region's data starts at 41, X at 49, Y at 53
+    for (at <- Seq(49, 53)) {
+      val s = good.clone()
+      putBe32(s, at, 0xfffffffdL)
+      assert(Jbig2.decode(s) == Left("jbig2: region outside page"), s"field at $at")
+    }
+    // without page info the canvas grows from the region's extents
+    val bare = good.drop(30)
+    putBe32(bare, 49 - 30, 0xfffffffdL)
+    assert(Jbig2.decode(bare) == Left("jbig2: image too large"))
+  }
+
+  test("an MQ decoder that runs out of data ends its segment within 5 s") {
+    // an all-white 16 x 6 page whose page and region claim N x N: 80 bytes
+    // that decoded N² pixels from fill bytes (4 s at N = 8000)
+    for (n <- Seq(1000, 4000, 8000)) {
+      val s = Jbig2.encode(new Array[Byte](16 * 6), 16, 6)
+      for (at <- Seq(11, 15, 41, 45)) putBe32(s, at, n)
+      val r = Await.result(Future(Jbig2.decode(s))(ExecutionContext.global), 5.seconds)
+      assert(r == Left("jbig2: arithmetic data exhausted"), s"n=$n")
+    }
+    // and the decoder alone, over no data at all
+    val dec = new Jbig2.MQDecoder(Array.emptyByteArray, 0, 0)
+    val ix = new Array[Int](1); val mps = new Array[Byte](1)
+    assertThrows[Jbig2.MQExhausted]((0 until 1 << 26).foreach(_ => dec.decode(ix, mps, 0)))
+  }
+
+  test("a huffman text region whose data runs out ends within 5 s") {
+    // FuzzCampaign's SBHUFF page with its instance count raised to
+    // 0xFF0004: the exhausted reader yielded zero bits, which drew 16M
+    // instances in 0.5-0.8 s per payload. Segments: page info 0..29,
+    // dictionary 30..62, three tables 63..131, then the text region's
+    // header (15 bytes: four referred segments) and data at 147: region
+    // info, flags, huffman flags, and the instance count at 168
+    val glyphs = Vector((3, 4, Array.fill[Byte](12)(1)), (2, 3, Array.fill[Byte](6)(1)))
+    val s = Jbig2.encodeSymbolPageHuff(30, 14, glyphs,
+      Seq((0, 1, 1), (1, 6, 2), (0, 11, 1), (1, 16, 6)), huffText = true)
+    assert(s.slice(168, 172).sameElements(Array[Byte](0, 0, 0, 4)))
+    s(169) = 0xff.toByte
+    val r = Await.result(Future(Jbig2.decode(s))(ExecutionContext.global), 5.seconds)
+    assert(r == Left("jbig2: truncated text region"))
+  }
+
+  test("decode differential: one segment body per type against the old per-coding decoders") {
+    val counts = scala.collection.mutable.TreeMap.empty[String, Int].withDefaultValue(0)
+    differentialShapes.foreach { case (shape, good) =>
+      val rng = new Random(shape.hashCode)
+      val mutated = (0 until 2000).map { i =>
+        val m = good.clone()
+        (0 to i % 3).foreach(_ => m(rng.nextInt(m.length)) = rng.nextInt(256).toByte)
+        m
+      }
+      val cut = (0 until good.length).map(n => java.util.Arrays.copyOf(good, n))
+      (mutated ++ cut).foreach { in =>
+        val want = OldJbig2.decode(in)
+        val got = Jbig2.decode(in)
+        val kind = difference(want, got, OldJbig2.wrapped)
+        assert(kind.nonEmpty, s"$shape: reference $want, now ${got.map(im => s"${im.width}x${im.height}")}")
+        counts(kind.get) += 1
+      }
+    }
+    info(counts.map { case (k, n) => s"$k: $n" }.mkString("; "))
+    assert(counts("same") > 0)
+  }
+}
+
+object Jbig2Spec {
+
+  def bits(bm: Array[Byte]): Array[Int] = bm.map(v => if (v != 0) 1 else 0)
+
+  def sameImage(r: Either[String, Jpeg.Image], w: Int, h: Int, want: Array[Int]): Boolean =
+    r.exists(im => im.width == w && im.height == h && bits(im.pixels).sameElements(want))
+
+  def putBe32(b: Array[Byte], at: Int, v: Long): Unit =
+    (0 until 4).foreach(k => b(at + k) = (v >>> (8 * (3 - k))).toByte)
+
+  def renderWant(w: Int, h: Int, syms: Vector[(Int, Int, Array[Byte])],
+      placements: Seq[(Int, Int, Int)]): Array[Int] = {
+    val want = new Array[Int](w * h)
+    placements.foreach { case (id, x, y) =>
+      val (sw, sh, px) = syms(id)
+      for (yy <- 0 until sh; xx <- 0 until sw)
+        if (px(yy * sw + xx) != 0) want((y + yy) * w + (x + xx)) = 1
+    }
+    want
+  }
+
+  private val Densities = Seq(0.0, 0.001, 0.05, 0.5, 0.95, 1.0)
+
+  /** 6,336 random bitmaps (name, bitmap, w, h, template, TPGDON) from one
+    * Random(1): widths x heights x densities x templates x TPGDON x 2. */
+  def genericSweep: Iterator[(String, Array[Byte], Int, Int, Int, Boolean)] = {
+    val rng = new Random(1)
+    for {
+      w <- Iterator(1, 2, 3, 7, 8, 9, 16, 31, 64, 100, 257)
+      h <- Iterator(1, 2, 5, 17, 64, 130)
+      d <- Densities.iterator
+      template <- Iterator(0, 1, 2, 3)
+      tpgdon <- Iterator(false, true)
+      draw <- Iterator(0, 1)
+    } yield {
+      val bm = Array.fill[Byte](w * h)(if (rng.nextDouble() < d) 1 else 0)
+      (s"w=$w h=$h density=$d template=$template tpgdon=$tpgdon draw=$draw", bm, w, h, template, tpgdon)
+    }
+  }
+
+  /** A random symbol page: (w, h, symbols, placements, template). Placed
+    * glyphs may overlap (the region ORs them). Huffman pages order each
+    * height class by width: Table B.2 has no negative width deltas. */
+  def symbolPage(rng: Random, huff: Boolean)
+      : (Int, Int, Vector[(Int, Int, Array[Byte])], Seq[(Int, Int, Int)], Int) = {
+    val d = Densities(1 + rng.nextInt(5))
+    val n = 1 + rng.nextInt(12)
+    val drawn = Vector.fill(n) {
+      val sw = 1 + rng.nextInt(16); val sh = 1 + rng.nextInt(16)
+      (sw, sh, Array.fill[Byte](sw * sh)(if (rng.nextDouble() < d) 1 else 0))
+    }
+    val syms = if (huff) drawn.sortBy { case (sw, sh, _) => (sh, sw) } else drawn
+    val w = 16 + rng.nextInt(100); val h = 16 + rng.nextInt(60)
+    val placements = Seq.fill(rng.nextInt(40)) {
+      val id = rng.nextInt(n)
+      (id, rng.nextInt(w - syms(id)._1 + 1), rng.nextInt(h - syms(id)._2 + 1))
+    }
+    (w, h, syms, placements, rng.nextInt(4))
+  }
+
+  /** One stream of every encoder shape. */
+  def differentialShapes: Seq[(String, Array[Byte])] = {
+    val rng = new Random(5)
+    val bm = Array.fill[Byte](40 * 24)(if (rng.nextInt(10) < 3) 1 else 0)
+    val glyphs = Vector(
+      (3, 4, Array[Byte](0, 1, 0, 1, 0, 1, 1, 1, 1, 1, 0, 1)),
+      (2, 3, Array[Byte](1, 1, 1, 0, 1, 1)),
+      (1, 1, Array[Byte](1)),
+      (4, 4, Array[Byte](1, 0, 0, 1, 0, 1, 1, 0, 0, 1, 1, 0, 1, 0, 0, 1)))
+    val placements = Seq((0, 1, 1), (1, 6, 2), (3, 10, 1), (2, 16, 4), (1, 2, 9),
+      (3, 8, 9), (0, 14, 8), (2, 20, 11), (3, 26, 9), (0, 32, 10))
+    (for (t <- 0 to 3; tp <- Seq(false, true))
+      yield s"generic t$t tpgdon=$tp" -> Jbig2.encode(bm, 40, 24, t, tp)) ++
+      Seq("generic mmr" -> Jbig2.encode(bm, 40, 24, mmr = true),
+        "arithmetic symbol page" -> Jbig2.encodeSymbolPage(48, 20, glyphs, placements)) ++
+      (for (un <- Seq(false, true); ht <- Seq(false, true))
+        yield s"SDHUFF uncompressed=$un SBHUFF=$ht" ->
+          Jbig2.encodeSymbolPageHuff(48, 20, glyphs, placements, huffText = ht, uncompressed = un))
+  }
+
+  /** A Left made from a thrown exception: its class. Only the class is
+    * compared, because the JIT's preallocated implicit exceptions carry
+    * no message once a throw site is hot. */
+  private val Thrown = "jbig2: (\\w+Exception): .*".r
+
+  /** How the new decode may differ from the reference's: the kind of
+    * difference, or None where it must not differ. `wrapped`: the
+    * reference met a region its signed placement read wrong. */
+  def difference(want: Either[String, Jpeg.Image], got: Either[String, Jpeg.Image],
+      wrapped: Boolean): Option[String] = (want, got) match {
+    case (Right(a), Right(b)) if a.width == b.width && a.height == b.height &&
+      a.pixels.sameElements(b.pixels) => Some("same")
+    case (Left(a), Left(b)) if a == b => Some("same")
+    case (Left(Thrown(a)), Left(Thrown(b))) if a == b => Some("same")
+    case (Left("jbig2: OOB DT"), Left("jbig2: OOB STRIPT")) => Some("renamed OOB DT -> OOB STRIPT")
+    case (_, Left("jbig2: region outside page" | "jbig2: image too large")) if wrapped =>
+      Some("unsigned region X/Y")
+    case (_, Left("jbig2: height class too large")) => Some("height-class cap, now both codings")
+    case (Left(_), Left("jbig2: dictionary too large")) => Some("dictionary cap, now per symbol")
+    case (_, Left("jbig2: truncated text region")) => Some("huffman text region out of data")
+    case _ => None
+  }
+}
+
+/** The parent's symbol-dictionary, text-region and region-placement
+  * decoders, one per coding, verbatim but for the `wrapped` flag: the
+  * differential reference for [[Jbig2]]'s one body per segment type. */
+private object OldJbig2 {
+  import graft.codec.CcittG4
+  import graft.codec.Jbig2._
+
+  /** Decode an arithmetic symbol dictionary's data; `inputSyms` are the
+    * symbols of referred dictionaries, in segment order. Returns the
+    * EXPORTED symbols. Fences: SDHUFF, SDREFAGG, non-nominal AT. */
+  private def decodeSymbolDict(b: Array[Byte], off: Int, end: Int,
+      inputSyms: Vector[SymBitmap],
+      customTables: Vector[HuffTable]): Either[String, Vector[SymBitmap]] = {
+    if (off + 12 > end) return Left("jbig2: short symbol dict")
+    val flags = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+    val sdhuff = (flags & 1) != 0
+    val sdrefagg = (flags & 2) != 0
+    val template = (flags >> 10) & 3
+    if (sdrefagg) return Left("jbig2: refinement/aggregate symbol dict unsupported")
+    if (sdhuff) return decodeSymbolDictHuff(b, off, end, flags, inputSyms, customTables)
+    var q = off + 2
+    val atCount = if (template == 0) 4 else 1
+    if (q + 2 * atCount + 8 > end) return Left("jbig2: short symbol dict")
+    val at = (0 until atCount).map(k => (b(q + 2 * k).toInt, b(q + 2 * k + 1).toInt))
+    if (at != NominalAt(template).toSeq)
+      return Left("jbig2: non-nominal AT pixels unsupported")
+    q += 2 * atCount
+    val numEx = be32(b, q).toInt
+    val numNew = be32(b, q + 4).toInt
+    q += 8
+    if (numNew < 0 || numNew > 100000 || numEx < 0 || numEx > 100000)
+      return Left("jbig2: implausible symbol counts")
+    val dec = new MQDecoder(b, q, end - q)
+    val iadh = new IntCtx; val iadw = new IntCtx; val iaex = new IntCtx
+    val gix = new Array[Int](genericCtxSize(template))
+    val gmps = new Array[Byte](genericCtxSize(template))
+    val newSyms = Vector.newBuilder[SymBitmap]
+    var decoded = 0
+    var height = 0
+    // cumulative allocation cap: each symbol is individually bounded,
+    // but a hostile stream may request MANY large symbols — real
+    // dictionaries hold small glyphs, so one page-worth of pixels
+    // across the whole dictionary is a generous ceiling (found by the
+    // 25k-mutation fuzz campaign as an OOM, not a Left)
+    var totalPixels = 0L
+    while (decoded < numNew) {
+      val dh = decodeInt(dec, iadh).getOrElse(
+        return Left("jbig2: OOB height-class delta"))
+      height += dh
+      if (height <= 0 || height > (1 << 14)) return Left("jbig2: bad symbol height")
+      var width = 0
+      var classDone = false
+      while (!classDone) {
+        decodeInt(dec, iadw) match {
+          case None => classDone = true
+          case Some(dw) =>
+            width += dw
+            if (width <= 0 || width > (1 << 14) || decoded >= numNew)
+              return Left("jbig2: bad symbol width")
+            if (width.toLong * height > MaxPixels) return Left("jbig2: symbol too large")
+            totalPixels += width.toLong * height
+            if (totalPixels > MaxPixels) return Left("jbig2: dictionary too large")
+            val px = decodeGenericWith(dec, gix, gmps, width, height, template, tpgdon = false)
+            newSyms += SymBitmap(width, height, px)
+            decoded += 1
+        }
+      }
+    }
+    // export flags: alternating run lengths over input ++ new. A run may
+    // legally be 0, so a stream that keeps decoding 0 never advances; no
+    // valid stream needs more than 2 * all.length + 2 runs.
+    val all = inputSyms ++ newSyms.result()
+    val exported = Vector.newBuilder[SymBitmap]
+    var exIndex = 0
+    var curFlag = false
+    var runs = 0
+    while (exIndex < all.length) {
+      runs += 1
+      if (runs > 2 * all.length + 2) return Left("jbig2: too many export runs")
+      val run = decodeInt(dec, iaex).getOrElse(return Left("jbig2: OOB export run"))
+      if (run < 0 || exIndex + run > all.length) return Left("jbig2: bad export run")
+      if (curFlag) (exIndex until exIndex + run).foreach(i => exported += all(i))
+      exIndex += run
+      curFlag = !curFlag
+    }
+    val ex = exported.result()
+    if (ex.length != numEx) return Left("jbig2: export count mismatch")
+    Right(ex)
+  }
+
+  /** Huffman-coded (SDHUFF) symbol dictionary, T.88 6.5: height classes
+    * whose per-symbol bitmaps are stored as one COLLECTIVE bitmap per
+    * class — MMR-coded (riding the JDK-pinned [[CcittG4]]) or
+    * uncompressed when BMSIZE = 0. Table selections: DH 0→B.4 1→B.5,
+    * DW 0→B.2 1→B.3, BMSIZE 0→B.1, each 3→next custom table from the
+    * referred table segments; EX runs always B.1. */
+  private def decodeSymbolDictHuff(b: Array[Byte], off: Int, end: Int, flags: Int,
+      inputSyms: Vector[SymBitmap],
+      customTables: Vector[HuffTable]): Either[String, Vector[SymBitmap]] = {
+    val dhSel = (flags >> 2) & 3
+    val dwSel = (flags >> 4) & 3
+    val bmSel = (flags >> 6) & 1
+    var customIdx = 0
+    def nextCustom(): Either[String, HuffTable] =
+      if (customIdx < customTables.length) { customIdx += 1; Right(customTables(customIdx - 1)) }
+      else Left("jbig2: missing custom table")
+    val dhT = dhSel match {
+      case 0 => TableB4
+      case 1 => TableB5
+      case 3 => nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
+      case _ => return Left("jbig2: bad DH table selection")
+    }
+    val dwT = dwSel match {
+      case 0 => TableB2
+      case 1 => TableB3
+      case 3 => nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
+      case _ => return Left("jbig2: bad DW table selection")
+    }
+    val bmT = if (bmSel == 0) TableB1
+      else nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
+
+    var q = off + 2 // SDHUFF: no AT pixels follow the flags
+    if (q + 8 > end) return Left("jbig2: short symbol dict")
+    val numEx = be32(b, q).toInt
+    val numNew = be32(b, q + 4).toInt
+    q += 8
+    if (numNew < 0 || numNew > 100000 || numEx < 0 || numEx > 100000)
+      return Left("jbig2: implausible symbol counts")
+    val r = new HuffReader(b, q, end)
+    val newSyms = Vector.newBuilder[SymBitmap]
+    var decoded = 0
+    var height = 0
+    var totalPixels = 0L
+    while (decoded < numNew) {
+      val dh = dhT.decode(r) match {
+        case Right(Some(v)) => v
+        case Right(None) => return Left("jbig2: OOB height-class delta")
+        case Left(e) => return Left(e)
+      }
+      height += dh
+      if (height <= 0 || height > (1 << 14)) return Left("jbig2: bad symbol height")
+      val widths = scala.collection.mutable.ArrayBuffer.empty[Int]
+      var width = 0
+      var totWidth = 0L
+      var classDone = false
+      while (!classDone) {
+        dwT.decode(r) match {
+          case Right(None) => classDone = true
+          case Right(Some(dw)) =>
+            width += dw
+            if (width <= 0 || width > (1 << 14) || decoded + widths.length >= numNew)
+              return Left("jbig2: bad symbol width")
+            totWidth += width
+            // glyph dictionaries hold character-scale symbols; a hostile
+            // stream claiming a multi-megapixel height class costs a
+            // full (bounded but slow) MMR decode attempt PER MUTATION —
+            // cap classes at 4M pixels to keep hostile cost low (the
+            // fuzz campaign surfaced this as ~150ms/decode, not a crash)
+            if (totWidth * height > (1L << 22)) return Left("jbig2: height class too large")
+            widths += width
+          case Left(e) => return Left(e)
+        }
+      }
+      if (widths.nonEmpty) {
+        totalPixels += totWidth * height
+        if (totalPixels > MaxPixels) return Left("jbig2: dictionary too large")
+        val bmSize = bmT.decode(r) match {
+          case Right(Some(v)) if v >= 0 => v
+          case Right(_) => return Left("jbig2: bad BMSIZE")
+          case Left(e) => return Left(e)
+        }
+        r.align()
+        val tw = totWidth.toInt
+        val collective: Array[Byte] =
+          if (bmSize == 0) {
+            // uncompressed: height rows, each padded to a byte boundary
+            val rowBytes = (tw + 7) / 8
+            if (r.pos + rowBytes.toLong * height > end)
+              return Left("jbig2: truncated collective bitmap")
+            val px = new Array[Byte](tw * height)
+            var y = 0
+            while (y < height) {
+              var x = 0
+              while (x < tw) {
+                px(y * tw + x) =
+                  ((b(r.pos + y * rowBytes + (x >> 3)) >> (7 - (x & 7))) & 1).toByte
+                x += 1
+              }
+              y += 1
+            }
+            r.pos += rowBytes * height
+            px
+          } else {
+            if (r.pos + bmSize.toLong > end)
+              return Left("jbig2: truncated collective bitmap")
+            CcittG4.decode(java.util.Arrays.copyOfRange(b, r.pos, r.pos + bmSize),
+              tw, height) match {
+              case Right(px) => r.pos += bmSize; px
+              case Left(err) => return Left(s"jbig2: collective mmr: $err")
+            }
+          }
+        // split by widths
+        var x0 = 0
+        widths.foreach { sw =>
+          val px = new Array[Byte](sw * height)
+          var y = 0
+          while (y < height) {
+            System.arraycopy(collective, y * tw + x0, px, y * sw, sw)
+            y += 1
+          }
+          newSyms += SymBitmap(sw, height, px)
+          decoded += 1
+          x0 += sw
+        }
+      }
+    }
+    // export runs via Table B.1. An exhausted reader yields zero bits, which
+    // B.1 decodes as a run of 0 forever: fail instead, and bound the runs
+    // as the arithmetic path does.
+    val all = inputSyms ++ newSyms.result()
+    val exported = Vector.newBuilder[SymBitmap]
+    var exIndex = 0
+    var curFlag = false
+    var runs = 0
+    while (exIndex < all.length) {
+      runs += 1
+      if (runs > 2 * all.length + 2) return Left("jbig2: too many export runs")
+      if (r.exhausted) return Left("jbig2: truncated export runs")
+      val run = TableB1.decode(r) match {
+        case Right(Some(v)) => v
+        case Right(None) => return Left("jbig2: OOB export run")
+        case Left(e) => return Left(e)
+      }
+      if (run < 0 || exIndex + run > all.length) return Left("jbig2: bad export run")
+      if (curFlag) (exIndex until exIndex + run).foreach(i => exported += all(i))
+      exIndex += run
+      curFlag = !curFlag
+    }
+    val ex = exported.result()
+    if (ex.length != numEx) return Left("jbig2: export count mismatch")
+    Right(ex)
+  }
+
+  /** Decode an arithmetic text region's data onto a fresh region bitmap.
+    * Fences: SBHUFF, SBREFINE, TRANSPOSED, combination ops beyond OR. */
+  private def decodeTextRegion(b: Array[Byte], off: Int, end: Int,
+      rw: Int, rh: Int, syms: Vector[SymBitmap],
+      customTables: Vector[HuffTable]): Either[String, Array[Byte]] = {
+    if (off + 4 > end) return Left("jbig2: short text region")
+    val flags = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+    val sbhuff = (flags & 1) != 0
+    val refine = (flags & 2) != 0
+    val logStrips = (flags >> 2) & 3
+    val refCorner = (flags >> 4) & 3 // 0 BL, 1 TL, 2 BR, 3 TR
+    val transposed = (flags & 0x40) != 0
+    val combOp = (flags >> 7) & 3
+    val defPixel = (flags >> 9) & 1
+    var dsOffset = (flags >> 10) & 0x1f
+    if (dsOffset > 15) dsOffset -= 32 // signed 5-bit
+    if (refine) return Left("jbig2: refinement text region unsupported")
+    if (transposed) return Left("jbig2: transposed text region unsupported")
+    if (combOp != 0) return Left("jbig2: text region comb op unsupported")
+    if (defPixel != 0) return Left("jbig2: SBDEFPIXEL unsupported")
+    if (syms.isEmpty) return Left("jbig2: text region without symbols")
+    if (sbhuff)
+      return decodeTextRegionHuff(b, off + 2, end, rw, rh, syms, customTables,
+        logStrips, refCorner, dsOffset)
+    val q = off + 2
+    if (q + 4 > end) return Left("jbig2: short text region")
+    val numInstances = be32(b, q).toInt
+    if (numInstances < 0 || numInstances > (1 << 24)) return Left("jbig2: bad instance count")
+    val strips = 1 << logStrips
+    var symCodeLen = 32 - Integer.numberOfLeadingZeros(math.max(1, syms.length - 1))
+    if ((1 << symCodeLen) < syms.length) symCodeLen += 1
+    if (symCodeLen == 0) symCodeLen = 1
+    val dec = new MQDecoder(b, q + 4, end - (q + 4))
+    val iadt = new IntCtx; val iafs = new IntCtx; val iads = new IntCtx
+    val iait = new IntCtx; val iaid = new IntCtx
+    val bm = new Array[Byte](rw * rh)
+    var stripT = -decodeInt(dec, iadt).getOrElse(return Left("jbig2: OOB DT")) * strips
+    var firstS = 0
+    var inst = 0
+    while (inst < numInstances) {
+      stripT += decodeInt(dec, iadt).getOrElse(return Left("jbig2: OOB DT")) * strips
+      firstS += decodeInt(dec, iafs).getOrElse(return Left("jbig2: OOB FS"))
+      var curS = firstS
+      var stripDone = false
+      var firstInStrip = true
+      while (!stripDone && inst < numInstances) {
+        if (!firstInStrip) {
+          decodeInt(dec, iads) match {
+            case None => stripDone = true
+            case Some(ids) => curS += ids + dsOffset
+          }
+        }
+        if (!stripDone) {
+          val curT = if (strips == 1) 0 else decodeInt(dec, iait).getOrElse(
+            return Left("jbig2: OOB IT"))
+          val t = stripT + curT
+          val id = decodeIaid(dec, iaid, symCodeLen)
+          if (id < 0 || id >= syms.length) return Left("jbig2: symbol id out of range")
+          val sym = syms(id)
+          // draw (left-corner flow; right corners advance S first)
+          val x0 = refCorner match {
+            case 1 | 0 => curS // TOPLEFT / BOTTOMLEFT
+            case _ => curS // TOPRIGHT / BOTTOMRIGHT: S names the right
+              // edge, but since curS advances by WI-1 either way the left
+              // edge is curS for the first placement of the strip too
+          }
+          val y0 = refCorner match {
+            case 1 | 3 => t // top corners
+            case _ => t - sym.h + 1 // bottom corners
+          }
+          var yy = 0
+          while (yy < sym.h) {
+            var xx = 0
+            val ty = y0 + yy
+            if (ty >= 0 && ty < rh) {
+              while (xx < sym.w) {
+                val tx = x0 + xx
+                if (tx >= 0 && tx < rw && sym.px(yy * sym.w + xx) != 0)
+                  bm(ty * rw + tx) = 1
+                xx += 1
+              }
+            }
+            yy += 1
+          }
+          curS += sym.w - 1
+          inst += 1
+          firstInStrip = false
+        }
+      }
+    }
+    Right(bm)
+  }
+
+  /** Huffman-coded (SBHUFF) text region, T.88 6.4 + 7.4.3: FS/DS/DT
+    * table selections (standard B.6-B.15 are typed fences — see the
+    * standard-table note; custom tables carry those roles), then the
+    * stream-defined symbol-ID code table (35 five-bit runcode lengths →
+    * runcode prefix code → per-symbol code lengths with the 32/33/34
+    * repeat codes → canonical symbol-ID prefix code, byte-aligned
+    * after), then the strip/instance loop with CURT read as raw bits. */
+  private def decodeTextRegionHuff(b: Array[Byte], off: Int, end: Int,
+      rw: Int, rh: Int, syms: Vector[SymBitmap], customTables: Vector[HuffTable],
+      logStrips: Int, refCorner: Int, dsOffset: Int): Either[String, Array[Byte]] = {
+    if (off + 6 > end) return Left("jbig2: short text region")
+    val hf = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+    val fsSel = hf & 3
+    val dsSel = (hf >> 2) & 3
+    val dtSel = (hf >> 4) & 3
+    if (((hf >> 6) & 0xff) != 0) return Left("jbig2: refinement table flags set without refine")
+    var customIdx = 0
+    def nextCustom(): Either[String, HuffTable] =
+      if (customIdx < customTables.length) { customIdx += 1; Right(customTables(customIdx - 1)) }
+      else Left("jbig2: missing custom table")
+    val fsT = fsSel match {
+      case 3 => nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
+      case k => return Left(s"jbig2: standard FS table B.${6 + k} unsupported")
+    }
+    val dsT = dsSel match {
+      case 3 => nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
+      case k => return Left(s"jbig2: standard DS table B.${8 + k} unsupported")
+    }
+    val dtT = dtSel match {
+      case 3 => nextCustom() match { case Right(t) => t; case Left(e) => return Left(e) }
+      case k => return Left(s"jbig2: standard DT table B.${11 + k} unsupported")
+    }
+    val numInstances = be32(b, off + 2).toInt
+    if (numInstances < 0 || numInstances > (1 << 24)) return Left("jbig2: bad instance count")
+    val strips = 1 << logStrips
+    val r = new HuffReader(b, off + 6, end)
+    // ---- symbol-ID code table (7.4.3.1.7) ----
+    val runLens = Array.fill(35)(r.bits(5))
+    val runTable = new HuffTable(Array.tabulate(35)(i => HuffLine(runLens(i), 0, i)))
+    val symLens = new Array[Int](syms.length)
+    var si = 0
+    var prev = 0
+    while (si < syms.length) {
+      runTable.decode(r) match {
+        case Right(Some(code)) if code <= 31 => symLens(si) = code; prev = code; si += 1
+        case Right(Some(32)) =>
+          val rep = 3 + r.bits(2)
+          if (si + rep > syms.length) return Left("jbig2: symbol code repeat overrun")
+          (0 until rep).foreach { _ => symLens(si) = prev; si += 1 }
+        case Right(Some(33)) =>
+          val rep = 3 + r.bits(3)
+          if (si + rep > syms.length) return Left("jbig2: symbol code repeat overrun")
+          (0 until rep).foreach { _ => symLens(si) = 0; si += 1 }
+        case Right(Some(34)) =>
+          val rep = 11 + r.bits(7)
+          if (si + rep > syms.length) return Left("jbig2: symbol code repeat overrun")
+          (0 until rep).foreach { _ => symLens(si) = 0; si += 1 }
+        case _ => return Left("jbig2: bad symbol code length")
+      }
+    }
+    val symTable = new HuffTable(Array.tabulate(syms.length)(i => HuffLine(symLens(i), 0, i)))
+    r.align()
+    // ---- instances ----
+    val bm = new Array[Byte](rw * rh)
+    def readVal(t: HuffTable, what: String): Either[String, Option[Int]] =
+      t.decode(r) match {
+        case Left(e) => Left(e)
+        case ok => ok
+      }
+    var stripT = readVal(dtT, "DT") match {
+      case Right(Some(v)) => -v * strips
+      case Right(None) => return Left("jbig2: OOB STRIPT")
+      case Left(e) => return Left(e)
+    }
+    var firstS = 0
+    var inst = 0
+    while (inst < numInstances) {
+      stripT += (readVal(dtT, "DT") match {
+        case Right(Some(v)) => v * strips
+        case Right(None) => return Left("jbig2: OOB DT")
+        case Left(e) => return Left(e)
+      })
+      firstS += (readVal(fsT, "FS") match {
+        case Right(Some(v)) => v
+        case Right(None) => return Left("jbig2: OOB FS")
+        case Left(e) => return Left(e)
+      })
+      var curS = firstS
+      var stripDone = false
+      var firstInStrip = true
+      while (!stripDone && inst < numInstances) {
+        if (!firstInStrip) {
+          readVal(dsT, "DS") match {
+            case Right(None) => stripDone = true
+            case Right(Some(ids)) => curS += ids + dsOffset
+            case Left(e) => return Left(e)
+          }
+        }
+        if (!stripDone) {
+          val curT = if (strips == 1) 0 else r.bits(logStrips)
+          val t = stripT + curT
+          val id = symTable.decode(r) match {
+            case Right(Some(v)) => v
+            case _ => return Left("jbig2: bad symbol id code")
+          }
+          if (id < 0 || id >= syms.length) return Left("jbig2: symbol id out of range")
+          val sym = syms(id)
+          val y0 = refCorner match {
+            case 1 | 3 => t
+            case _ => t - sym.h + 1
+          }
+          var yy = 0
+          while (yy < sym.h) {
+            val ty = y0 + yy
+            if (ty >= 0 && ty < rh) {
+              var xx = 0
+              while (xx < sym.w) {
+                val tx = curS + xx
+                if (tx >= 0 && tx < rw && sym.px(yy * sym.w + xx) != 0)
+                  bm(ty * rw + tx) = 1
+                xx += 1
+              }
+            }
+            yy += 1
+          }
+          curS += sym.w - 1
+          inst += 1
+          firstInStrip = false
+        }
+      }
+    }
+    Right(bm)
+  }
+
+  // ------------------------------------------------------------ segments
+
+  private def be32(b: Array[Byte], p: Int): Long =
+    ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
+      ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
+
+  /** Decode an EMBEDDED JBIG2 stream (PDF /JBIG2Decode payload, with the
+    * /JBIG2Globals stream, if any, simply prepended — globals carry no
+    * page association that matters for the supported subset). Returns a
+    * 1-component image: 0 = white, 255 = black (ink), matching the
+    * usual 1-bit → gray convention used by the CCITT path. */
+  def decode(data: Array[Byte], globals: Array[Byte] = Array.emptyByteArray): Either[String, Jpeg.Image] = {
+    wrapped = false
+    try decodeImpl(if (globals.isEmpty) data else globals ++ data)
+    catch {
+      case e: Jbig2.MQExhausted => Left(e.getMessage)
+      case e: Exception => Left(s"jbig2: ${e.getClass.getSimpleName}: ${e.getMessage}")
+    }
+  }
+
+  /** Whether the last [[decode]] met a region whose X, Y, X + W or Y + H
+    * did not fit a signed Int (read as negative here). */
+  var wrapped = false
+
+  private def decodeImpl(b: Array[Byte]): Either[String, Jpeg.Image] = {
+    var p = 0
+    var pageW = -1
+    var pageH = -1
+    var page: Array[Byte] = null
+    var sawRegion = false
+    val dicts = scala.collection.mutable.Map.empty[Long, Vector[SymBitmap]]
+    val tables = scala.collection.mutable.Map.empty[Long, HuffTable]
+    while (p < b.length) {
+      if (p + 11 > b.length) return Left("jbig2: truncated segment header")
+      // segment number (4) + flags (1)
+      val flags = b(p + 4) & 0xff
+      val segType = flags & 0x3f
+      val pageAssoc4 = (flags & 0x40) != 0
+      var q = p + 5
+      // referred-to segments
+      val rts0 = b(q) & 0xff
+      var refCount = rts0 >> 5
+      if (refCount == 7) {
+        refCount = (be32(b, q) & 0x1fffffff).toInt
+        q += 4 + (refCount + 8) / 8 // retain bits
+      } else q += 1
+      // referred segment numbers: size by THIS segment's number
+      val segNum = be32(b, p)
+      val refSize = if (segNum <= 256) 1 else if (segNum <= 65536) 2 else 4
+      if (refCount < 0 || refCount > 1000) return Left("jbig2: implausible ref count")
+      val referred = new Array[Long](refCount)
+      var rr = 0
+      while (rr < refCount) {
+        referred(rr) = refSize match {
+          case 1 => (b(q) & 0xffL)
+          case 2 => ((b(q) & 0xffL) << 8) | (b(q + 1) & 0xffL)
+          case _ => be32(b, q)
+        }
+        q += refSize
+        rr += 1
+      }
+      q += (if (pageAssoc4) 4 else 1)
+      if (q + 4 > b.length) return Left("jbig2: truncated segment header")
+      val dataLen = be32(b, q)
+      q += 4
+      if (dataLen == 0xffffffffL) return Left("jbig2: unknown segment length unsupported")
+      if (dataLen > Int.MaxValue || q + dataLen > b.length)
+        return Left("jbig2: truncated segment data")
+      val dEnd = q + dataLen.toInt
+
+      segType match {
+        case 48 => // page info
+          if (dataLen < 19) return Left("jbig2: short page info")
+          pageW = be32(b, q).toInt
+          pageH = be32(b, q + 4).toInt // striped pages carry -1: canvas
+          // is then grown from region extents when the first region lands
+          if (pageW <= 0) return Left("jbig2: bad page width")
+          if (pageH > 0 && pageW.toLong * pageH > MaxPixels)
+            return Left("jbig2: image too large")
+          if (pageH > 0) page = new Array[Byte](pageW * pageH)
+        case 36 | 38 | 39 => // immediate generic region (incl. lossless)
+          if (dataLen < 18) return Left("jbig2: short region segment")
+          val rw = be32(b, q).toInt
+          val rh = be32(b, q + 4).toInt
+          val rx = be32(b, q + 8).toInt
+          val ry = be32(b, q + 12).toInt
+          val combOp = b(q + 16) & 0x7
+          if (rw <= 0 || rh <= 0 || rw.toLong * rh > MaxPixels)
+            return Left("jbig2: bad region size")
+          if (rx < 0 || ry < 0 || rx + rw < 0 || ry + rh < 0) wrapped = true
+          var r = q + 17
+          val gFlags = b(r) & 0xff
+          r += 1
+          val mmr = (gFlags & 1) != 0
+          val template = (gFlags >> 1) & 3
+          val tpgdon = (gFlags & 8) != 0
+          val bitmap: Array[Byte] =
+            if (mmr) {
+              CcittG4.decode(java.util.Arrays.copyOfRange(b, r, dEnd), rw, rh) match {
+                case Right(px) =>
+                  // CcittG4.decode yields 0/1 per pixel? normalize below
+                  px
+                case Left(err) => return Left(s"jbig2: mmr: $err")
+              }
+            } else {
+              val atCount = if (template == 0) 4 else 1
+              val at = (0 until atCount).map { k =>
+                (b(r + 2 * k).toInt, b(r + 2 * k + 1).toInt)
+              }
+              r += 2 * atCount
+              if (at != NominalAt(template).toSeq)
+                return Left("jbig2: non-nominal AT pixels unsupported")
+              decodeGenericArith(b, r, dEnd - r, rw, rh, template, tpgdon)
+            }
+          sawRegion = true
+          if (page == null) {
+            // absent or striped (-1 height) page info: the canvas grows
+            // from region extents
+            if (pageW <= 0) pageW = rx + rw
+            pageH = math.max(pageH, ry + rh)
+            if (pageW.toLong * pageH > MaxPixels || rx + rw > pageW)
+              return Left("jbig2: image too large")
+            page = new Array[Byte](pageW * pageH)
+          } else if (ry + rh > pageH || rx + rw > pageW) {
+            return Left("jbig2: region outside page")
+          }
+          // composite (OR / REPLACE both reduce to OR on a 0 page;
+          // AND/XOR/XNOR over scanned pages are rare — fence honestly)
+          if (combOp > 1 && combOp != 4) return Left("jbig2: unsupported combination operator")
+          var yy = 0
+          while (yy < rh) {
+            var xx = 0
+            while (xx < rw) {
+              val v = bitmap(yy * rw + xx)
+              if (v != 0) page((ry + yy) * pageW + (rx + xx)) = 1
+              xx += 1
+            }
+            yy += 1
+          }
+        case 0 => // symbol dictionary
+          val inputSyms = referred.toVector.flatMap(r => dicts.getOrElse(r, Vector.empty))
+          val custom = referred.toVector.flatMap(r => tables.get(r))
+          decodeSymbolDict(b, q, dEnd, inputSyms, custom) match {
+            case Right(ex) => dicts(segNum) = ex
+            case Left(err) => return Left(err)
+          }
+        case 53 => // custom huffman table
+          parseCustomTable(b, q, dEnd) match {
+            case Right(t) => tables(segNum) = t
+            case Left(err) => return Left(err)
+          }
+        case 4 | 6 | 7 => // text region (intermediate or immediate)
+          if (dataLen < 17) return Left("jbig2: short region segment")
+          val rw = be32(b, q).toInt
+          val rh = be32(b, q + 4).toInt
+          val rx = be32(b, q + 8).toInt
+          val ry = be32(b, q + 12).toInt
+          val combOpR = b(q + 16) & 0x7
+          if (rw <= 0 || rh <= 0 || rw.toLong * rh > MaxPixels)
+            return Left("jbig2: bad region size")
+          if (rx < 0 || ry < 0 || rx + rw < 0 || ry + rh < 0) wrapped = true
+          if (combOpR > 1 && combOpR != 4)
+            return Left("jbig2: unsupported combination operator")
+          val syms = referred.toVector.flatMap(r => dicts.getOrElse(r, Vector.empty))
+          val customT = referred.toVector.flatMap(r => tables.get(r))
+          decodeTextRegion(b, q + 17, dEnd, rw, rh, syms, customT) match {
+            case Left(err) => return Left(err)
+            case Right(bitmap) =>
+              sawRegion = true
+              if (page == null) {
+                if (pageW <= 0) pageW = rx + rw
+                pageH = math.max(pageH, ry + rh)
+                if (pageW.toLong * pageH > MaxPixels || rx + rw > pageW)
+                  return Left("jbig2: image too large")
+                page = new Array[Byte](pageW * pageH)
+              } else if (ry + rh > pageH || rx + rw > pageW) {
+                return Left("jbig2: region outside page")
+              }
+              var yy = 0
+              while (yy < rh) {
+                var xx = 0
+                while (xx < rw) {
+                  if (bitmap(yy * rw + xx) != 0) page((ry + yy) * pageW + (rx + xx)) = 1
+                  xx += 1
+                }
+                yy += 1
+              }
+          }
+        case 16 | 20 | 22 | 23 => return Left("jbig2: halftone unsupported")
+        case 40 | 42 | 43 => return Left("jbig2: refinement region unsupported")
+        case _ => () // page end / stripe end / tables / extensions: skip
+      }
+      p = dEnd
+    }
+    if (!sawRegion || page == null) return Left("jbig2: no decodable region")
+    // 1 = black ink → 255 (match the CCITT/gray convention: ink = dark)
+    val out = new Array[Byte](page.length)
+    var i = 0
+    while (i < page.length) { out(i) = if (page(i) != 0) 255.toByte else 0; i += 1 }
+    Right(Jpeg.Image(pageW, pageH, 1, out))
   }
 }
