@@ -461,23 +461,21 @@ object Jbig2 {
   private[graft] final case class HuffLine(prefLen: Int, rangeLen: Int, rangeLow: Int, kind: Int = 0)
 
   /** Canonical prefix-code table per T.88 B.3: codes assigned by
-    * ascending prefix length, table order within a length. */
+    * ascending prefix length, table order within a length. A code of
+    * length `len` is `first(len)` plus its place among that length's
+    * lines, so decoding costs one range check per bit read. */
   private[graft] final class HuffTable(val lines: Array[HuffLine]) {
     val codes: Array[Int] = new Array[Int](lines.length)
+    private val maxLen = lines.map(_.prefLen).max
+    /** The line indices of each prefix length, in table order. */
+    private val byLen = Array.tabulate(maxLen + 1)(len =>
+      lines.indices.filter(i => len > 0 && lines(i).prefLen == len).toArray)
+    private val first = new Array[Int](maxLen + 2)
     locally {
-      val maxLen = lines.map(_.prefLen).max
-      val count = new Array[Int](maxLen + 1)
-      lines.foreach(l => if (l.prefLen > 0) count(l.prefLen) += 1)
-      val first = new Array[Int](maxLen + 2)
       var len = 1
       while (len <= maxLen) {
-        first(len + 1) = (first(len) + count(len)) << 1
-        var cur = first(len)
-        var i = 0
-        while (i < lines.length) {
-          if (lines(i).prefLen == len) { codes(i) = cur; cur += 1 }
-          i += 1
-        }
+        first(len + 1) = (first(len) + byLen(len).length) << 1
+        for (k <- byLen(len).indices) codes(byLen(len)(k)) = first(len) + k
         len += 1
       }
     }
@@ -488,10 +486,10 @@ object Jbig2 {
       while (len < 32) {
         code = (code << 1) | r.bit()
         len += 1
-        var i = 0
-        while (i < lines.length) {
-          val l = lines(i)
-          if (l.prefLen == len && codes(i) == code) {
+        if (len <= maxLen) {
+          val k = code - first(len)
+          if (k >= 0 && k < byLen(len).length) {
+            val l = lines(byLen(len)(k))
             return l.kind match {
               case 0 => Right(Some(l.rangeLow + r.bits(l.rangeLen)))
               case 1 => Right(Some(l.rangeLow - r.bits(32)))
@@ -499,7 +497,6 @@ object Jbig2 {
               case _ => Right(None)
             }
           }
-          i += 1
         }
       }
       Left("jbig2: invalid huffman code")
@@ -1277,7 +1274,8 @@ object Jbig2 {
   }
 
   /** Encoder twin for the HUFFMAN legs: SDHUFF symbol dictionary with
-    * standard tables B.4/B.2/B.1 (collective bitmaps MMR-coded via the
+    * standard tables B.4/B.2/B.1, or B.3 for DW when a height class's
+    * widths decrease (collective bitmaps MMR-coded via the
     * JDK-pinned [[CcittG4]], or uncompressed when `uncompressed`), and
     * either an arithmetic or an SBHUFF text region (the latter with
     * custom FS/DS/DT tables shipped as type-53 segments, a runcode-
@@ -1310,15 +1308,21 @@ object Jbig2 {
       (sw, sh, px.map(v => (if (v != 0) 1 else 0).toByte))
     }
 
+    // DW B.2 has no negative range: a height class whose widths ever
+    // decrease takes B.3 (SDHUFFDW = 1)
+    val dwB3 = sorted.indices.exists(i => i > 0 && sorted(i)._2 == sorted(i - 1)._2 &&
+      sorted(i)._1 < sorted(i - 1)._1)
     val dict = bytes { out =>
-      // flags: SDHUFF with DH B.4, DW B.2, BMSIZE B.1; or the arithmetic
-      // template and its nominal AT pixels. No refinement/aggregation.
-      be(out, if (huffDict) 1 else template << 10, 2)
+      // flags: SDHUFF with DH B.4, DW B.2 or B.3, BMSIZE B.1; or the
+      // arithmetic template and its nominal AT pixels. No
+      // refinement/aggregation.
+      be(out, if (!huffDict) template << 10 else if (dwB3) 1 | (1 << 4) else 1, 2)
       if (!huffDict) NominalAt(template).foreach { case (x, y) => out.write(x & 0xff); out.write(y & 0xff) }
       be(out, sorted.length, 4) // SDNUMEXSYMS
       be(out, sorted.length, 4) // SDNUMNEWSYMS
       val c =
-        if (huffDict) new HuffOut(Map(DH -> TableB4, DW -> TableB2, EX -> TableB1, BM -> TableB1))
+        if (huffDict) new HuffOut(Map(DH -> TableB4, DW -> (if (dwB3) TableB3 else TableB2),
+          EX -> TableB1, BM -> TableB1))
         else new ArithOut
       val ctxSize = if (huffDict) 0 else genericCtxSize(template)
       val gix = new Array[Int](ctxSize)

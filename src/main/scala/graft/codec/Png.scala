@@ -137,58 +137,6 @@ object Png {
       case Left(err) => return Left(err)
     }
 
-    /** Defilter `rows` scanlines of `rowBytes` pixels-bytes starting at
-      * raw(off) (each prefixed by its filter byte) into a fresh buffer. */
-    def defilter(off: Int, rows: Int, rowBytes: Int): Either[String, Array[Byte]] = {
-      val out = new Array[Byte](rowBytes * rows)
-      var y = 0
-      while (y < rows) {
-        val f = raw(off + y * (rowBytes + 1)) & 0xff
-        val ro = off + y * (rowBytes + 1) + 1
-        val po = y * rowBytes
-        val prev = po - rowBytes
-        f match {
-          case 0 => System.arraycopy(raw, ro, out, po, rowBytes)
-          case 1 => // Sub
-            var x = 0
-            while (x < rowBytes) {
-              val left = if (x >= bpp) out(po + x - bpp) & 0xff else 0
-              out(po + x) = ((raw(ro + x) & 0xff) + left).toByte
-              x += 1
-            }
-          case 2 => // Up
-            var x = 0
-            while (x < rowBytes) {
-              val up = if (y > 0) out(prev + x) & 0xff else 0
-              out(po + x) = ((raw(ro + x) & 0xff) + up).toByte
-              x += 1
-            }
-          case 3 => // Average
-            var x = 0
-            while (x < rowBytes) {
-              val left = if (x >= bpp) out(po + x - bpp) & 0xff else 0
-              val up = if (y > 0) out(prev + x) & 0xff else 0
-              out(po + x) = ((raw(ro + x) & 0xff) + ((left + up) >> 1)).toByte
-              x += 1
-            }
-          case 4 => // Paeth
-            var x = 0
-            while (x < rowBytes) {
-              val a = if (x >= bpp) out(po + x - bpp) & 0xff else 0
-              val bb = if (y > 0) out(prev + x) & 0xff else 0
-              val c = if (x >= bpp && y > 0) out(prev + x - bpp) & 0xff else 0
-              val pa = math.abs(bb - c); val pb = math.abs(a - c); val pc = math.abs(a + bb - 2 * c)
-              val pred = if (pa <= pb && pa <= pc) a else if (pb <= pc) bb else c
-              out(po + x) = ((raw(ro + x) & 0xff) + pred).toByte
-              x += 1
-            }
-          case other => return Left(s"png: unknown filter $other at row $y")
-        }
-        y += 1
-      }
-      Right(out)
-    }
-
     // unpack sub-byte rows to one byte per pixel (MSB-first packing per
     // spec); gray scales to 8-bit by v*255/(2^d-1), palette indices stay
     // raw (the spec scales SAMPLES, never palette indices)
@@ -216,7 +164,7 @@ object Png {
 
     val pix = new Array[Byte](stride * height)
     if (interlace == 0) {
-      defilter(0, height, rowBytes(width)) match {
+      defilter(raw, 0, height, rowBytes(width), bpp) match {
         case Left(e)  => return Left(e)
         case Right(d) => System.arraycopy(unpack(d, height, width), 0, pix, 0, pix.length)
       }
@@ -227,7 +175,7 @@ object Png {
       for (p @ (sx, sy, dx, dy) <- passes) {
         val (pw, ph) = passDims(p)
         if (pw > 0 && ph > 0) {
-          val passBytes = defilter(off, ph, rowBytes(pw)) match {
+          val passBytes = defilter(raw, off, ph, rowBytes(pw), bpp) match {
             case Left(e)  => return Left(e)
             case Right(d) => unpack(d, ph, pw)
           }
@@ -287,6 +235,61 @@ object Png {
         }
         Right(Jpeg.Image(width, height, 3, out))
     }
+  }
+
+  /** Defilter `rows` scanlines of `rowBytes` pixels-bytes starting at
+    * raw(off) (each prefixed by its filter byte) into a fresh buffer;
+    * `bpp` is the left neighbour's distance. PDF's PNG predictors
+    * (10-15) reverse through it too. */
+  private[graft] def defilter(raw: Array[Byte], off: Int, rows: Int, rowBytes: Int,
+      bpp: Int): Either[String, Array[Byte]] = {
+    val out = new Array[Byte](rowBytes * rows)
+    var y = 0
+    while (y < rows) {
+      val f = raw(off + y * (rowBytes + 1)) & 0xff
+      val ro = off + y * (rowBytes + 1) + 1
+      val po = y * rowBytes
+      val prev = po - rowBytes
+      f match {
+        case 0 => System.arraycopy(raw, ro, out, po, rowBytes)
+        case 1 => // Sub
+          var x = 0
+          while (x < rowBytes) {
+            val left = if (x >= bpp) out(po + x - bpp) & 0xff else 0
+            out(po + x) = ((raw(ro + x) & 0xff) + left).toByte
+            x += 1
+          }
+        case 2 => // Up
+          var x = 0
+          while (x < rowBytes) {
+            val up = if (y > 0) out(prev + x) & 0xff else 0
+            out(po + x) = ((raw(ro + x) & 0xff) + up).toByte
+            x += 1
+          }
+        case 3 => // Average
+          var x = 0
+          while (x < rowBytes) {
+            val left = if (x >= bpp) out(po + x - bpp) & 0xff else 0
+            val up = if (y > 0) out(prev + x) & 0xff else 0
+            out(po + x) = ((raw(ro + x) & 0xff) + ((left + up) >> 1)).toByte
+            x += 1
+          }
+        case 4 => // Paeth
+          var x = 0
+          while (x < rowBytes) {
+            val a = if (x >= bpp) out(po + x - bpp) & 0xff else 0
+            val bb = if (y > 0) out(prev + x) & 0xff else 0
+            val c = if (x >= bpp && y > 0) out(prev + x - bpp) & 0xff else 0
+            val pa = math.abs(bb - c); val pb = math.abs(a - c); val pc = math.abs(a + bb - 2 * c)
+            val pred = if (pa <= pb && pa <= pc) a else if (pb <= pc) bb else c
+            out(po + x) = ((raw(ro + x) & 0xff) + pred).toByte
+            x += 1
+          }
+        case other => return Left(s"png: unknown filter $other at row $y")
+      }
+      y += 1
+    }
+    Right(out)
   }
 
   /** Encode gray (nComponents=1) or RGB (nComponents=3) 8-bit pixels. */

@@ -23,9 +23,14 @@ package graft.codec
   * sub-format, not an error). Output shape is [[Jpeg.Image]] like every
   * other codec here.
   *
+  * Strips and tiles are one chunk grid: a strip is a chunk as wide as
+  * the image, a tile a tileW x tileH chunk, and each chunk is fetched,
+  * decompressed, un-predicted and placed by one loop.
+  *
   * Encode (fixture/round-trip twins): little-endian strips (raw, LZW,
   * Deflate, PackBits, G4, per-strip JPEG) and tiles (raw/LZW/Deflate/
-  * PackBits), configurable strip/tile geometry, optional predictor.
+  * PackBits), configurable strip/tile geometry, optional predictor, all
+  * through one IFD writer.
   * Lossless paths round-trip bit-exact, which is what lets SQL oracles
   * state decoded pixels directly.
   */
@@ -42,6 +47,9 @@ object Tiff {
 
   // one parsed IFD entry: type + count + either inline value or offset
   private final case class Entry(typ: Int, count: Long, valOff: Int)
+
+  /** The compressions of 8-bit gray/RGB chunks, the only ones tiles take. */
+  private val EightBit = Set(1, 5, 8, 32946, 32773)
 
   private def decodeImpl(b: Array[Byte]): Either[String, Jpeg.Image] = {
     if (!isTiff(b)) return Left("tiff: bad header")
@@ -75,21 +83,21 @@ object Tiff {
       case 5 | 10        => 8 // RATIONAL
       case _             => 0
     }
-
+    /** Where the `total` value bytes of `e` start: inline in the entry, or
+      * at its out-of-line offset; -1 when they overrun the file. */
+    def valueAt(e: Entry, total: Long): Int =
+      if (total <= 4) e.valOff
+      else {
+        val off = u32(e.valOff)
+        if (off + total > b.length) -1 else off.toInt
+      }
     /** All values of a tag as longs (SHORT/LONG only), or null if absent. */
     def values(tag: Int): Array[Long] = {
       val e = entries.get(tag)
-      if (e == null) return null
-      val sz = typeSize(e.typ)
-      if (sz == 0 || (e.typ != 3 && e.typ != 4)) return null
-      val total = sz * e.count
-      if (e.count < 0 || e.count > 65536) return null
-      val at = if (total <= 4) e.valOff else {
-        val off = u32(e.valOff)
-        if (off + total > b.length) return null
-        off.toInt
-      }
-      Array.tabulate(e.count.toInt) { k =>
+      if (e == null || (e.typ != 3 && e.typ != 4) || e.count > 65536) return null
+      val at = valueAt(e, typeSize(e.typ) * e.count)
+      if (at < 0) null
+      else Array.tabulate(e.count.toInt) { k =>
         if (e.typ == 3) u16(at + 2 * k).toLong else u32(at + 4 * k)
       }
     }
@@ -100,15 +108,9 @@ object Tiff {
     /** Raw value bytes of a BYTE/UNDEFINED tag (JPEGTables), or null. */
     def rawBytes(tag: Int): Array[Byte] = {
       val e = entries.get(tag)
-      if (e == null || typeSize(e.typ) != 1) return null
-      if (e.count < 0 || e.count > (1 << 20)) return null
-      val total = e.count.toInt
-      val at = if (total <= 4) e.valOff else {
-        val off = u32(e.valOff)
-        if (off + total > b.length) return null
-        off.toInt
-      }
-      java.util.Arrays.copyOfRange(b, at, at + total)
+      if (e == null || typeSize(e.typ) != 1 || e.count > (1 << 20)) return null
+      val at = valueAt(e, e.count)
+      if (at < 0) null else java.util.Arrays.copyOfRange(b, at, at + e.count.toInt)
     }
 
     val width = scalar(256).toInt
@@ -130,210 +132,148 @@ object Tiff {
     if (planar != 1) return Left("tiff: planar configuration 2 unsupported")
     if (fillOrder != 1) return Left("tiff: FillOrder 2 unsupported")
     if (predictor != 1 && predictor != 2) return Left(s"tiff: predictor $predictor unsupported")
-    if (predictor == 2 && !Set(1, 5, 8, 32946, 32773).contains(compression))
+    if (predictor == 2 && !EightBit(compression))
       return Left("tiff: predictor with this compression unsupported")
 
-    // ---- tiled layout (tags 322-325): 8-bit gray/RGB only ----
-    if (entries.containsKey(322) || entries.containsKey(323)) {
-      val tw = scalar(322).toInt; val th = scalar(323).toInt
-      val tileOffsets = values(324); val tileCounts = values(325)
-      if (tw <= 0 || th <= 0 || tw % 16 != 0 || th % 16 != 0)
-        return Left("tiff: bad tile size")
-      if (tileOffsets == null || tileCounts == null ||
-        tileOffsets.length != tileCounts.length)
-        return Left("tiff: missing tile tags")
-      if (!Set(1, 5, 8, 32946, 32773).contains(compression))
-        return Left(s"tiff: compression $compression unsupported for tiles")
-      if (!bits.forall(_ == 8L)) return Left("tiff: tiles must be 8-bit")
-      if (spp != 1 && spp != 3) return Left(s"tiff: $spp samples/pixel unsupported")
-      if (spp == 1 && photometric != 0 && photometric != 1)
-        return Left(s"tiff: photometric $photometric unsupported for gray")
-      if (spp == 3 && photometric != 2) return Left(s"tiff: photometric $photometric unsupported for RGB")
-      val across = (width + tw - 1) / tw
-      val down = (height + th - 1) / th
-      if (tileOffsets.length != across * down)
-        return Left("tiff: tile count inconsistent with dimensions")
-      val tileRowBytes = tw * spp
-      val rowBytes = width * spp
-      val out = new Array[Byte](rowBytes * height)
-      var t = 0
-      while (t < tileOffsets.length) {
-        val off = tileOffsets(t); val len = tileCounts(t)
-        if (off < 0 || len < 0 || off + len > b.length) return Left("tiff: tile overruns file")
-        val data = java.util.Arrays.copyOfRange(b, off.toInt, (off + len).toInt)
-        val raw = decompressChunk(data, tileRowBytes * th, compression) match {
-          case Left(e)  => return Left(e)
-          case Right(d) => d
-        }
-        if (raw.length < tileRowBytes * th) return Left("tiff: tile too short")
-        if (predictor == 2) { // per tile row, over the FULL padded tile width
-          var r = 0
-          while (r < th) {
-            var j = r * tileRowBytes + spp
-            val end = (r + 1) * tileRowBytes
-            while (j < end) { raw(j) = (raw(j) + raw(j - spp)).toByte; j += 1 }
-            r += 1
-          }
-        }
-        val tx = (t % across) * tw
-        val ty = (t / across) * th
-        val copyW = math.min(tw, width - tx) * spp
-        val copyH = math.min(th, height - ty)
-        var r = 0
-        while (r < copyH) {
-          System.arraycopy(raw, r * tileRowBytes, out, (ty + r) * rowBytes + tx * spp, copyW)
-          r += 1
-        }
-        t += 1
+    // One chunk grid: a strip is a chunk as wide as the image (the last
+    // one short), a tile a cw x ch chunk (tags 322-325; the edge ones
+    // padded, 8-bit gray/RGB only).
+    val tiled = entries.containsKey(322) || entries.containsKey(323)
+    val kind = if (tiled) "tile" else "strip"
+    val offsets = values(if (tiled) 324 else 273)
+    val counts = values(if (tiled) 325 else 279)
+    val (cw, ch) =
+      if (tiled) {
+        val tw = scalar(322).toInt; val th = scalar(323).toInt
+        if (tw <= 0 || th <= 0 || tw % 16 != 0 || th % 16 != 0)
+          return Left("tiff: bad tile size")
+        if (offsets == null || counts == null || offsets.length != counts.length)
+          return Left("tiff: missing tile tags")
+        if (!EightBit(compression))
+          return Left(s"tiff: compression $compression unsupported for tiles")
+        (tw, th)
+      } else {
+        if (offsets == null || counts == null || offsets.length != counts.length || offsets.isEmpty)
+          return Left("tiff: missing strip tags")
+        val r = scalar(278, 0xffffffffL)
+        val rps = if (r <= 0 || r > height) height else r.toInt
+        if (offsets.length != (height + rps - 1) / rps)
+          return Left("tiff: strip count inconsistent with RowsPerStrip")
+        (width, rps)
       }
-      if (spp == 1 && photometric == 0) {
-        var j = 0
-        while (j < out.length) { out(j) = (255 - (out(j) & 0xff)).toByte; j += 1 }
-      }
-      return Right(Jpeg.Image(width, height, spp, out))
-    }
-
-    val stripOffsets = values(273)
-    val stripCounts = values(279)
-    if (stripOffsets == null || stripCounts == null ||
-      stripOffsets.length != stripCounts.length || stripOffsets.isEmpty)
-      return Left("tiff: missing strip tags")
-    val rowsPerStrip = {
-      val r = scalar(278, 0xffffffffL)
-      if (r <= 0 || r > height) height.toLong else r
-    }.toInt
-    val nStrips = stripOffsets.length
-    if (nStrips != (height + rowsPerStrip - 1) / rowsPerStrip)
-      return Left("tiff: strip count inconsistent with RowsPerStrip")
-
-    def strip(k: Int): Array[Byte] = {
-      val off = stripOffsets(k); val len = stripCounts(k)
-      if (off < 0 || len < 0 || off + len > b.length) null
-      else java.util.Arrays.copyOfRange(b, off.toInt, (off + len).toInt)
-    }
 
     compression match {
-      case 1 | 5 | 8 | 32946 | 32773 => // 8-bit gray/RGB: raw, LZW, Deflate, PackBits
-        if (!bits.forall(_ == 8L)) return Left(s"tiff: ${bits.mkString("/")}-bit samples unsupported (8-bit only)")
-        if (spp != 1 && spp != 3) return Left(s"tiff: $spp samples/pixel unsupported")
-        if (spp == 1 && photometric != 0 && photometric != 1)
-          return Left(s"tiff: photometric $photometric unsupported for gray")
-        if (spp == 3 && photometric != 2) return Left(s"tiff: photometric $photometric unsupported for RGB")
-        val rowBytes = width * spp
-        val out = new Array[Byte](rowBytes * height)
-        var row = 0
-        var k = 0
-        while (k < nStrips) {
-          val s = strip(k)
-          if (s == null) return Left("tiff: strip overruns file")
-          val rows = math.min(rowsPerStrip, height - row)
-          val raw = decompressChunk(s, rows * rowBytes, compression) match {
-            case Left(e)  => return Left(e)
-            case Right(d) => d
-          }
-          if (raw.length < rows * rowBytes) return Left("tiff: strip too short")
-          System.arraycopy(raw, 0, out, row * rowBytes, rows * rowBytes)
-          if (predictor == 2) { // horizontal differencing, per strip row
-            var r2 = row
-            while (r2 < row + rows) {
-              var j = r2 * rowBytes + spp
-              val end = (r2 + 1) * rowBytes
-              while (j < end) { out(j) = (out(j) + out(j - spp)).toByte; j += 1 }
-              r2 += 1
-            }
-          }
-          row += rows
-          k += 1
-        }
-        if (spp == 1 && photometric == 0) { // MinIsWhite: invert to 0=black
-          var j = 0
-          while (j < out.length) { out(j) = (255 - (out(j) & 0xff)).toByte; j += 1 }
-        }
-        Right(Jpeg.Image(width, height, spp, out))
-
       case 4 => // CCITT G4 bilevel
         if (spp != 1 || bits(0) != 1L) return Left("tiff: G4 requires 1-bit single-sample data")
         if (photometric != 0 && photometric != 1)
           return Left(s"tiff: photometric $photometric unsupported for bilevel")
-        val out = new Array[Byte](width * height)
-        var row = 0
-        var k = 0
-        while (k < nStrips) {
-          val s = strip(k)
-          if (s == null) return Left("tiff: strip overruns file")
-          val rows = math.min(rowsPerStrip, height - row)
-          CcittG4.decode(s, width, rows) match {
-            case Left(e) => return Left(s"tiff: $e")
-            case Right(bl) => // bl: 1 = black run bit
-              var j = 0
-              while (j < width * rows) {
-                // photometric 0 (MinIsWhite): G4 black bit -> black pixel (0).
-                // photometric 1 (MinIsBlack): the coded "black" bits are max
-                // sample value, i.e. white — invert the sense.
-                val black = if (photometric == 0) bl(j) == 1 else bl(j) == 0
-                out(row * width + j) = if (black) 0 else 255.toByte
-                j += 1
-              }
-          }
-          row += rows
-          k += 1
-        }
-        Right(Jpeg.Image(width, height, 1, out))
-
-      case 7 => // new-style JPEG-in-TIFF: each strip is a JPEG stream,
-        // shared tables optionally hoisted into tag 347 (JPEGTables)
-        if (!bits.forall(_ == 8L)) return Left("tiff: JPEG strips must be 8-bit")
+      case c if EightBit(c) || c == 7 => // 8-bit gray/RGB; new-style JPEG-in-TIFF (7)
+        val of = if (c == 7) " JPEG" else ""
+        if (!bits.forall(_ == 8L)) return Left(s"tiff: ${bits.mkString("/")}-bit samples unsupported (8-bit only)")
         if (spp != 1 && spp != 3) return Left(s"tiff: $spp samples/pixel unsupported")
-        // gray: photometric 0/1; RGB: 2 (no transform) or 6 (YCbCr — the
-        // JPEG decode already lands in RGB)
         if (spp == 1 && photometric != 0 && photometric != 1)
-          return Left(s"tiff: photometric $photometric unsupported for gray JPEG")
-        if (spp == 3 && photometric != 2 && photometric != 6)
-          return Left(s"tiff: photometric $photometric unsupported for RGB JPEG")
-        val tables = rawBytes(347)
-        val rowBytes = width * spp
-        val out = new Array[Byte](rowBytes * height)
-        var row = 0
-        var k = 0
-        while (k < nStrips) {
-          val s = strip(k)
-          if (s == null) return Left("tiff: strip overruns file")
-          val rows = math.min(rowsPerStrip, height - row)
-          val stream: Array[Byte] =
-            if (tables == null || tables.length < 4) s
-            else {
-              // abbreviated strip + abbreviated tables: SOI, tables'
-              // payload (between ITS SOI and EOI), then the strip's
-              // payload after its SOI
-              if (s.length < 2 || (s(0) & 0xff) != 0xff || (s(1) & 0xff) != 0xd8)
-                return Left("tiff: JPEG strip missing SOI")
-              val tl = tables.length
-              val tPayloadEnd =
-                if ((tables(tl - 2) & 0xff) == 0xff && (tables(tl - 1) & 0xff) == 0xd9) tl - 2 else tl
-              val merged = new Array[Byte](2 + (tPayloadEnd - 2) + (s.length - 2))
-              merged(0) = 0xff.toByte; merged(1) = 0xd8.toByte
-              System.arraycopy(tables, 2, merged, 2, tPayloadEnd - 2)
-              System.arraycopy(s, 2, merged, tPayloadEnd, s.length - 2)
-              merged
-            }
-          Jpeg.decode(stream) match {
-            case Left(e) => return Left(s"tiff: $e")
-            case Right(im) =>
-              if (im.width != width || im.height != rows || im.nComponents != spp)
-                return Left(s"tiff: JPEG strip is ${im.width}x${im.height}x${im.nComponents}, wanted ${width}x${rows}x$spp")
-              System.arraycopy(im.pixels, 0, out, row * rowBytes, rows * rowBytes)
-          }
-          row += rows
-          k += 1
-        }
-        if (spp == 1 && photometric == 0) {
-          var j = 0
-          while (j < out.length) { out(j) = (255 - (out(j) & 0xff)).toByte; j += 1 }
-        }
-        Right(Jpeg.Image(width, height, spp, out))
-
-      case c => Left(s"tiff: compression $c unsupported")
+          return Left(s"tiff: photometric $photometric unsupported for gray$of")
+        // RGB: 2, or 6 (YCbCr) under JPEG, whose decode lands in RGB
+        if (spp == 3 && photometric != 2 && !(c == 7 && photometric == 6))
+          return Left(s"tiff: photometric $photometric unsupported for RGB$of")
+      case c => return Left(s"tiff: compression $c unsupported")
     }
+    val across = (width + cw - 1) / cw
+    val down = (height + ch - 1) / ch
+    if (offsets.length != across * down) return Left("tiff: tile count inconsistent with dimensions")
+
+    val tables = if (compression == 7) rawBytes(347) else null
+    val rowBytes = width * spp
+    val chunkRowBytes = cw * spp
+    val out = new Array[Byte](rowBytes * height)
+    var t = 0
+    while (t < offsets.length) {
+      val off = offsets(t); val len = counts(t)
+      if (off < 0 || len < 0 || off + len > b.length) return Left(s"tiff: $kind overruns file")
+      val data = java.util.Arrays.copyOfRange(b, off.toInt, (off + len).toInt)
+      val cx = (t % across) * cw
+      val cy = (t / across) * ch
+      val placed = math.min(ch, height - cy)
+      val rows = if (tiled) ch else placed
+      val raw = (compression match {
+        case 4 => CcittG4.decode(data, cw, rows) match {
+          case Left(e)   => Left(s"tiff: $e")
+          case Right(bl) => Right(bl.map(v => if (v != 0) 255.toByte else 0.toByte)) // 1 = max sample
+        }
+        case 7 => jpegChunk(data, tables, cw, rows, spp)
+        case c => decompressChunk(data, rows * chunkRowBytes, c)
+      }) match {
+        case Left(e)  => return Left(e)
+        case Right(d) => d
+      }
+      if (raw.length < rows * chunkRowBytes) return Left(s"tiff: $kind too short")
+      if (predictor == 2) undifference(raw, rows, chunkRowBytes, spp)
+      val copyW = math.min(cw, width - cx) * spp
+      var r = 0
+      while (r < placed) {
+        System.arraycopy(raw, r * chunkRowBytes, out, (cy + r) * rowBytes + cx * spp, copyW)
+        r += 1
+      }
+      t += 1
+    }
+    if (spp == 1 && photometric == 0) { // MinIsWhite: invert to 0=black
+      var j = 0
+      while (j < out.length) { out(j) = (255 - (out(j) & 0xff)).toByte; j += 1 }
+    }
+    Right(Jpeg.Image(width, height, spp, out))
+  }
+
+  /** One JPEG-in-TIFF strip, `width` x `rows` x `spp`. With shared
+    * JPEGTables (tag 347) an abbreviated strip is completed: SOI, the
+    * tables' payload (between ITS SOI and EOI), then the strip's payload
+    * after its SOI. */
+  private def jpegChunk(s: Array[Byte], tables: Array[Byte], width: Int, rows: Int,
+      spp: Int): Either[String, Array[Byte]] = {
+    val stream: Array[Byte] =
+      if (tables == null || tables.length < 4) s
+      else {
+        if (s.length < 2 || (s(0) & 0xff) != 0xff || (s(1) & 0xff) != 0xd8)
+          return Left("tiff: JPEG strip missing SOI")
+        val tl = tables.length
+        val tPayloadEnd =
+          if ((tables(tl - 2) & 0xff) == 0xff && (tables(tl - 1) & 0xff) == 0xd9) tl - 2 else tl
+        val merged = new Array[Byte](2 + (tPayloadEnd - 2) + (s.length - 2))
+        merged(0) = 0xff.toByte; merged(1) = 0xd8.toByte
+        System.arraycopy(tables, 2, merged, 2, tPayloadEnd - 2)
+        System.arraycopy(s, 2, merged, tPayloadEnd, s.length - 2)
+        merged
+      }
+    Jpeg.decode(stream) match {
+      case Left(e) => Left(s"tiff: $e")
+      case Right(im) if im.width != width || im.height != rows || im.nComponents != spp =>
+        Left(s"tiff: JPEG strip is ${im.width}x${im.height}x${im.nComponents}, wanted ${width}x${rows}x$spp")
+      case Right(im) => Right(im.pixels)
+    }
+  }
+
+  /** Reverse horizontal differencing (TIFF predictor 2) in place over
+    * `rows` rows of `rowBytes`: each byte adds the one `spp` to its left.
+    * PDF's `/Predictor 2` reverses through it too. */
+  private[graft] def undifference(buf: Array[Byte], rows: Int, rowBytes: Int, spp: Int): Unit = {
+    var r = 0
+    while (r < rows) {
+      var j = r * rowBytes + spp
+      val end = (r + 1) * rowBytes
+      while (j < end) { buf(j) = (buf(j) + buf(j - spp)).toByte; j += 1 }
+      r += 1
+    }
+  }
+
+  /** Forward horizontal differencing, the encoder's twin: in place, each
+    * row right to left; returns `buf`. */
+  private def difference(buf: Array[Byte], rows: Int, rowBytes: Int, spp: Int): Array[Byte] = {
+    var r = 0
+    while (r < rows) {
+      var j = (r + 1) * rowBytes - 1
+      while (j >= r * rowBytes + spp) { buf(j) = (buf(j) - buf(j - spp)).toByte; j -= 1 }
+      r += 1
+    }
+    buf
   }
 
   /** Encode 8-bit gray as new-style JPEG-in-TIFF (compression 7): each
@@ -344,16 +284,8 @@ object Tiff {
       rowsPerStrip: Int = Int.MaxValue,
       quant: Array[Int] = JpegEncoder.exactQuant): Array[Byte] = {
     require(pixels.length == width * height, "pixel buffer size mismatch")
-    val rps = math.min(rowsPerStrip, height)
-    require(rps >= 1, "RowsPerStrip must be positive")
-    val nStrips = (height + rps - 1) / rps
-    val strips = Array.tabulate(nStrips) { k =>
-      val rows = math.min(rps, height - k * rps)
-      JpegEncoder.encodeGray(java.util.Arrays.copyOfRange(pixels,
-        k * rps * width, (k * rps + rows) * width), width, rows, quant)
-    }
-    writeTiff(width, height, 1, compression = 7, photometric = 1,
-      bitsPerSample = 8, rps, strips)
+    writeStrips(pixels, width, height, 1, rowsPerStrip, compression = 7, photometric = 1,
+      bits = 8, predictor = false)((raw, rows) => JpegEncoder.encodeGray(raw, width, rows, quant))
   }
 
   /** Decompress one strip/tile payload: 1 raw, 5 LZW, 8/32946 zlib
@@ -447,16 +379,8 @@ object Tiff {
       rowsPerStrip: Int = Int.MaxValue): Array[Byte] = {
     require(nc == 1 || nc == 3, "gray or RGB only")
     require(pixels.length == width * height * nc, "pixel buffer size mismatch")
-    val rps = math.min(rowsPerStrip, height)
-    require(rps >= 1, "RowsPerStrip must be positive")
-    val nStrips = (height + rps - 1) / rps
-    val rowBytes = width * nc
-    val strips = Array.tabulate(nStrips) { k =>
-      val rows = math.min(rps, height - k * rps)
-      java.util.Arrays.copyOfRange(pixels, k * rps * rowBytes, (k * rps + rows) * rowBytes)
-    }
-    writeTiff(width, height, nc, compression = 1, photometric = if (nc == 3) 2 else 1,
-      bitsPerSample = 8, rps, strips)
+    writeStrips(pixels, width, height, nc, rowsPerStrip, compression = 1,
+      photometric = if (nc == 3) 2 else 1, bits = 8, predictor = false)((raw, _) => raw)
   }
 
   /** Encode 8-bit gray or RGB with LZW (compression 5) or PackBits
@@ -469,26 +393,9 @@ object Tiff {
     require(pixels.length == width * height * nc, "pixel buffer size mismatch")
     require(compression == 5 || compression == 8 || compression == 32773,
       "LZW, Deflate, or PackBits")
-    val rps = math.min(rowsPerStrip, height)
-    require(rps >= 1, "RowsPerStrip must be positive")
-    val nStrips = (height + rps - 1) / rps
-    val rowBytes = width * nc
-    val strips = Array.tabulate(nStrips) { k =>
-      val rows = math.min(rps, height - k * rps)
-      val raw = java.util.Arrays.copyOfRange(pixels, k * rps * rowBytes,
-        (k * rps + rows) * rowBytes)
-      if (predictor) { // horizontal differencing, per row (right to left)
-        var r = 0
-        while (r < rows) {
-          var j = (r + 1) * rowBytes - 1
-          while (j >= r * rowBytes + nc) { raw(j) = (raw(j) - raw(j - nc)).toByte; j -= 1 }
-          r += 1
-        }
-      }
-      compressChunk(raw, compression)
-    }
-    writeTiff(width, height, nc, compression, photometric = if (nc == 3) 2 else 1,
-      bitsPerSample = 8, rps, strips, predictor = if (predictor) 2 else 1)
+    writeStrips(pixels, width, height, nc, rowsPerStrip, compression,
+      photometric = if (nc == 3) 2 else 1, bits = 8, predictor)(
+      (raw, rows) => compressChunk(if (predictor) difference(raw, rows, width * nc, nc) else raw, compression))
   }
 
   private def compressChunk(raw: Array[Byte], compression: Int): Array[Byte] =
@@ -511,33 +418,11 @@ object Tiff {
     require(tileW % 16 == 0 && tileH % 16 == 0 && tileW > 0 && tileH > 0,
       "tile dims must be positive multiples of 16")
     require(Set(1, 5, 8, 32773).contains(compression), "raw, LZW, Deflate, or PackBits")
-    val across = (width + tileW - 1) / tileW
-    val down = (height + tileH - 1) / tileH
-    val tileRowBytes = tileW * nc
-    val tiles = Array.tabulate(across * down) { t =>
-      val tx = (t % across) * tileW
-      val ty = (t / across) * tileH
-      val raw = new Array[Byte](tileRowBytes * tileH)
-      val copyW = math.min(tileW, width - tx) * nc
-      val copyH = math.min(tileH, height - ty)
-      var r = 0
-      while (r < copyH) {
-        System.arraycopy(pixels, (ty + r) * width * nc + tx * nc, raw, r * tileRowBytes, copyW)
-        r += 1
-      }
-      if (predictor) {
-        var r2 = 0
-        while (r2 < tileH) {
-          var j = (r2 + 1) * tileRowBytes - 1
-          while (j >= r2 * tileRowBytes + nc) { raw(j) = (raw(j) - raw(j - nc)).toByte; j -= 1 }
-          r2 += 1
-        }
-      }
-      compressChunk(raw, compression)
-    }
-    writeTiffTiled(width, height, nc, compression,
-      photometric = if (nc == 3) 2 else 1, tileW, tileH, tiles,
-      predictor = if (predictor) 2 else 1)
+    val tiles = chunks(pixels, width, height, nc, tileW, tileH, tiled = true)(
+      (raw, rows) => compressChunk(if (predictor) difference(raw, rows, tileW * nc, nc) else raw, compression))
+    writeTiff(tiles, 324, 325, fields(width, height, nc, 8, compression,
+      photometric = if (nc == 3) 2 else 1, predictor) ++
+      Seq((322, 4, Array(tileW)), (323, 4, Array(tileH))))
   }
 
   /** Encode a bilevel image (pixels: 1 = black) as a little-endian G4
@@ -545,148 +430,88 @@ object Tiff {
   def encodeG4(pixels: Array[Byte], width: Int, height: Int,
       rowsPerStrip: Int = Int.MaxValue): Array[Byte] = {
     require(pixels.length == width * height, "pixel buffer size mismatch")
+    writeStrips(pixels, width, height, 1, rowsPerStrip, compression = 4, photometric = 0,
+      bits = 1, predictor = false)((raw, rows) => CcittG4.encode(raw, width, rows))
+  }
+
+  /** Cut `pixels` (`nc` bytes a pixel) into the chunk grid, row-major,
+    * and code each chunk with its row count: a strip spans the image
+    * width and the last one is short; a tile is `cw` x `ch` and the edge
+    * ones are zero-padded. */
+  private def chunks(pixels: Array[Byte], width: Int, height: Int, nc: Int, cw: Int, ch: Int,
+      tiled: Boolean)(code: (Array[Byte], Int) => Array[Byte]): Array[Array[Byte]] = {
+    val across = if (tiled) (width + cw - 1) / cw else 1
+    val down = (height + ch - 1) / ch
+    Array.tabulate(across * down) { t =>
+      val cx = (t % across) * cw
+      val cy = (t / across) * ch
+      val placed = math.min(ch, height - cy)
+      val rows = if (tiled) ch else placed
+      val raw = new Array[Byte](cw * nc * rows)
+      var r = 0
+      while (r < placed) {
+        System.arraycopy(pixels, ((cy + r) * width + cx) * nc, raw, r * cw * nc, math.min(cw, width - cx) * nc)
+        r += 1
+      }
+      code(raw, rows)
+    }
+  }
+
+  /** Every strip encoder: RowsPerStrip clamped to the height, each strip
+    * coded by `code`. */
+  private def writeStrips(pixels: Array[Byte], width: Int, height: Int, nc: Int,
+      rowsPerStrip: Int, compression: Int, photometric: Int, bits: Int,
+      predictor: Boolean)(code: (Array[Byte], Int) => Array[Byte]): Array[Byte] = {
     val rps = math.min(rowsPerStrip, height)
     require(rps >= 1, "RowsPerStrip must be positive")
-    val nStrips = (height + rps - 1) / rps
-    val strips = Array.tabulate(nStrips) { k =>
-      val rows = math.min(rps, height - k * rps)
-      CcittG4.encode(java.util.Arrays.copyOfRange(pixels, k * rps * width,
-        (k * rps + rows) * width), width, rows)
-    }
-    writeTiff(width, height, 1, compression = 4, photometric = 0,
-      bitsPerSample = 1, rps, strips)
+    val strips = chunks(pixels, width, height, nc, width, rps, tiled = false)(code)
+    writeTiff(strips, 273, 279, fields(width, height, nc, bits, compression, photometric,
+      predictor) :+ ((278, 4, Array(rps))))
   }
 
-  /** Little-endian tiled writer: header, tile data, one IFD with the
-    * tile tag set (322-325) in ascending order. */
-  private def writeTiffTiled(width: Int, height: Int, spp: Int, compression: Int,
-      photometric: Int, tileW: Int, tileH: Int, tiles: Array[Array[Byte]],
-      predictor: Int): Array[Byte] = {
-    val n = tiles.length
-    val dataStart = 8
-    val tileOffsets = new Array[Int](n)
-    var off = dataStart
-    var k = 0
-    while (k < n) {
-      tileOffsets(k) = off
-      off += tiles(k).length
-      off += off & 1
-      k += 1
-    }
-    val ifdOff = off
-    // tags: 256,257,258,259,262,277 (+317) + 322,323,324,325
-    val nE = if (predictor == 2) 11 else 10
-    var extOff = ifdOff + 2 + nE * 12 + 4
-    val bpsExt = if (spp == 3) { val o = extOff; extOff += 6; o } else -1
-    val toExt = if (n > 1) { val o = extOff; extOff += 4 * n; o } else -1
-    val tcExt = if (n > 1) { val o = extOff; extOff += 4 * n; o } else -1
-    val out = new Array[Byte](extOff)
-    def le16(p: Int, v: Int): Unit = { out(p) = (v & 0xff).toByte; out(p + 1) = ((v >> 8) & 0xff).toByte }
-    def le32(p: Int, v: Int): Unit = { le16(p, v & 0xffff); le16(p + 2, (v >>> 16) & 0xffff) }
-    out(0) = 'I'; out(1) = 'I'; out(2) = 42; out(3) = 0
-    le32(4, ifdOff)
-    k = 0
-    while (k < n) {
-      System.arraycopy(tiles(k), 0, out, tileOffsets(k), tiles(k).length)
-      k += 1
-    }
-    le16(ifdOff, nE)
-    var e = 0
-    def entry(tag: Int, typ: Int, count: Int, value: Int): Unit = {
-      val p = ifdOff + 2 + e * 12
-      le16(p, tag); le16(p + 2, typ); le32(p + 4, count)
-      if (typ == 3 && count == 1) { le16(p + 8, value); le16(p + 10, 0) }
-      else le32(p + 8, value)
-      e += 1
-    }
-    entry(256, 4, 1, width)
-    entry(257, 4, 1, height)
-    if (spp == 3) { entry(258, 3, 3, bpsExt); le16(bpsExt, 8); le16(bpsExt + 2, 8); le16(bpsExt + 4, 8) }
-    else entry(258, 3, 1, 8)
-    entry(259, 3, 1, compression)
-    entry(262, 3, 1, photometric)
-    entry(277, 3, 1, spp)
-    if (predictor == 2) entry(317, 3, 1, 2)
-    entry(322, 4, 1, tileW)
-    entry(323, 4, 1, tileH)
-    if (n > 1) {
-      entry(324, 4, n, toExt)
-      var j = 0
-      while (j < n) { le32(toExt + 4 * j, tileOffsets(j)); j += 1 }
-    } else entry(324, 4, 1, tileOffsets(0))
-    if (n > 1) {
-      entry(325, 4, n, tcExt)
-      var j = 0
-      while (j < n) { le32(tcExt + 4 * j, tiles(j).length); j += 1 }
-    } else entry(325, 4, 1, tiles(0).length)
-    le32(ifdOff + 2 + nE * 12, 0)
-    out
-  }
+  /** The baseline fields every encoder writes (chunky PlanarConfiguration
+    * 284 is the implicit default). */
+  private def fields(width: Int, height: Int, spp: Int, bits: Int, compression: Int,
+      photometric: Int, predictor: Boolean): Seq[(Int, Int, Array[Int])] =
+    Seq((256, 4, Array(width)), (257, 4, Array(height)), (258, 3, Array.fill(spp)(bits)),
+      (259, 3, Array(compression)), (262, 3, Array(photometric)), (277, 3, Array(spp))) ++
+      (if (predictor) Seq((317, 3, Array(2))) else Nil)
 
-  /** Shared little-endian writer: header, strip data, then one IFD with
-    * the minimal baseline tag set (sorted ascending as the spec requires). */
-  private def writeTiff(width: Int, height: Int, spp: Int, compression: Int,
-      photometric: Int, bitsPerSample: Int, rps: Int,
-      strips: Array[Array[Byte]], predictor: Int = 1): Array[Byte] = {
-    val nStrips = strips.length
-    val dataStart = 8
-    val stripOffsets = new Array[Int](nStrips)
-    var off = dataStart
-    var k = 0
-    while (k < nStrips) {
-      stripOffsets(k) = off
-      off += strips(k).length
-      off += off & 1 // word-align next strip
-      k += 1
+  /** The one little-endian writer: header, the chunks word-aligned from
+    * byte 8, then one IFD of `fields` (tag, type SHORT 3 or LONG 4,
+    * values) plus the chunks' offsets and byte counts under `offsetsTag`
+    * and `countsTag`, in ascending tag order as the spec requires. Each
+    * value array wider than the 4 inline bytes follows the IFD, in tag
+    * order. */
+  private def writeTiff(chunks: Array[Array[Byte]], offsetsTag: Int, countsTag: Int,
+      fields: Seq[(Int, Int, Array[Int])]): Array[Byte] = {
+    val offsets = new Array[Int](chunks.length)
+    var ifdOff = 8
+    for (k <- chunks.indices) {
+      offsets(k) = ifdOff
+      ifdOff += chunks(k).length
+      ifdOff += ifdOff & 1 // word-align the next chunk
     }
-    val ifdOff = off
-    // tags: 256,257,258,259,262,273,277,278,279 (+317 when differencing;
-    // 284 chunky is the implicit default)
-    val nE = if (predictor == 2) 10 else 9
-    // external value areas (after the IFD) for arrays that don't fit inline
-    var extOff = ifdOff + 2 + nE * 12 + 4
-    val bpsExt = if (spp == 3) { val o = extOff; extOff += 6; o } else -1
-    val soExt = if (nStrips > 1) { val o = extOff; extOff += 4 * nStrips; o } else -1
-    val sbExt = if (nStrips > 1) { val o = extOff; extOff += 4 * nStrips; o } else -1
-    val out = new Array[Byte](extOff)
-    def le16(p: Int, v: Int): Unit = { out(p) = (v & 0xff).toByte; out(p + 1) = ((v >> 8) & 0xff).toByte }
-    def le32(p: Int, v: Int): Unit = { le16(p, v & 0xffff); le16(p + 2, (v >>> 16) & 0xffff) }
-    out(0) = 'I'; out(1) = 'I'; out(2) = 42; out(3) = 0
-    le32(4, ifdOff)
-    k = 0
-    while (k < nStrips) {
-      System.arraycopy(strips(k), 0, out, stripOffsets(k), strips(k).length)
-      k += 1
-    }
-    le16(ifdOff, nE)
-    var e = 0
-    def entry(tag: Int, typ: Int, count: Int, value: Int): Unit = {
+    val ifd = (fields :+ ((offsetsTag, 4, offsets)) :+ ((countsTag, 4, chunks.map(_.length)))).sortBy(_._1)
+    def size(typ: Int) = if (typ == 3) 2 else 4
+    val ifdEnd = ifdOff + 2 + ifd.length * 12 + 4 // next-IFD pointer: none (0)
+    val out = new Array[Byte](ifdEnd + ifd.map { case (_, typ, vs) => size(typ) * vs.length }.filter(_ > 4).sum)
+    def le(p: Int, v: Int, n: Int): Unit = for (k <- 0 until n) out(p + k) = (v >>> (8 * k)).toByte
+    out(0) = 'I'; out(1) = 'I'; out(2) = 42
+    le(4, ifdOff, 4)
+    for (k <- chunks.indices) System.arraycopy(chunks(k), 0, out, offsets(k), chunks(k).length)
+    le(ifdOff, ifd.length, 2)
+    var ext = ifdEnd
+    for (((tag, typ, vs), e) <- ifd.zipWithIndex) {
       val p = ifdOff + 2 + e * 12
-      le16(p, tag); le16(p + 2, typ); le32(p + 4, count)
-      if (typ == 3 && count == 1) { le16(p + 8, value); le16(p + 10, 0) }
-      else le32(p + 8, value)
-      e += 1
+      le(p, tag, 2); le(p + 2, typ, 2); le(p + 4, vs.length, 4)
+      val at = if (size(typ) * vs.length <= 4) p + 8 else {
+        le(p + 8, ext, 4)
+        ext += size(typ) * vs.length
+        ext - size(typ) * vs.length
+      }
+      for (k <- vs.indices) le(at + k * size(typ), vs(k), size(typ))
     }
-    entry(256, 4, 1, width)
-    entry(257, 4, 1, height)
-    if (spp == 3) { entry(258, 3, 3, bpsExt); le16(bpsExt, 8); le16(bpsExt + 2, 8); le16(bpsExt + 4, 8) }
-    else entry(258, 3, 1, bitsPerSample)
-    entry(259, 3, 1, compression)
-    entry(262, 3, 1, photometric)
-    if (nStrips > 1) {
-      entry(273, 4, nStrips, soExt)
-      var j = 0
-      while (j < nStrips) { le32(soExt + 4 * j, stripOffsets(j)); j += 1 }
-    } else entry(273, 4, 1, stripOffsets(0))
-    entry(277, 3, 1, spp)
-    entry(278, 4, 1, rps)
-    if (nStrips > 1) {
-      entry(279, 4, nStrips, sbExt)
-      var j = 0
-      while (j < nStrips) { le32(sbExt + 4 * j, strips(j).length); j += 1 }
-    } else entry(279, 4, 1, strips(0).length)
-    if (predictor == 2) entry(317, 3, 1, 2)
-    le32(ifdOff + 2 + nE * 12, 0) // next-IFD pointer: none
     out
   }
 }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
-import graft.codec.Streams
+import graft.codec.{Png, Streams, Tiff}
 import graft.codec.Streams.Stop
 
 /** From-scratch PDF layout parser (north_star; replaces the reference's
@@ -956,57 +956,23 @@ object PdfParser {
 
   // ------------------------------------------------- stream codecs
 
-  /** Reverse a TIFF (2) or PNG (10-15) predictor. */
+  /** Reverse a TIFF (2) or PNG (10-15) predictor through the codecs' own
+    * kernels. A trailing partial row stays as it is under TIFF's and is
+    * dropped under PNG's. */
   private[graft] def unpredict(data: Array[Byte], predictor: Int, columns: Int,
       colors: Int, bpc: Int): Array[Byte] = {
     if (predictor <= 1) return data
     val bpp = math.max(1, colors * bpc / 8)
     val rowLen = (columns * colors * bpc + 7) / 8
+    if (rowLen <= 0) throw PdfError("pdf_predictor_unsupported")
     if (predictor == 2) { // TIFF horizontal differencing (8-bit only)
       if (bpc != 8) throw PdfError("pdf_predictor_unsupported")
       val out = data.clone()
-      var r = 0
-      while (r + rowLen <= out.length) {
-        var i = r + bpp
-        while (i < r + rowLen) { out(i) = (out(i) + out(i - bpp)).toByte; i += 1 }
-        r += rowLen
-      }
+      Tiff.undifference(out, out.length / rowLen, rowLen, bpp)
       out
-    } else { // PNG row filters: each row = 1 tag byte + rowLen data bytes
-      val stride = rowLen + 1
-      val nRows = data.length / stride
-      val out = new Array[Byte](nRows * rowLen)
-      val prior = new Array[Byte](rowLen)
-      var r = 0
-      while (r < nRows) {
-        val tag = data(r * stride) & 0xff
-        val src = r * stride + 1
-        val dst = r * rowLen
-        var i = 0
-        while (i < rowLen) {
-          val raw = data(src + i) & 0xff
-          val left = if (i >= bpp) out(dst + i - bpp) & 0xff else 0
-          val up = prior(i) & 0xff
-          val upLeft = if (i >= bpp) prior(i - bpp) & 0xff else 0
-          val v = tag match {
-            case 0 => raw
-            case 1 => raw + left
-            case 2 => raw + up
-            case 3 => raw + ((left + up) / 2)
-            case 4 => // Paeth
-              val pp = left + up - upLeft
-              val pa = math.abs(pp - left); val pb = math.abs(pp - up); val pc = math.abs(pp - upLeft)
-              raw + (if (pa <= pb && pa <= pc) left else if (pb <= pc) up else upLeft)
-            case _ => throw PdfError("pdf_predictor_unsupported")
-          }
-          out(dst + i) = v.toByte
-          i += 1
-        }
-        System.arraycopy(out, dst, prior, 0, rowLen)
-        r += 1
-      }
-      out
-    }
+    } else // PNG row filters: each row = 1 tag byte + rowLen data bytes
+      Png.defilter(data, 0, data.length / (rowLen + 1), rowLen, bpp)
+        .fold(_ => throw PdfError("pdf_predictor_unsupported"), identity)
   }
 
   /** FlateDecode through the one Flate kernel, capped at the per-stream

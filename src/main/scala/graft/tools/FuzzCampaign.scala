@@ -105,6 +105,15 @@ object FuzzCampaign {
         (m: Array[Byte]) => Tiff.decode(m)),
       ("tiff-lzw", Tiff.encodeCompressed(rgb, 24, 16, 3, 5, rowsPerStrip = 6, predictor = true),
         (m: Array[Byte]) => Tiff.decode(m)),
+      ("tiff-packbits-rgb", Tiff.encodeCompressed(rgb, 24, 16, 3, 32773, rowsPerStrip = 5),
+        (m: Array[Byte]) => Tiff.decode(m)),
+      // 20 x 18 under 16 x 16 tiles: edge tiles on both axes
+      ("tiff-tiled-lzw", Tiff.encodeTiled(rgb.take(20 * 18 * 3), 20, 18, 3, 16, 16,
+        compression = 5, predictor = true), (m: Array[Byte]) => Tiff.decode(m)),
+      ("tiff-tiled-deflate", Tiff.encodeTiled(gray.take(20 * 18), 20, 18, 1, 16, 16,
+        compression = 8), (m: Array[Byte]) => Tiff.decode(m)),
+      ("tiff-g4", Tiff.encodeG4(bilevel, 32, 24, rowsPerStrip = 8), (m: Array[Byte]) => Tiff.decode(m)),
+      ("tiff-jpeg", Tiff.encodeJpeg(gray, 32, 24, rowsPerStrip = 8), (m: Array[Byte]) => Tiff.decode(m)),
       ("gif", gif, (m: Array[Byte]) => Gif.decode(m)),
       ("gif-interlaced", { val g = gif.clone(); g(13 + pal16.length + 9) = 0x40; g }, // descriptor flags
         (m: Array[Byte]) => Gif.decode(m)),

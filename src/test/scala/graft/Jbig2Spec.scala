@@ -441,6 +441,88 @@ class Jbig2Spec extends AnyFunSuite {
     assert(r == Left("jbig2: truncated text region"))
   }
 
+  test("huffman symbol pages take any width order: a decreasing height class writes DW with B.3") {
+    // two 3-high glyphs of widths 3 then 2: Table B.2 has no negative DW
+    val glyphs = Vector((3, 3, Array.fill[Byte](9)(1)), (2, 3, Array[Byte](1, 0, 0, 1, 1, 0)))
+    val placements = Seq((0, 1, 1), (1, 10, 2), (0, 15, 5))
+    for (ht <- Seq(false, true); un <- Seq(false, true)) {
+      val s = Jbig2.encodeSymbolPageHuff(20, 8, glyphs, placements, huffText = ht, uncompressed = un)
+      assert(sameImage(Jbig2.decode(s), 20, 8, renderWant(20, 8, glyphs, placements)), s"text=$ht raw=$un")
+      // the dictionary's flags follow the 30-byte page info and its 11-byte header
+      assert(s(41) == 0 && s(42) == 0x11, "SDHUFF, DW B.3")
+      val rising = Jbig2.encodeSymbolPageHuff(20, 8, glyphs.reverse, placements, huffText = ht, uncompressed = un)
+      assert(rising(41) == 0 && rising(42) == 0x01, "SDHUFF, DW B.2")
+    }
+    val rng = new Random(13)
+    val wrong = (0 until 500).filterNot { i =>
+      val (w, h, syms, placements, _) = symbolPage(rng, huff = false)
+      val s = Jbig2.encodeSymbolPageHuff(w, h, syms, placements,
+        huffText = i % 2 == 1, uncompressed = i % 4 >= 2)
+      sameImage(Jbig2.decode(s), w, h, renderWant(w, h, syms, placements))
+    }
+    assert(wrong.isEmpty, s"${wrong.length} pages decode wrong, first: ${wrong.headOption}")
+  }
+
+  test("a huffman text region over a 100,000-symbol dictionary decodes in under 1 s") {
+    val rng = new Random(14)
+    val glyphs = Vector.fill(100000)((1, 1, Array[Byte](1)))
+    val placements = Seq.fill(8000)((rng.nextInt(100000), rng.nextInt(200), rng.nextInt(200)))
+    val s = Jbig2.encodeSymbolPageHuff(200, 200, glyphs, placements, huffText = true)
+    val want = renderWant(200, 200, glyphs, placements)
+    // warm the decoder on a small page of the same shape
+    Jbig2.decode(Jbig2.encodeSymbolPageHuff(200, 200, glyphs.take(2000), placements.take(2000)
+      .map { case (id, x, y) => (id % 2000, x, y) }, huffText = true))
+    val t0 = System.nanoTime()
+    val r = Jbig2.decode(s)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(sameImage(r, 200, 200, want))
+    info(f"$secs%.3f s")
+    assert(secs < 1.0, f"$secs%.2f s")
+  }
+
+  test("huffman decode differential: canonical code ranges against the old per-line scan") {
+    val rng = new Random(15)
+    val custom = Iterator.continually {
+      val b = Array.fill[Byte](4 + rng.nextInt(40))(rng.nextInt(256).toByte)
+      // a range past Int throws here; decode turns that into a Left
+      scala.util.Try(Jbig2.parseCustomTable(b, 0, b.length))
+    }.collect { case scala.util.Success(Right(t)) => t }.take(200).toSeq
+    val drawn = Seq.fill(300) {
+      new Jbig2.HuffTable(Array.fill(1 + rng.nextInt(12))(Jbig2.HuffLine(rng.nextInt(9),
+        rng.nextInt(13), rng.nextInt(2001) - 1000, kind = rng.nextInt(4))))
+    }
+    // symbol-ID tables as runcodes build them: one line per symbol, length 0 unused
+    val symbolIds = Seq.fill(200) {
+      val n = 1 + rng.nextInt(if (rng.nextBoolean()) 40 else 600)
+      val fixed = 1 + rng.nextInt(12)
+      new Jbig2.HuffTable(Array.tabulate(n)(i => Jbig2.HuffLine(
+        if (rng.nextInt(3) == 0) fixed else rng.nextInt(16), 0, i)))
+    }
+    val runcodes = Seq.fill(100)(new Jbig2.HuffTable(Array.tabulate(35)(i => Jbig2.HuffLine(rng.nextInt(16), 0, i))))
+    val tables = Seq(Jbig2.TableB1, Jbig2.TableB2, Jbig2.TableB3, Jbig2.TableB4, Jbig2.TableB5) ++
+      custom ++ drawn ++ symbolIds ++ runcodes
+    var values = 0
+    tables.foreach { t =>
+      val codes = OldHuffman.codes(t.lines)
+      assert(t.codes.sameElements(codes))
+      for (_ <- 0 until 20) {
+        val b = Array.fill[Byte](rng.nextInt(17))(rng.nextInt(256).toByte)
+        val (a, c) = (new Jbig2.HuffReader(b, 0, b.length), new Jbig2.HuffReader(b, 0, b.length))
+        var go = true
+        var n = 0
+        while (go && n < 60) {
+          val want = OldHuffman.decode(t.lines, codes, a)
+          assert(t.decode(c) == want)
+          assert(a.pos == c.pos && a.bitPos == c.bitPos)
+          go = want.isRight && !a.exhausted
+          n += 1
+          values += 1
+        }
+      }
+    }
+    assert(values > 20000, values)
+  }
+
   test("decode differential: one segment body per type against the old per-coding decoders") {
     val counts = scala.collection.mutable.TreeMap.empty[String, Int].withDefaultValue(0)
     differentialShapes.foreach { case (shape, good) =>
@@ -506,7 +588,7 @@ object Jbig2Spec {
 
   /** A random symbol page: (w, h, symbols, placements, template). Placed
     * glyphs may overlap (the region ORs them). Huffman pages order each
-    * height class by width: Table B.2 has no negative width deltas. */
+    * height class by width, which keeps their DW on Table B.2. */
   def symbolPage(rng: Random, huff: Boolean)
       : (Int, Int, Vector[(Int, Int, Array[Byte])], Seq[(Int, Int, Int)], Int) = {
     val d = Densities(1 + rng.nextInt(5))
@@ -565,6 +647,56 @@ object Jbig2Spec {
     case (Left(_), Left("jbig2: dictionary too large")) => Some("dictionary cap, now per symbol")
     case (_, Left("jbig2: truncated text region")) => Some("huffman text region out of data")
     case _ => None
+  }
+}
+
+/** The parent's huffman table code assignment and per-line scan decode,
+  * verbatim: the differential reference for [[Jbig2.HuffTable]]'s
+  * canonical decode. */
+private object OldHuffman {
+  import graft.codec.Jbig2.{HuffLine, HuffReader}
+
+  def codes(lines: Array[HuffLine]): Array[Int] = {
+    val codes = new Array[Int](lines.length)
+    val maxLen = lines.map(_.prefLen).max
+    val count = new Array[Int](maxLen + 1)
+    lines.foreach(l => if (l.prefLen > 0) count(l.prefLen) += 1)
+    val first = new Array[Int](maxLen + 2)
+    var len = 1
+    while (len <= maxLen) {
+      first(len + 1) = (first(len) + count(len)) << 1
+      var cur = first(len)
+      var i = 0
+      while (i < lines.length) {
+        if (lines(i).prefLen == len) { codes(i) = cur; cur += 1 }
+        i += 1
+      }
+      len += 1
+    }
+    codes
+  }
+
+  def decode(lines: Array[HuffLine], codes: Array[Int], r: HuffReader): Either[String, Option[Int]] = {
+    var code = 0
+    var len = 0
+    while (len < 32) {
+      code = (code << 1) | r.bit()
+      len += 1
+      var i = 0
+      while (i < lines.length) {
+        val l = lines(i)
+        if (l.prefLen == len && codes(i) == code) {
+          return l.kind match {
+            case 0 => Right(Some(l.rangeLow + r.bits(l.rangeLen)))
+            case 1 => Right(Some(l.rangeLow - r.bits(32)))
+            case 2 => Right(Some(l.rangeLow + r.bits(32)))
+            case _ => Right(None)
+          }
+        }
+        i += 1
+      }
+    }
+    Left("jbig2: invalid huffman code")
   }
 }
 

@@ -542,4 +542,101 @@ class PdfSpec extends AnyFunSuite {
     val e = intercept[PdfParser.PdfError](PdfParser.inflate(empty.take(3)))
     assert(e.msg == "pdf_flate_truncated")
   }
+
+  test("predictor differential: the codecs' kernels against the old unpredict") {
+    val rng = new scala.util.Random(12)
+    var same = 0
+    for {
+      (colors, bpc) <- Seq((1, 8), (3, 8), (4, 8), (2, 8), (1, 16), (3, 16), (1, 1), (1, 2), (1, 4), (3, 4))
+      predictor <- Seq(2, 10, 11, 12, 13, 14, 15)
+      _ <- 0 until 60
+    } {
+      val columns = 1 + rng.nextInt(24)
+      val rowLen = (columns * colors * bpc + 7) / 8
+      val rows = rng.nextInt(6)
+      val stride = if (predictor == 2) rowLen else rowLen + 1
+      val data = Array.tabulate[Byte](rows * stride + rng.nextInt(stride)) { i =>
+        // PNG tags: mostly 0-4, now and then an unknown one
+        if (predictor != 2 && i % stride == 0) (if (rng.nextInt(40) == 0) 5 + rng.nextInt(251) else rng.nextInt(5)).toByte
+        else rng.nextInt(256).toByte
+      }
+      def run(f: => Array[Byte]): Either[String, Seq[Byte]] =
+        try Right(f.toSeq) catch { case e: PdfParser.PdfError => Left(e.msg) }
+      val want = run(OldPredictor.unpredict(data, predictor, columns, colors, bpc))
+      assert(run(PdfParser.unpredict(data, predictor, columns, colors, bpc)) == want,
+        s"predictor=$predictor colors=$colors bpc=$bpc columns=$columns length=${data.length}")
+      same += 1
+    }
+    assert(same == 4200)
+  }
+
+  test("a predictor row of zero bytes is a typed error, not a spin") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    for (predictor <- Seq(2, 12)) {
+      val r = Await.result(Future(
+        try Right(PdfParser.unpredict(Array.fill[Byte](8)(1), predictor, 0, 1, 8))
+        catch { case e: PdfParser.PdfError => Left(e.msg) })(ExecutionContext.global), 5.seconds)
+      assert(r == Left("pdf_predictor_unsupported"), s"predictor=$predictor")
+    }
+  }
+}
+
+/** The parent's predictor reversal, verbatim: the differential reference
+  * for PDF's predictors reversing through [[graft.codec.Tiff]]'s and
+  * [[graft.codec.Png]]'s kernels. */
+private object OldPredictor {
+  import PdfParser.PdfError
+
+  def unpredict(data: Array[Byte], predictor: Int, columns: Int,
+      colors: Int, bpc: Int): Array[Byte] = {
+    if (predictor <= 1) return data
+    val bpp = math.max(1, colors * bpc / 8)
+    val rowLen = (columns * colors * bpc + 7) / 8
+    if (predictor == 2) { // TIFF horizontal differencing (8-bit only)
+      if (bpc != 8) throw PdfError("pdf_predictor_unsupported")
+      val out = data.clone()
+      var r = 0
+      while (r + rowLen <= out.length) {
+        var i = r + bpp
+        while (i < r + rowLen) { out(i) = (out(i) + out(i - bpp)).toByte; i += 1 }
+        r += rowLen
+      }
+      out
+    } else { // PNG row filters: each row = 1 tag byte + rowLen data bytes
+      val stride = rowLen + 1
+      val nRows = data.length / stride
+      val out = new Array[Byte](nRows * rowLen)
+      val prior = new Array[Byte](rowLen)
+      var r = 0
+      while (r < nRows) {
+        val tag = data(r * stride) & 0xff
+        val src = r * stride + 1
+        val dst = r * rowLen
+        var i = 0
+        while (i < rowLen) {
+          val raw = data(src + i) & 0xff
+          val left = if (i >= bpp) out(dst + i - bpp) & 0xff else 0
+          val up = prior(i) & 0xff
+          val upLeft = if (i >= bpp) prior(i - bpp) & 0xff else 0
+          val v = tag match {
+            case 0 => raw
+            case 1 => raw + left
+            case 2 => raw + up
+            case 3 => raw + ((left + up) / 2)
+            case 4 => // Paeth
+              val pp = left + up - upLeft
+              val pa = math.abs(pp - left); val pb = math.abs(pp - up); val pc = math.abs(pp - upLeft)
+              raw + (if (pa <= pb && pa <= pc) left else if (pb <= pc) up else upLeft)
+            case _ => throw PdfError("pdf_predictor_unsupported")
+          }
+          out(dst + i) = v.toByte
+          i += 1
+        }
+        System.arraycopy(out, dst, prior, 0, rowLen)
+        r += 1
+      }
+      out
+    }
+  }
 }
